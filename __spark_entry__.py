@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` runs the flagship two-stage detect-then-extract pipeline
-(stage-1 pandas-UDF span proposal + stage-2 JVM decode + windowed
-reassembly — see ``keras_ocr_spark/plans/pipeline.py``) over transcripts
-synthesized deterministically from the sf0.001 documents table.
+``entry(spark)`` runs the flagship map-only detect-then-extract pipeline
+(one pandas UDF proposes and decodes spans, a per-row projection drops
+blanks and joins them in order — see ``keras_ocr_spark/plans/pipeline.py``)
+over transcripts synthesized deterministically from the sf0.001 documents
+table.
 
 ``queries()`` / ``oracle_sql()`` expose one entry per implemented
 operator from SURVEY.md §2 plus the training-data-pipeline operators

@@ -4,9 +4,9 @@ Recasts the two-stage design of faustomorales/keras-ocr (CRAFT region
 proposal + CRNN/CTC decoding; reference snapshot at /root/reference) as a
 distributed main-content extraction pipeline over transcript tables
 (conv_id, turn_idx, role, text, tool, ts): stage 1 proposes content spans
-per turn via DOM-node scoring inside Arrow-vectorized pandas UDFs, stage 2
-decodes spans JVM-side (regexp/replace chains) and reassembles clean text
-under a stable (conv_id, turn_idx) ordering.
+per turn via DOM-node scoring inside an Arrow-vectorized pandas UDF, which
+also decodes each span; a per-row projection reassembles clean text under
+a stable (conv_id, turn_idx) ordering, with no shuffle.
 
 Spark-first: DataFrame/SQL + Catalyst everywhere; pandas UDFs only where
 built-ins genuinely can't express the semantics (HTML tokenization).

@@ -13,12 +13,14 @@ drop blank label                           | strip markup tags, drop
                                            | empty results
 index -> alphabet char map                 | HTML entity -> char map
 
-CRITICAL parity contract: the Spark fast path re-expresses this chain as
-JVM built-ins (``regexp_replace``/``replace``/``trim`` — see
-``keras_ocr_spark/functions/text.py``) and MUST stay step-for-step
-identical to this module; ``tests/test_parity.py`` asserts equality on
-fixtures and randomized inputs. Entity order matters: ``&amp;`` is
-decoded LAST so ``&amp;lt;`` -> ``&lt;`` (literal), never ``<``.
+The extraction pipeline runs this module itself, inside the stage-1 UDF.
+CRITICAL parity contract: its JVM twin re-expresses the chain as
+built-ins (``regexp_replace``/``replace`` — see
+``keras_ocr_spark/functions/text.py``, used by the ``decode_chain``
+query) and MUST stay step-for-step identical to this module, down to
+``str.strip()``'s set of whitespace; ``tests/test_parity.py`` asserts
+equality on fixtures and randomized inputs. Entity order matters:
+``&amp;`` is decoded LAST so ``&amp;lt;`` -> ``&lt;`` (literal), never ``<``.
 """
 
 from __future__ import annotations

@@ -32,6 +32,7 @@ from pyspark.sql import Window as W
 
 from .functions.hashing import HEX
 from .functions.numeric import pround
+from .functions.text import STRIP_PATTERN, decode_expr
 from .operators import curation as C
 from .operators import dedup as D
 from .operators import encode as E
@@ -589,28 +590,30 @@ def q_distinct_segments(spark, sf_dir):
 # 2. Extraction operators (the flagship, SQL-expressible pieces)
 # ==========================================================================
 
-_DECODE_SQL = (
-    "trim(regexp_replace("
-    "replace(replace(replace(replace(replace(replace("
-    "regexp_replace({col}, '<[^>]*>', '', 'g'),"
-    "'&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), '&#39;', chr(39)), '&nbsp;', ' '), '&amp;', '&'),"
-    "'[ \t\r\n]+', ' ', 'g'))"
-)
+
+def _decode_sql(col: str) -> str:
+    """DuckDB twin of ``functions.text.decode_expr``, step for step; the
+    final strip anchors the same explicit ``str.isspace()`` class (RE2
+    reads its ``\\x{..}`` escapes as Java regex does)."""
+    decoded = (
+        "replace(replace(replace(replace(replace(replace("
+        f"regexp_replace({col}, '<[^>]*>', '', 'g'),"
+        "'&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), '&#39;', chr(39)), '&nbsp;', ' '), '&amp;', '&')"
+    )
+    return f"regexp_replace(regexp_replace({decoded}, '[ \t\r\n]+', ' ', 'g'), '{STRIP_PATTERN}', '', 'g')"
 
 
 @register(
     "decode_chain",
     f"""
     SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           {_DECODE_SQL.format(col="'<div><p>' || text || '</p><br/></div>'")} AS clean
+           {_decode_sql("'<div><p>' || text || '</p><br/></div>'")} AS clean
     FROM documents
     """,
 )
 def q_decode_chain(spark, sf_dir):
-    """Stage-2 CTC-analog decode chain (recognition.py:169-184 semantics)
-    as pure JVM built-ins over synthesized markup."""
-    from .functions.text import decode_expr
-
+    """The CTC-analog span decode chain (recognition.py:169-184
+    semantics) as pure JVM built-ins over synthesized markup."""
     docs = _t(spark, sf_dir, "documents")
     html = F.concat(F.lit("<div><p>"), F.col("text"), F.lit("</p><br/></div>"))
     return docs.select(_b("doc_id"), decode_expr(html).alias("clean"))
@@ -627,12 +630,13 @@ def q_decode_chain(spark, sf_dir):
     """,
 )
 def q_extract_documents(spark, sf_dir):
-    """FLAGSHIP: the full two-stage detect-then-extract pipeline
-    (pandas-UDF stage 1 + JVM stage 2 + windowed reassembly,
-    pipeline.py:28-75 analog) over transcripts synthesized from the
-    documents table. The oracle knows the synthesized markup shape, so
-    the expected extraction is just the collapsed original text — an
-    end-to-end golden at sf scale (test_pipeline.py:17-21 analog)."""
+    """FLAGSHIP: the map-only detect-then-extract pipeline (one pandas
+    UDF proposes and decodes spans, a per-row projection drops blanks and
+    joins them in order — pipeline.py:28-75 analog) over transcripts
+    synthesized from the documents table. The oracle knows the
+    synthesized markup shape, so the expected extraction is just the
+    collapsed original text — an end-to-end golden at sf scale
+    (test_pipeline.py:17-21 analog)."""
     docs = _t(spark, sf_dir, "documents")
     transcripts = docs.select(
         F.concat(F.lit("doc-"), (F.col("doc_id") % 50).cast("string")).alias("conv_id"),

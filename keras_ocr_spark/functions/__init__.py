@@ -1,3 +1,3 @@
-from .text import crop_expr, decode_expr
+from .text import decode_expr
 
-__all__ = ["crop_expr", "decode_expr"]
+__all__ = ["decode_expr"]

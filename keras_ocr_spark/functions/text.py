@@ -1,12 +1,17 @@
-"""JVM-side text decode expressions — the stage-2 fast path.
+"""JVM-side text decode expression — the JVM twin of the span decoder.
 
 Re-expresses ``keras_ocr_spark.core.decoder.decode_text`` as built-in
-Catalyst expressions (whole-stage-codegen'd, no Python worker):
+Catalyst expressions (whole-stage-codegen'd, no Python worker), for
+plans that decode markup columns without a Python boundary (the
+``decode_chain`` query):
 
     strip tags        regexp_replace(s, '<[^>]*>', '')
     decode entities   replace(...) chain in ENTITIES order (&amp; LAST)
     collapse ws       regexp_replace(s, '[ \\t\\r\\n]+', ' ')
-    trim              trim(s)   (only spaces remain after the collapse)
+    strip             regexp_replace(s, '^[ws]+|[ws]+$', '') over the
+                      code points ``str.isspace()`` accepts — what
+                      ``str.strip()`` removes (``trim`` removes only
+                      U+0020)
 
 The parity suite (``tests/test_parity.py``) asserts this chain equals the
 pure-Python decoder on fixtures + randomized inputs — the graft analog of
@@ -23,6 +28,14 @@ from ..core.decoder import ENTITIES
 
 TAG_PATTERN = r"<[^>]*>"
 WS_PATTERN = r"[ \t\r\n]+"
+#: The 29 code points for which ``str.isspace()`` is true, as ``\x{..}``
+#: escapes — a syntax both Java regex and RE2 (DuckDB) accept.
+PY_SPACE_CLASS = (
+    r"[\x{9}-\x{d}\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]"
+)
+#: ``str.strip()``: one class anchored on both ends.
+STRIP_PATTERN = rf"^{PY_SPACE_CLASS}+|{PY_SPACE_CLASS}+$"
 
 
 def decode_expr(col: Column) -> Column:
@@ -44,14 +57,4 @@ def decode_expr(col: Column) -> Column:
     # Single spaces collapse to themselves: rewrite only if a tab/CR/LF
     # or a double space is present.
     s = F.when(s.rlike("[\t\r\n]|  "), F.regexp_replace(s, WS_PATTERN, " ")).otherwise(s)
-    return F.trim(s)
-
-
-def crop_expr(text: Column, start: Column, end: Column) -> Column:
-    """Span crop = substring (the 1-D ``warpBox``, ``tools.py:61-117``).
-
-    ``substring`` is 1-based; offsets are 0-based [start, end).
-    Fixtures stay in the BMP so UTF-16 units == code points and this
-    matches Python slicing exactly.
-    """
-    return F.substring(text, start + F.lit(1), end - start)
+    return F.regexp_replace(s, STRIP_PATTERN, "")

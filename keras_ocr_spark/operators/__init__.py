@@ -1,14 +1,10 @@
 from .convstats import conv_stats
-from .decode import decode
 from .detect import detect, propose_spans_udf
 from .fused import decode_reassemble_fused
-from .reassemble import reassemble
 
 __all__ = [
     "conv_stats",
-    "decode",
     "decode_reassemble_fused",
     "detect",
     "propose_spans_udf",
-    "reassemble",
 ]

@@ -1,17 +1,23 @@
-"""Stage 1 — distributed span proposal (the "detector").
+"""Stage 1 — distributed span proposal + decode (the "detector" and
+"recognizer" in one Python pass).
 
 Graft analog of ``Detector.detect`` (``/root/reference/keras_ocr/
-detection.py:745-785``): for each turn, propose content regions. The
-heavy lift (HTML tokenization + node scoring + run-length components)
-runs the *shared pure-Python core* inside an Arrow-vectorized pandas UDF
-— one Python worker call per Arrow batch, never per row at the Spark API
-layer (the batch-vectorization strategy of ``model.predict`` over a whole
-batch, ``detection.py:779``).
+detection.py:745-785``) followed by the per-crop decode of
+``Recognizer.recognize_from_boxes`` (``recognition.py:491-537``): for
+each turn, propose content regions, then decode each region's markup to
+clean text. The heavy lift (HTML tokenization + node scoring +
+run-length components + span decode) runs the *shared pure-Python core*
+inside one Arrow-vectorized pandas UDF — one Python worker call per
+Arrow batch, never per row at the Spark API layer (the
+batch-vectorization strategy of ``model.predict`` over a whole batch,
+``detection.py:779``). The blank-span drop and ordered join happen
+JVM-side in ``operators/fused.py``.
 
 Scale notes:
 - the UDF consumes ONLY the ``text`` column (column pruning: everything
   else stays JVM-side, cf. the reference's RGB->gray channel pruning,
-  ``recognition.py:429-434``);
+  ``recognition.py:429-434``) and returns only what the plan reads —
+  offsets and decoded text per span;
 - per-record cost is bounded by ``cfg.max_len`` BEFORE tokenization (the
   ``max_size`` cap, ``pipeline.py:45-47``) — the first defense against
   pathological turns;
@@ -38,16 +44,9 @@ SPAN_TYPE = T.ArrayType(
         [
             T.StructField("start", T.IntegerType(), False),
             T.StructField("end", T.IntegerType(), False),
-            T.StructField("score", T.DoubleType(), False),
-            T.StructField("n_nodes", T.IntegerType(), False),
-            # Decoded span text, produced by the SAME pure-Python
-            # decoder the parity suite pins against the JVM expression
-            # chain (core/decoder.decode_text). Decoding here (r6)
-            # removes the per-span interpreted higher-order
-            # regexp/replace chain from the fused stage — the decode is
-            # one C-regex pass in the worker that already holds the
-            # string, instead of ~10 interpreted Catalyst expressions
-            # per span inside a transform() lambda.
+            # Decoded span text: the SAME pure-Python decoder the oracle
+            # uses (core/decoder.decode_text), one C-regex pass in the
+            # worker that already holds the string.
             T.StructField("clean", T.StringType(), False),
         ]
     )
@@ -55,21 +54,16 @@ SPAN_TYPE = T.ArrayType(
 
 
 def propose_spans_udf(cfg: ExtractionConfig = DEFAULT_CONFIG):
-    """Vectorized pandas UDF: text -> array<struct<start,end,score,n_nodes>>.
+    """Vectorized pandas UDF: text -> array<struct<start,end,clean>>.
 
     Iterator form (``Iterator[pd.Series] -> Iterator[pd.Series]``): the
     per-task setup — closure constants, the kernel binding — happens once
     per Python worker, then every Arrow batch streams through the same
     loop (the ``model.predict``-over-batches pattern of
     ``detection.py:698-743``; also where a heavyweight model/tokenizer
-    would be loaded once per executor).
-
-    Proposal + per-span decode (r6): the worker already holds the raw
-    string, so each span's clean text is one C-regex pass of the shared
-    pure decoder here; the blank-label drop (``recognition.py:483-488``)
-    stays JVM-side in the fused stage (the exploded/streaming variants
-    keep decoding JVM-side from the raw text — both paths are pinned
-    equal by the parity suite).
+    would be loaded once per executor). Blank decodes are kept here; the
+    blank-label drop (``recognition.py:483-488``) is JVM-side in the
+    fused stage.
     """
     max_len = cfg.max_len
 
@@ -84,8 +78,6 @@ def propose_spans_udf(cfg: ExtractionConfig = DEFAULT_CONFIG):
                 {
                     "start": s.start,
                     "end": s.end,
-                    "score": s.score,
-                    "n_nodes": s.n_nodes,
                     "clean": _decode(capped[s.start : s.end]),
                 }
                 for s in _propose_spans(_tokenize(capped), len(capped), _cfg)
@@ -103,18 +95,12 @@ def salt_expr(n_salt: int) -> Column:
     return F.pmod(F.col("turn_idx"), F.lit(n_salt)).alias("salt")
 
 
-def detect(
-    df: DataFrame,
-    cfg: ExtractionConfig = DEFAULT_CONFIG,
-    n_salt: int = 0,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def detect(df: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG, n_salt: int = 0) -> DataFrame:
     """Add a ``spans`` column to a transcript DataFrame.
 
     ``n_salt`` > 0 applies the salted repartition on (conv_id, salt) so a
     skewed conversation's turns land in many partitions instead of one.
     """
     if n_salt > 0:
-        parts = [F.col("conv_id"), salt_expr(n_salt)]
-        df = df.repartition(num_partitions, *parts) if num_partitions else df.repartition(*parts)
+        df = df.repartition(F.col("conv_id"), salt_expr(n_salt))
     return df.withColumn("spans", propose_spans_udf(cfg)(F.col("text")))

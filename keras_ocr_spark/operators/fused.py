@@ -1,28 +1,17 @@
-"""Fused stage-2+3: per-row decode + reassembly via higher-order functions.
+"""Stages 2+3: per-row blank drop + ordered reassembly via higher-order
+functions.
 
-The exploded plan (decode.py + reassemble.py) mirrors the reference's
-flatten-then-re-slice strategy (``recognition.py:504-537``) — but its
-per-(conv_id, turn_idx) collect_list has ~one GROUP PER ROW, which drives
-Spark's ObjectHashAggregate into sort-based fallback and a GC storm at
-scale (measured: >80% of map-stage core-time in GC at 1.4M turns).
+Stage 1 (``operators/detect.py``) hands over each turn's spans TOGETHER
+in one array cell, in document order, each already carrying its decoded
+``clean`` text. Re-associating them therefore needs no shuffle and no
+aggregation state — one projection per row:
 
-The insight: a turn's spans already sit TOGETHER in one array cell in
-document order — re-associating them needs no shuffle at all. This
-module decodes and reassembles inside the row:
-
-    decoded = transform(spans, s -> struct(s.start, s.end,
-                  decode_chain(substring(text, s.start+1, s.end-s.start))))
-    kept    = filter(decoded, d -> length(d.clean) > 0)   -- blank drop
+    kept       = filter(spans, d -> length(d.clean) > 0)   -- blank drop
     clean_text = array_join(transform(kept, d -> d.clean), '\n')
+    spans      = transform(kept, d -> struct(d.start, d.end))
 
-making the WHOLE pipeline map-only: scan -> stage-1 pandas UDF -> this
-projection. Zero exchanges, zero aggregation state; scales exactly like
-the scan. Both plans produce identical frames
-(tests/test_parity.py::TestFusedEqualsExploded).
-
-The exploded plan remains available (`plans.pipeline.extract_exploded`)
-for span-level analytics (per-span rows ARE the right shape for the
-evaluation joins in evaluation.py).
+which keeps the whole pipeline map-only: scan -> stage-1 pandas UDF ->
+this projection. Zero exchanges; scales exactly like the scan.
 """
 
 from __future__ import annotations
@@ -31,17 +20,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-
 def decode_reassemble_fused(detected: DataFrame) -> DataFrame:
     """detect() output -> (conv_id, turn_idx, clean_text, spans), per-row.
 
-    r6: the span struct now carries ``clean`` from the stage-1 kernel
-    (one C-regex decode in the worker that already holds the string), so
-    this stage is pure filter + join — the previous per-span interpreted
-    crop+decode chain (~10 Catalyst expressions per span inside the
-    transform lambda) is gone. Equality with the JVM-decoding exploded
-    plan is still pinned by tests/test_parity.py, which in turn pins the
-    decoder twins against each other."""
+    Zero-span and all-blank turns yield ``clean_text=''`` and
+    ``spans=[]`` — a row, never a missing turn."""
     kept = F.filter("spans", lambda d: F.length(d["clean"]) > 0)
     staged = detected.select("conv_id", "turn_idx", kept.alias("_kept"))
     return staged.select(

@@ -47,7 +47,7 @@ import os
 import shutil
 from dataclasses import asdict
 from pathlib import Path
-from typing import Iterable, List, Optional
+from typing import Iterable, Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,31 +69,46 @@ def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
-def completed_buckets(out_dir: str, fingerprint: str, n_buckets: Optional[int] = None) -> List[int]:
-    """Buckets whose manifest exists and matches the current lineage."""
-    mdir = Path(out_dir) / MANIFEST_DIR
-    done = []
-    if not mdir.is_dir():
-        return done
-    for p in sorted(mdir.glob("bucket-*.json")):
+def _load_manifests(out_dir: str) -> Iterator[Tuple[Path, dict]]:
+    """Every parseable manifest with its path. A half-written or corrupt
+    file (bad JSON, no integer ``bucket``/``rows``) is skipped: its bucket
+    counts as uncommitted, so resume redoes and rewrites it."""
+    for p in sorted((Path(out_dir) / MANIFEST_DIR).glob("bucket-*.json")):
         try:
             m = json.loads(p.read_text())
-        except (json.JSONDecodeError, OSError):
-            continue  # half-written/corrupt manifest -> redo that bucket
-        if m.get("fingerprint") != fingerprint or m.get("status") != "complete":
+            m["bucket"], m["rows"] = int(m["bucket"]), int(m.get("rows", 0))
+        except (OSError, ValueError, TypeError, KeyError):
+            continue
+        yield p, m
+
+
+def _committed_manifests(
+    out_dir: str, fingerprint: Optional[str] = None, n_buckets: Optional[int] = None
+) -> List[dict]:
+    """Manifests that attest a readable committed bucket: complete, of the
+    given lineage (``fingerprint``/``n_buckets`` when set), and — when it
+    attests rows — with its bucket directory still on disk. An
+    intermediate run under a DIFFERENT layout may have deleted that
+    directory as stale while the manifest survived (observed when
+    alternating n_buckets 6 -> 3 -> 6: resume trusted bucket-3..5.json
+    whose dirs the 3-bucket run removed, silently dropping their rows)."""
+    committed = []
+    for _, m in _load_manifests(out_dir):
+        if m.get("status") != "complete":
+            continue
+        if fingerprint is not None and m.get("fingerprint") != fingerprint:
             continue
         if n_buckets is not None and m.get("n_buckets") != n_buckets:
             continue  # belt-and-suspenders: fingerprint already covers it
-        # A manifest only attests data that is still on disk: an
-        # intermediate run under a DIFFERENT layout may have deleted this
-        # bucket's directory as stale while the manifest survived
-        # (observed when alternating n_buckets 6 -> 3 -> 6: resume
-        # trusted bucket-3..5.json whose dirs the 3-bucket run removed,
-        # silently dropping their rows).
-        if int(m.get("rows", 0)) > 0 and not (Path(out_dir) / f"bucket={int(m['bucket'])}").is_dir():
+        if m["rows"] > 0 and not (Path(out_dir) / f"bucket={m['bucket']}").is_dir():
             continue
-        done.append(int(m["bucket"]))
-    return done
+        committed.append(m)
+    return committed
+
+
+def completed_buckets(out_dir: str, fingerprint: str, n_buckets: Optional[int] = None) -> List[int]:
+    """Buckets whose manifest exists and matches the current lineage."""
+    return [m["bucket"] for m in _committed_manifests(out_dir, fingerprint, n_buckets)]
 
 
 def _clean_stale_bucket_dirs(out_dir: str, done: set, n_buckets: int) -> List[int]:
@@ -117,15 +132,10 @@ def _clean_stale_bucket_dirs(out_dir: str, done: set, n_buckets: int) -> List[in
     # Stale manifests too: a bucket-K.json from an older lineage is never
     # trusted for resume, but leaving it would make read_manifests()
     # double-count rows across layouts.
-    mdir = root / MANIFEST_DIR
-    if mdir.is_dir():
-        for p in sorted(mdir.glob("bucket-*.json")):
-            try:
-                k = int(json.loads(p.read_text()).get("bucket", -1))
-            except (json.JSONDecodeError, OSError, TypeError, ValueError):
-                continue  # corrupt manifests are redone (and rewritten) anyway
-            if k >= n_buckets or k not in done:
-                p.unlink()
+    # Corrupt manifests are redone (and rewritten) anyway.
+    for p, m in _load_manifests(out_dir):
+        if m["bucket"] >= n_buckets or m["bucket"] not in done:
+            p.unlink()
     return removed
 
 
@@ -249,9 +259,9 @@ def run_with_checkpoints(
 
 
 def read_manifests(out_dir: str) -> Iterable[dict]:
-    mdir = Path(out_dir) / MANIFEST_DIR
-    for p in sorted(mdir.glob("bucket-*.json")):
-        yield json.loads(p.read_text())
+    """Every parseable manifest, committed or not (corrupt ones skipped)."""
+    for _, m in _load_manifests(out_dir):
+        yield m
 
 
 def read_committed(spark: SparkSession, out_dir: str, fingerprint: Optional[str] = None):
@@ -267,26 +277,13 @@ def read_committed(spark: SparkSession, out_dir: str, fingerprint: Optional[str]
     touches k directories. Returns None when nothing is committed yet
     OR when every committed bucket attests rows=0 (a rows=0 commit
     writes no parquet files, so there is no schema on disk to offer —
-    schema inference over zero files would raise). Mirrors
-    :func:`completed_buckets`' dir-existence rule: a rows>0 manifest
-    whose bucket directory a later re-layout deleted is NOT readable
-    and is excluded here too."""
-    committed = []
-    any_rows = False
-    for m in read_manifests(out_dir):
-        if m.get("status") != "complete":
-            continue
-        if fingerprint is not None and m.get("fingerprint") != fingerprint:
-            continue
-        bucket = int(m["bucket"])
-        rows = int(m.get("rows", 0))
-        # same guard as completed_buckets: the manifest only attests
-        # data still on disk (alternating n_buckets layouts can delete
-        # a bucket dir while its manifest survives).
-        if rows > 0 and not (Path(out_dir) / f"bucket={bucket}").is_dir():
-            continue
-        any_rows = any_rows or rows > 0
-        committed.append(bucket)
+    schema inference over zero files would raise). The commit rule is
+    :func:`completed_buckets`' own: a corrupt manifest, or a rows>0
+    manifest whose bucket directory a later re-layout deleted, is NOT
+    readable and is excluded."""
+    manifests = _committed_manifests(out_dir, fingerprint)
+    committed = [m["bucket"] for m in manifests]
+    any_rows = any(m["rows"] > 0 for m in manifests)
     if not committed or not any_rows:
         return None
     df = spark.read.option("basePath", out_dir).parquet(out_dir)

@@ -1,24 +1,21 @@
 """End-to-end extraction plan — the graft's ``Pipeline.recognize``.
 
-Orchestrates the three stages exactly as the reference does
-(``/root/reference/keras_ocr/pipeline.py:28-75``: normalize -> batch ->
-detect -> crop -> recognize -> rescale -> re-associate), declared as one
-lazy DataFrame plan so Catalyst fuses/prunes across stages:
+Orchestrates the reference's stages (``/root/reference/keras_ocr/
+pipeline.py:28-75``: normalize -> batch -> detect -> crop -> recognize ->
+rescale -> re-associate) as one lazy, map-only DataFrame plan:
 
-    read -> [salted repartition on conv_id] -> stage-1 pandas UDF (spans)
-         -> posexplode_outer -> JVM substring+decode chain
-         -> groupBy(conv_id, turn_idx) ordered reassembly
+    read -> [salted repartition on conv_id]
+         -> stage-1 pandas UDF: propose spans + decode each span
+         -> per-row projection: drop blank spans, join in document order
 
 Physical shape (verified in tests/test_plan_shape.py):
-- the DEFAULT plan is MAP-ONLY: scan -> one ArrowEvalPython node (stage
-  1) -> fused per-row decode+reassembly (operators/fused.py). ZERO
-  exchanges — a turn's spans already sit together in one array cell, so
-  re-association needs no shuffle. Scales exactly like the scan.
+- scan -> one ArrowEvalPython node -> projection. ZERO exchanges — a
+  turn's spans already sit together in one array cell, so
+  re-association needs no shuffle. Scales exactly like the scan, in
+  batch and in every streaming micro-batch alike (streaming/extraction.py
+  runs this same plan);
 - the optional salted repartition (skewed input layouts) adds exactly
   one exchange;
-- ``extract_exploded`` keeps the span-row plan (explode -> decode ->
-  groupBy reassembly) for span-level analytics; it equals the fused
-  plan frame-for-frame (tests/test_parity.py).
 - the scan reads only the columns the plan needs (conv_id, turn_idx,
   text) — column pruning reaches the parquet reader.
 """
@@ -28,18 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
-from ..operators.decode import decode
 from ..operators.detect import detect
 from ..operators.fused import decode_reassemble_fused
-from ..operators.reassemble import reassemble
 
 
-def extract(
-    df: DataFrame,
-    cfg: ExtractionConfig = DEFAULT_CONFIG,
-    n_salt: int = 0,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def extract(df: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG, n_salt: int = 0) -> DataFrame:
     """Transcripts -> (conv_id, turn_idx, clean_text, spans). Map-only.
 
     Per-turn output equals ``core.oracle.extract_turn`` exactly (parity
@@ -48,18 +38,4 @@ def extract(
     handling for skewed input layouts; AQE covers the rest at runtime).
     """
     slim = df.select("conv_id", "turn_idx", "text")
-    return decode_reassemble_fused(detect(slim, cfg=cfg, n_salt=n_salt, num_partitions=num_partitions))
-
-
-def extract_exploded(
-    df: DataFrame,
-    cfg: ExtractionConfig = DEFAULT_CONFIG,
-    n_salt: int = 0,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """The span-row variant (flatten-then-re-slice,
-    ``recognition.py:504-537`` analog): posexplode -> JVM decode ->
-    per-turn groupBy reassembly. Same output frame as :func:`extract`;
-    use when downstream wants per-span rows (evaluation joins)."""
-    slim = df.select("conv_id", "turn_idx", "text")
-    return reassemble(decode(detect(slim, cfg=cfg, n_salt=n_salt, num_partitions=num_partitions)))
+    return decode_reassemble_fused(detect(slim, cfg=cfg, n_salt=n_salt))

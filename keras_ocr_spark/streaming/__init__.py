@@ -1,8 +1,7 @@
-from .extract_stream import extract_stream, read_transcript_stream, start_extraction, turn_rate_monitor
+from .extraction import read_transcript_stream, start_extraction, turn_rate_monitor
 from .state import ROCKSDB_PROVIDER, use_rocksdb_state
 
 __all__ = [
-    "extract_stream",
     "read_transcript_stream",
     "start_extraction",
     "turn_rate_monitor",

@@ -128,6 +128,23 @@ def test_corrupt_manifest_triggers_redo(spark, input_path, tmp_path):
     assert completed_buckets(out, fingerprint) == [1]
 
 
+def test_read_committed_skips_corrupt_manifest(spark, input_path, tmp_path):
+    """A damaged manifest makes its bucket uncommitted for readers too:
+    read_committed returns the other committed buckets instead of
+    raising, and read_manifests lists only the readable manifests."""
+    from keras_ocr_spark.plans.checkpoint import read_committed
+
+    out = str(tmp_path / "out6")
+    run_with_checkpoints(spark, input_path, out, n_buckets=3)
+    rows = {m["bucket"]: m["rows"] for m in read_manifests(out)}
+    (Path(out) / "_manifests" / "bucket-0.json").write_text("{ truncated")
+
+    assert sorted(m["bucket"] for m in read_manifests(out)) == [1, 2]
+    got = read_committed(spark, out)
+    assert sorted(r.bucket for r in got.select("bucket").distinct().collect()) == [1, 2]
+    assert got.count() == rows[1] + rows[2]
+
+
 def test_manifest_content_hash_stable(spark, input_path, tmp_path):
     out_a = str(tmp_path / "a")
     out_b = str(tmp_path / "b")

@@ -3,13 +3,12 @@
 Asserts properties of `.explain()` output that matter at 100 TB:
 - column pruning reaches the parquet scan (ReadSchema carries only what
   the plan needs);
-- exactly ONE Python boundary (stage-1 ArrowEvalPython); stage 2 and the
-  reassembly prep stay JVM-side;
+- exactly ONE Python boundary (stage-1 ArrowEvalPython, which proposes
+  and decodes spans); the reassembly projection stays JVM-side;
 - pure-expression operators (textstats, simhash, minhash signatures)
   have NO exchange and NO Python nodes at all;
-- the flagship (fused) plan is MAP-ONLY — zero exchanges; the exploded
-  variant keeps exactly one (the per-turn aggregation) with map-side
-  partial aggregation before it.
+- the flagship plan is MAP-ONLY — zero exchanges; salting adds exactly
+  one.
 """
 
 import re
@@ -68,26 +67,15 @@ class TestFlagshipPlan:
         plan = plan_of(df)
         assert n_nodes(plan, "Exchange") == 0
 
-    def test_exploded_variant_single_shuffle_with_partial_agg(self, spark, transcripts_path):
-        # The span-row variant keeps the flatten-then-re-slice shape:
-        # one exchange, with map-side partial collect_list BEFORE it.
-        from keras_ocr_spark.plans.pipeline import extract_exploded
-
-        plan = plan_of(extract_exploded(spark.read.parquet(transcripts_path)))
-        assert n_nodes(plan, "Exchange") == 1
-        assert "partial_collect_list" in plan
-        exchange_id = int(re.search(r"\((\d+)\) Exchange\b", plan).group(1))
-        partial_block = plan[: plan.index("partial_collect_list")]
-        partial_id = int(re.findall(r"\((\d+)\) \w+", partial_block)[-1])
-        assert partial_id < exchange_id
-
     def test_salting_adds_exactly_one_exchange(self, spark, transcripts_path):
         df = extract(spark.read.parquet(transcripts_path), n_salt=8)
         plan = plan_of(df)
         assert n_nodes(plan, "Exchange") == 1
 
-    def test_wholestage_codegen_covers_decode(self, spark, transcripts_path):
-        # Codegen-mode explain lists the fused subtrees (AQE hides them
+    def test_wholestage_codegen_covers_scan_and_projection(self, spark, transcripts_path):
+        # The JVM side of the plan (scan, reassembly projection) is
+        # whole-stage codegen'd; decode runs in the stage-1 UDF. Codegen-
+        # mode explain lists the fused subtrees (AQE hides them
         # pre-execution, so toggle it off just for the inspection).
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:

@@ -1,7 +1,8 @@
-"""Streaming pipeline smoke: file-stream source -> stages 1+2 ->
-foreachBatch reassembly sink, driven synchronously with availableNow
-(the guide's local pattern). Output must equal the batch pipeline on the
-same input — streaming and batch share the same operator code."""
+"""Streaming pipeline smoke: file-stream source -> the batch extraction
+plan -> idempotent per-epoch foreachBatch sink, driven synchronously with
+availableNow (the guide's local pattern). Output must equal the batch
+pipeline and the single-process oracle on the same input — streaming and
+batch run the same plan."""
 
 import shutil
 from pathlib import Path
@@ -9,17 +10,39 @@ from pathlib import Path
 import pandas as pd
 import pytest
 
+from keras_ocr_spark.core.oracle import extract_turn
 from keras_ocr_spark.plans.pipeline import extract
 from keras_ocr_spark.sources.transcripts import generate_pandas
 from keras_ocr_spark.streaming import read_transcript_stream, start_extraction, turn_rate_monitor
+
+_SENTENCE = "The quick brown fox jumps over the lazy dog near the riverbank."
+#: Turns whose content begins or ends with whitespace that str.strip()
+#: removes but Spark's trim() keeps.
+WS_EDGE_TEXTS = [
+    f"<div><p>\u3000{_SENTENCE}\u3000</p></div>",
+    f"<div><p>\u00a0{_SENTENCE}\u00a0</p></div>",
+    f"<div><p>\x0c{_SENTENCE}\x0b</p></div>",
+    f"<div><p>\x0b{_SENTENCE}</p><p>{_SENTENCE}\x0c</p></div>",
+]
 
 
 @pytest.fixture(scope="module")
 def landing(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("landing")
     pdf = generate_pandas(n_convs=8, make_skewed=False)
+    edge = pd.DataFrame(
+        {
+            "conv_id": "conv-ws-edge",
+            "turn_idx": range(len(WS_EDGE_TEXTS)),
+            "role": "assistant",
+            "text": WS_EDGE_TEXTS,
+            "tool": None,
+            "ts": pdf.ts.iloc[0],
+        }
+    )
     sdf = spark.createDataFrame(
-        pdf, schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+        pd.concat([pdf, edge], ignore_index=True),
+        schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
     sdf.repartition(3).write.mode("overwrite").parquet(str(d / "transcripts"))
     return d
@@ -33,13 +56,19 @@ def test_stream_equals_batch(spark, landing, tmp_path):
     q = start_extraction(read_transcript_stream(spark, src, max_files_per_trigger=1), out, ckpt)
     q.awaitTermination(120)
 
-    stream_rows = {
-        (r.conv_id, r.turn_idx): r.clean_text for r in spark.read.parquet(out).collect()
-    }
-    batch_rows = {
-        (r.conv_id, r.turn_idx): r.clean_text for r in extract(spark.read.parquet(src)).collect()
-    }
+    def frame(rows):
+        return {(r.conv_id, r.turn_idx): (r.clean_text, [(s.start, s.end) for s in r.spans]) for r in rows}
+
+    stream_rows = frame(spark.read.parquet(out).collect())
+    batch_rows = frame(extract(spark.read.parquet(src)).collect())
     assert stream_rows == batch_rows
+
+    texts = {(r.conv_id, r.turn_idx): r.text for r in spark.read.parquet(src).collect()}
+    assert stream_rows.keys() == texts.keys()
+    for key, raw in texts.items():
+        o = extract_turn(raw)
+        assert stream_rows[key] == (o.clean_text, [(s.start, s.end) for s in o.spans]), key
+    assert all(stream_rows[("conv-ws-edge", i)][0] for i in range(len(WS_EDGE_TEXTS)))
 
 
 def test_replayed_epoch_is_idempotent(spark, landing, tmp_path):
@@ -48,16 +77,14 @@ def test_replayed_epoch_is_idempotent(spark, landing, tmp_path):
     must leave exactly one copy, not append a duplicate."""
     from pyspark.sql import functions as F
 
-    from keras_ocr_spark.operators.decode import decode
-    from keras_ocr_spark.operators.detect import detect
-    from keras_ocr_spark.streaming.extract_stream import epoch_sink
+    from keras_ocr_spark.streaming.extraction import epoch_sink
 
     src = str(landing / "transcripts")
     out = str(tmp_path / "replay_out")
-    spans = decode(detect(spark.read.parquet(src).select("conv_id", "turn_idx", "text")))
-    epoch_sink(spans, 0, out)
+    turns = extract(spark.read.parquet(src))
+    epoch_sink(turns, 0, out)
     once = spark.read.parquet(out).count()
-    epoch_sink(spans, 0, out)  # replay of the same epoch
+    epoch_sink(turns, 0, out)  # replay of the same epoch
     again = spark.read.parquet(out)
     assert again.count() == once
     assert again.select("conv_id", "turn_idx").distinct().count() == once

@@ -5,7 +5,7 @@ the local parity oracle (parity by construction; see SURVEY.md §7 step 0).
 from .decoder import ENTITIES, decode_span, decode_text, reassemble
 from .oracle import TurnExtraction, extract_turn
 from .proposal import Span, propose_spans
-from .scoring import link_ratio, score_node, score_nodes
+from .scoring import link_ratio, score_node
 from .tokenizer import BOILERPLATE_TAGS, Node, tokenize
 
 __all__ = [
@@ -21,6 +21,5 @@ __all__ = [
     "propose_spans",
     "reassemble",
     "score_node",
-    "score_nodes",
     "tokenize",
 ]

@@ -31,7 +31,7 @@ from __future__ import annotations
 from typing import List, NamedTuple, Sequence
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
-from .scoring import link_ratio, score_and_ratio, score_node
+from .scoring import score_and_ratio
 from .tokenizer import Node
 
 
@@ -109,11 +109,3 @@ def propose_spans(
             connector_streak = 0
     flush()
     return spans
-
-
-def _is_seed(node: Node, cfg: ExtractionConfig) -> bool:
-    return score_node(node) >= cfg.text_threshold and link_ratio(node) <= cfg.link_threshold
-
-
-def _is_connector(node: Node, cfg: ExtractionConfig) -> bool:
-    return (not node.boiler) and link_ratio(node) > cfg.link_threshold and node.tlen > 0

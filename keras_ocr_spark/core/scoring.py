@@ -15,8 +15,6 @@ construction (same code, same arithmetic).
 
 from __future__ import annotations
 
-from typing import List, Sequence
-
 from .tokenizer import Node
 
 #: Density soft-knee: a node reaches score 0.5 (before penalties) at this
@@ -50,7 +48,3 @@ def score_and_ratio(node: Node) -> tuple:
     if node.boiler:
         return 0.0, ratio
     return (tlen / (tlen + DENSITY_KNEE)) * (1.0 - LINK_PENALTY * ratio), ratio
-
-
-def score_nodes(nodes: Sequence[Node]) -> List[float]:
-    return [score_node(n) for n in nodes]

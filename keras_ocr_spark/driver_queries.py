@@ -1575,40 +1575,41 @@ def q_curate_corpus(spark, sf_dir):
     from .operators.clusters import leakage_safe_split
     from .operators.curation import token_budget_mix
 
-    # The lineage cuts below split the pipeline into several JOBS, and
-    # ReuseExchange only dedupes within one executed plan — so the
-    # docs scan + repartition would otherwise re-run once per job (r6).
+    # Lineage cuts. Under AQE a "lazy" localCheckpoint(eager=False) runs
+    # the shuffle and broadcast stages upstream of it as soon as it is
+    # called; only its last stage waits for a consumer. Each cut below
+    # is kept because removing it cost more than it saved, measured by
+    # removing one cut at a time (1,000 docs, 4 vCPUs, CPU of passes 5-8
+    # of one session):
+    # - docs: without it each job re-runs the scan and repartition, and
+    #   the pass runs 25 jobs instead of 23 and 0.5 CPU-s more.
+    #   Calling it runs 2 jobs (schema inference, the repartition).
     docs = _docs(spark, sf_dir).localCheckpoint(eager=False)
     pairs = D.minhash_dedup_pairs(docs, threshold=0.5)
-    # Lazy lineage cuts at the narrow waists (split / surv / gated are
-    # one short row per doc): the pipeline fans each of them out to 2+
-    # consumers, and without the cut Catalyst re-plans — and the
-    # executor re-RUNS — the entire upstream chain (LSH pairs + closure
-    # + quality + substring gate) once per consumer; the r5 plan was
-    # 234 KB of duplicated subtrees and evaluated the dedup twice.
-    split = leakage_safe_split(docs, pairs, id_col="doc_id").localCheckpoint(eager=False)
-    keepers = split.filter(F.col("id") == F.col("keeper_id"))
-    # quality + n_bpe_tokens fused into ONE map-only projection (r6):
-    # quality_scores ⋈ token_counts computed the same values through a
-    # second scan plus a join exchange of both corpus-sized sides.
-    feats = TS.curation_features(docs)
+    # The split rows keep the doc columns, so the keepers need no join
+    # back for their text and language. Building the split runs the
+    # closure's checkpoint jobs (10 here, the pair pipeline included).
+    split = leakage_safe_split(docs, pairs, id_col="doc_id")
+    # - surv: the substring gate reads the survivors twice and the
+    #   gated join once more. Without the cut each reader re-runs the
+    #   keeper window and the quality expressions: same 23 jobs,
+    #   0.1-1.9 CPU-s more over two runs. Calling it runs 1 job.
     surv = (
-        keepers.join(feats, "id").filter(F.col("quality") >= 0.5)
+        split.filter(F.col("id") == F.col("keeper_id"))
+        .select("id", "text", "lang", "split", *TS.curation_feature_columns(F.col("text")))
+        .filter(F.col("quality") >= 0.5)
     ).localCheckpoint(eager=False)
-    # substring_dup_stats consumes its input twice (gram branch + text
-    # rebuild branch) — cut once more so the survivors join runs once.
-    surv_docs = docs.join(surv.select(F.col("id").alias("doc_id")), "doc_id").localCheckpoint(
-        eager=False
-    )
-    subs = D.substring_dup_stats(surv_docs, k=5).select("id", "dup_frac")
+    subs = D.substring_dup_stats(surv, k=5, id_col="id").select("id", "dup_frac")
+    # - gated: the mix reads it and so does the join that brings back
+    #   quality and dup_frac. Without the cut the pass runs 25 jobs
+    #   instead of 23 at equal CPU. Calling it runs 4 jobs.
     gated = (
         surv.join(subs, "id")
         .filter((F.col("dup_frac") <= 0.5) & (F.col("split") == "train"))
-        .select("id", "n_bpe_tokens", "quality", "dup_frac")
+        .select("id", "lang", "n_bpe_tokens", "quality", "dup_frac")
     ).localCheckpoint(eager=False)
-    lang = docs.select(F.col("doc_id").alias("id"), "lang")
     mixed = token_budget_mix(
-        gated.join(lang, "id"),
+        gated,
         {"en": 3000},
         default_budget=1000,
         id_col="id",

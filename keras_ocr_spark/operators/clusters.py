@@ -10,83 +10,131 @@ detections with set semantics (``/root/reference/keras_ocr/detection.py:
 432-438``); this lifts that from one image's boxes to a corpus-sized
 graph.
 
-Algorithm: **alternating large-star / small-star** iterated equi-joins
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14) — the shuffle-friendly classic:
+Algorithm: **alternating large-star / small-star** rounds (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14) — the
+shuffle-friendly classic:
 
 - ``large-star``: every node connects its LARGER neighbors to the
   minimum of its closed neighborhood.
 - ``small-star``: every node connects its smaller-or-equal neighbors to
   that minimum.
 
-Both are one ``groupBy(node).min`` plus one equi-join re-emitting edges
-— no collects, no driver-side graph, no GraphFrames dependency. The
-edge set only ever shrinks toward a star per component, converging in
-O(log n) rounds even on adversarial chains (plain min-label
-propagation needs O(diameter) rounds — a 10^6-long chain would need
-10^6 shuffles; this needs ~20).
+Each step is one hash exchange on the node ``u``: the rows are
+deduplicated inside that partitioning and the neighborhood minimum is a
+``min`` over ``Window.partitionBy("u")`` on the same partitioning — no
+collects, no driver-side graph, no GraphFrames dependency. The edge set
+only ever shrinks toward a star per component, converging in O(log n)
+rounds even on adversarial chains (plain min-label propagation needs
+O(diameter) rounds — a 10^6-long chain would need 10^6 shuffles; this
+needs ~20).
 
 Scale notes:
-- Each round is TWO shuffles (a groupBy and a join share the ``u``
-  partitioning, Catalyst reuses the exchange) over the EDGE set, which
-  for dedup is tiny relative to the corpus (pairs, not rows).
-- Lineage is truncated per round (``localCheckpoint``) — without it
-  the plan doubles per iteration and optimizer time explodes by round
-  ~8. On a real cluster use a reliable ``checkpoint()`` dir instead;
-  the seam is one flag.
-- Convergence is detected by an order-independent edge-set checksum
-  (count + xor of per-edge xxhash64), one tiny action per round.
+- The loop carries the large-star input in grouped form (both
+  orientations of every edge, grouped by node), so a round is the
+  small-star exchange plus the exchange that regroups its output — two
+  shuffles over the EDGE set, which for dedup is tiny relative to the
+  corpus (pairs, not rows) — and one job beyond them: an eager
+  ``localCheckpoint`` that truncates the lineage (without it the plan
+  doubles per iteration and optimizer time explodes by round ~8).
+- Checkpoint blocks are executor-local and cannot be recomputed after an
+  executor is lost. A deployment that must survive that would use
+  ``checkpoint()`` with a reliable checkpoint directory instead.
+- Convergence needs no action of its own: the regrouping exchange also
+  tests whether the round's output is a star forest rooted at the
+  component minima, the fixed point of a round, and an ``Observation``
+  reads the test from the checkpoint job. The loop stops on the round
+  that reaches the stars instead of running one more to see an edge-set
+  checksum repeat.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
-def _canonical(edges: DataFrame) -> DataFrame:
-    """Edges as (u, v) with u > v, self-loops dropped, distinct."""
+def _oriented(edges: DataFrame) -> DataFrame:
+    """Edges as (u, v) with u > v and self-loops dropped (duplicates
+    kept: every star step deduplicates inside its own exchange)."""
+    return edges.select(
+        F.greatest("u", "v").alias("u"),
+        F.least("u", "v").alias("v"),
+    ).filter(F.col("u") != F.col("v"))
+
+
+def _neighborhoods(edges: DataFrame) -> DataFrame:
+    """Distinct (u, v) rows hash-partitioned on u, with m = min(v) and
+    the degree n of u. The distinct and the window both reuse the one
+    ``repartition("u")`` exchange."""
+    by_u = Window.partitionBy("u")
     return (
-        edges.select(
-            F.greatest("u", "v").alias("u"),
-            F.least("u", "v").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
+        edges.repartition("u")
         .distinct()
+        .select("u", "v", F.min("v").over(by_u).alias("m"), F.count("*").over(by_u).alias("n"))
+    )
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """Both orientations of every edge."""
+    return edges.select(
+        F.inline(F.array(F.struct("u", "v"), F.struct(F.col("v").alias("u"), F.col("u").alias("v"))))
+    )
+
+
+def _large_star_edges(nb: DataFrame) -> DataFrame:
+    return nb.filter(F.col("v") > F.col("u")).select(
+        F.col("v").alias("u"), F.least("m", "u").alias("v")
     )
 
 
 def large_star(edges: DataFrame) -> DataFrame:
     """Large-star: for each node u, connect every neighbor v > u to
-    m = min(N(u) + {u}). Emitted edges are (v, m). One groupBy + one
-    equi-join on u."""
-    sym = edges.select("u", "v").union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-    mins = mins.select("u", F.least("mv", "u").alias("m"))
-    return (
-        sym.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
+    m = min(N(u) + {u}). Emitted edges are (v, m). One exchange on u."""
+    return _large_star_edges(_neighborhoods(_symmetric(edges)))
 
 
 def small_star(edges: DataFrame) -> DataFrame:
     """Small-star: orient edges high->low; for each node u, connect
-    every smaller neighbor v (and u itself) to m = min(N(u)). Emitted
-    edges are (v, m) and (u, m)."""
-    directed = _canonical(edges)  # u > v on every row
-    mins = directed.groupBy("u").agg(F.min("v").alias("m"))
-    via = directed.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-    own = mins.select("u", F.col("m").alias("v"))
-    return via.union(own)
+    every smaller neighbor v (and u itself) to m = min(N(u)). The row
+    holding m emits (u, m), every other row emits (v, m), so the output
+    is oriented u > v with no self-loops. One exchange on u."""
+    nb = _neighborhoods(_oriented(edges))
+    return nb.select(
+        F.when(F.col("v") == F.col("m"), F.col("u")).otherwise(F.col("v")).alias("u"),
+        F.col("m").alias("v"),
+    )
 
 
-def _checksum(edges: DataFrame) -> tuple:
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("x"),
-    ).collect()[0]
-    return (row["n"], row["x"])
+def _star_neighborhoods(pairs: DataFrame, id_a: str, id_b: str, max_iterations: int) -> DataFrame:
+    """Run rounds until the edge set is a star forest; return its
+    :func:`_neighborhoods` (every edge in both orientations).
+
+    A round carries the large-star input in neighborhood form, so the
+    exchange that groups a round's output by node also tests that
+    output: it is a star forest rooted at the component minima — the
+    fixed point — unless some node has a smaller neighbor and a second
+    neighbor (a second root, or a larger neighbor). An ``Observation``
+    reads that test from the round's own checkpoint job, and the loop
+    stops on the round that reaches the stars, one before a fixed-point
+    checksum could see them repeat."""
+    edges = _oriented(pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
+    # Not checkpointed: the first round reads ``pairs`` exactly once, so
+    # its upstream pipeline runs inside that round's job.
+    nb = _neighborhoods(_symmetric(edges))
+    for _ in range(max_iterations):
+        nb = _neighborhoods(_symmetric(small_star(_large_star_edges(nb))))
+        shape = Observation()
+        nb = nb.observe(shape, F.max(((F.col("m") < F.col("u")) & (F.col("n") > 1)).cast("int")).alias("bad"))
+        nb = nb.localCheckpoint(eager=True)
+        if not shape.get["bad"]:
+            return nb
+    raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
+
+
+def _members(nb: DataFrame) -> DataFrame:
+    """(id, component) for every non-root node of converged stars: a
+    leaf's only row points at its root."""
+    return nb.filter(F.col("v") < F.col("u")).select(F.col("u").alias("id"), F.col("v").alias("component"))
 
 
 def connected_components(
@@ -94,7 +142,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 25,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(id_a, id_b) pair DataFrame -> (id, component) with component =
     the minimum id in the connected component. Only ids that appear in
@@ -103,33 +150,16 @@ def connected_components(
 
     ``max_iterations`` is a backstop: alternation converges in
     O(log n); 25 rounds covers >10^7-node components. Raises if the
-    checksum still moves at the cap (never observed; indicates a
-    non-deterministic id column).
+    edge set is still not a star forest at the cap (never observed;
+    indicates a non-deterministic id column).
     """
-    edges = _canonical(pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
-    if use_local_checkpoint:
-        # Materialize the INPUT edges before iterating: each star round
-        # references the edge set several times (union + both join
-        # sides), so an expensive upstream pair pipeline (LSH candidates
-        # + Jaccard verification) would otherwise recompute 4x inside
-        # the first round's plan.
-        edges = edges.localCheckpoint(eager=True)
-    prev = None
-    for _ in range(max_iterations):
-        edges = _canonical(small_star(large_star(edges)))
-        if use_local_checkpoint:
-            edges = edges.localCheckpoint(eager=True)
-        cur = _checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
-    # Converged state is a star per component: every edge is
-    # (member, root). The roots themselves are their own component.
-    members = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = edges.select(F.col("v").alias("id"), F.col("v").alias("component")).distinct()
-    return members.union(roots)
+    nb = _star_neighborhoods(pairs, id_a, id_b, max_iterations)
+    # A root's neighbors are all larger; its minimum-neighbor row
+    # stands for it once.
+    roots = nb.filter((F.col("v") == F.col("m")) & (F.col("m") > F.col("u"))).select(
+        F.col("u").alias("id"), F.col("u").alias("component")
+    )
+    return _members(nb).union(roots)
 
 
 def resolve_duplicates(
@@ -226,13 +256,26 @@ def leakage_safe_split(
 
     ``test_nibbles`` selects which first-md5-nibble values go to test
     (default 4/16 = 25% expected, deterministic and engine-stable).
-    One extra projection over resolve_duplicates — no additional
-    shuffle. Output: (id, keeper_id, split).
+    The keeper comes straight from the converged star edges (a root or
+    a singleton has no edge and keeps itself); no cluster-size
+    aggregate. Output: (id, keeper_id, split) followed by the other
+    columns of ``df``, so a pipeline keeps each row's payload without
+    joining it back by id.
     """
-    resolved = resolve_duplicates(df, pairs, id_col=id_col)
-    is_test = F.substring(F.md5(F.col("keeper_id").cast("string")), 1, 1).isin(*test_nibbles)
-    return resolved.select(
+    members = _members(_star_neighborhoods(pairs, "id_a", "id_b", 25))
+    rest = [c for c in df.columns if c != id_col]
+    # A left join in one exchange: the rows and the star edges are
+    # co-grouped by id, and each row takes the component of the edge in
+    # its group. (A join of the two frames costs an exchange per side.)
+    rows = df.select(F.col(id_col).alias("id"), *rest, F.lit(True).alias("_row"))
+    grouped = rows.unionByName(members, allowMissingColumns=True).select(
+        "_row", "id", *rest, F.max("component").over(Window.partitionBy("id")).alias("component")
+    )
+    keeper_id = F.coalesce("component", "id")
+    is_test = F.substring(F.md5(keeper_id.cast("string")), 1, 1).isin(*test_nibbles)
+    return grouped.filter(F.col("_row")).select(
         "id",
-        "keeper_id",
+        keeper_id.alias("keeper_id"),
         F.when(is_test, F.lit("test")).otherwise(F.lit("train")).alias("split"),
+        *rest,
     )

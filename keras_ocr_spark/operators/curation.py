@@ -513,6 +513,10 @@ def token_budget_mix(
             "_rb",
             (F.conv(F.substring("_ok", 1, 4), 16, 10).cast("long") * n_b / 65536).cast("int"),
         )
+        # The inner join on (lang, _rb) below drops these rows anyway;
+        # filtering them here gives both branches of that self-join the
+        # same plan below the window exchange, so the exchange is reused.
+        .filter(F.col("lang").isNotNull() & F.col("_rb").isNotNull())
     )
     w_local = (
         W.partitionBy("lang", "_rb")
@@ -523,9 +527,12 @@ def token_budget_mix(
     w_prefix = (
         W.partitionBy("lang").orderBy("_rb").rowsBetween(W.unboundedPreceding, -1)
     )
+    # A bucket's total is its last running sum (token counts are
+    # non-negative); reading it off the window output keeps the
+    # aggregate on the window's (lang, _rb) exchange.
     offsets = (
         staged.groupBy("lang", "_rb")
-        .agg(F.sum("n_tokens").alias("_bucket_total"))
+        .agg(F.max("_local_cum").alias("_bucket_total"))
         .withColumn("_offset", F.coalesce(F.sum("_bucket_total").over(w_prefix), F.lit(0)))
         .select("lang", "_rb", "_offset")
     )

@@ -123,46 +123,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def containment_pairs_naive(
-    df: DataFrame,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Reference (unpruned) containment join: the full inverted-index
-    self-join. Kept as the equivalence oracle for
-    :func:`containment_pairs` — a shingle with document frequency f
-    contributes O(f²) join rows here, so this form is NOT the one to
-    run at scale. Same output contract as :func:`containment_pairs`."""
-    sh = shingle_docs(df, id_col, text_col, k)
-    if max_shingle_df is not None:
-        hot = sh.groupBy("shingle").count().filter(F.col("count") > max_shingle_df).select("shingle")
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_shingles", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_shingles", "n_b"), "id_b")
-        .withColumn("containment", F.col("n_common") / F.least("n_a", "n_b"))
-        .filter(F.col("containment") >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            F.col("n_a").cast("long").alias("n_a"),
-            F.col("n_b").cast("long").alias("n_b"),
-            pround(F.col("containment"), 6).alias("containment"),
-        )
-    )
-
-
 def _rarity_coded_docs(
     df: DataFrame,
     id_col: str,
@@ -278,9 +238,8 @@ def containment_pairs(
     dictionary-coded shingle arrays (attached by a broadcast of the
     ~0.2 KB/doc signature frame; at billions of docs drop the hint and
     let it run as a narrow equi-join), so the corpus text is never
-    re-shingled per candidate. Result set identical to
-    :func:`containment_pairs_naive` (pinned in tests + the driver
-    oracle).
+    re-shingled per candidate. Result set pinned by the driver
+    oracle's full inverted-index self-join.
 
     Output: (id_a, id_b, n_a, n_b, containment).
     """
@@ -913,9 +872,9 @@ def substring_dup_stats(
     (raw hashlib.md5 bytes — hex is an injective encoding, so equality
     classes match F.md5/DuckDB md5 exactly) and the span union + text
     rebuild from a second struct-returning pandas UDF;
-    the corpus-wide duplicated-digest count and the per-doc start-list
-    join keep the exact same one-count-shuffle shape. Positions, not
-    text, still ride the joins.
+    the corpus-wide duplicated-digest count is a window over one
+    exchange on the digest (positions, not text, ride it), and each
+    document collects its start list in one more exchange on the id.
 
     Output: (id, n_words, dup_words, dup_frac, clean_text).
     """
@@ -971,14 +930,22 @@ def substring_dup_stats(
     g = df.select(F.col(id_col).alias("id"), F.posexplode(_grams(F.col(text_col))).alias("pos0", "h")).select(
         "id", (F.col("pos0") + 1).alias("pos"), "h"
     )
-    dup_h = g.groupBy("h").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") > 1).select("h")
-    starts = (
-        g.join(dup_h, "h")
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_list("pos")).alias("dup_starts"))
+    # The corpus-wide count is a window over the one ``h`` exchange, so
+    # the gram rows are produced and shuffled once (a groupBy plus a
+    # join back would evaluate ``_grams`` for each side).
+    dup = (
+        g.select("id", "pos", F.count(F.lit(1)).over(W.partitionBy("h")).alias("c"))
+        .filter(F.col("c") > 1)
+        .select("id", "pos")
     )
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-    joined = base.join(starts, "id", "left").select(
+    # Each document collects its duplicated start positions in one more
+    # exchange: its row and its dup-gram rows are co-grouped by id (a
+    # groupBy plus a left join back costs an exchange per side).
+    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"), F.lit(True).alias("_row"))
+    grouped = base.unionByName(dup, allowMissingColumns=True).select(
+        "_row", "id", "_t", F.sort_array(F.collect_list("pos").over(W.partitionBy("id"))).alias("dup_starts")
+    )
+    joined = grouped.filter(F.col("_row")).select(
         "id", _span_stats(F.col("_t"), F.col("dup_starts")).alias("_s")
     )
     n_words = F.col("_s.n_words")
@@ -1039,9 +1006,12 @@ def substring_dup_stats_sql(
     g = df.select(F.col(id_col).alias("id"), F.posexplode(grams).alias("pos0", "h")).select(
         "id", (F.col("pos0") + 1).alias("pos"), "h"
     )
-    dup_h = g.groupBy("h").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") > 1).select("h")
+    # The corpus-wide count is a window over the one ``h`` exchange, so
+    # the gram rows are produced and shuffled once (a groupBy plus a
+    # join back would evaluate ``_grams`` for each side).
     starts = (
-        g.join(dup_h, "h")
+        g.select("id", "pos", F.count(F.lit(1)).over(W.partitionBy("h")).alias("c"))
+        .filter(F.col("c") > 1)
         .groupBy("id")
         .agg(F.sort_array(F.collect_list("pos")).alias("dup_starts"))
     )

@@ -103,6 +103,16 @@ def quality_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
+def curation_feature_columns(text: Column) -> list:
+    """The two curation gate inputs, ``quality`` and ``n_bpe_tokens``, as
+    column expressions over ``text`` — for a caller that keeps its other
+    columns on the same rows instead of joining them back by id."""
+    return [
+        pround(_quality_expr(text), 6).alias("quality"),
+        F.size(F.regexp_extract_all(text, F.lit(TOKEN_PATTERN), 0)).alias("n_bpe_tokens"),
+    ]
+
+
 def curation_features(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, quality, n_bpe_tokens) in ONE map-only projection — exactly
     the two gate inputs the curation pipeline consumes. Composing
@@ -111,12 +121,7 @@ def curation_features(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     corpus-sized sides for what is a single per-row expression; the
     values are identical by construction (same ``_quality_expr`` /
     ``TOKEN_PATTERN`` exprs, pinned in tests)."""
-    text = F.col(text_col)
-    return df.select(
-        F.col(id_col).alias("id"),
-        pround(_quality_expr(text), 6).alias("quality"),
-        F.size(F.regexp_extract_all(text, F.lit(TOKEN_PATTERN), 0)).alias("n_bpe_tokens"),
-    )
+    return df.select(F.col(id_col).alias("id"), *curation_feature_columns(F.col(text_col)))
 
 
 def token_counts(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -4,6 +4,16 @@ All skew/shuffle knobs are set here once: AQE (runtime re-plan +
 coalesce + skew-join splitting), Arrow for the pandas-UDF boundary,
 UTC session timezone (so DuckDB oracle comparison is well-defined),
 shuffle partitions sized to cores rather than the 200 default.
+
+The codegen cache is sized to hold a pass's working set. A
+``curate_corpus`` pass generates 137 distinct classes on a cold JVM
+(1,000 docs, 4 vCPUs), more than Spark's default cache of 100 entries,
+so every warm pass evicted the classes of the one before and Janino
+recompiled 164-171 of them. With 1000 entries a warm pass compiles
+none. The cache key is the generated source, which by default embeds
+the whole-stage codegen stage id; AQE numbers stages as it plans them,
+so the same stage could come back under another id and compile again —
+hence ``useIdInClassName`` off.
 """
 
 from __future__ import annotations
@@ -34,6 +44,9 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+        # Static: read once when the JVM's codegen cache is created.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # Batch-throughput GC: ParallelGC beats G1's latency-oriented
         # defaults for string-heavy scan/shuffle workloads (measured ~1.8x

@@ -1,7 +1,7 @@
 """Duplicate-cluster resolution tests: large-star/small-star connected
 components (operators/clusters.py) — planted chains, random graphs vs a
 union-find reference, singleton handling, and the per-iteration plan
-audit (equi-joins only, no cartesian)."""
+audit (no cartesian)."""
 
 import random
 
@@ -46,6 +46,17 @@ def _pairs_df(spark, pairs):
     return spark.createDataFrame(pairs, "id_a long, id_b long")
 
 
+def _random_pair_sets():
+    """The random graphs of test_matches_union_find_on_random_graphs."""
+    random.seed(11)
+    out = []
+    for _ in range(2):
+        ids = list(range(0, 300, 3))
+        pairs = [(random.choice(ids), random.choice(ids)) for _ in range(120)]
+        out.append([(a, b) for a, b in pairs if a != b])
+    return out
+
+
 class TestConnectedComponents:
     def test_planted_three_chain(self, spark):
         # a~b and b~c must yield ONE cluster even though (a,c) was
@@ -75,7 +86,7 @@ class TestConnectedComponents:
         assert got == {"a": "a", "b": "a", "c": "a"}
 
     def test_star_steps_are_equijoins_only(self, spark):
-        # The per-iteration plan must be groupBy + equi-join — a
+        # Each star step is one exchange on u plus a window — a
         # cartesian/BNLJ here would be quadratic in the edge set.
         edges = _pairs_df(spark, [(1, 2), (2, 3), (4, 5)]).selectExpr("id_a as u", "id_b as v")
         for step in (large_star, small_star):
@@ -196,3 +207,26 @@ class TestLeakageSafeSplit:
         for i, r in out.items():
             want = "test" if hashlib.md5(str(r.keeper_id).encode()).hexdigest()[0] in "0123" else "train"
             assert r.split == want, (i, r)
+
+    def test_direct_split_matches_resolve_duplicates_form(self, spark):
+        from pyspark.sql import functions as F
+
+        from keras_ocr_spark.operators.clusters import leakage_safe_split
+
+        docs = spark.createDataFrame([(i,) for i in range(300)], "doc_id long")
+        for pairs in _random_pair_sets():
+            pairs_df = _pairs_df(spark, pairs)
+            split = leakage_safe_split(docs, pairs_df, id_col="doc_id")
+            got = {tuple(r) for r in split.select("id", "keeper_id", "split").collect()}
+            resolved = resolve_duplicates(docs, pairs_df, id_col="doc_id")
+            is_test = F.substring(F.md5(F.col("keeper_id").cast("string")), 1, 1).isin("0", "1", "2", "3")
+            want = {
+                tuple(r)
+                for r in resolved.select(
+                    "id", "keeper_id", F.when(is_test, "test").otherwise("train")
+                ).collect()
+            }
+            assert got == want
+            plan = split._jdf.queryExecution().executedPlan().toString()
+            keyed = [ln for ln in plan.splitlines() if "Aggregate" in ln and "keeper_id" in ln]
+            assert not keyed, keyed

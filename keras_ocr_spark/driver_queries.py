@@ -5388,9 +5388,10 @@ def q_time_travel_read(spark, sf_dir):
     dropped, lang NULLed) committed as version 2, then the query reads
     **version 1 back from under the newer version** — the oracle reads
     the original parquet, so the hash proves the historical read is
-    bit-exact and unaffected by later commits. Manifests are the
-    commit point (write-temp + os.replace); commit metrics ride the
-    write job via Observation."""
+    bit-exact and unaffected by later commits. Each version commits
+    through ``plans.observe.commit``: the data is written first, with
+    the manifest's row count and hash observed on that write job, and
+    the manifest, the commit point, is published last, atomically."""
     import hashlib as _hl
     from pathlib import Path as _P
 

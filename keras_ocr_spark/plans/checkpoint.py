@@ -13,54 +13,70 @@ Graft analog of the reference's resume-from-checkpoint training loop
   parquet cannot prune, so 8 buckets meant 8 full scans (8x read
   amplification at 100 TB). Now: one scan per run, regardless of
   n_buckets (asserted in tests/test_checkpoint.py plan-shape check).
-- per-bucket metrics + content hash come from ONE grouped read-back of
-  the committed files (the manifest attests what was written, not the
-  plan). The content hash is ORDER-INDEPENDENT — ``bit_xor`` of per-row
-  ``xxhash64`` + the row count — not the old
-  ``sha2(sort_array(collect_list(...)))`` which funnelled an entire
-  bucket into a single aggregation buffer (a one-task memory bomb).
+- per-bucket metrics + content hash are observed on that same write job
+  (``plans.observe.commit``): one ``count_if``/``sum``/``bit_xor``
+  triple per pending bucket, so the manifest attests exactly the rows
+  the write committed, with no read-back job. The content hash is
+  ORDER-INDEPENDENT — ``bit_xor`` of per-row ``xxhash64`` + the row
+  count — so no task ever buffers a whole bucket to hash it.
 - resume = read the manifest dir, SKIP every bucket whose manifest
-  matches the current (config, input, n_buckets) lineage — an anti-join
-  of work against completed work. The fingerprint INCLUDES n_buckets:
-  manifests written under a different bucketing predicate never satisfy
-  resume, and stale ``bucket=K`` directories from an older layout are
-  deleted up front (they are uncommitted under the current lineage).
+  matches the current lineage — an anti-join of work against completed
+  work. The fingerprint covers the config, n_buckets, the input path
+  and the input's file listing (relative names, sizes, mtimes): an
+  input rewritten in place, or manifests written under a different
+  bucketing predicate, never satisfy resume, and stale ``bucket=K``
+  directories from an older layout are deleted up front (they are
+  uncommitted under the current lineage).
 
 At 10^12-turn scale the real implementation is Iceberg snapshot IDs +
 partition-level commit metadata; the manifest JSON here mirrors exactly
 those fields behind a thin seam (``TableIO``), so the catalog swap is a
 config change, not a rewrite.
 
-Atomicity: manifests are written to a temp name then ``os.replace``d —
-a crashed writer never leaves a half-manifest that resume would trust.
-A crash during the Spark write itself leaves only uncommitted staging
-files (no manifest), so resume recomputes exactly the uncommitted
-buckets. ``max_buckets_per_run`` bounds the blast radius of a crash —
-each run commits at most that many buckets (still one scan per run).
+Atomicity is ``plans.observe.commit``'s: the data is written first and
+each manifest is published last, atomically, and names the partition
+directory it attests (``path``). A crash during the Spark write leaves
+only files no manifest names, so resume recomputes exactly the
+uncommitted buckets. ``max_buckets_per_run`` bounds the blast radius of
+a crash — each run commits at most that many buckets (still one scan
+per run). Streaming epochs (``streaming.extraction.epoch_sink``) commit
+through the same helper, so :func:`read_committed` reads both.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
 import shutil
 from dataclasses import asdict
 from pathlib import Path
-from typing import Iterable, Iterator, List, Optional, Tuple
+from typing import Iterable, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
+from .observe import commit, load_manifests
 from .pipeline import extract
 
 MANIFEST_DIR = "_manifests"
+#: Per-row signature whose ``bit_xor`` is a manifest's ``content_hash64``.
+ROW_SIG = "xxhash64(concat_ws(chr(30), conv_id, turn_idx, clean_text))"
+
+
+def _input_listing(input_path: str) -> list:
+    """Relative name, size and mtime of every file of the input. A path
+    this process cannot list (a remote URI) contributes nothing."""
+    root = Path(input_path)
+    files = sorted(root.rglob("*")) if root.is_dir() else [root]
+    stats = ((p, p.stat()) for p in files if p.is_file())
+    return [[p.relative_to(root.parent).as_posix(), st.st_size, st.st_mtime_ns] for p, st in stats]
 
 
 def _config_fingerprint(cfg: ExtractionConfig, input_path: str, n_buckets: int) -> str:
     payload = json.dumps(
-        {"cfg": asdict(cfg), "input": input_path, "n_buckets": n_buckets}, sort_keys=True
+        {"cfg": asdict(cfg), "input": input_path, "listing": _input_listing(input_path), "n_buckets": n_buckets},
+        sort_keys=True,
     )
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
@@ -69,46 +85,42 @@ def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
-def _load_manifests(out_dir: str) -> Iterator[Tuple[Path, dict]]:
-    """Every parseable manifest with its path. A half-written or corrupt
-    file (bad JSON, no integer ``bucket``/``rows``) is skipped: its bucket
-    counts as uncommitted, so resume redoes and rewrites it."""
-    for p in sorted((Path(out_dir) / MANIFEST_DIR).glob("bucket-*.json")):
-        try:
-            m = json.loads(p.read_text())
-            m["bucket"], m["rows"] = int(m["bucket"]), int(m.get("rows", 0))
-        except (OSError, ValueError, TypeError, KeyError):
-            continue
-        yield p, m
+def manifest_metrics(where: str = "true", suffix: str = "") -> dict:
+    """A manifest's ``rows``, ``spans`` and ``content_hash64`` over the
+    extracted rows matching ``where``, as aggregates for the write job
+    to observe (each name gets ``suffix``)."""
+    return {
+        f"rows{suffix}": f"count_if({where})",
+        f"spans{suffix}": f"coalesce(sum(if({where}, size(spans), 0)), 0)",
+        f"content_hash64{suffix}": f"coalesce(bit_xor(if({where}, {ROW_SIG}, 0)), 0)",
+    }
 
 
-def _committed_manifests(
-    out_dir: str, fingerprint: Optional[str] = None, n_buckets: Optional[int] = None
-) -> List[dict]:
-    """Manifests that attest a readable committed bucket: complete, of the
-    given lineage (``fingerprint``/``n_buckets`` when set), and — when it
-    attests rows — with its bucket directory still on disk. An
-    intermediate run under a DIFFERENT layout may have deleted that
-    directory as stale while the manifest survived (observed when
+def committed_manifests(out_dir: str, pattern: str = "*.json", fingerprint: Optional[str] = None) -> List[dict]:
+    """Manifests under ``out_dir`` (matching ``pattern``) that attest a
+    readable commit: complete, of the lineage ``fingerprint`` when set,
+    and — when it attests rows — with the directory it names still on
+    disk. An intermediate run under a DIFFERENT layout may have deleted
+    that directory as stale while the manifest survived (observed when
     alternating n_buckets 6 -> 3 -> 6: resume trusted bucket-3..5.json
     whose dirs the 3-bucket run removed, silently dropping their rows)."""
-    committed = []
-    for _, m in _load_manifests(out_dir):
-        if m.get("status") != "complete":
-            continue
-        if fingerprint is not None and m.get("fingerprint") != fingerprint:
-            continue
-        if n_buckets is not None and m.get("n_buckets") != n_buckets:
-            continue  # belt-and-suspenders: fingerprint already covers it
-        if m["rows"] > 0 and not (Path(out_dir) / f"bucket={m['bucket']}").is_dir():
-            continue
-        committed.append(m)
-    return committed
+    return [
+        m
+        for _, m in load_manifests(Path(out_dir) / MANIFEST_DIR, pattern, ("rows",))
+        if m.get("status") == "complete"
+        and isinstance(m.get("path"), str)
+        and (fingerprint is None or m.get("fingerprint") == fingerprint)
+        and (m["rows"] == 0 or (Path(out_dir) / m["path"]).is_dir())
+    ]
 
 
 def completed_buckets(out_dir: str, fingerprint: str, n_buckets: Optional[int] = None) -> List[int]:
     """Buckets whose manifest exists and matches the current lineage."""
-    return [m["bucket"] for m in _committed_manifests(out_dir, fingerprint, n_buckets)]
+    return [
+        m["bucket"]
+        for m in committed_manifests(out_dir, "bucket-*.json", fingerprint)
+        if isinstance(m.get("bucket"), int) and (n_buckets is None or m.get("n_buckets") == n_buckets)
+    ]
 
 
 def _clean_stale_bucket_dirs(out_dir: str, done: set, n_buckets: int) -> List[int]:
@@ -133,18 +145,10 @@ def _clean_stale_bucket_dirs(out_dir: str, done: set, n_buckets: int) -> List[in
     # trusted for resume, but leaving it would make read_manifests()
     # double-count rows across layouts.
     # Corrupt manifests are redone (and rewritten) anyway.
-    for p, m in _load_manifests(out_dir):
+    for p, m in load_manifests(root / MANIFEST_DIR, "bucket-*.json", ("bucket",)):
         if m["bucket"] >= n_buckets or m["bucket"] not in done:
             p.unlink()
     return removed
-
-
-def _write_manifest(out_dir: str, bucket: int, manifest: dict) -> None:
-    mdir = Path(out_dir) / MANIFEST_DIR
-    mdir.mkdir(parents=True, exist_ok=True)
-    tmp = mdir / f".bucket-{bucket}.json.tmp"
-    tmp.write_text(json.dumps(manifest, sort_keys=True, indent=1))
-    os.replace(tmp, mdir / f"bucket-{bucket}.json")  # atomic publish
 
 
 def pending_plan(
@@ -195,96 +199,61 @@ def run_with_checkpoints(
     if not this_run:
         return {"buckets_run": [], "buckets_skipped": sorted(done), "rows": 0}
 
-    result = pending_plan(spark, input_path, this_run, n_buckets, cfg, n_salt)
-
-    # Dynamic partition overwrite: only the partitions present in this
-    # run's data are replaced; committed buckets stay untouched.
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        result.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-    # Metrics + content hash from what was WRITTEN, ONE grouped pass
-    # (read-back: the manifest attests the committed files, not the
-    # plan). bit_xor(xxhash64(row)) + count is order-independent and
-    # streams through partial aggregation — no collect_list buffer.
-    # An empty input (or all-empty pending buckets) produces a
-    # partitioned write with NO data files — reading the directory back
-    # would fail schema inference, so skip the read-back and commit
-    # rows=0 manifests (an empty job must still checkpoint cleanly).
-    has_data = any(Path(out_dir).glob("bucket=*/*.parquet"))
-    stats = {}
-    if has_data:
-        written = spark.read.parquet(out_dir).filter(F.col("bucket").isin(this_run))
-        row_sig = F.xxhash64(F.concat_ws("\x1e", "conv_id", "turn_idx", "clean_text"))
-        stats = {
-            int(r["bucket"]): r
-            for r in written.groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("spans"),
-                F.coalesce(F.bit_xor(row_sig), F.lit(0)).alias("content_hash64"),
-            )
-            .collect()
-        }
-
-    total_rows = 0
+    metrics = {}
     for bucket in this_run:
-        r = stats.get(bucket)
-        rows, spans, chash = (int(r["rows"]), int(r["spans"]), int(r["content_hash64"])) if r else (0, 0, 0)
-        _write_manifest(
-            out_dir,
-            bucket,
-            {
+        metrics.update(manifest_metrics(f"bucket = {bucket}", f"_{bucket}"))
+
+    def manifests(audit: dict) -> dict:
+        return {
+            Path(out_dir, MANIFEST_DIR, f"bucket-{bucket}.json"): {
                 "status": "complete",
                 "bucket": bucket,
+                "path": f"bucket={bucket}",
                 "n_buckets": n_buckets,
                 "fingerprint": fingerprint,
                 "input_path": input_path,
                 "partition_predicate": f"pmod(xxhash64(conv_id), {n_buckets}) = {bucket}",
                 "config": asdict(cfg),
-                "rows": rows,
-                "spans": spans,
-                "content_hash64": chash,
-            },
-        )
-        total_rows += rows
+                "rows": audit[f"rows_{bucket}"],
+                "spans": audit[f"spans_{bucket}"],
+                "content_hash64": audit[f"content_hash64_{bucket}"],
+            }
+            for bucket in this_run
+        }
+
+    result = pending_plan(spark, input_path, this_run, n_buckets, cfg, n_salt)
+    audit = commit(result, out_dir, metrics, manifests, partition_by=("bucket",))
 
     if fail_after_bucket is not None and len(pending) > len(this_run):
         raise RuntimeError(f"injected failure after {len(this_run)} buckets")
 
-    return {"buckets_run": this_run, "buckets_skipped": sorted(done), "rows": total_rows}
+    rows = sum(audit[f"rows_{bucket}"] for bucket in this_run)
+    return {"buckets_run": this_run, "buckets_skipped": sorted(done), "rows": rows}
 
 
 def read_manifests(out_dir: str) -> Iterable[dict]:
-    """Every parseable manifest, committed or not (corrupt ones skipped)."""
-    for _, m in _load_manifests(out_dir):
+    """Every parseable bucket manifest, committed or not (corrupt ones
+    skipped)."""
+    for _, m in load_manifests(Path(out_dir) / MANIFEST_DIR, "bucket-*.json", ("bucket", "rows")):
         yield m
 
 
 def read_committed(spark: SparkSession, out_dir: str, fingerprint: Optional[str] = None):
-    """CONSISTENT READ of a checkpointed output: only buckets whose
-    manifests attest completion (optionally pinned to one lineage
-    ``fingerprint``) — a consumer mid-job never sees the staging files
-    of a bucket whose manifest hasn't committed, which is exactly the
-    snapshot-isolation read an Iceberg table gives for free and plain
-    parquet does not.
+    """CONSISTENT READ of a checkpointed or streamed output: only the
+    partition directories that :func:`committed_manifests` attests —
+    checkpoint buckets (optionally pinned to one lineage
+    ``fingerprint``) and streaming epochs alike. A consumer mid-job never
+    sees the staging files of a bucket or epoch whose manifest hasn't
+    committed, which is exactly the snapshot-isolation read an Iceberg
+    table gives for free and plain parquet does not.
 
-    The bucket list becomes partition PRUNING on the scan (bucket is
-    the physical partition key), so reading k of n committed buckets
-    touches k directories. Returns None when nothing is committed yet
-    OR when every committed bucket attests rows=0 (a rows=0 commit
-    writes no parquet files, so there is no schema on disk to offer —
-    schema inference over zero files would raise). The commit rule is
-    :func:`completed_buckets`' own: a corrupt manifest, or a rows>0
-    manifest whose bucket directory a later re-layout deleted, is NOT
-    readable and is excluded."""
-    manifests = _committed_manifests(out_dir, fingerprint)
-    committed = [m["bucket"] for m in manifests]
-    any_rows = any(m["rows"] > 0 for m in manifests)
-    if not committed or not any_rows:
+    Only the attested directories are listed and scanned (``bucket`` /
+    ``epoch_id`` come back as partition columns), so reading k of n
+    committed buckets touches k directories. Returns None when nothing
+    is committed yet OR when every committed manifest attests rows=0 (a
+    rows=0 commit writes no parquet files, so there is no schema on disk
+    to offer — schema inference over zero files would raise)."""
+    paths = [str(Path(out_dir) / m["path"]) for m in committed_manifests(out_dir, fingerprint=fingerprint) if m["rows"] > 0]
+    if not paths:
         return None
-    df = spark.read.option("basePath", out_dir).parquet(out_dir)
-    return df.filter(F.col("bucket").isin(committed))
+    return spark.read.option("basePath", out_dir).parquet(*paths)

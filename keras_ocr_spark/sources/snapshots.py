@@ -6,9 +6,9 @@ not: every write is a new immutable VERSION, readers pick a version
 (latest by default, any historical one on demand), and the commit
 point is a tiny metadata swap — never the data files themselves. This
 module provides that contract on the same parquet+manifest substrate
-as ``plans/checkpoint.py`` (see its atomicity notes), sized for the
-sandbox where the Iceberg jars are absent (``sources/tableio.py:48``
-holds the config-swap seam for when they exist).
+as ``plans/checkpoint.py``, for deployments without the Iceberg jars
+(``sources/tableio.py`` holds the config-swap seam for when they
+exist).
 
 Layout:
 
@@ -17,73 +17,74 @@ Layout:
       _snapshots/v1.json v2.json   commit manifests (version, path,
                                    n_rows, content_hash, parent)
 
-Commit protocol: the data directory is fully written FIRST, then the
-manifest lands via write-temp + ``os.replace`` (atomic on POSIX). A
-crash mid-write leaves an orphan data dir but never a visible version
-— readers only trust manifests, exactly the checkpoint module's
-"manifest attests data" rule. Row count and an order-independent
-content hash ride the write job itself via ``plans/observe.py`` (zero
-extra scans), so every manifest carries verifiable lineage for free.
+Commit protocol: ``plans.observe.commit``, the one protocol shared with
+checkpoint buckets and streaming epochs. The data directory is written
+FIRST, in one job that also observes the manifest's row count and
+order-independent content hash (zero extra scans); the manifest is
+published LAST, atomically. A crash mid-write leaves an orphan data dir
+but never a visible version — readers only trust manifests, exactly the
+checkpoint module's "manifest attests data" rule — and a torn manifest
+is skipped by ``plans.observe.load_manifests``.
 
 Time travel is then just "read the path the chosen manifest names";
-``history`` is a directory listing. No compaction/expiry is
-implemented (out of scope — the emulation is the READ contract).
+``history`` is a directory listing. ``expire_snapshots`` retires old
+versions (manifests first); no compaction is implemented (out of scope
+— the emulation is the READ contract).
 """
 
 from __future__ import annotations
 
-import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.observe import write_with_audit
+from ..plans.observe import commit, load_manifests
 
 
 def write_snapshot(df: DataFrame, table_dir: str) -> int:
     """Commit ``df`` as the next version of ``table_dir``; returns the
     new version number. The manifest is the commit point."""
+    return _commit_version(df, table_dir)
+
+
+def _commit_version(df: DataFrame, table_dir: str, mode: str = "error", **fields) -> int:
+    """Commit ``df`` as the next version, its manifest carrying
+    ``fields`` too. Versions are immutable, so the data write refuses an
+    existing directory (``mode="error"``) unless the caller owns the
+    uncommitted one there. Versions are numbered from manifest file
+    names, torn ones included, so a damaged manifest's number is never
+    reused."""
     root = Path(table_dir)
-    snaps = root / "_snapshots"
-    snaps.mkdir(parents=True, exist_ok=True)
-    versions = sorted(int(p.stem[1:]) for p in snaps.glob("v*.json"))
+    versions = sorted(int(p.stem[1:]) for p in (root / "_snapshots").glob("v*.json"))
     v = (versions[-1] + 1) if versions else 1
     rel = f"data/v{v}"
-    audit = write_with_audit(
+    commit(
         df,
         str(root / rel),
         {
             "n_rows": "count(*)",
             "content_hash": f"coalesce(bit_xor(xxhash64({', '.join(sorted(df.columns))})), 0)",
         },
-        mode="error",  # versions are immutable — never overwrite one
+        lambda audit: {
+            root / "_snapshots" / f"v{v}.json": {
+                "version": v,
+                "path": rel,
+                "parent": versions[-1] if versions else None,
+                "schema": df.schema.json(),
+                **audit,
+                **fields,
+            }
+        },
+        mode=mode,
     )
-    manifest = {
-        "version": v,
-        "path": rel,
-        "n_rows": int(audit["n_rows"]),
-        "content_hash": int(audit["content_hash"]),
-        "parent": versions[-1] if versions else None,
-        "schema": df.schema.json(),
-    }
-    tmp = snaps / f".v{v}.json.tmp"
-    tmp.write_text(json.dumps(manifest))
-    os.replace(tmp, snaps / f"v{v}.json")
     return v
 
 
 def history(table_dir: str) -> list[dict]:
     """Committed versions, oldest first (manifests only — orphan data
     dirs from crashed writers are invisible here by design)."""
-    snaps = Path(table_dir) / "_snapshots"
-    out = []
-    for p in sorted(snaps.glob("v*.json"), key=lambda p: int(p.stem[1:])):
-        try:
-            out.append(json.loads(p.read_text()))
-        except (json.JSONDecodeError, OSError):
-            continue  # half-written manifests are not versions
-    return out
+    found = [m for _, m in load_manifests(Path(table_dir) / "_snapshots", "v*.json", ("version",))]
+    return sorted(found, key=lambda m: m["version"])
 
 
 def read_snapshot(

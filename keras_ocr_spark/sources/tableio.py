@@ -3,8 +3,11 @@
 The north rule targets Iceberg transcript tables. This sandbox has no
 Iceberg runtime jars and no network, so the seam has two backends:
 
-- ``ParquetTableIO`` (active): plain parquet + the JSON manifests from
-  ``plans.checkpoint`` emulating snapshot/partition metadata;
+- ``ParquetTableIO`` (active): plain parquet reads and writes. The
+  snapshot/partition metadata an Iceberg catalog keeps is emulated by
+  the JSON manifests that ``plans.observe.commit`` publishes after
+  each write (checkpoint buckets, snapshot versions, streaming
+  epochs);
 - ``IcebergTableIO`` (stub, import-gated): the production backend —
   ``spark.read.table(...)`` / ``df.writeTo(tbl).append()`` with snapshot
   pinning via ``VERSION AS OF``. Swapping backends is a config change;

@@ -9,19 +9,18 @@ COMMIT, forking history with a phantom version. The fix is the
 standard idempotent-sink contract: the sink must be a no-op for a
 ``batch_id`` it has already committed.
 
-Implementation: every snapshot manifest written by this sink carries
-the ``batch_id`` it came from; on entry the sink scans the table
-history (tiny — manifests only) and returns immediately when the
-batch_id is already present. The snapshot module's commit protocol
-(data first, atomic manifest last) then closes the remaining crash
-window: a sink killed mid-write leaves an orphan data dir and NO
-manifest, so the replay re-runs the write against the next version
-number and commits once. Note ``write_snapshot``'s mode="error"
-refusal applies to the orphan's OWN dir only when version numbers
-collide — version numbering comes from manifests, so the replay gets
-the same number; the orphan dir must therefore be cleaned before
-re-commit, which the sink does (again: only for versions with no
-manifest — committed data is never touched).
+Implementation: the sink commits each batch through the snapshot
+module's protocol (``plans.observe.commit``: data first, one atomic
+manifest last), and that single manifest carries the ``batch_id``. On
+entry the sink scans the table history (tiny — manifests only) and
+returns immediately when the batch_id is already present. There is no
+moment at which a version is visible without its ``batch_id``, so a kill
+anywhere leaves either a committed version the replay skips, or an
+orphan data dir with NO manifest. Version numbering comes from
+manifests, so the replay gets the orphan's number; it overwrites that
+dir (the sink is the table's only writer, per foreachBatch's
+single-active-query contract, and committed data always has a
+manifest) and commits once.
 
 Scale shape: per micro-batch one write job (audit metrics ride it via
 Observation) plus a manifest-dir listing; state is the manifest dir
@@ -30,45 +29,17 @@ itself — no extra store.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame
 
-from ..sources.snapshots import history, write_snapshot
-
-
-def _committed_batch_ids(table_dir: str) -> set:
-    return {m.get("batch_id") for m in history(table_dir) if "batch_id" in m}
+from ..sources.snapshots import _commit_version, history
 
 
 def snapshot_batch_sink(batch_df: DataFrame, batch_id: int, table_dir: str) -> None:
     """Idempotent foreachBatch sink: commit ``batch_df`` as the next
     snapshot version, exactly once per ``batch_id``."""
-    if batch_id in _committed_batch_ids(table_dir):
+    if any(m.get("batch_id") == batch_id for m in history(table_dir)):
         return  # replayed batch: already committed, no-op
-    root = Path(table_dir)
-    versions = {m["version"] for m in history(table_dir)}
-    next_v = (max(versions) + 1) if versions else 1
-    orphan = root / "data" / f"v{next_v}"
-    if orphan.exists():
-        # a crashed prior attempt wrote data but no manifest — the dir
-        # is invisible to every reader (manifests are the commit
-        # point); clean it so the re-commit can land.
-        shutil.rmtree(orphan)
-    v = write_snapshot(batch_df, table_dir)
-    # stamp the batch id into the manifest (read-modify-replace is safe:
-    # this sink is the only writer of this table, per foreachBatch's
-    # single-active-query contract)
-    import json
-    import os
-
-    mpath = root / "_snapshots" / f"v{v}.json"
-    manifest = json.loads(mpath.read_text())
-    manifest["batch_id"] = batch_id
-    tmp = root / "_snapshots" / f".v{v}.json.tmp"
-    tmp.write_text(json.dumps(manifest))
-    os.replace(tmp, mpath)
+    _commit_version(batch_df, table_dir, mode="overwrite", batch_id=batch_id)
 
 
 def start_snapshot_ingest(stream_df: DataFrame, table_dir: str, checkpoint_dir: str):

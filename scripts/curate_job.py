@@ -13,7 +13,9 @@ Pipeline: MinHash-LSH near-dup candidates -> exact-Jaccard verify ->
 large/small-star transitive closure -> one keeper per duplicate
 cluster -> quality gate -> curated parquet + token-budget columns,
 plus a _summary.json manifest (row counts per stage, kept-token
-total, config echo, order-independent content hash) for lineage.
+total, config echo, order-independent content hash) for lineage,
+published atomically after the data (``plans.observe.publish_json``),
+so a killed job never leaves a truncated summary.
 
 Unlike extraction (embarrassingly parallel per conversation, hence
 per-bucket checkpoint manifests in plans/checkpoint.py), dedup is a
@@ -72,7 +74,7 @@ def main() -> int:
     # — the old form re-read the freshly written output, paying a whole
     # second scan for three aggregates; at 100 TB that second scan IS
     # the cost of the job again.
-    from keras_ocr_spark.plans.observe import write_with_audit
+    from keras_ocr_spark.plans.observe import publish_json, write_with_audit
 
     stats = write_with_audit(
         curated,
@@ -92,8 +94,7 @@ def main() -> int:
         "threshold": args.threshold,
         "min_quality": args.min_quality,
     }
-    with open(f"{args.output}/_summary.json", "w") as fh:
-        json.dump(summary, fh)
+    publish_json(f"{args.output}/_summary.json", summary)
     print(json.dumps(summary))
     spark.stop()
     return 0

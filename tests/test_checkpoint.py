@@ -14,10 +14,12 @@ from keras_ocr_spark.config import ExtractionConfig
 from keras_ocr_spark.plans.checkpoint import (
     completed_buckets,
     pending_plan,
+    read_committed,
     read_manifests,
     run_with_checkpoints,
 )
-from keras_ocr_spark.sources.transcripts import generate_pandas
+from keras_ocr_spark.plans.pipeline import extract
+from keras_ocr_spark.sources.transcripts import TRANSCRIPT_SCHEMA, generate_pandas
 
 
 @pytest.fixture(scope="module")
@@ -243,3 +245,90 @@ def test_read_committed_rows0_and_deleted_dir_edges(spark, tmp_path):
     got = read_committed(spark, out)
     assert got.filter(f"bucket = {victim['bucket']}").count() == 0
     assert got.count() == len(pdf) - victim["rows"]
+
+
+def _turns(rows):
+    return {(r.conv_id, r.turn_idx): (r.clean_text, [(s.start, s.end) for s in r.spans]) for r in rows}
+
+
+def test_input_rewritten_in_place_reruns_every_bucket(spark, tmp_path):
+    """The fingerprint covers the input's file listing, not just its
+    path: after an in-place rewrite a resume must redo every bucket, and
+    the committed output must be the new input's extraction."""
+    inp = str(tmp_path / "in.parquet")
+    out = str(tmp_path / "out")
+    spark.createDataFrame(
+        generate_pandas(n_convs=40, seed=1, make_skewed=False), schema=TRANSCRIPT_SCHEMA
+    ).write.parquet(inp)
+    run_with_checkpoints(spark, inp, out, n_buckets=8, max_buckets_per_run=4)
+
+    spark.createDataFrame(
+        generate_pandas(n_convs=40, seed=2, make_skewed=False), schema=TRANSCRIPT_SCHEMA
+    ).write.mode("overwrite").parquet(inp)
+    summary = run_with_checkpoints(spark, inp, out, n_buckets=8)
+    assert summary["buckets_skipped"] == [] and summary["buckets_run"] == list(range(8))
+
+    got = _turns(read_committed(spark, out).collect())
+    assert got == _turns(extract(spark.read.parquet(inp)).collect())
+
+
+def _jobs_of(spark, group, fn):
+    """Runs ``fn`` under job group ``group``; returns its jobs' stage names."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    return [
+        [tracker.getStageInfo(s).name for s in tracker.getJobInfo(j).stageIds]
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+
+
+def test_resume_run_is_schema_inference_plus_one_write_job(spark, input_path, tmp_path):
+    """The manifest metrics ride the write job: a resume run reads the
+    input schema and writes, with no read-back of what it wrote."""
+    out = str(tmp_path / "jobs")
+    run_with_checkpoints(spark, input_path, out, n_buckets=8, max_buckets_per_run=4)
+    jobs = _jobs_of(
+        spark, "checkpoint.resume", lambda: run_with_checkpoints(spark, input_path, out, n_buckets=8)
+    )
+    assert len(jobs) <= 2, jobs
+    assert not any(name.startswith("collect") for stages in jobs for name in stages), jobs
+
+
+def test_run_leaves_session_overwrite_mode_alone(spark, input_path, tmp_path):
+    """Dynamic partition overwrite is a writer option, so a run neither
+    sets nor restores the session's partitionOverwriteMode."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    run_with_checkpoints(spark, input_path, str(tmp_path / "conf"), n_buckets=3)
+    assert spark.conf.get(key, None) is None
+
+
+def test_manifest_metrics_equal_readback_of_committed_files(spark, input_path, tmp_path):
+    """The manifests' observed rows, spans and content hash equal a
+    grouped read-back of the files the run committed."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "metrics")
+    run_with_checkpoints(spark, input_path, out, n_buckets=6, max_buckets_per_run=4)
+    run_with_checkpoints(spark, input_path, out, n_buckets=6)
+    row_sig = F.xxhash64(F.concat_ws("\x1e", "conv_id", "turn_idx", "clean_text"))
+    back = {
+        r.bucket: (r.rows, r.spans, r.content_hash64)
+        for r in spark.read.parquet(out)
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("rows"),
+            F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("spans"),
+            F.coalesce(F.bit_xor(row_sig), F.lit(0)).alias("content_hash64"),
+        )
+        .collect()
+    }
+    manifests = {m["bucket"]: (m["rows"], m["spans"], m["content_hash64"]) for m in read_manifests(out)}
+    assert sorted(manifests) == list(range(6))
+    assert {k: v for k, v in manifests.items() if v[0] > 0} == back

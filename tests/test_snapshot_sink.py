@@ -4,6 +4,8 @@ history, and a crash between data write and manifest commit must leave
 the replay able to land. No oracle query (the contract is a streaming
 side effect); pinned here end-to-end."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,3 +73,27 @@ class TestSnapshotIngest:
         assert [m["version"] for m in h] == [1, 2]
         assert h[1]["batch_id"] == 1
         assert read_snapshot(spark, table, 2).count() == 3  # replay's data, not the orphan's
+
+    def test_kill_after_first_publish_leaves_no_phantom_version(self, spark, landing, tmp_path, monkeypatch):
+        """The sink's first manifest publish is its commit: killed right
+        after it, the replay of the same batch must be a no-op, leaving
+        exactly one version, and that version carries the batch_id."""
+
+        class Killed(Exception):
+            pass
+
+        real_replace = os.replace
+
+        def replace_then_die(src, dst):
+            real_replace(src, dst)
+            raise Killed
+
+        table = str(tmp_path / "table")
+        df = spark.read.parquet(landing).limit(5)
+        monkeypatch.setattr(os, "replace", replace_then_die)
+        with pytest.raises(Killed):
+            snapshot_batch_sink(df, 0, table)
+        monkeypatch.setattr(os, "replace", real_replace)
+
+        snapshot_batch_sink(df, 0, table)  # the replay
+        assert [(m["version"], m.get("batch_id")) for m in history(table)] == [(1, 0)]

@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 
 from keras_ocr_spark.core.oracle import extract_turn
+from keras_ocr_spark.plans.checkpoint import read_committed
 from keras_ocr_spark.plans.pipeline import extract
 from keras_ocr_spark.sources.transcripts import generate_pandas
 from keras_ocr_spark.streaming import read_transcript_stream, start_extraction, turn_rate_monitor
@@ -62,6 +63,8 @@ def test_stream_equals_batch(spark, landing, tmp_path):
     stream_rows = frame(spark.read.parquet(out).collect())
     batch_rows = frame(extract(spark.read.parquet(src)).collect())
     assert stream_rows == batch_rows
+    # The committed read sees every epoch: the same turns as batch.
+    assert frame(read_committed(spark, out).collect()) == batch_rows
 
     texts = {(r.conv_id, r.turn_idx): r.text for r in spark.read.parquet(src).collect()}
     assert stream_rows.keys() == texts.keys()
@@ -89,6 +92,46 @@ def test_replayed_epoch_is_idempotent(spark, landing, tmp_path):
     assert again.count() == once
     assert again.select("conv_id", "turn_idx").distinct().count() == once
     assert again.select(F.col("epoch_id")).distinct().count() == 1
+
+
+def test_replayed_committed_epoch_leaves_files_untouched(spark, landing, tmp_path):
+    """A replay of a committed epoch returns before writing: its files
+    keep their names and mtimes."""
+    from keras_ocr_spark.streaming.extraction import epoch_sink
+
+    out = tmp_path / "untouched"
+    turns = extract(spark.read.parquet(str(landing / "transcripts")))
+    epoch_sink(turns, 0, str(out))
+
+    def files():
+        return {p.relative_to(out): p.stat().st_mtime_ns for p in out.rglob("*") if p.is_file()}
+
+    before = files()
+    assert any(p.parts[0] == "epoch_id=0" for p in before)
+    epoch_sink(turns, 0, str(out))  # replay of the committed epoch
+    assert files() == before
+
+
+def test_killed_epoch_is_invisible_to_read_committed(spark, landing, tmp_path):
+    """An epoch killed after writing its data and before its manifest
+    leaves an ``epoch_id=N`` directory no manifest names: the committed
+    read must not see it, and its replay commits it once."""
+    from keras_ocr_spark.streaming.extraction import epoch_sink
+
+    out = str(tmp_path / "killed")
+    turns = extract(spark.read.parquet(str(landing / "transcripts")))
+    first, second = turns.filter("turn_idx % 2 = 0"), turns.filter("turn_idx % 2 = 1")
+    epoch_sink(first, 0, out)
+    second.write.parquet(f"{out}/epoch_id=1")  # the killed epoch: data, no manifest
+
+    got = read_committed(spark, out)
+    assert got.count() == first.count()
+    assert [r.epoch_id for r in got.select("epoch_id").distinct().collect()] == [0]
+
+    epoch_sink(second, 1, out)  # the replay
+    got = read_committed(spark, out)
+    assert got.count() == turns.count()
+    assert got.select("conv_id", "turn_idx").distinct().count() == turns.count()
 
 
 def test_watermarked_monitor_plan(spark, landing):

@@ -3,12 +3,14 @@
 Recasts the two-stage design of faustomorales/keras-ocr (CRAFT region
 proposal + CRNN/CTC decoding; reference snapshot at /root/reference) as a
 distributed main-content extraction pipeline over transcript tables
-(conv_id, turn_idx, role, text, tool, ts): stage 1 proposes content spans
-per turn via DOM-node scoring inside an Arrow-vectorized pandas UDF, which
-also decodes each span; a per-row projection reassembles clean text under
-a stable (conv_id, turn_idx) ordering, with no shuffle.
+(conv_id, turn_idx, role, text, tool, ts): stage 1 runs the per-turn
+kernel ``core.oracle.extract_turn`` inside one Arrow iterator UDF —
+propose content spans via DOM-node scoring, decode each span once, drop
+the blank ones and join the rest in document order — and returns the
+clean text and kept spans as one struct; the plan then projects its
+fields per row, with no shuffle.
 
-Spark-first: DataFrame/SQL + Catalyst everywhere; pandas UDFs only where
+Spark-first: DataFrame/SQL + Catalyst everywhere; Python UDFs only where
 built-ins genuinely can't express the semantics (HTML tokenization).
 """
 

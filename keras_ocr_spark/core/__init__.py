@@ -2,7 +2,7 @@
 the local parity oracle (parity by construction; see SURVEY.md §7 step 0).
 """
 
-from .decoder import ENTITIES, decode_span, decode_text, reassemble
+from .decoder import ENTITIES, decode_text
 from .oracle import TurnExtraction, extract_turn
 from .proposal import Span, propose_spans
 from .scoring import link_ratio, score_node
@@ -14,12 +14,10 @@ __all__ = [
     "Node",
     "Span",
     "TurnExtraction",
-    "decode_span",
     "decode_text",
     "extract_turn",
     "link_ratio",
     "propose_spans",
-    "reassemble",
     "score_node",
     "tokenize",
 ]

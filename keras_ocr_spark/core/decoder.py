@@ -13,7 +13,10 @@ drop blank label                           | strip markup tags, drop
                                            | empty results
 index -> alphabet char map                 | HTML entity -> char map
 
-The extraction pipeline runs this module itself, inside the stage-1 UDF.
+``core.oracle.extract_turn`` calls ``decode_text`` once per proposed
+span and drops the spans that decode to empty; the stage-1 Arrow UDF
+runs that same function, so the extraction pipeline decodes in the
+Python worker with this module itself.
 CRITICAL parity contract: its JVM twin re-expresses the chain as
 built-ins (``regexp_replace``/``replace`` — see
 ``keras_ocr_spark/functions/text.py``, used by the ``decode_chain``
@@ -26,9 +29,7 @@ equality on fixtures and randomized inputs. Entity order matters:
 from __future__ import annotations
 
 import re
-from typing import List, Sequence, Tuple
-
-from .proposal import Span
+from typing import Tuple
 
 TAG_RE = re.compile(r"<[^>]*>")
 WS_RE = re.compile(r"[ \t\r\n]+")
@@ -64,20 +65,3 @@ def decode_text(fragment: str) -> str:
         s = WS_RE.sub(" ", s)
     return s.strip()
 
-
-def decode_span(raw: str, span: Span) -> str:
-    """Decode one proposed span of the raw turn text."""
-    return decode_text(raw[span.start : span.end])
-
-
-def reassemble(raw: str, spans: Sequence[Span]) -> str:
-    """Ordered spans -> one clean turn text, newline-joined, empties
-    dropped (blank-label drop). Analog of ``convert_lines_to_paragraph``
-    (``data_generation.py:273-276``) + ``combine_line``
-    (``tools.py:124-147``)."""
-    pieces: List[str] = []
-    for span in spans:
-        piece = decode_span(raw, span)
-        if piece:
-            pieces.append(piece)
-    return "\n".join(pieces)

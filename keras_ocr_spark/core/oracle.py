@@ -1,10 +1,14 @@
-"""Single-process reference oracle: the whole detect-then-extract flow on
-one turn, row-by-row, no Spark.
+"""The per-turn kernel: the whole detect-then-extract flow on one turn,
+no Spark.
 
 Graft analog of ``Pipeline.recognize`` (``/root/reference/keras_ocr/
-pipeline.py:28-75``) run sequentially; the Spark pipeline
-(``keras_ocr_spark.plans.pipeline``) must be frame-equal to this, per
-turn, exactly — the cross-implementation parity contract modeled on
+pipeline.py:28-75``) run sequentially. It is both the reference oracle
+and the production kernel: the stage-1 Arrow UDF
+(``operators/detect.py``) calls ``extract_turn`` for every turn, so the
+Spark pipeline (``keras_ocr_spark.plans.pipeline``) equals it per turn
+by construction. The parity suite still checks the Spark plumbing
+around it (nulls, ``max_len``, row identity, non-BMP text through Arrow)
+— the cross-implementation contract modeled on
 ``tests/test_pytorch_keras.py:21-49`` (there 1e-4 float tolerance; here
 exact string equality because every transform is integer/string).
 """
@@ -14,7 +18,7 @@ from __future__ import annotations
 from typing import List, NamedTuple
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
-from .decoder import decode_span, reassemble
+from .decoder import decode_text
 from .proposal import Span, propose_spans
 from .tokenizer import tokenize
 
@@ -30,14 +34,18 @@ def extract_turn(raw: str, cfg: ExtractionConfig = DEFAULT_CONFIG) -> TurnExtrac
 
     The ``max_len`` cap mirrors ``max_size`` bounding in
     ``pipeline.py:45-47`` — worst-case per-record cost is bounded before
-    any expensive work.
+    any expensive work. Each span is decoded once: a span that decodes
+    to empty is dropped (blank-label drop, ``recognition.py:483-488``),
+    so ``spans`` matches the pieces of ``clean_text`` 1:1, and the
+    pieces are newline-joined in document order (analog of
+    ``convert_lines_to_paragraph``, ``data_generation.py:273-276``).
     """
-    if raw is None:
-        raw = ""
-    capped = raw[: cfg.max_len]
-    nodes = tokenize(capped)
-    spans = propose_spans(nodes, len(capped), cfg)
-    # Drop spans that decode to empty (blank-label drop,
-    # recognition.py:483-488) so `spans` matches emitted text pieces 1:1.
-    kept = [s for s in spans if decode_span(capped, s)]
-    return TurnExtraction(clean_text=reassemble(capped, kept), spans=kept)
+    capped = (raw or "")[: cfg.max_len]
+    pieces: List[str] = []
+    kept: List[Span] = []
+    for span in propose_spans(tokenize(capped), len(capped), cfg):
+        piece = decode_text(capped[span.start : span.end])
+        if piece:
+            pieces.append(piece)
+            kept.append(span)
+    return TurnExtraction(clean_text="\n".join(pieces), spans=kept)

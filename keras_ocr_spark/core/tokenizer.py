@@ -90,7 +90,7 @@ def tokenize(raw: str) -> List[Node]:
     Whitespace-only segments are dropped (they carry no evidence, like
     zero-score pixels).
 
-    This is the stage-1 hot loop (profiled at ~75% of the pandas-UDF
+    This is the stage-1 hot loop (profiled at ~75% of the stage-1 UDF
     kernel), so the tag-stack state (joined path, link depth, boilerplate
     depth) is maintained INCREMENTALLY on push/pop instead of rescanned
     per emitted node, and tag classification slices two chars instead of

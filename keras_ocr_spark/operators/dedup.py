@@ -28,7 +28,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -205,6 +205,17 @@ def _rarity_coded_docs(
     return coded.select("id", "codes", F.size("codes").alias("n")).filter(F.col("n") > 0)
 
 
+def _min_overlap(threshold: float, n: Column) -> Column:
+    """ceil(threshold * n), the overlap a set of size ``n`` needs to
+    reach ``threshold`` of it — the one place the prefix-filter bounds
+    get it. Scaled down by 1e-12 before the ceil so that binary floating
+    point cannot round it above the true integer (0.56 * 25 evaluates to
+    14.000000000000002, whose ceil is 15: a prefix one too short, which
+    drops qualifying pairs). Coming out low only admits extra
+    candidates, and verification is exact."""
+    return F.ceil(F.lit(float(threshold)) * n * F.lit(1 - 1e-12))
+
+
 def containment_pairs(
     df: DataFrame,
     threshold: float = 0.8,
@@ -246,8 +257,7 @@ def containment_pairs(
     coded = _rarity_coded_docs(df, id_col, text_col, k, max_shingle_df).localCheckpoint(
         eager=False
     )
-    t = F.lit(float(threshold))
-    plen = F.greatest(F.col("n") - F.ceil(t * F.col("n")) + F.lit(1), F.lit(0))
+    plen = F.greatest(F.col("n") - _min_overlap(threshold, F.col("n")) + F.lit(1), F.lit(0))
     small = coded.select(
         F.col("id").alias("id_s"),
         F.col("n").alias("n_s"),
@@ -266,7 +276,7 @@ def containment_pairs(
         )
         # positional bound: overlap <= n_l - pos_l + 1 must reach
         # ceil(t * n_s); the rarest common shingle's row satisfies it.
-        .filter(F.col("_pos0") <= F.col("n_l") - F.ceil(t * F.col("n_s")))
+        .filter(F.col("_pos0") <= F.col("n_l") - _min_overlap(threshold, F.col("n_s")))
         .select(
             F.least("id_s", "id_l").alias("id_a"),
             F.greatest("id_s", "id_l").alias("id_b"),
@@ -335,8 +345,7 @@ def prefix_filter_jaccard_pairs(
     # is shingled exactly twice (vocab agg + probe), map-only, instead
     # of five times in the join-the-exploded-shingles form.
     coded = _rarity_coded_docs(df, id_col, text_col, k).localCheckpoint(eager=False)
-    t = F.lit(float(threshold))
-    plen = F.greatest(F.col("n") - F.ceil(t * F.col("n")) + F.lit(1), F.lit(0))
+    plen = F.greatest(F.col("n") - _min_overlap(threshold, F.col("n")) + F.lit(1), F.lit(0))
     prefix = coded.select(
         "id", "n", F.posexplode(F.slice("codes", F.lit(1), plen)).alias("_pos0", "code")
     )
@@ -350,8 +359,8 @@ def prefix_filter_jaccard_pairs(
         a.join(b, "code")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
-            (F.col("na") >= F.ceil(t * F.col("nb")))
-            & (F.col("nb") >= F.ceil(t * F.col("na")))
+            (F.col("na") >= _min_overlap(threshold, F.col("nb")))
+            & (F.col("nb") >= _min_overlap(threshold, F.col("na")))
         )
         # positional bound: past this collision the overlap can reach at
         # most min(na - pa, nb - pb) + 1, and a qualifying pair needs
@@ -359,7 +368,7 @@ def prefix_filter_jaccard_pairs(
         # satisfies the bound, so no qualifying pair is lost.
         .filter(
             F.least(F.col("na") - F.col("_pa"), F.col("nb") - F.col("_pb"))
-            >= F.ceil(t * F.greatest("na", "nb"))
+            >= _min_overlap(threshold, F.greatest("na", "nb"))
         )
         .select("id_a", "id_b")
     )

@@ -1,23 +1,24 @@
-"""Stage 1 — distributed span proposal + decode (the "detector" and
-"recognizer" in one Python pass).
+"""Stage 1 — distributed span proposal, decode and reassembly (the
+"detector" and "recognizer" in one Python pass).
 
 Graft analog of ``Detector.detect`` (``/root/reference/keras_ocr/
 detection.py:745-785``) followed by the per-crop decode of
 ``Recognizer.recognize_from_boxes`` (``recognition.py:491-537``): for
-each turn, propose content regions, then decode each region's markup to
-clean text. The heavy lift (HTML tokenization + node scoring +
-run-length components + span decode) runs the *shared pure-Python core*
-inside one Arrow-vectorized pandas UDF — one Python worker call per
-Arrow batch, never per row at the Spark API layer (the
-batch-vectorization strategy of ``model.predict`` over a whole batch,
-``detection.py:779``). The blank-span drop and ordered join happen
-JVM-side in ``operators/fused.py``.
+each turn, propose content regions, decode each region's markup to
+clean text, drop the blank ones and join the rest in document order.
+All of it is one call of the shared pure-Python kernel,
+``core.oracle.extract_turn``, per turn, inside one Arrow iterator UDF —
+one Python worker call per Arrow batch, never per row at the Spark API
+layer (the batch-vectorization strategy of ``model.predict`` over a
+whole batch, ``detection.py:779``). The UDF reads the batch with
+``to_pylist()`` and builds its Arrow output from flat Python lists, so
+no pandas object sits on either side of the boundary.
 
 Scale notes:
 - the UDF consumes ONLY the ``text`` column (column pruning: everything
   else stays JVM-side, cf. the reference's RGB->gray channel pruning,
   ``recognition.py:429-434``) and returns only what the plan reads —
-  offsets and decoded text per span;
+  the clean text and the kept span offsets per turn;
 - per-record cost is bounded by ``cfg.max_len`` BEFORE tokenization (the
   ``max_size`` cap, ``pipeline.py:45-47``) — the first defense against
   pathological turns;
@@ -29,64 +30,73 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
+from .. import zipguard
 from ..config import DEFAULT_CONFIG, ExtractionConfig
-from ..core.decoder import decode_text
-from ..core.proposal import propose_spans
-from ..core.tokenizer import tokenize
+from ..core.oracle import extract_turn
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
         [
             T.StructField("start", T.IntegerType(), False),
             T.StructField("end", T.IntegerType(), False),
-            # Decoded span text: the SAME pure-Python decoder the oracle
-            # uses (core/decoder.decode_text), one C-regex pass in the
-            # worker that already holds the string.
-            T.StructField("clean", T.StringType(), False),
         ]
-    )
+    ),
+    False,
+)
+TURN_TYPE = T.StructType(
+    [
+        T.StructField("clean_text", T.StringType(), False),
+        T.StructField("spans", SPAN_TYPE, False),
+    ]
 )
 
 
 def propose_spans_udf(cfg: ExtractionConfig = DEFAULT_CONFIG):
-    """Vectorized pandas UDF: text -> array<struct<start,end,clean>>.
+    """Arrow iterator UDF: text -> struct<clean_text, spans: array<struct<start,end>>>.
 
-    Iterator form (``Iterator[pd.Series] -> Iterator[pd.Series]``): the
-    per-task setup — closure constants, the kernel binding — happens once
-    per Python worker, then every Arrow batch streams through the same
-    loop (the ``model.predict``-over-batches pattern of
+    Iterator form (``Iterator[pa.Array] -> Iterator[pa.Array]``): the
+    per-task setup runs once per task, then every Arrow batch streams
+    through the same loop (the ``model.predict``-over-batches pattern of
     ``detection.py:698-743``; also where a heavyweight model/tokenizer
-    would be loaded once per executor). Blank decodes are kept here; the
-    blank-label drop (``recognition.py:483-488``) is JVM-side in the
-    fused stage.
+    would be loaded once per executor). The setup installs
+    ``zipguard``, so a reused worker stops re-reading the zip
+    directories on its path at every later task. Per turn the loop runs
+    exactly ``extract_turn``; the output is built from flat lists (one
+    offsets list, one start and one end list per batch).
     """
-    max_len = cfg.max_len
+    turn_type = to_arrow_type(TURN_TYPE)
+    span_type = turn_type.field("spans").type
+    span_fields = list(span_type.value_type)
 
-    @F.pandas_udf(SPAN_TYPE)
-    def _propose(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # init-once-per-worker point: bind hot callables to locals.
-        _tokenize, _propose_spans, _cfg, _decode = tokenize, propose_spans, cfg, decode_text
-
-        def _one(raw) -> list:
-            capped = (raw or "")[:max_len]
-            return [
-                {
-                    "start": s.start,
-                    "end": s.end,
-                    "clean": _decode(capped[s.start : s.end]),
-                }
-                for s in _propose_spans(_tokenize(capped), len(capped), _cfg)
-            ]
-
+    @F.arrow_udf(TURN_TYPE)
+    def _extract(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        zipguard.install()
+        _extract_turn = extract_turn
         for texts in batches:
-            yield texts.map(_one)
+            clean, offsets, starts, ends = [], [0], [], []
+            for raw in texts.to_pylist():
+                turn = _extract_turn(raw, cfg)
+                clean.append(turn.clean_text)
+                for span in turn.spans:
+                    starts.append(span.start)
+                    ends.append(span.end)
+                offsets.append(len(starts))
+            spans = pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                pa.StructArray.from_arrays(
+                    [pa.array(starts, pa.int32()), pa.array(ends, pa.int32())], fields=span_fields
+                ),
+                type=span_type,
+            )
+            yield pa.StructArray.from_arrays([pa.array(clean, pa.string()), spans], fields=list(turn_type))
 
-    return _propose
+    return _extract
 
 
 def salt_expr(n_salt: int) -> Column:
@@ -96,11 +106,13 @@ def salt_expr(n_salt: int) -> Column:
 
 
 def detect(df: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG, n_salt: int = 0) -> DataFrame:
-    """Add a ``spans`` column to a transcript DataFrame.
+    """Add ``clean_text`` and ``spans`` columns to a transcript DataFrame:
+    two field projections of the stage-1 UDF's struct.
 
     ``n_salt`` > 0 applies the salted repartition on (conv_id, salt) so a
     skewed conversation's turns land in many partitions instead of one.
     """
     if n_salt > 0:
         df = df.repartition(F.col("conv_id"), salt_expr(n_salt))
-    return df.withColumn("spans", propose_spans_udf(cfg)(F.col("text")))
+    turn = propose_spans_udf(cfg)(F.col("text"))
+    return df.select("*", turn["clean_text"].alias("clean_text"), turn["spans"].alias("spans"))

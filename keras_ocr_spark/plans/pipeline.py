@@ -5,15 +5,17 @@ pipeline.py:28-75``: normalize -> batch -> detect -> crop -> recognize ->
 rescale -> re-associate) as one lazy, map-only DataFrame plan:
 
     read -> [salted repartition on conv_id]
-         -> stage-1 pandas UDF: propose spans + decode each span
-         -> per-row projection: drop blank spans, join in document order
+         -> stage-1 Arrow UDF: core.oracle.extract_turn per turn
+            (propose spans, decode each once, drop blanks, join in
+            document order) -> struct<clean_text, spans>
+         -> per-row projection of the struct's fields
 
 Physical shape (verified in tests/test_plan_shape.py):
-- scan -> one ArrowEvalPython node -> projection. ZERO exchanges — a
-  turn's spans already sit together in one array cell, so
-  re-association needs no shuffle. Scales exactly like the scan, in
-  batch and in every streaming micro-batch alike (streaming/extraction.py
-  runs this same plan);
+- scan -> one ArrowEvalPython node (an Arrow iterator UDF) ->
+  projection. ZERO exchanges — each turn is extracted whole in one
+  kernel call, so re-association needs no shuffle. Scales exactly like
+  the scan, in batch and in every streaming micro-batch alike
+  (streaming/extraction.py runs this same plan);
 - the optional salted repartition (skewed input layouts) adds exactly
   one exchange;
 - the scan reads only the columns the plan needs (conv_id, turn_idx,

@@ -3,7 +3,7 @@
 
 Deployment contract (north rule): the package ships as a zip via
 ``spark-submit --py-files`` so every executor can import
-``keras_ocr_spark`` (the stage-1 pandas UDF unpickles on executors).
+``keras_ocr_spark`` (the stage-1 Arrow UDF unpickles on executors).
 
     bash scripts/package.sh                      # builds dist/keras_ocr_spark.zip
     spark-submit --master local[32] \\

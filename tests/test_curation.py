@@ -552,6 +552,16 @@ class TestSubstringDedup:
         r = D.substring_dup_stats(docs, k=5).collect()[0]
         assert r["dup_words"] == 10 and r["clean_text"] == "z"
 
+    def test_span_stats_evaluated_once(self, spark):
+        # The struct-valued UDF feeds four output fields; the executed
+        # plan must still evaluate it in one Arrow node, once.
+        from keras_ocr_spark.operators import dedup as D
+
+        docs = spark.createDataFrame([(1, "a b c d e f"), (2, "x a b c d e")], "doc_id long, text string")
+        plan = D.substring_dup_stats(docs, k=5)._jdf.queryExecution().executedPlan().toString()
+        nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln and "_span_stats" in ln]
+        assert len(nodes) == 1 and plan.count("_span_stats(") == 1, plan
+
     def test_arrow_kernel_equals_sql_twin(self, spark):
         """The r6 Arrow-kernel fast path must return EXACTLY the
         pure-expression form's rows — gram digests, span unions,

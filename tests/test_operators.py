@@ -503,6 +503,33 @@ class TestContainmentPairs:
         pruned = D.containment_pairs(df, threshold=0.8, max_shingle_df=5).collect()
         assert pruned == []
 
+    def test_float_ceil_keeps_rarest_common_shingle_in_prefix(self, spark):
+        # 0.56 * 25 is 14.000000000000002 in binary floating point. Doc 1
+        # has 25 shingles, 14 shared with doc 2 and 11 rarer ones of its
+        # own, so its rarest common shingle is prefix position 12 =
+        # 25 - 14 + 1: a ceil of 15 cuts the prefix to 11 and loses the
+        # pair. Doc ids stay off the oracle's excerpt augmentation
+        # (doc_id % 7 == 0), so both engines see the same two docs.
+        import duckdb
+        import pandas as pd
+
+        from keras_ocr_spark.driver_queries import QUERIES
+
+        shared = [f"s{i}" for i in range(16)]  # 14 shingles
+        rows = [
+            (1, " ".join([f"a{i}" for i in range(11)] + shared)),
+            (2, " ".join(shared + [f"b{i}" for i in range(20)])),
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = sorted(tuple(r) for r in D.containment_pairs(docs, threshold=0.56).collect())
+        sql = QUERIES["dedup_containment"][1]
+        assert sql.count("CAST(0.8 AS DOUBLE)") == 1
+        con = duckdb.connect()
+        con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+        want = sorted(con.execute(sql.replace("CAST(0.8 AS DOUBLE)", "CAST(0.56 AS DOUBLE)")).fetchall())
+        assert want == [(1, 2, 25, 34, 0.56)]
+        assert got == want
+
 
 class TestMultimodal:
     def test_feature_extraction_deterministic(self, spark):

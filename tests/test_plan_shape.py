@@ -3,8 +3,9 @@
 Asserts properties of `.explain()` output that matter at 100 TB:
 - column pruning reaches the parquet scan (ReadSchema carries only what
   the plan needs);
-- exactly ONE Python boundary (stage-1 ArrowEvalPython, which proposes
-  and decodes spans); the reassembly projection stays JVM-side;
+- exactly ONE Python boundary (stage-1 ArrowEvalPython, an Arrow
+  iterator UDF running the whole per-turn kernel); the JVM side only
+  projects its struct fields, with no lambda functions;
 - pure-expression operators (textstats, simhash, minhash signatures)
   have NO exchange and NO Python nodes at all;
 - the flagship plan is MAP-ONLY — zero exchanges; salting adds exactly
@@ -55,14 +56,28 @@ class TestFlagshipPlan:
         assert "role" not in read_schema and "tool" not in read_schema and "ts" not in read_schema
 
     def test_single_python_boundary(self, spark, transcripts_path):
+        from pyspark.util import PythonEvalType
+
         df = extract(spark.read.parquet(transcripts_path))
         plan = plan_of(df)
         assert n_nodes(plan, "ArrowEvalPython") == 1  # stage 1 only
         assert "BatchEvalPython" not in plan  # no row-at-a-time Python
+        # ...and it runs an Arrow iterator UDF, not a pandas one.
+        eval_types = re.findall(r"\(\d+\) ArrowEvalPython\nInput \[\d+\]: .*\nArguments: .*, (\d+)\n", plan)
+        assert eval_types == [str(PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF)], plan
+
+    def test_no_lambda_functions(self, spark, transcripts_path):
+        # Blank drop and reassembly run in the stage-1 kernel; the JVM
+        # side only projects the UDF's struct fields (no filter /
+        # transform / array_join lambdas, which do not codegen).
+        plan = plan_of(extract(spark.read.parquet(transcripts_path)))
+        assert "lambdafunction" not in plan
+        for fn in ("filter(", "transform(", "array_join("):
+            assert fn not in plan, fn
 
     def test_default_plan_is_map_only(self, spark, transcripts_path):
-        # The fused plan has NO shuffle: a turn's spans sit together in
-        # one array cell, so re-association is per-row.
+        # The plan has NO shuffle: each turn is extracted whole in one
+        # kernel call, so re-association is per-row.
         df = extract(spark.read.parquet(transcripts_path))  # n_salt=0
         plan = plan_of(df)
         assert n_nodes(plan, "Exchange") == 0
@@ -73,8 +88,8 @@ class TestFlagshipPlan:
         assert n_nodes(plan, "Exchange") == 1
 
     def test_wholestage_codegen_covers_scan_and_projection(self, spark, transcripts_path):
-        # The JVM side of the plan (scan, reassembly projection) is
-        # whole-stage codegen'd; decode runs in the stage-1 UDF. Codegen-
+        # The JVM side of the plan (scan, output projection) is
+        # whole-stage codegen'd; the kernel runs in the stage-1 UDF. Codegen-
         # mode explain lists the fused subtrees (AQE hides them
         # pre-execution, so toggle it off just for the inspection).
         spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -1,0 +1,97 @@
+"""The stat-guarded zip directory cache (keras_ocr_spark/zipguard.py).
+
+Before Python 3.12 every ``importlib.invalidate_caches()`` makes each
+zipimporter re-read its whole archive directory; pyspark calls it once
+per worker task. The guard re-reads an archive only when its stat stamp
+changed: an unchanged archive costs no read, a rewritten one is re-read
+and its new modules import.
+"""
+
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
+from pyspark.sql import functions as F
+
+from keras_ocr_spark import zipguard
+
+
+def _write_zip(path, modules: dict) -> None:
+    tmp = path.with_suffix(".tmp")
+    with zipfile.ZipFile(tmp, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+    os.replace(tmp, path)
+
+
+def test_unchanged_archive_is_not_reread_and_rewritten_one_is(tmp_path, monkeypatch):
+    archive = tmp_path / "zg_lib.zip"
+    _write_zip(archive, {"zg_mod_a": "X = 1\n"})
+    # Restore the unguarded method when the test ends.
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches)
+    zipguard.install()
+    assert zipguard.installed() or sys.version_info >= (3, 12)
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory", lambda p: reads.append(p) or real(p))
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module("zg_mod_a").X == 1
+        importlib.invalidate_caches()  # stamps every archive on the path
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads == []
+        _write_zip(archive, {"zg_mod_a": "X = 1\n", "zg_mod_b": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert importlib.import_module("zg_mod_b").Y == 2
+        assert reads == [str(archive)]
+    finally:
+        for name in ("zg_mod_a", "zg_mod_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(str(archive), None)
+
+
+def test_install_is_idempotent(monkeypatch):
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches)
+    zipguard.install()
+    guarded = zipimport.zipimporter.invalidate_caches
+    zipguard.install()
+    assert zipimport.zipimporter.invalidate_caches is guarded
+
+
+def test_stage1_worker_stops_rereading_zip_directories(spark):
+    from keras_ocr_spark.plans.pipeline import extract
+
+    def probe_invalidate(_):
+        """Count the archive directory reads one ``invalidate_caches()``
+        costs in this worker (imports nothing from the package)."""
+        import importlib
+        import sys
+        import zipimport
+
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        n_zip = sum(isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values())
+        guarded = getattr(zipimport.zipimporter.invalidate_caches, "_stat_guarded", False)
+        return guarded, len(reads), n_zip
+
+    # One stage-1 pass with more tasks than the idle worker pool holds,
+    # so the workers the probe reuses have run a stage-1 task.
+    turns = spark.range(0, 64, 1, 16).select(
+        F.concat(F.lit("c"), F.col("id")).alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.lit("<p>a paragraph of plain content text</p>").alias("text"),
+    )
+    extract(turns).agg(F.sum(F.length("clean_text"))).collect()
+    probe = F.udf(probe_invalidate, "struct<guarded:boolean, reads:int, zip_importers:int>")
+    rows = spark.range(0, 16, 1, 16).select(probe("id").alias("p")).select("p.*").collect()
+    guarded = [r for r in rows if r.guarded]
+    assert guarded, rows
+    assert all(r.reads == 0 and r.zip_importers > 0 for r in guarded), rows

@@ -1,15 +1,16 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship map-only detect-then-extract pipeline
-(one pandas UDF proposes and decodes spans, a per-row projection drops
-blanks and joins them in order — see ``keras_ocr_spark/plans/pipeline.py``)
-over transcripts synthesized deterministically from the sf0.001 documents
-table.
+(one Arrow UDF runs the per-turn kernel, which proposes spans, decodes
+each once and joins the kept ones in order; a per-row projection reads
+its fields — see ``keras_ocr_spark/plans/pipeline.py``) over transcripts
+synthesized deterministically from the sf0.001 documents table.
 
-``queries()`` / ``oracle_sql()`` expose one entry per implemented
-operator from SURVEY.md §2 plus the training-data-pipeline operators
-(dedup, similarity search, text analysis); the registry lives in
-``keras_ocr_spark/driver_queries.py`` with exact DuckDB oracles.
+``queries()`` / ``oracle_sql()`` expose the query registry in
+``keras_ocr_spark/driver_queries.py``: extraction and decode, evaluation,
+the corpus-curation operators (dedup, quality, PII, contamination,
+split, mix, ``curate_corpus``), snapshots, embedding search and a set of
+general SQL/TPC-H shapes, each with an exact DuckDB oracle.
 """
 
 from __future__ import annotations

@@ -1,9 +1,12 @@
 """Driver-contract query registry: name -> (spark_fn, duckdb_oracle_sql).
 
-One entry per implemented operator from SURVEY.md §2 plus the
-training-data-pipeline operators (dedup / similarity / text analysis).
-Each Spark callable takes ``(spark, sf_dir)`` and returns a DataFrame;
-each oracle is ANSI-ish SQL DuckDB runs on the same parquet tables.
+Three families: text and corpus queries over ``documents`` (extraction
+and decode, evaluation, dedup, quality, language and token stats, PII,
+contamination, split, mix, ``curate_corpus``, snapshots and the change
+feed), embedding search over ``embeddings``, and general SQL/TPC-H
+shapes over the TPC-H tables. Each Spark callable takes
+``(spark, sf_dir)`` and returns a DataFrame; each oracle is ANSI-ish
+SQL DuckDB runs on the same parquet tables.
 
 Column-name AND column-type discipline: every computed column is aliased
 identically on both sides; integers are cast to BIGINT, floats rounded
@@ -144,81 +147,6 @@ def q_running_offset(spark, sf_dir):
 
 
 @register(
-    "runlength_segments",
-    """
-    WITH gaps AS (
-      SELECT user_id, event_id, ts, value,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-                       OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
-                  OR lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events),
-    segs AS (
-      SELECT user_id, value,
-             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg
-      FROM gaps)
-    SELECT CAST(user_id AS BIGINT) AS user_id, CAST(seg AS BIGINT) AS seg,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(floor(sum(value) * 100 + 0.5) / 100 AS DOUBLE) AS total_value
-    FROM segs GROUP BY user_id, seg
-    """,
-)
-def q_runlength_segments(spark, sf_dir):
-    """Run-length segmentation — the 1-D connected-components recast
-    (detection.py:227-229) as lag + running sum (sessionization)."""
-    ev = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(
-            (F.unix_micros(F.col("ts").cast("timestamp")) - F.lag(F.unix_micros(F.col("ts").cast("timestamp"))).over(w) > 1_800_000_000)
-            | F.lag(F.unix_micros(F.col("ts").cast("timestamp"))).over(w).isNull(),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    w2 = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(W.unboundedPreceding, W.currentRow)
-    segs = gaps.select("user_id", "value", F.sum("is_new").over(w2).alias("seg"))
-    return segs.groupBy("user_id", "seg").agg(
-        F.count("*").cast("long").alias("n_events"),
-        pround(F.sum("value"), 2).alias("total_value"),
-    ).select(_b("user_id"), _b("seg"), "n_events", "total_value")
-
-
-@register(
-    "range_frame_totals",
-    """
-    SELECT CAST(user_id AS BIGINT) AS user_id, CAST(event_id AS BIGINT) AS event_id,
-           CAST(floor(sum(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-                     RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW) * 100 + 0.5) / 100
-                AS DOUBLE) AS v_10min,
-           CAST(count(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-                     RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_10min
-    FROM events
-    """,
-)
-def q_range_frame_totals(spark, sf_dir):
-    """RANGE-frame window (value-based bounds): trailing-10-minute sums
-    per user — the event-time sliding window the ROWS frames elsewhere
-    can't express. RANGE frames are insensitive to peer order, so ties
-    on ts need no tie-breakers (unlike every ROWS query here)."""
-    ev = _t(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = W.partitionBy("user_id").orderBy(us).rangeBetween(-600_000_000, 0)
-    return ev.select(
-        _b("user_id"),
-        _b("event_id"),
-        pround(F.sum("value").over(w), 2).alias("v_10min"),
-        F.count("*").over(w).cast("long").alias("n_10min"),
-    )
-
-
-@register(
     "percentiles_by_brand",
     """
     SELECT p_brand,
@@ -340,34 +268,6 @@ def q_semi_join_customers(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(_b("c_custkey"))
-
-
-@register(
-    "interval_join_events",
-    """
-    SELECT CAST(e.user_id AS BIGINT) AS user_id, CAST(count(*) AS BIGINT) AS n_pairs
-    FROM events e JOIN events c
-      ON e.user_id = c.user_id
-     AND e.event_type = 'error' AND c.event_type = 'click'
-     AND abs(epoch_us(e.ts) - epoch_us(c.ts)) <= 600000000
-    GROUP BY e.user_id
-    """,
-)
-def q_interval_join_events(spark, sf_dir):
-    """Equi+range theta join — the IoU matching join shape
-    (evaluation.py:90-104): bounded by the equi key, filtered by the
-    interval predicate."""
-    ev = _t(spark, sf_dir, "events")
-    e = ev.filter(F.col("event_type") == "error").alias("e")
-    c = ev.filter(F.col("event_type") == "click").alias("c")
-    joined = e.join(
-        c,
-        (F.col("e.user_id") == F.col("c.user_id"))
-        & (F.abs(F.unix_micros(F.col("e.ts").cast("timestamp")) - F.unix_micros(F.col("c.ts").cast("timestamp"))) <= 600_000_000),
-    )
-    return joined.groupBy(F.col("e.user_id").cast("long").alias("user_id")).agg(
-        F.count("*").cast("long").alias("n_pairs")
-    )
 
 
 @register(
@@ -546,33 +446,6 @@ def q_uniqueness_check(spark, sf_dir):
         (F.count("*") == F.countDistinct(pair)).alias("is_unique"),
     )
     return c.unionByName(o).unionByName(li)
-
-
-#: Tool weight config — the weights-key lookup dimension
-#: (detection.py:679-690 / recognition.py:369-371 analog): a tiny
-#: dict shipped with the job and broadcast into the plan.
-_EVENT_WEIGHTS = {"click": 1.0, "view": 0.5, "purchase": 5.0, "signup": 3.0, "error": 0.0}
-
-
-@register(
-    "broadcast_config_lookup",
-    f"""
-    SELECT CAST(event_id AS BIGINT) AS event_id, event_type,
-           CAST(floor(value * CASE event_type
-             {" ".join(f"WHEN '{k}' THEN {v}" for k, v in _EVENT_WEIGHTS.items())}
-             ELSE 1.0 END * 1000000 + 0.5) / 1000000 AS DOUBLE) AS weighted
-    FROM events
-    """,
-)
-def q_broadcast_config_lookup(spark, sf_dir):
-    """Weights-key broadcast lookup (detection.py:679-690): a config
-    dict becomes a map literal inside the plan (the broadcast-variable
-    pattern for small dimensions) — per-row element_at, no join, no
-    shuffle."""
-    m = F.create_map(*[x for k, v in _EVENT_WEIGHTS.items() for x in (F.lit(k), F.lit(v))])
-    ev = _t(spark, sf_dir, "events")
-    weighted = F.col("value") * F.coalesce(F.element_at(m, F.col("event_type")), F.lit(1.0))
-    return ev.select(_b("event_id"), "event_type", pround(weighted, 6).alias("weighted"))
 
 
 @register(
@@ -1292,24 +1165,6 @@ def q_doc_fingerprint(spark, sf_dir):
 
 
 @register(
-    "normalize_clip",
-    """
-    SELECT CAST(event_id AS BIGINT) AS event_id,
-           CAST(floor(greatest(least((value - CAST(100.0 AS DOUBLE)) / CAST(50.0 AS DOUBLE),
-                                     CAST(3.0 AS DOUBLE)), CAST(-3.0 AS DOUBLE)) * 1000000 + 0.5) / 1000000
-                AS DOUBLE) AS norm
-    FROM events
-    """,
-)
-def q_normalize_clip(spark, sf_dir):
-    """Normalize projection + clip — compute_input (detection.py:34-42)
-    `(x - mean)/std` and np.clip (detection.py:52) as plain expressions."""
-    ev = _t(spark, sf_dir, "events")
-    norm = F.greatest(F.least((F.col("value") - 100.0) / 50.0, F.lit(3.0)), F.lit(-3.0))
-    return ev.select(_b("event_id"), pround(norm, 6).alias("norm"))
-
-
-@register(
     "combine_line",
     """
     SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
@@ -1346,118 +1201,6 @@ def q_sha256_manifest(spark, sf_dir):
     uses the same primitive."""
     docs = _t(spark, sf_dir, "documents")
     return docs.select(_b("doc_id"), F.sha2(F.col("text"), 256).alias("text_sha"))
-
-
-@register(
-    "salted_user_stats",
-    """
-    SELECT CAST(user_id AS BIGINT) AS user_id,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(floor(sum(value) * 100 + 0.5) / 100 AS DOUBLE) AS total_value,
-           CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-           CAST(min(epoch_us(ts)) AS BIGINT) AS first_us,
-           CAST(max(epoch_us(ts)) AS BIGINT) AS last_us
-    FROM events GROUP BY user_id
-    """,
-)
-def q_salted_user_stats(spark, sf_dir):
-    """Two-phase salted aggregation (skew remedy for hot grouping keys,
-    SURVEY.md §7 step 3): phase 1 groupBy(key, salt) partials, phase 2
-    merge — algebraically identical to the direct groupBy, which is what
-    the oracle computes."""
-    ev = _t(spark, sf_dir, "events")
-    salted = ev.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(8)))
-    partial = salted.groupBy("user_id", "_salt").agg(
-        F.count("*").alias("_n"),
-        F.sum("value").alias("_v"),
-        F.collect_set("event_type").alias("_types"),
-        F.min(F.unix_micros(F.col("ts").cast("timestamp"))).alias("_min_us"),
-        F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("_max_us"),
-    )
-    return partial.groupBy("user_id").agg(
-        F.sum("_n").cast("long").alias("n_events"),
-        pround(F.sum("_v"), 2).alias("total_value"),
-        F.size(F.array_distinct(F.flatten(F.collect_list("_types")))).cast("long").alias("n_types"),
-        F.min("_min_us").cast("long").alias("first_us"),
-        F.max("_max_us").cast("long").alias("last_us"),
-    ).select(_b("user_id"), "n_events", "total_value", "n_types", "first_us", "last_us")
-
-
-_SESSIONIZE_SEQ = 0
-
-
-@register(
-    "sessionize_stateful",
-    """
-    WITH g AS (
-      SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-                       OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
-                  OR lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events),
-    segs AS (
-      SELECT user_id, ts_us,
-             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg
-      FROM g),
-    sess AS (
-      SELECT user_id, seg, min(ts_us) AS s, max(ts_us) AS e, count(*) AS n
-      FROM segs GROUP BY user_id, seg)
-    SELECT CAST(user_id AS BIGINT) AS user_id,
-           CAST(s AS BIGINT) AS session_start_us, CAST(e AS BIGINT) AS session_end_us,
-           CAST(n AS BIGINT) AS n_events
-    FROM (SELECT *, max(s) OVER (PARTITION BY user_id) AS last_s FROM sess)
-    WHERE s <> last_s
-    """,
-)
-def q_sessionize_stateful(spark, sf_dir):
-    """CUSTOM STATEFUL STREAMING operator run to completion: the events
-    table streams through applyInPandasWithState sessionization
-    (streaming/sessionize.py — per-user open-session state across
-    micro-batches, 30-min gap), and the CLOSED sessions it emits are
-    returned as a batch frame. The oracle computes the same closed
-    sessions relationally (windowed sessionization minus each user's
-    final open session) — a full value-hash check on a stateful
-    streaming operator, not just a rows-only smoke."""
-    import hashlib as _hl
-    import shutil as _sh
-    from pathlib import Path as _P
-
-    from .streaming.sessionize import sessionize_stream
-
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    landing = f"/tmp/sessionize_landing_{tag}"
-    if not _P(landing).is_dir():
-        _P(landing).mkdir(parents=True)
-        _sh.copy(f"{sf_dir}/events.parquet", f"{landing}/events.parquet")
-    stream = (
-        spark.readStream.schema("user_id long, event_id long, event_type string, ts timestamp, value double")
-        .parquet(landing)
-    )
-    # Unique sink name per invocation + explicit stop: a memory-sink
-    # queryName stays registered as active until stop(), so re-invoking
-    # the query in one session would otherwise collide (found by the
-    # run-it-twice probe).
-    global _SESSIONIZE_SEQ
-    _SESSIONIZE_SEQ += 1
-    name = f"closed_sessions_{tag}_{_SESSIONIZE_SEQ}"
-    q = (
-        sessionize_stream(stream, gap_minutes=30, timeout_ms=600_000)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
-    return spark.table(name).select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("session_start_us").cast("long").alias("session_start_us"),
-        F.col("session_end_us").cast("long").alias("session_end_us"),
-        F.col("n_events").cast("long").alias("n_events"),
-    )
 
 
 @register(
@@ -1571,7 +1314,14 @@ def q_curate_corpus(spark, sf_dir):
     (Jaccard 1 -> same cluster). Output: the assembled train-side rows
     with quality, dup_frac and inclusive running token totals. The
     oracle composes the same stages as CTEs, so the whole pipeline
-    value-hash-matches end to end."""
+    value-hash-matches end to end.
+
+    Every lineage cut here, and each closure round, is a
+    ``localCheckpoint``: after an executor loss the job fails instead of
+    recomputing, and it is rerun — ``scripts/curate_job.py`` is
+    idempotent. A reliable ``checkpoint()`` would need a checkpoint
+    directory, which ``build_session`` does not set, and one write per
+    cut."""
     from .operators.clusters import leakage_safe_split
     from .operators.curation import token_budget_mix
 
@@ -1654,43 +1404,6 @@ def q_bm25_search(spark, sf_dir):
 
 
 @register(
-    "asof_join_events",
-    """
-    WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-    r AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase')
-    SELECT CAST(l.event_id AS BIGINT) AS event_id,
-           CAST(l.user_id AS BIGINT) AS user_id,
-           CAST(epoch_us(l.ts) AS BIGINT) AS ts_us,
-           CAST(epoch_us(r.ts) AS BIGINT) AS purchase_ts_us,
-           CAST(floor(r.value * 100 + 0.5) / 100 AS DOUBLE) AS purchase_value
-    FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-    """,
-)
-def q_asof_join_events(spark, sf_dir):
-    """AS-OF JOIN (point-in-time-correct temporal lookup): every click
-    enriched with the user's most recent purchase at or before it,
-    NULL when none. Spark lacks the operator; operators/asof.py builds
-    it as union + ordered window — ONE shuffle over |L|+|R| rows, no
-    range explosion (the naive range-join + argmax is quadratic per
-    key). The oracle is DuckDB's NATIVE ASOF LEFT JOIN, so semantics
-    (inclusive match, misses) are checked against a reference
-    implementation, not our own SQL restatement."""
-    from .operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    out = asof_join(clicks, purchases, ["user_id"], right_vals=("ts", "value"))
-    return out.select(
-        _b("event_id"),
-        _b("user_id"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.unix_micros(F.col("ts_asof").cast("timestamp")).alias("purchase_ts_us"),
-        pround(F.col("value_asof"), 2).alias("purchase_value"),
-    )
-
-
-@register(
     "sample_documents",
     """
     SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -1744,66 +1457,11 @@ def q_profile_documents(spark, sf_dir):
     )
 
 
-@register(
-    "stream_windowed_counts",
-    """
-    SELECT CAST(epoch_us(date_trunc('hour', ts)) AS BIGINT) AS window_start_us,
-           event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(floor(sum(value) * 100 + 0.5) / 100 AS DOUBLE) AS total_value
-    FROM events GROUP BY 1, 2
-    """,
-)
-def q_stream_windowed_counts(spark, sf_dir):
-    """WATERMARKED WINDOWED STREAMING AGG run to completion: the events
-    table streams through a tumbling 60-min window groupBy under a
-    60-min watermark (streaming/windowed.py — bounded state, late-data
-    drop discipline) in complete output mode, so the emitted windows
-    equal the batch agg the oracle computes — a full value-hash check
-    on the second streaming shape next to sessionize_stateful. The
-    append-mode late-drop semantics have their own two-micro-batch test
-    (tests/test_streaming.py)."""
-    import hashlib as _hl
-    import shutil as _sh
-    from pathlib import Path as _P
-
-    from .streaming.windowed import windowed_event_counts
-
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    landing = f"/tmp/windowed_landing_{tag}"
-    if not _P(landing).is_dir():
-        _P(landing).mkdir(parents=True)
-        _sh.copy(f"{sf_dir}/events.parquet", f"{landing}/events.parquet")
-    stream = (
-        spark.readStream.schema("user_id long, event_id long, event_type string, ts timestamp, value double")
-        .parquet(landing)
-    )
-    global _SESSIONIZE_SEQ
-    _SESSIONIZE_SEQ += 1
-    name = f"windowed_counts_{tag}_{_SESSIONIZE_SEQ}"
-    q = (
-        windowed_event_counts(stream, window_minutes=60, watermark_minutes=60)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
-    return spark.table(name).select(
-        F.col("window_start_us").cast("long").alias("window_start_us"),
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        pround(F.col("total_value"), 2).alias("total_value"),
-    )
-
-
 # ==========================================================================
-# 5b. Multi-level aggregation (rollup / cube / grouping sets / pivot) —
-# beyond the reference: the summary-table primitives a curation
-# dashboard needs. All shuffle once on the grouping keys; Spark expands
-# grouping sets map-side, so no extra passes over the input.
+# 5b. Multi-level aggregation (rollup / cube) — beyond the reference:
+# the summary-table primitives a curation dashboard needs. Both shuffle
+# once on the grouping keys; Spark expands grouping sets map-side, so no
+# extra passes over the input.
 # ==========================================================================
 
 
@@ -1858,60 +1516,6 @@ def q_cube_orders(spark, sf_dir):
         F.coalesce("o_orderpriority", F.lit("<all>")).alias("o_orderpriority"),
         "gid",
         "n",
-    )
-
-
-@register(
-    "grouping_sets_events",
-    """
-    SELECT CAST(coalesce(user_id, -1) AS BIGINT) AS user_id,
-           coalesce(event_type, '<all>') AS event_type,
-           CAST(GROUPING(user_id, event_type) AS BIGINT) AS gid,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(floor(sum(value) * 100 + 0.5) / 100 AS DOUBLE) AS total_value
-    FROM events GROUP BY GROUPING SETS ((user_id), (event_type))
-    """,
-)
-def q_grouping_sets_events(spark, sf_dir):
-    """Explicit GROUPING SETS: per-user and per-type marginals in one
-    pass (SQL API — grouping sets have no DataFrame verb)."""
-    ev = _t(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("_gs_events")
-    return spark.sql(
-        """
-        SELECT CAST(coalesce(user_id, -1) AS BIGINT) AS user_id,
-               coalesce(event_type, '<all>') AS event_type,
-               CAST(grouping_id(user_id, event_type) AS BIGINT) AS gid,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(floor(sum(value) * 100 + 0.5) / 100 AS DOUBLE) AS total_value
-        FROM _gs_events GROUP BY GROUPING SETS ((user_id), (event_type))
-        """
-    )
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-@register(
-    "pivot_event_types",
-    f"""
-    SELECT CAST(user_id AS BIGINT) AS user_id,
-           {", ".join(f"CAST(sum(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END) AS BIGINT) AS n_{t}" for t in _EVENT_TYPES)}
-    FROM events GROUP BY user_id
-    """,
-)
-def q_pivot_event_types(spark, sf_dir):
-    """Pivot (long -> wide counts) with an EXPLICIT category list — the
-    two-pass category-discovery variant is an anti-pattern at scale."""
-    ev = _t(spark, sf_dir, "events")
-    out = (
-        ev.groupBy("user_id")
-        .pivot("event_type", _EVENT_TYPES)
-        .count()
-        .na.fill(0, [t for t in _EVENT_TYPES])
-    )
-    return out.select(
-        _b("user_id"), *[F.col(t).cast("long").alias(f"n_{t}") for t in _EVENT_TYPES]
     )
 
 
@@ -2320,8 +1924,6 @@ def q_threshold_sweep(spark, sf_dir):
     for a in arms[1:]:
         out = out.unionByName(a)
     return out
-
-
 
 
 _PAIR_COS_SQL = """
@@ -2756,55 +2358,6 @@ def q_topk_per_lang(spark, sf_dir):
     )
 
 
-@register(
-    "stream_dedup_keys",
-    """
-    SELECT DISTINCT CAST(user_id AS BIGINT) AS user_id, event_type
-    FROM events
-    """,
-)
-def q_stream_dedup_keys(spark, sf_dir):
-    """STREAMING DEDUPLICATION run for real: events stream through
-    dropDuplicatesWithinWatermark on (user_id, event_type) under a
-    60-min watermark (streaming/dedup_stream.py — exactly-once key
-    emission with watermark-BOUNDED state; a plain streaming
-    dropDuplicates would hold every key forever). The emitted key set
-    is arrival-order-invariant, so the oracle is batch DISTINCT; the
-    replay-window contract (in-horizon duplicate dropped, post-eviction
-    re-arrival re-emitted) is pinned in tests/test_streaming.py."""
-    import hashlib as _hl
-    import shutil as _sh
-    from pathlib import Path as _P
-
-    from .streaming.dedup_stream import dedup_within_watermark, distinct_key_counts
-
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    landing = f"/tmp/dedup_landing_{tag}"
-    if not _P(landing).is_dir():
-        _P(landing).mkdir(parents=True)
-        _sh.copy(f"{sf_dir}/events.parquet", f"{landing}/events.parquet")
-    stream = (
-        spark.readStream.schema("user_id long, event_id long, event_type string, ts timestamp, value double")
-        .parquet(landing)
-    )
-    global _SESSIONIZE_SEQ
-    _SESSIONIZE_SEQ += 1
-    name = f"stream_dedup_{tag}_{_SESSIONIZE_SEQ}"
-    q = (
-        dedup_within_watermark(stream, ["user_id", "event_type"], "ts", "60 minutes")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    q.stop()
-    return distinct_key_counts(spark.table(name), ["user_id", "event_type"]).select(
-        F.col("user_id").cast("long").alias("user_id"), "event_type"
-    )
-
-
 # ==========================================================================
 # 7. TPC-H classics — the canonical OLAP shapes, exact oracles
 # ==========================================================================
@@ -3029,43 +2582,6 @@ def q_merge_upsert_documents(spark, sf_dir):
 
 
 @register(
-    "cogroup_user_activity",
-    """
-    WITH e AS (SELECT user_id, count(*) AS n_events,
-                      floor(sum(value) * 100 + 0.5) / 100 AS events_value
-               FROM events GROUP BY user_id),
-    o AS (SELECT o_custkey, count(*) AS n_orders,
-                 floor(sum(o_totalprice) * 100 + 0.5) / 100 AS orders_total
-          FROM orders GROUP BY o_custkey)
-    SELECT CAST(coalesce(e.user_id, o.o_custkey) AS BIGINT) AS user_id,
-           CAST(coalesce(e.n_events, 0) AS BIGINT) AS n_events,
-           CAST(coalesce(e.events_value, 0.0) AS DOUBLE) AS events_value,
-           CAST(coalesce(o.n_orders, 0) AS BIGINT) AS n_orders,
-           CAST(coalesce(o.orders_total, 0.0) AS DOUBLE) AS orders_total
-    FROM e FULL JOIN o ON o.o_custkey = e.user_id
-    """,
-)
-def q_cogroup_user_activity(spark, sf_dir):
-    """COGROUPED pandas UDF surface (groupBy().cogroup().applyInPandas
-    — the per-key two-frame escape hatch): events and orders
-    co-shuffled on the user key, each key's two groups merged in one
-    Python call. The example logic is join-expressible ON PURPOSE so
-    the oracle can certify the cogroup path exactly; the float sums
-    are per-key pandas sums, rounded with the same floor-round both
-    sides."""
-    from .operators.cogroup import cogroup_user_activity
-
-    out = cogroup_user_activity(_t(spark, sf_dir, "events"), _t(spark, sf_dir, "orders"))
-    return out.select(
-        _b("user_id"),
-        _b("n_events"),
-        pround(F.col("events_value"), 2).alias("events_value"),
-        _b("n_orders"),
-        pround(F.col("orders_total"), 2).alias("orders_total"),
-    )
-
-
-@register(
     "table_diff_documents",
     """
     WITH src AS (
@@ -3211,99 +2727,6 @@ def q_dedup_containment(spark, sf_dir):
         "n_a",
         "n_b",
         F.col("containment").cast("double").alias("containment"),
-    )
-
-
-@register(
-    "stream_stream_attribution",
-    """
-    SELECT CAST(a.user_id AS BIGINT) AS user_id,
-           CAST(a.event_id AS BIGINT) AS click_event_id,
-           CAST(b.event_id AS BIGINT) AS purchase_event_id,
-           CAST(epoch_us(b.ts) - epoch_us(a.ts) AS BIGINT) AS lag_us
-    FROM events a JOIN events b
-      ON a.user_id = b.user_id
-     AND a.event_type = 'click' AND b.event_type = 'purchase'
-     AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE
-    """,
-)
-def q_stream_stream_attribution(spark, sf_dir):
-    """WATERMARKED STREAM-STREAM JOIN run for real: the events table
-    streams twice (click side / purchase side), joined on user with a
-    30-min event-time range under 60-min watermarks
-    (streaming/join_stream.py — both sides' buffers are state BOUNDED
-    by watermark+window; without them a stream-stream join buffers
-    forever). Inner-join emission is exactly-the-matched-pairs
-    independent of arrival order, so the batch range join is the
-    oracle."""
-    import hashlib as _hl
-    import shutil as _sh
-    from pathlib import Path as _P
-
-    from .streaming.join_stream import attribution_join
-
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    landing = f"/tmp/attrib_landing_{tag}"
-    if not _P(landing).is_dir():
-        _P(landing).mkdir(parents=True)
-        _sh.copy(f"{sf_dir}/events.parquet", f"{landing}/events.parquet")
-
-    def side(et):
-        return (
-            spark.readStream.schema(
-                "user_id long, event_id long, event_type string, ts timestamp, value double"
-            )
-            .parquet(landing)
-            .filter(F.col("event_type") == et)
-        )
-
-    global _SESSIONIZE_SEQ
-    _SESSIONIZE_SEQ += 1
-    name = f"attrib_{tag}_{_SESSIONIZE_SEQ}"
-    q = (
-        attribution_join(side("click"), side("purchase"), window_minutes=30, watermark_minutes=60)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    q.stop()
-    return spark.table(name).select(
-        _b("user_id"), _b("click_event_id"), _b("purchase_event_id"), _b("lag_us")
-    )
-
-
-@register(
-    "salted_join_events",
-    """
-    SELECT CAST(e.user_id AS BIGINT) AS user_id,
-           CAST(e.event_id AS BIGINT) AS event_id,
-           c.c_mktsegment AS segment,
-           CAST(floor(e.value * 100 + 0.5) / 100 AS DOUBLE) AS value
-    FROM events e JOIN customer c ON c.c_custkey = e.user_id
-    """,
-)
-def q_salted_join_events(spark, sf_dir):
-    """MANUAL skew-join salting (the guaranteed-fix form next to the
-    AQE automatic split): the fact side salts each row by
-    xxhash64(all columns) % 8, the dim side replicates 8x, the join
-    key becomes (user_id, salt) — a hot user's rows now land in 8
-    reducers instead of one. Row-for-row equal to the plain join,
-    which is exactly what the oracle states."""
-    from .operators.skewjoin import salted_join
-
-    events = _t(spark, sf_dir, "events").select("user_id", "event_id", "value")
-    dim = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    out = salted_join(events, dim, "user_id", n_salt=8)
-    return out.select(
-        _b("user_id"),
-        _b("event_id"),
-        F.col("c_mktsegment").alias("segment"),
-        pround(F.col("value"), 2).alias("value"),
     )
 
 
@@ -3885,31 +3308,6 @@ def q_unigram_kl_drift(spark, sf_dir):
 
 
 @register(
-    "json_props_rollup",
-    """
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS n_with_field,
-           CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS min_val,
-           CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS max_val,
-           CAST(floor(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)) * 1000000 + 0.5) / 1000000 AS DOUBLE) AS avg_val
-    FROM events GROUP BY event_type
-    """,
-)
-def q_json_props_rollup(spark, sf_dir):
-    """Semi-structured extraction: pull an integer field out of the JSON
-    ``props`` payload column and roll it up per event type — the typed
-    view over sidecar metadata every transcript table carries (tool-call
-    args, crawler headers). ``get_json_object`` is a JVM intrinsic
-    evaluated in the scan projection (zero Python, no extra pass); ONE
-    partial-agg exchange on the group key. Dirty/missing JSON degrades
-    to NULL, surfaced as the n_events - n_with_field coverage gap."""
-    from .operators.semistructured import json_field_rollup
-
-    return json_field_rollup(_t(spark, sf_dir, "events"))
-
-
-@register(
     "dsir_importance",
     """
     WITH base AS (
@@ -4009,38 +3407,6 @@ def q_shingle_pagerank(spark, sf_dir):
 
 
 @register(
-    "funnel_stages",
-    """
-    WITH win AS (SELECT * FROM events WHERE ts < TIMESTAMP '2024-01-04 00:00:00'),
-    s0 AS (SELECT user_id AS u, min(epoch_us(ts)) AS t FROM win
-           WHERE event_type = 'view' GROUP BY user_id),
-    s1 AS (SELECT e.user_id AS u, min(epoch_us(e.ts)) AS t
-           FROM win e JOIN s0 ON e.user_id = s0.u AND epoch_us(e.ts) > s0.t
-           WHERE e.event_type = 'click' GROUP BY e.user_id),
-    s2 AS (SELECT e.user_id AS u, min(epoch_us(e.ts)) AS t
-           FROM win e JOIN s1 ON e.user_id = s1.u AND epoch_us(e.ts) > s1.t
-           WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-    SELECT CAST(0 AS BIGINT) AS stage_idx, 'view' AS stage,
-           CAST(count(*) AS BIGINT) AS n_users FROM s0
-    UNION ALL SELECT CAST(1 AS BIGINT), 'click', CAST(count(*) AS BIGINT) FROM s1
-    UNION ALL SELECT CAST(2 AS BIGINT), 'purchase', CAST(count(*) AS BIGINT) FROM s2
-    """,
-)
-def q_funnel_stages(spark, sf_dir):
-    """Ordered-funnel conversion (view -> click -> purchase within the
-    first 3 days, first-touch, strictly-after semantics): one filtered
-    min-aggregate plus one user-key equi-join per stage; the frontier
-    shrinks monotonically (115 -> 66 -> 37 at sf0.01), so later stages
-    are broadcast-eligible under AQE at scale."""
-    from .operators.funnel import funnel_stages
-
-    win = _t(spark, sf_dir, "events").filter(
-        F.col("ts") < F.lit("2024-01-04 00:00:00").cast("timestamp")
-    )
-    return funnel_stages(win, ["view", "click", "purchase"])
-
-
-@register(
     "bpe_pair_counts",
     """
     WITH w AS (
@@ -4067,30 +3433,6 @@ def q_bpe_pair_counts(spark, sf_dir):
     from .operators.encode import bpe_pair_counts
 
     return bpe_pair_counts(_docs(spark, sf_dir), top_n=50)
-
-
-@register(
-    "cohort_retention",
-    """
-    WITH act AS (
-      SELECT DISTINCT user_id AS u, epoch_us(ts) // 172800000000 AS w
-      FROM events WHERE event_type = 'purchase'),
-    first AS (SELECT u, min(w) AS cw FROM act GROUP BY u)
-    SELECT CAST(cw AS BIGINT) AS cohort_week, CAST(w - cw AS BIGINT) AS week_offset,
-           CAST(count(*) AS BIGINT) AS n_users
-    FROM act JOIN first USING(u) GROUP BY cw, w - cw
-    """,
-)
-def q_cohort_retention(spark, sf_dir):
-    """Cohort retention triangle over purchases in 2-day periods (fine
-    enough to discriminate at sf0.01: 6 cohorts, genuine decay). Period
-    bucketing is integer micros DIV — engine-identical, no calendar/tz
-    semantics. Two user-key aggs (the distinct's partitioning reused by
-    the min and the join) + one tiny (cohort, offset) groupBy."""
-    from .operators.funnel import cohort_retention
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    return cohort_retention(ev, week_us=172_800_000_000)
 
 
 @register(
@@ -4179,102 +3521,6 @@ def q_dedup_prefix_filter(spark, sf_dir):
 
 
 @register(
-    "hopping_window_counts",
-    """
-    WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
-    w AS (
-      SELECT unnest([(us // 300000000 - i) * 300000000 for i in range(0, 2)]) AS win_start_us,
-             event_type, value
-      FROM e)
-    SELECT CAST(win_start_us AS BIGINT) AS win_start_us, event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(floor(sum(value) * 100 + 0.5) / 100 AS DOUBLE) AS total_value
-    FROM w GROUP BY win_start_us, event_type
-    """,
-)
-def q_hopping_window_counts(spark, sf_dir):
-    """BATCH hopping event-time windows via Spark's native TimeWindow
-    expression (F.window, 10-min length / 5-min slide — each event lands
-    in exactly 2 windows): the batch twin of the streaming
-    stream_windowed_counts query, exercising the window-assignment
-    operator itself rather than a hand-rolled explode. The oracle
-    derives the same window starts arithmetically (integer micros DIV
-    slide), pinning Spark's epoch-aligned assignment semantics. One
-    expand + one groupBy — the expansion factor is len/slide (bounded),
-    and the agg is map-side combined."""
-    ev = _t(spark, sf_dir, "events")
-    win = F.window(F.col("ts").cast("timestamp"), "10 minutes", "5 minutes")
-    return (
-        ev.groupBy(win.alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            pround(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.unix_micros(F.col("win.start")).alias("win_start_us"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-_HLL_ALPHA_NUM = repr(SK.hll_alpha_numerator(6))
-
-@register(
-    "hll_distinct_users",
-    f"""
-    WITH h AS (
-      SELECT event_type,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 13))::BIGINT AS h
-      FROM events),
-    r AS (
-      SELECT event_type, h % 64 AS bucket,
-             CASE WHEN (h >> 6) = 0 THEN 47
-                  ELSE 47 - length(printf('%b', h >> 6)) END AS rho
-      FROM h),
-    regs AS (
-      SELECT event_type, bucket, max(rho) AS reg
-      FROM r GROUP BY event_type, bucket),
-    agg AS (
-      SELECT event_type, count(*) AS n_buckets,
-             sum(1::BIGINT << (47 - reg)) AS present_sum
-      FROM regs GROUP BY event_type),
-    ex AS (
-      SELECT event_type, count(DISTINCT user_id) AS exact_distinct
-      FROM events GROUP BY event_type)
-    SELECT agg.event_type,
-           CAST(n_buckets AS BIGINT) AS n_buckets,
-           CAST(floor({_HLL_ALPHA_NUM}
-                      / CAST(present_sum + (64 - n_buckets) * (1::BIGINT << 47) AS DOUBLE)
-                      * 1000000 + 0.5) / 1000000 AS DOUBLE) AS hll_estimate,
-           CAST(exact_distinct AS BIGINT) AS exact_distinct
-    FROM agg JOIN ex ON agg.event_type = ex.event_type
-    """,
-)
-def q_hll_distinct_users(spark, sf_dir):
-    """HyperLogLog distinct users per event_type (b=6, m=64 registers)
-    NEXT TO the exact count — the fixed-size mergeable sketch for 100 TB
-    COUNT(DISTINCT): per group the shuffle carries at most 64 register
-    rows however large the input, and shards/days merge by elementwise
-    max. The oracle rebuilds every register AND the raw Flajolet
-    estimator bit-for-bit (integer fixed-point harmonic sum, shared
-    alpha literal), so the value hash attests the sketch itself — no
-    tolerance band. The exact column doubles as the accuracy exhibit."""
-    ev = _t(spark, sf_dir, "events")
-    est = SK.hll_distinct(ev, ["event_type"], "user_id", b=6)
-    ex = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("long").alias("exact_distinct")
-    )
-    return est.join(ex, "event_type").select(
-        "event_type",
-        F.col("n_buckets").cast("long").alias("n_buckets"),
-        F.col("hll_estimate").cast("double").alias("hll_estimate"),
-        "exact_distinct",
-    )
-
-
-@register(
     "cms_heavy_hitters",
     """
     WITH tok AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
@@ -4343,8 +3589,8 @@ def q_cms_heavy_hitters(spark, sf_dir):
     """,
 )
 def q_bloom_membership(spark, sf_dir):
-    """Bloom-filter membership, the sketch family's third leg (HLL =
-    distinct, CMS = frequency, Bloom = membership; Bloom 1970): build a
+    """Bloom-filter membership, a leg of the sketch family (CMS =
+    frequency, Bloom = membership; Bloom 1970): build a
     4096-bit / k=4 filter over the custkeys of urgent finished orders
     (one exploded projection + one map-side-combined bit_or groupBy —
     the filter IS the shuffle output, 128 int64 words however large the
@@ -4487,8 +3733,8 @@ def q_incremental_agg_merge(spark, sf_dir):
 )
 def q_hdr_quantile_sketch(spark, sf_dir):
     """Mergeable quantile sketch (HDR/DDSketch log-bucket histogram) —
-    the fourth member of the sketch family (HLL = distinct, CMS =
-    frequency, Bloom = membership, HDR = quantiles). Per-priority
+    the third member of the sketch family (CMS = frequency, Bloom =
+    membership, HDR = quantiles). Per-priority
     p50/p90/p99 of o_totalprice read from bounded bucket state instead
     of a rank-exact data shuffle: the Spark side deliberately builds
     TWO shard histograms (orders < 1999 / >= 1999), merges them by
@@ -4614,48 +3860,6 @@ def q_bucketed_join_stats(spark, sf_dir):
     )
 
 
-@register(
-    "scd2_history",
-    """
-    WITH s AS (
-      SELECT user_id, ts, event_type,
-             lag(event_type) OVER (PARTITION BY user_id ORDER BY ts) AS prev,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-      FROM events),
-    c AS (
-      SELECT user_id, ts, event_type FROM s
-      WHERE prev_ts IS NULL OR prev IS DISTINCT FROM event_type),
-    v AS (
-      SELECT user_id, event_type,
-             epoch_us(ts) AS effective_from_us,
-             lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts)
-               AS effective_to_us
-      FROM c)
-    SELECT CAST(user_id AS BIGINT) AS user_id,
-           event_type,
-           CAST(effective_from_us AS BIGINT) AS effective_from_us,
-           CAST(effective_to_us AS BIGINT) AS effective_to_us,
-           CAST(CASE WHEN effective_to_us IS NULL THEN 1 ELSE 0 END AS INT)
-             AS is_current
-    FROM v
-    """,
-)
-def q_scd2_history(spark, sf_dir):
-    """SCD Type-2 dimension history built from the events change log
-    (``operators/merge.py:scd2_build`` — the history-preserving
-    counterpart of the SCD1 ``doc_merge_upsert``): per user, each run
-    of consecutive identical event_types collapses into ONE effective-
-    dated version row (no-op changes must not open versions — the
-    null-safe ``lag(attrs) <=> attrs`` collapse), with
-    effective_from/to as unix-micros and NULL-to = current. Both
-    window passes share one hash exchange + one sort (partitioned
-    windows, no global order — the 100 TB shape). The oracle rebuilds
-    the same history with lag/lead + IS DISTINCT FROM."""
-    from .operators.merge import scd2_build
-
-    return scd2_build(_t(spark, sf_dir, "events"), ["user_id"], "ts", ["event_type"])
-
-
 def _zspread_sql(e: str) -> str:
     """DuckDB twin of ``sources.layout.zspread``: the shift-or-mask
     ladder as nested SQL (textually duplicated per round — fine for an
@@ -4751,50 +3955,6 @@ def q_profile_orders(spark, sf_dir):
     return profile_table(
         _t(spark, sf_dir, "orders"),
         ["o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"],
-    )
-
-
-@register(
-    "skew_report_events",
-    """
-    WITH counts AS (
-        SELECT user_id, CAST(count(*) AS BIGINT) AS key_rows
-        FROM events GROUP BY user_id
-    ), totals AS (
-        SELECT CAST(sum(key_rows) AS BIGINT) AS n_rows,
-               CAST(count(*) AS BIGINT) AS n_keys
-        FROM counts
-    ), topk AS (
-        SELECT user_id, key_rows,
-               CAST(row_number() OVER (ORDER BY key_rows DESC, user_id) AS BIGINT) AS rank
-        FROM counts ORDER BY key_rows DESC, user_id LIMIT 5
-    )
-    SELECT rank,
-           CAST(user_id AS VARCHAR) AS key_repr,
-           key_rows,
-           CAST(key_rows * 1000000 // n_rows AS BIGINT) AS share_ppm,
-           n_rows,
-           n_keys,
-           CAST(n_rows // n_keys AS BIGINT) AS avg_rows_per_key,
-           CAST(key_rows * 100 // (n_rows // n_keys) AS BIGINT) AS skew_x100,
-           CAST(greatest(1, (key_rows + 9) // 10) AS BIGINT) AS salt_factor
-    FROM topk CROSS JOIN totals
-    """,
-)
-def q_skew_report_events(spark, sf_dir):
-    """Pre-join skew diagnostic (``operators/skewjoin.py:skew_report``):
-    top-5 heaviest ``user_id`` keys in events with parts-per-million
-    share, skew-vs-average, and the ceil-division ``salt_factor`` a
-    ``salted_join`` would need at 10 rows/task — all-integer ``div``
-    math so the DuckDB oracle (``//``) reproduces every cell. Plan: ONE
-    map-side-combinable count shuffle (skew-immune by construction)
-    whose exchange is ReuseExchange-shared by the 1-row totals and the
-    TakeOrderedAndProject top-k; totals ride the whitelisted
-    1-row-broadcast BNLJ; rank windows over <= 5 rows."""
-    from .operators.skewjoin import skew_report
-
-    return skew_report(
-        _t(spark, sf_dir, "events"), "user_id", target_rows_per_task=10, top_k=5
     )
 
 
@@ -4908,126 +4068,6 @@ def q_url_canonicalize(spark, sf_dir):
         "url",
         canonicalize_url(F.col("url")).alias("canon_url"),
         url_host(F.col("url")).alias("host"),
-    )
-
-
-_MAD_ORACLE = """
-WITH hist AS (
-    SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-           CAST(count(*) AS BIGINT) AS cnt
-    FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), medc AS (
-    SELECT event_type, cents, cnt,
-           sum(cnt) OVER (PARTITION BY event_type ORDER BY cents ROWS UNBOUNDED PRECEDING) AS cum,
-           sum(cnt) OVER (PARTITION BY event_type) AS n
-    FROM hist
-), med AS (
-    SELECT event_type,
-           CAST(min(CASE WHEN cum >= (n + 1) // 2 THEN cents END)
-              + min(CASE WHEN cum >= n // 2 + 1 THEN cents END) AS BIGINT) AS med_cents_x2
-    FROM medc GROUP BY 1
-), dev AS (
-    SELECT h.event_type, abs(2 * h.cents - m.med_cents_x2) AS dev_x2, h.cnt, m.med_cents_x2
-    FROM hist h JOIN med m USING (event_type)
-), devh AS (
-    SELECT event_type, dev_x2, CAST(sum(cnt) AS BIGINT) AS cnt FROM dev GROUP BY 1, 2
-), madc AS (
-    SELECT event_type, dev_x2, cnt,
-           sum(cnt) OVER (PARTITION BY event_type ORDER BY dev_x2 ROWS UNBOUNDED PRECEDING) AS cum,
-           sum(cnt) OVER (PARTITION BY event_type) AS n
-    FROM devh
-), mad AS (
-    SELECT event_type,
-           CAST(min(CASE WHEN cum >= (n + 1) // 2 THEN dev_x2 END)
-              + min(CASE WHEN cum >= n // 2 + 1 THEN dev_x2 END) AS BIGINT) AS mad_cents_x4
-    FROM madc GROUP BY 1
-)
-SELECT d.event_type,
-       CAST(sum(d.cnt) AS BIGINT) AS n_rows,
-       CAST(max(d.med_cents_x2) AS BIGINT) AS med_cents_x2,
-       CAST(max(a.mad_cents_x4) AS BIGINT) AS mad_cents_x4,
-       CAST(sum(CASE WHEN 2 * d.dev_x2 > 3 * a.mad_cents_x4 THEN d.cnt ELSE 0 END) AS BIGINT) AS n_outliers
-FROM dev d JOIN mad a USING (event_type)
-GROUP BY 1
-"""
-
-
-@register("mad_outliers", _MAD_ORACLE)
-def q_mad_outliers(spark, sf_dir):
-    """Robust per-group outlier report (``operators/robust.py``): exact
-    median + MAD of events.value per event_type from a (group, cents)
-    histogram — the raw table is scanned ONCE into a partial-agg count
-    shuffle (skew-immune); median/MAD/outlier counts all run on the
-    histogram, bounded by the cents DOMAIN, not the row count (the
-    exact cousin of the HDR sketch). Integer x2/x4 carry — lower+upper
-    central order statistics, never divided — so no float exists
-    anywhere and the DuckDB CTE mirror hash-matches bit-for-bit.
-    Outlier rule: |dev| > 3 MADs, tested as 2*dev_x2 > 3*mad_x4."""
-    from .operators.robust import mad_outlier_report
-
-    return mad_outlier_report(_t(spark, sf_dir, "events"), "event_type", "value", k=3)
-
-
-_REF_ORACLE = """
-SELECT CAST(0 AS BIGINT) AS edge_idx, 'lineitem.l_orderkey -> orders' AS edge_name,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN l.l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_fk,
-       CAST(sum(CASE WHEN l.l_orderkey IS NOT NULL AND o.o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans,
-       CAST(CASE WHEN count(l.l_orderkey) = 0 THEN 0
-                 ELSE sum(CASE WHEN l.l_orderkey IS NOT NULL AND o.o_orderkey IS NULL THEN 1 ELSE 0 END) * 1000000 // count(l.l_orderkey) END AS BIGINT) AS orphan_ppm,
-       CAST(CASE WHEN sum(CASE WHEN l.l_orderkey IS NOT NULL AND o.o_orderkey IS NULL THEN 1 ELSE 0 END) = 0 THEN 1 ELSE 0 END AS BIGINT) AS passed
-FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o ON l.l_orderkey = o.o_orderkey
-UNION ALL
-SELECT CAST(1 AS BIGINT), 'orders.o_custkey -> customer',
-       CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN r.o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(sum(CASE WHEN r.o_custkey IS NOT NULL AND c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(CASE WHEN count(r.o_custkey) = 0 THEN 0
-                 ELSE sum(CASE WHEN r.o_custkey IS NOT NULL AND c.c_custkey IS NULL THEN 1 ELSE 0 END) * 1000000 // count(r.o_custkey) END AS BIGINT),
-       CAST(CASE WHEN sum(CASE WHEN r.o_custkey IS NOT NULL AND c.c_custkey IS NULL THEN 1 ELSE 0 END) = 0 THEN 1 ELSE 0 END AS BIGINT)
-FROM orders r LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c ON r.o_custkey = c.c_custkey
-UNION ALL
-SELECT CAST(2 AS BIGINT), 'events.user_id -> customer',
-       CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN e.user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(sum(CASE WHEN e.user_id IS NOT NULL AND c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(CASE WHEN count(e.user_id) = 0 THEN 0
-                 ELSE sum(CASE WHEN e.user_id IS NOT NULL AND c.c_custkey IS NULL THEN 1 ELSE 0 END) * 1000000 // count(e.user_id) END AS BIGINT),
-       CAST(CASE WHEN sum(CASE WHEN e.user_id IS NOT NULL AND c.c_custkey IS NULL THEN 1 ELSE 0 END) = 0 THEN 1 ELSE 0 END AS BIGINT)
-FROM events e LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c ON e.user_id = c.c_custkey
-"""
-
-
-@register("referential_audit", _REF_ORACLE)
-def q_referential_audit(spark, sf_dir):
-    """Referential-integrity audit (``operators/refintegrity.py``):
-    orphan counts for three FK edges — two clean TPC-H invariants
-    (lineitem->orders, orders->customer) and one edge with REAL
-    orphans (events.user_id=0 has no customer row: c_custkey starts at
-    1), so both arms of the ppm/passed arithmetic hash-attest. NULL
-    FKs are absence-of-reference, not orphans (reported separately).
-    Per edge: key-only LEFT join against DISTINCT dim keys + one
-    conditional aggregate; Catalyst broadcasts the small dims."""
-    from .operators.refintegrity import FkEdge, referential_audit
-
-    return referential_audit(
-        [
-            FkEdge(
-                "lineitem.l_orderkey -> orders",
-                _t(spark, sf_dir, "lineitem"), "l_orderkey",
-                _t(spark, sf_dir, "orders"), "o_orderkey",
-            ),
-            FkEdge(
-                "orders.o_custkey -> customer",
-                _t(spark, sf_dir, "orders"), "o_custkey",
-                _t(spark, sf_dir, "customer"), "c_custkey",
-            ),
-            FkEdge(
-                "events.user_id -> customer",
-                _t(spark, sf_dir, "events"), "user_id",
-                _t(spark, sf_dir, "customer"), "c_custkey",
-            ),
-        ]
     )
 
 
@@ -5248,93 +4288,6 @@ def q_orc_roundtrip(spark, sf_dir):
     )
 
 
-_WINSOR_ORACLE = """
-WITH hist AS (
-    SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-           CAST(count(*) AS BIGINT) AS cnt
-    FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), c AS (
-    SELECT event_type, cents, cnt,
-           sum(cnt) OVER (PARTITION BY event_type ORDER BY cents ROWS UNBOUNDED PRECEDING) AS cum,
-           sum(cnt) OVER (PARTITION BY event_type) AS n
-    FROM hist
-), b AS (
-    SELECT event_type,
-           CAST(max(n) AS BIGINT) AS n_rows,
-           CAST(min(CASE WHEN cum >= (10 * n + 999) // 1000 THEN cents END) AS BIGINT) AS lo_cents,
-           CAST(min(CASE WHEN cum >= (990 * n + 999) // 1000 THEN cents END) AS BIGINT) AS hi_cents
-    FROM c GROUP BY 1
-)
-SELECT h.event_type, max(b.n_rows) AS n_rows,
-       max(b.lo_cents) AS lo_cents, max(b.hi_cents) AS hi_cents,
-       CAST(coalesce(sum(CASE WHEN h.cents < b.lo_cents THEN h.cnt END), 0) AS BIGINT) AS n_below,
-       CAST(coalesce(sum(CASE WHEN h.cents > b.hi_cents THEN h.cnt END), 0) AS BIGINT) AS n_above
-FROM hist h JOIN b USING (event_type)
-GROUP BY 1
-"""
-
-
-@register("winsor_bounds", _WINSOR_ORACLE)
-def q_winsor_bounds(spark, sf_dir):
-    """Per-group winsorization bounds (``operators/robust.py:
-    percentile_bounds``): nearest-rank p1/p99 (permille 10/990) of
-    events.value per event_type, plus the outside-row counts — the
-    same ONE-scan domain-bounded histogram engine as mad_outliers,
-    integer everywhere (rank = (p*n + 999) div 1000), DuckDB CTE
-    mirror hash-matched."""
-    from .operators.robust import percentile_bounds
-
-    return percentile_bounds(
-        _t(spark, sf_dir, "events"), "event_type", "value", lo_permille=10, hi_permille=990
-    )
-
-
-@register(
-    "dpp_event_rollup",
-    """
-    WITH dim AS (SELECT DISTINCT event_type FROM events WHERE value > 400)
-    SELECT e.event_type,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(floor(sum(e.value) * 100 + 0.5) AS BIGINT) AS sum_value_cents
-    FROM events e JOIN dim USING (event_type)
-    GROUP BY e.event_type
-    """,
-)
-def q_dpp_event_rollup(spark, sf_dir):
-    """Dynamic partition pruning: events written Hive-partitioned by
-    event_type (one /tmp copy, guarded), then joined against a
-    runtime-derived dimension (the types that ever carry value > 400 —
-    a SELECTIVE scan-level predicate, the shape Spark's DPP heuristic
-    requires; a LIMIT/top-k dim or a filter over an aggregate does NOT
-    qualify, found empirically). The fact scan's PartitionFilters gains
-    ``dynamicpruningexpression(event_type IN dynamicpruning#N)`` — at
-    100 TB this is the difference between scanning every partition and
-    scanning the matched ones, decided at RUNTIME from the dim's
-    broadcast. Value parity vs the oracle's plain join proves pruning
-    changed IO, not results; the DPP plan line is machine-asserted in
-    tests/test_plan_shape.py."""
-    import hashlib as _hl
-    from pathlib import Path as _P
-
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/tmp/events_by_type_{tag}"
-    if not (_P(path) / "_SUCCESS").exists():
-        _t(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(path)
-    fact = spark.read.parquet(path)
-    dim = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("value") > 400)
-        .select("event_type")
-        .distinct()
-    )
-    return fact.join(dim, "event_type").groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.expr("cast(floor(sum(value) * 100 + 0.5) as bigint)").alias("sum_value_cents"),
-    )
-
-
 @register(
     "copurchase_lift",
     """
@@ -5479,47 +4432,6 @@ def q_snapshot_change_feed(spark, sf_dir):
     return out.select(F.col("doc_id").cast("long").alias("doc_id"), "change")
 
 
-@register(
-    "ols_moments_events",
-    """
-    WITH b AS (
-        SELECT event_type,
-               CAST(extract(hour FROM ts) AS BIGINT) AS x,
-               CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-    ), m AS (
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS BIGINT) AS sum_x,
-               CAST(sum(y) AS BIGINT) AS sum_y,
-               CAST(sum(x * y) AS BIGINT) AS sum_xy,
-               CAST(sum(x * x) AS BIGINT) AS sum_x2
-        FROM b GROUP BY 1
-    )
-    SELECT event_type, n, sum_x, sum_y, sum_xy, sum_x2,
-           CAST(n * sum_xy - sum_x * sum_y AS BIGINT) AS slope_num,
-           CAST(n * sum_x2 - sum_x * sum_x AS BIGINT) AS slope_den
-    FROM m
-    """,
-)
-def q_ols_moments_events(spark, sf_dir):
-    """Grouped OLS moments (``operators/regression.py``): value-cents
-    regressed on hour-of-day per event_type via the five mergeable
-    integer moments — ONE map-side-combinable aggregate (the
-    skew-immune count shape), slope carried as exact BIGINT
-    numerator/denominator (no float anywhere, DuckDB mirror
-    hash-matched). The merge theorem (shard-merge == whole-corpus) is
-    pinned in pytest — the same contract as the HDR/HLL sketches."""
-    from .operators.regression import ols_moments
-
-    return ols_moments(
-        _t(spark, sf_dir, "events"),
-        "event_type",
-        "extract(hour from ts)",
-        "floor(value * 100 + 0.5)",
-    )
-
-
 _SQL_IFACE = """
 WITH daily AS (
     SELECT date_format(o_orderdate, 'yyyy-MM') AS month,
@@ -5556,33 +4468,6 @@ def q_sql_interface(spark, sf_dir):
 
 
 @register(
-    "pseudonymize_events",
-    """
-    SELECT CAST(event_id AS BIGINT) AS event_id,
-           substring(md5('k1:' || CAST(user_id AS VARCHAR)), 1, 16) AS user_token,
-           event_type
-    FROM events
-    """,
-)
-def q_pseudonymize_events(spark, sf_dir):
-    """Keyed pseudonymization (``operators/curation.py:pseudonymize``):
-    user_id replaced by a secret-keyed md5 token — the SAME user maps
-    to the SAME token everywhere, so joins/sessionization survive
-    tokenization while re-identification requires the secret. Map-only
-    codegen projection; the DuckDB oracle reproduces every token
-    (md5-prefix convention)."""
-    from .operators.curation import pseudonymize
-
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    out = pseudonymize(ev, ["user_id"], secret="k1", token_len=16)
-    return out.select(
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col("user_id").alias("user_token"),
-        "event_type",
-    )
-
-
-@register(
     "sentence_split",
     """
     WITH t AS (
@@ -5610,88 +4495,6 @@ def q_sentence_split(spark, sf_dir):
 
     return split_sentences(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").cast("long").alias("doc_id"), "sent_idx", "sentence"
-    )
-
-
-@register(
-    "resample_ffill_daily",
-    """
-    WITH daily AS (
-        SELECT CAST(user_id AS BIGINT) AS key,
-               epoch_us(ts) // 86400000000 AS day_idx,
-               floor(sum(value) * 100 + 0.5) / 100 AS day_value
-        FROM events GROUP BY 1, 2
-    ), spans AS (
-        SELECT key, min(day_idx) AS d0, max(day_idx) AS d1 FROM daily GROUP BY 1
-    ), spine AS (
-        SELECT key, unnest(range(d0, d1 + 1)) AS day_idx FROM spans
-    ), j AS (
-        SELECT s.key, s.day_idx, d.day_value
-        FROM spine s LEFT JOIN daily d ON s.key = d.key AND s.day_idx = d.day_idx
-    )
-    SELECT CAST(key AS BIGINT) AS key, CAST(day_idx AS BIGINT) AS day_idx,
-           CAST(last_value(day_value IGNORE NULLS) OVER (
-                PARTITION BY key ORDER BY day_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-             AS filled_value,
-           CAST(day_value IS NOT NULL AS BIGINT) AS has_event
-    FROM j
-    """,
-)
-def q_resample_ffill_daily(spark, sf_dir):
-    """Dense per-user daily series with forward-filled totals
-    (``operators/timeseries.py::resample_ffill_daily``): sequence +
-    explode spine over each user's OBSERVED day span, left join, and
-    ``last(ignorenulls=True)`` carry-forward — the scale-out
-    alternative to a "latest value at or before t" range self-join.
-    Day indexes are exact integer ``div`` of epoch micros (floats
-    cannot hold epoch micros). Every shuffle is keyed by user or
-    (user, day); the spine fan-out is data-bounded."""
-    from .operators.timeseries import resample_ffill_daily
-
-    return resample_ffill_daily(_t(spark, sf_dir, "events"))
-
-
-@register(
-    "max_concurrency_events",
-    """
-    WITH pts AS (
-        SELECT event_type, epoch_us(ts) AS us, 1 AS delta,
-               CAST(event_id AS BIGINT) AS eid FROM events
-        UNION ALL
-        SELECT event_type, epoch_us(ts) + 600000000 AS us, -1 AS delta,
-               CAST(event_id AS BIGINT) AS eid FROM events
-    ), sweep AS (
-        SELECT event_type, us,
-               sum(delta) OVER (PARTITION BY event_type ORDER BY us, delta, eid
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS cum
-        FROM pts
-    ), m AS (
-        SELECT *, max(cum) OVER (PARTITION BY event_type) AS mx FROM sweep
-    )
-    SELECT event_type, CAST(max(cum) AS BIGINT) AS max_concurrent,
-           CAST(count(*) / 2 AS BIGINT) AS n_intervals,
-           CAST(min(CASE WHEN cum = mx THEN us END) AS BIGINT) AS peak_us
-    FROM m GROUP BY event_type
-    """,
-)
-def q_max_concurrency_events(spark, sf_dir):
-    """Sweep-line peak concurrency per event type over end-exclusive
-    10-minute intervals (``operators/timeseries.py::
-    sweep_max_concurrency``). The Spark side runs the SKEW-HARDENED
-    bucketed prefix sum (per-(type, hour-bucket) local running sums +
-    broadcast bucket offsets — a hot type parallelizes across its time
-    buckets); the oracle stays the naive partition-less ``SUM OVER``,
-    so the hash-match pins the bucketed form's exact equivalence.
-    ``peak_us`` is the earliest instant the peak is attained."""
-    from .operators.timeseries import sweep_max_concurrency
-
-    return sweep_max_concurrency(_t(spark, sf_dir, "events")).select(
-        F.col("grp").alias("event_type"),
-        "max_concurrent",
-        "n_intervals",
-        "peak_us",
     )
 
 
@@ -5744,22 +4547,18 @@ def q_unpivot_brand_metrics(spark, sf_dir):
 _R3_ATTESTED = [
     "ordering_window",
     "running_offset",
-    "runlength_segments",
-    "range_frame_totals",
     "percentiles_by_brand",
     "ntile_quartiles",
     "group_max_filter",
     "having_count",
     "anti_join_customers",
     "semi_join_customers",
-    "interval_join_events",
     "levenshtein_pairs",
     "union_limit",
     "intersect_nations",
     "scalar_subquery_above_avg",
     "topk_argmax",
     "uniqueness_check",
-    "broadcast_config_lookup",
     "distinct_segments",
     "decode_chain",
     "extract_documents",
@@ -5778,20 +4577,14 @@ _R3_ATTESTED = [
     "quality_scores",
     "token_counts",
     "doc_fingerprint",
-    "normalize_clip",
     "combine_line",
     "sha256_manifest",
-    "salted_user_stats",
-    "sessionize_stateful",
     "curate_corpus",
     "bm25_search",
-    "asof_join_events",
     "sample_documents",
     "profile_documents",
-    "stream_windowed_counts",
     "rollup_lineitem",
     "cube_orders",
-    "grouping_sets_events",
 ]
 
 

@@ -19,8 +19,8 @@ formulation is the classic UNION + ORDERED WINDOW:
 
 Cost: ONE shuffle (the window's hash exchange on the key) over |L|+|R|
 rows — no range explosion, no skew amplification beyond the key's own
-row count. The DuckDB oracle uses the native ASOF LEFT JOIN, so the
-semantics (including misses -> NULL) are checked cross-engine.
+row count. The semantics (including misses -> NULL) are those of
+DuckDB's native ASOF LEFT JOIN.
 """
 
 from __future__ import annotations

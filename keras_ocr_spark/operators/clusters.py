@@ -37,8 +37,8 @@ Scale notes:
   ``localCheckpoint`` that truncates the lineage (without it the plan
   doubles per iteration and optimizer time explodes by round ~8).
 - Checkpoint blocks are executor-local and cannot be recomputed after an
-  executor is lost. A deployment that must survive that would use
-  ``checkpoint()`` with a reliable checkpoint directory instead.
+  executor is lost: the job fails and is rerun (see
+  :func:`connected_components`).
 - Convergence needs no action of its own: the regrouping exchange also
   tests whether the round's output is a star forest rooted at the
   component minima, the fixed point of a round, and an ``Observation``
@@ -152,6 +152,15 @@ def connected_components(
     O(log n); 25 rounds covers >10^7-node components. Raises if the
     edge set is still not a star forest at the cap (never observed;
     indicates a non-deterministic id column).
+
+    Fault tolerance: each round ends in an eager ``localCheckpoint``,
+    whose blocks live on the executors and cannot be recomputed. If an
+    executor is lost after a round, the job that reads it fails; the
+    remedy is to rerun the whole job, which ``scripts/curate_job.py``
+    makes safe (same input and config, same output). ``checkpoint()``
+    is not used: ``plans.session.build_session`` sets no checkpoint
+    directory, and a reliable checkpoint writes every round's edges to
+    it.
     """
     nb = _star_neighborhoods(pairs, id_a, id_b, max_iterations)
     # A root's neighbors are all larger; its minimum-neighbor row

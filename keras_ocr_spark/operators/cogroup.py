@@ -9,9 +9,9 @@ DataFrames in ONE Python call; Spark co-shuffles both sides on the
 key (same single exchange per side a join would pay) and the Arrow
 boundary is per-group batched.
 
-The driver query deliberately computes a join-expressible summary so
-an exact SQL oracle can certify the cogroup path end to end — the
-point is certifying the API surface, not the example logic.
+The example deliberately computes a join-expressible summary so a
+plain join + agg can check the cogroup path end to end — the point is
+certifying the API surface, not the example logic.
 
 Reference analog: ``datasets.get_recognizer_image_generator`` pairing
 image rows with their label rows per sample

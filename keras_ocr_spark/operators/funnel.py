@@ -8,11 +8,6 @@ threshold before the recognizer sees it — ``pipeline.py:44-60``)
 lifted to user timelines: each stage admits only entities that cleared
 the previous stage, in order.
 
-Note the repo already has gap-based sessionization: the
-``runlength_segments`` driver query (lag + running sum + groupBy, the
-1-D connected-components recast) IS batch sessionization; this module
-deliberately does not duplicate it.
-
 Scale shape: one filtered min-aggregate plus one equi-join per stage,
 every one keyed on the user column — the first aggregation's hash
 partitioning is reused by every later join (co-partitioned exchanges

@@ -11,8 +11,9 @@ plan through Spark's Expand operator — the scan's rows are replicated
 once per distinct-agg before the partial aggregate. That is still one
 pass over storage (the win at 100 TB is IO, and Expand happens after
 column pruning), but for very wide tables swap the exact distinct for
-the HLL sketch in ``operators/sketches.py`` (same state row, no
-Expand) — the documented trade.
+an HLL sketch (``approx_distinct=True``: Spark's
+``approx_count_distinct``, same state row, no Expand) — the documented
+trade.
 
 Min/max are RENDERED engine-portably by dtype (ints/strings cast,
 doubles as floor-rounded cents, timestamps as unix micros, dates ISO)

@@ -11,8 +11,8 @@ numerator/denominator
 
     slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²)
 
-are exact BIGINTs — no float exists, the DuckDB oracle hash-matches
-bit-for-bit, and two moment rows MERGE by plain addition (the same
+are exact BIGINTs — no float exists, an SQL mirror (e.g. DuckDB)
+matches bit-for-bit, and two moment rows MERGE by plain addition (the same
 merge-theorem contract as the HDR/HLL sketches). The division is left
 to the consumer (num/den), keeping the frame exact; int64 bounds hold
 while n·Σxy < 2^63 — for TB-scale groups, pre-scale y (document the

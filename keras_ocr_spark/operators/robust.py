@@ -21,8 +21,8 @@ of the two central values, carried as ``med_cents_x2 = lower+upper``
 med_x2|`` (still integers); the MAD is the histogram-median of those,
 carried at x4 scale; the outlier test ``dev > k*mad`` becomes the pure
 integer comparison ``2*dev_x2 > k*mad_x4``. No float is produced at any
-point, so the DuckDB oracle (same CTE algebra) hash-matches
-bit-for-bit.
+point, so an SQL mirror of the same CTE algebra (e.g. DuckDB)
+matches bit-for-bit.
 
 Median-from-histogram: with per-group running count ``cum`` over cents
 ascending, the two central order statistics (1-based ranks ``(n+1) div

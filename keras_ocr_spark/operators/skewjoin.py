@@ -22,7 +22,7 @@ split across its join):
 
 Cost: the dim side shuffles n_salt-fold (choose n_salt ~ the skew
 factor, not more); result rows are identical to the unsalted join —
-asserted against it in tests and by the driver oracle.
+asserted against it in tests.
 
 Reference analog: the batch-assembly padding split
 (``/root/reference/keras_ocr/recognition.py:504-526``) — spreading

@@ -1,10 +1,12 @@
+"""Structured Streaming extraction: the batch ``extract()`` plan run per
+micro-batch over a transcript stream, committed once per epoch
+(``extraction``), and the idempotent per-epoch snapshot sink
+(``snapshot_sink``)."""
+
 from .extraction import read_transcript_stream, start_extraction, turn_rate_monitor
-from .state import ROCKSDB_PROVIDER, use_rocksdb_state
 
 __all__ = [
     "read_transcript_stream",
     "start_extraction",
     "turn_rate_monitor",
-    "use_rocksdb_state",
-    "ROCKSDB_PROVIDER",
 ]

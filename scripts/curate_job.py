@@ -23,6 +23,10 @@ GLOBAL computation — the pair graph spans the whole corpus, so
 partial-bucket resume would change semantics. The job is instead
 idempotent end to end: same input + config -> byte-identical output
 (deterministic keepers, overwrite write mode); re-run on failure.
+That includes the loss of an executor: the closure's rounds are
+``localCheckpoint``s (``operators.clusters.connected_components``),
+whose blocks cannot be recomputed, so the job fails rather than
+resuming, and the rerun is the recovery.
 Incremental daily ingest avoids the global recompute a different way:
 ``operators.dedup.incremental_dedup_pairs`` probes only the new batch
 against the persisted band index.

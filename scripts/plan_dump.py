@@ -157,11 +157,6 @@ HEADLINERS = {
         "fact-fact sort-merge, zero Python",
         {"cartesian": ("==", 0), "python_nodes": ("==", 0), "sortmerge_joins": ("<=", 1)},
     ),
-    "dpp_event_rollup": (
-        "dynamic partition pruning: the fact scan carries a runtime "
-        "dynamicpruningexpression from the dim broadcast",
-        {"dpp": (">=", 1), "cartesian": ("==", 0), "python_nodes": ("==", 0)},
-    ),
     "profile_orders": (
         "profiler: row-volume aggregate (counts + exact distincts through "
         "Expand) all HASH-based off one scan; string min/max split to a "
@@ -172,33 +167,10 @@ HEADLINERS = {
         "BroadcastExchange), no Sort",
         {"exchanges": ("<=", 4), "python_nodes": ("==", 0), "cartesian": ("==", 0)},
     ),
-    "skew_report_events": (
-        "skew diagnostic: map-side-combined count shuffle, TakeOrdered "
-        "top-k, totals as the one allowed 1-row-broadcast BNLJ (Reuse of "
-        "the counts exchange is AQE-final-plan, asserted in pytest)",
-        {"cartesian": ("==", 0), "bnlj": ("<=", 1), "take_ordered": ("==", 1), "python_nodes": ("==", 0)},
-    ),
-    "mad_outliers": (
-        "median/MAD from a domain-bounded cents histogram: count shuffle + "
-        "histogram-sized windows/joins, zero Python, no BNLJ",
-        {"cartesian": ("==", 0), "bnlj": ("==", 0), "python_nodes": ("==", 0)},
-    ),
     "copurchase_lift": (
         "basket pairs: size cap BEFORE the self equi-join, TakeOrdered "
         "top-k, n_baskets as the one allowed 1-row broadcast",
         {"cartesian": ("==", 0), "bnlj": ("<=", 1), "take_ordered": ("==", 1), "python_nodes": ("==", 0)},
-    ),
-    "resample_ffill_daily": (
-        "dense spine + forward fill: sequence/explode bounded by each "
-        "key's span, left equi-join, key-partitioned carry window — "
-        "every shuffle keyed by user/(user,day), zero Python",
-        {"single_partition": ("==", 0), "cartesian": ("==", 0), "bnlj": ("==", 0), "python_nodes": ("==", 0)},
-    ),
-    "max_concurrency_events": (
-        "sweep-line concurrency: skew-hardened bucketed running sum — "
-        "local sums per (group, time-bucket) + broadcast bucket offsets; "
-        "a hot group parallelizes across buckets, no SinglePartition",
-        {"single_partition": ("==", 0), "cartesian": ("==", 0), "bnlj": ("==", 0), "python_nodes": ("==", 0)},
     ),
     "unpivot_brand_metrics": (
         "wide-to-long unpivot: zero-shuffle Expand over the aggregated "
@@ -229,7 +201,6 @@ def features(plan: str) -> dict:
         "grouped_map": plan.count("FlatMapGroupsInPandas"),
         "single_partition": plan.count("SinglePartition"),
         "take_ordered": plan.count("TakeOrderedAndProject"),
-        "dpp": plan.count("dynamicpruningexpression"),
         "pushed_filters": sorted(
             {m[:100] for m in re.findall(r"PushedFilters: \[[^\]]+\]", plan) if "[]" not in m}
         ),

@@ -855,8 +855,7 @@ class TestWeightedSample:
 
 
 class TestSCD2:
-    """scd2_build value contract is driver-attested (`scd2_history`);
-    these pin the collapse/null/plan semantics the oracle can't."""
+    """scd2_build: the collapse/null/plan semantics."""
 
     def _log(self, spark, rows):
         return spark.createDataFrame(rows, "k long, ts timestamp, attr string, attr2 string")

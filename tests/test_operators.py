@@ -1207,3 +1207,22 @@ class TestShinglePagerank:
         df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
         with pytest.raises(ValueError, match="iters"):
             shingle_graph_pagerank(df, iters=0)
+
+
+class TestUnpivotQuery:
+    def test_long_form_row_count_and_values(self, spark):
+        from keras_ocr_spark.driver_queries import QUERIES
+
+        fn, _ = QUERIES["unpivot_brand_metrics"]
+        out = fn(spark, "/root/testdata/sf0.001")
+        rows = out.collect()
+        brands = {r["p_brand"] for r in rows}
+        assert len(rows) == 3 * len(brands)
+        by_metric = {}
+        for r in rows:
+            by_metric.setdefault(r["metric"], 0)
+            by_metric[r["metric"]] += 1
+        assert set(by_metric) == {"total_retail", "avg_size", "n_parts"}
+        # n_parts values sum to the part table row count
+        n = sum(r["value"] for r in rows if r["metric"] == "n_parts")
+        assert n == spark.read.parquet("/root/testdata/sf0.001/part.parquet").count()

@@ -232,28 +232,15 @@ class TestNoAccidentalCartesian:
         # 1-row broadcast of the corpus size N onto the tf⋈df frame
         # (same 1-row-side shape).
         "tfidf_top_terms",
-        # 1-row broadcast of the (n_rows, n_keys) totals onto the
-        # <= top_k heavy-hitter rows (same 1-row-side shape).
-        "skew_report_events",
         # 1-row broadcast of n_baskets onto the pair-count frame
         # (same 1-row-side shape).
         "copurchase_lift",
     }
-    #: Execute a streaming job on invocation — plans inspected in their own tests.
-    SKIP = {
-        "sessionize_stateful",
-        "stream_windowed_counts",
-        "stream_dedup_keys",
-        "stream_stream_attribution",
-    }
-
     def test_no_cartesian_any_query(self, spark):
         from keras_ocr_spark.driver_queries import QUERIES
 
         bad = []
         for name, (fn, _sql) in QUERIES.items():
-            if name in self.SKIP:
-                continue
             plan = fn(spark, "/root/testdata/sf0.001")._jdf.queryExecution().executedPlan().toString()
             if "CartesianProduct" in plan:
                 bad.append((name, "CartesianProduct"))
@@ -341,7 +328,7 @@ class TestAqeSkewJoin:
 
 
 class TestDynamicPartitionPruning:
-    """dpp_event_rollup's scale claim: the fact scan is pruned at
+    """Dynamic partition pruning: a partitioned fact scan is pruned at
     RUNTIME by the dim's broadcast result, not statically."""
 
     def test_dpp_expression_reaches_partition_filters(self, spark, tmp_path):

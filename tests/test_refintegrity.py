@@ -1,5 +1,4 @@
-"""referential_audit: values are driver-attested (`referential_audit`
-— clean TPC-H edges plus a genuinely orphaned edge). These pin the
+"""referential_audit on clean TPC-H edges and planted orphans. These pin the
 NULL-FK-is-not-an-orphan convention, the duplicate-dim-key guard, and
 the broadcast plan on small dims."""
 

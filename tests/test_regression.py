@@ -1,5 +1,4 @@
-"""ols_moments: values driver-attested (`ols_moments_events`, DuckDB
-mirror). These pin the closed form against numpy.polyfit on planted
+"""ols_moments. These pin the closed form against numpy.polyfit on planted
 data, NULL exclusion, the constant-x degenerate, the merge theorem,
 and the one-exchange plan."""
 

@@ -1,5 +1,4 @@
-"""mad_outlier_report: values are driver-attested (`mad_outliers`, a
-full DuckDB CTE mirror). These pin the statistics against Python's
+"""mad_outlier_report. These pin the statistics against Python's
 statistics.median on planted data (odd/even counts, ties, a wild
 outlier), NULL exclusion, the strict-inequality outlier rule, and the
 histogram plan shape (one scan of the raw table)."""

@@ -1,8 +1,8 @@
 """Mergeable-sketch properties: HLL (distinct) and Count-Min (frequency).
 
-The cross-engine VALUE contract is attested by the driver oracles
-(`hll_distinct_users`, `cms_heavy_hitters` — every register/cell and the
-HLL estimator reproduce bit-for-bit in DuckDB).  These tests pin the
+The cross-engine VALUE contract of Count-Min is attested by the driver
+oracle (`cms_heavy_hitters` — every cell reproduces bit-for-bit in
+DuckDB).  These tests pin the
 sketch-theoretic guarantees the oracle can't express: error bounds,
 mergeability, overestimate-only behavior, and bounded sketch size.
 """

@@ -1,8 +1,7 @@
-"""skew_report: the pre-join diagnostic next to salted_join. Values are
-driver-attested (`skew_report_events`); these pin the arithmetic against
-a planted-skew Python reference, the tie-break, the ceil-division salt
-factor, and the plan shape (ONE counts exchange shared via
-ReuseExchange, TakeOrderedAndProject, no cartesian)."""
+"""skew_report: the pre-join diagnostic next to salted_join. These pin
+the arithmetic against a planted-skew Python reference, the tie-break,
+the ceil-division salt factor, and the plan shape (ONE counts exchange
+shared via ReuseExchange, TakeOrderedAndProject, no cartesian)."""
 
 import math
 

@@ -107,32 +107,3 @@ def test_spark_submit_curate_job(spark, tmp_path):
     assert s1["kept_tokens"] > 0
     s2 = run()  # idempotent re-run
     assert s2 == s1
-
-
-@pytest.mark.slow
-def test_spark_submit_quality_job(spark, tmp_path):
-    spark_submit = shutil.which("spark-submit")
-    if spark_submit is None:
-        pytest.skip("spark-submit not on PATH")
-    subprocess.run(["bash", str(REPO / "scripts/package.sh")], check=True, capture_output=True)
-    report = tmp_path / "quality.json"
-    proc = subprocess.run(
-        [
-            spark_submit, "--master", "local[4]",
-            "--py-files", str(REPO / "dist/keras_ocr_spark.zip"),
-            str(REPO / "scripts/quality_job.py"),
-            "--input", "/root/testdata/sf0.001/lineitem.parquet",
-            "--report", str(report),
-            "--key-col", "l_orderkey",
-            "--rules", "qty le 30:l_quantity <= 30", "qty positive:l_quantity > 0",
-        ],
-        capture_output=True, text=True, timeout=300,
-    )
-    # "qty le 30" genuinely fails on TPC-H -> gate exit code 1
-    assert proc.returncode == 1, proc.stderr[-2000:]
-    rep = json.loads(report.read_text())
-    assert rep["failed_rules"] == 1
-    assert rep["expectations"]["qty positive"]["passed"] is True
-    assert rep["expectations"]["qty le 30"]["passed"] is False
-    assert rep["columns"]["l_quantity"]["n_rows"] > 0
-    assert rep["skew"][0]["salt_factor"] >= 1

@@ -9,8 +9,8 @@ synthesized deterministically from the sf0.001 documents table.
 ``queries()`` / ``oracle_sql()`` expose the query registry in
 ``keras_ocr_spark/driver_queries.py``: extraction and decode, evaluation,
 the corpus-curation operators (dedup, quality, PII, contamination,
-split, mix, ``curate_corpus``), snapshots, embedding search and a set of
-general SQL/TPC-H shapes, each with an exact DuckDB oracle.
+split, mix, ``curate_corpus``), snapshots and a set of general
+SQL/TPC-H shapes, each with an exact DuckDB oracle.
 """
 
 from __future__ import annotations

@@ -1,12 +1,11 @@
 """Driver-contract query registry: name -> (spark_fn, duckdb_oracle_sql).
 
-Three families: text and corpus queries over ``documents`` (extraction
+Two families: text and corpus queries over ``documents`` (extraction
 and decode, evaluation, dedup, quality, language and token stats, PII,
 contamination, split, mix, ``curate_corpus``, snapshots and the change
-feed), embedding search over ``embeddings``, and general SQL/TPC-H
-shapes over the TPC-H tables. Each Spark callable takes
-``(spark, sf_dir)`` and returns a DataFrame; each oracle is ANSI-ish
-SQL DuckDB runs on the same parquet tables.
+feed), and general SQL/TPC-H shapes over the TPC-H tables. Each Spark
+callable takes ``(spark, sf_dir)`` and returns a DataFrame; each oracle
+is ANSI-ish SQL DuckDB runs on the same parquet tables.
 
 Column-name AND column-type discipline: every computed column is aliased
 identically on both sides; integers are cast to BIGINT, floats rounded
@@ -17,16 +16,19 @@ Cross-engine exactness notes:
 - md5 hex strings are bit-identical in Spark and DuckDB — all dedup
   operators hash with md5 (see ``functions.hashing``);
 - double arithmetic is IEEE and both engines evaluate array folds
-  left-to-right, so even cosine similarities agree after an explicit
-  cast-to-double; quantized (integer) variants are provided where float
-  order could ever matter;
+  left-to-right, so folded doubles agree after an explicit
+  cast-to-double; integer fixed point is used where float order could
+  ever matter;
 - timestamps compare as ``unix_micros`` BIGINTs (Spark session TZ is
   UTC; DuckDB parquet timestamps are naive UTC).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 from collections.abc import Callable
+from pathlib import Path
 from typing import Dict, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,9 +41,9 @@ from .functions.text import STRIP_PATTERN, decode_expr
 from .operators import curation as C
 from .operators import dedup as D
 from .operators import encode as E
-from .operators import similarity as S
 from .operators import sketches as SK
 from .operators import textstats as TS
+from .plans.checkpoint import input_listing
 from .plans.pipeline import extract
 
 # --------------------------------------------------------------------------
@@ -65,12 +67,14 @@ def _b(col):
     return F.col(col).cast("long").alias(col)
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings, split for vector-math-heavy work — same rationale as
-    :func:`_docs`: the sf tables are single tiny files (one scan
-    partition), which would serialize per-row vector kernels; at 100 TB
-    the scan itself provides the partitions."""
-    return _t(spark, sf_dir, "embeddings").repartition(spark.sparkContext.defaultParallelism)
+def _staging_path(sf_dir: str, name: str, *tables: str) -> str:
+    """Temp path at which a query stages a copy of ``tables`` from
+    ``sf_dir``. Keyed on the directory and on the listing (file names,
+    sizes, mtimes) of those tables, so a rewritten input is staged
+    afresh instead of being answered from an earlier build's copy."""
+    listing = [input_listing(f"{sf_dir}/{t}.parquet") for t in tables]
+    key = json.dumps([sf_dir, listing]).encode()
+    return f"/tmp/{name}_{hashlib.md5(key).hexdigest()[:12]}"
 
 
 QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
@@ -853,201 +857,7 @@ def q_simhash_near_pairs(spark, sf_dir):
 
 
 # ==========================================================================
-# 4. Similarity search (embeddings)
-# ==========================================================================
-
-_QDOT_SQL = """
-    list_sum(list_transform(range(1, 65),
-      i -> CAST(round(CAST(e.embedding[i] AS DOUBLE) * 1000) AS BIGINT)
-         * CAST(round(CAST(q.embedding[i] AS DOUBLE) * 1000) AS BIGINT)))
-"""
-
-
-@register(
-    "ann_topk_quantized",
-    f"""
-    SELECT CAST(e.vec_id AS BIGINT) AS id, CAST({_QDOT_SQL} AS BIGINT) AS qdot
-    FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY qdot DESC, id LIMIT 10
-    """,
-)
-def q_ann_topk_quantized(spark, sf_dir):
-    """Brute-force top-k by integer-quantized dot product (exact oracle)."""
-    from .functions.hashing import quantized_dot_expr
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_embedding"))
-    scored = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col("vec_id").cast("long").alias("id"),
-            quantized_dot_expr(F.col("embedding"), F.col("q_embedding")).alias("qdot"),
-        )
-    )
-    return scored.orderBy(F.desc("qdot"), F.asc("id")).limit(10)
-
-
-_COS_SQL = """
-    floor(
-      list_sum(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))
-       * sqrt(list_sum(list_transform(range(1, 65), i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)))))
-      * 100000 + 0.5) / 100000
-"""
-
-
-@register(
-    "ann_cosine_topk",
-    f"""
-    SELECT CAST(e.vec_id AS BIGINT) AS id, CAST({_COS_SQL} AS DOUBLE) AS cosine
-    FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cosine DESC, id LIMIT 10
-    """,
-)
-def q_ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-k (the exact ANN baseline)."""
-    from .functions.hashing import dot_expr, norm_expr
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_embedding"))
-    e_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    q_d = F.transform(F.col("q_embedding"), lambda x: x.cast("double"))
-    cos = dot_expr(e_d, q_d) / (norm_expr(e_d) * norm_expr(q_d))
-    scored = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(F.col("vec_id").cast("long").alias("id"), pround(cos, 5).alias("cosine"))
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc("id")).limit(10)
-
-
-def _qdot_sql(a: str, b: str, dim: int = 64, scale: int = 1000) -> str:
-    """Integer-quantized dot product of two vector expressions (DuckDB)."""
-    return (
-        f"list_sum(list_transform(range(1, {dim + 1}), "
-        f"i -> CAST(round(CAST({a}[i] AS DOUBLE) * {scale}) AS BIGINT) "
-        f"* CAST(round(CAST({b}[i] AS DOUBLE) * {scale}) AS BIGINT)))"
-    )
-
-
-@register(
-    "ann_topk_ivf",
-    f"""
-    WITH cent AS (
-      SELECT vec_id AS centroid_id, embedding AS centroid
-      FROM embeddings WHERE vec_id BETWEEN 1 AND 16),
-    vecs AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id <> 0),
-    assigned AS (
-      SELECT vec_id, embedding, centroid_id,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY {_qdot_sql("embedding", "centroid")} DESC, centroid_id) AS rn
-      FROM vecs, cent),
-    cells AS (SELECT vec_id, embedding, centroid_id AS cell FROM assigned WHERE rn = 1),
-    q AS (SELECT embedding AS q_embedding FROM embeddings WHERE vec_id = 0),
-    qcells AS (
-      SELECT centroid_id AS cell
-      FROM cent, q
-      ORDER BY {_qdot_sql("q_embedding", "centroid")} DESC, centroid_id LIMIT 2)
-    SELECT CAST(v.vec_id AS BIGINT) AS id,
-           CAST({_qdot_sql("v.embedding", "q.q_embedding")} AS BIGINT) AS qdot
-    FROM cells v JOIN qcells ON v.cell = qcells.cell, q
-    ORDER BY qdot DESC, id LIMIT 10
-    """,
-)
-def q_ann_topk_ivf(spark, sf_dir):
-    """IVF ANN — the coarse-quantizer scale path next to LSH: assign
-    every vector to its nearest of 16 deterministic centroids (rows
-    vec_id 1..16 as seed centroids), probe the query's nprobe=2 nearest
-    cells, exact integer-quantized scoring of candidates only. At scale
-    the cell id is a partition key computed at ingest; here both engines
-    derive assignment + probing from the data, bit-identically."""
-    emb = _emb(spark, sf_dir)
-    centroids = emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 16)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-    )
-    vecs = emb.filter(F.col("vec_id") != 0)
-    qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_embedding"))
-    out = S.ivf_topk(vecs, centroids, qdf, k=10, nprobe=2)
-    return out.select(F.col("id").cast("long").alias("id"), F.col("qdot").cast("long").alias("qdot"))
-
-
-@register(
-    "ann_topk_ivf_trained",
-    f"""
-    WITH cent0 AS (
-      SELECT vec_id AS centroid_id, embedding AS centroid
-      FROM embeddings WHERE vec_id BETWEEN 1 AND 16),
-    vecs AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id <> 0),
-    train AS (SELECT vec_id, embedding FROM vecs
-              WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN ('0','1','2','3')),
-    assigned0 AS (
-      SELECT vec_id, embedding, centroid_id,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY {_qdot_sql("embedding", "centroid")} DESC, centroid_id) AS rn
-      FROM train, cent0),
-    cells0 AS (SELECT vec_id, embedding, centroid_id AS cell FROM assigned0 WHERE rn = 1),
-    comp AS (
-      SELECT cell, i AS pos,
-             floor(CAST(SUM(CAST(round(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT)) AS DOUBLE)
-                   / COUNT(*)) / 1000 AS c
-      FROM cells0, range(1, 65) t(i)
-      GROUP BY cell, i),
-    cent AS (
-      SELECT c0.centroid_id,
-             COALESCE(n.centroid, CAST(c0.centroid AS DOUBLE[])) AS centroid
-      FROM cent0 c0 LEFT JOIN (
-        SELECT cell AS centroid_id, list(c ORDER BY pos) AS centroid
-        FROM comp GROUP BY cell) n USING (centroid_id)),
-    assigned AS (
-      SELECT vec_id, embedding, centroid_id,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY {_qdot_sql("embedding", "centroid")} DESC, centroid_id) AS rn
-      FROM vecs, cent),
-    cells AS (SELECT vec_id, embedding, centroid_id AS cell FROM assigned WHERE rn = 1),
-    q AS (SELECT embedding AS q_embedding FROM embeddings WHERE vec_id = 0),
-    qcells AS (
-      SELECT centroid_id AS cell
-      FROM cent, q
-      ORDER BY {_qdot_sql("q_embedding", "centroid")} DESC, centroid_id LIMIT 2)
-    SELECT CAST(v.vec_id AS BIGINT) AS id,
-           CAST({_qdot_sql("v.embedding", "q.q_embedding")} AS BIGINT) AS qdot
-    FROM cells v JOIN qcells ON v.cell = qcells.cell, q
-    ORDER BY qdot DESC, id LIMIT 10
-    """,
-)
-def q_ann_topk_ivf_trained(spark, sf_dir):
-    """IVF ANN over a DATA-DERIVED codebook (r3 verdict Next #5): one
-    Lloyd iteration refines the 16 seed centroids — assign is the
-    zero-shuffle argmax projection, update is a per-(cell, dim)
-    quantized-integer mean (floor(sum(round(v*1000))/n)/1000), exact in
-    both engines — then probe nprobe=2 cells and score candidates with
-    integer-quantized dots. Empty cells keep their seed centroid. At
-    100 TB the refinement runs over a sample and the final assignment
-    is the same argmax projection used at ingest."""
-    emb = _emb(spark, sf_dir)
-    seed = emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 16)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-    )
-    vecs = emb.filter(F.col("vec_id") != 0)
-    # Train on a deterministic ~25% md5 SAMPLE (first digest nibble),
-    # assign/serve over the FULL corpus — the honest at-scale shape
-    # (every real IVF build trains its codebook on a sample) and 4x
-    # less training work; the sample predicate is engine-stable, so
-    # the oracle trains on the identical rows.
-    train = vecs.filter(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1).isin("0", "1", "2", "3")
-    )
-    trained = S.kmeans_refine(train, seed, n_iters=1)
-    qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_embedding"))
-    out = S.ivf_topk(vecs, trained, qdf, k=10, nprobe=2)
-    return out.select(F.col("id").cast("long").alias("id"), F.col("qdot").cast("long").alias("qdot"))
-
-
-# ==========================================================================
-# 5. Text analysis (training-data curation)
+# 4. Text analysis (training-data curation)
 # ==========================================================================
 
 
@@ -1160,7 +970,7 @@ def q_doc_fingerprint(spark, sf_dir):
 
 
 # ==========================================================================
-# 6. Remaining SURVEY §2 scalar/agg mappings
+# 5. Remaining SURVEY §2 scalar/agg mappings
 # ==========================================================================
 
 
@@ -1926,136 +1736,6 @@ def q_threshold_sweep(spark, sf_dir):
     return out
 
 
-_PAIR_COS_SQL = """
-    floor(
-      list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-       * sqrt(list_sum(list_transform(range(1, 65), i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))
-      * 100000 + 0.5) / 100000
-"""
-
-
-def _lsh_bucket_sql(vec: str, dim: int = 64, n_planes: int = 6, seed: int = 42) -> str:
-    """DuckDB twin of operators.similarity.lsh_bucket_expr: the SAME
-    integer plane literals, the same round(x*1000) embedding quantization
-    — bucket ids match Spark bit for bit."""
-    terms = []
-    for p, plane in enumerate(S.quantized_planes(dim, n_planes, seed)):
-        ints = "[" + ", ".join(str(v) for v in plane) + "]"
-        qdot = (
-            f"list_sum(list_transform(range(1, {dim + 1}), "
-            f"i -> CAST(round(CAST({vec}[i] AS DOUBLE) * {S.VEC_SCALE}) AS BIGINT) * ({ints}[i])))"
-        )
-        terms.append(f"CASE WHEN {qdot} > 0 THEN {1 << p} ELSE 0 END")
-    return "(" + " + ".join(terms) + ")"
-
-
-@register(
-    "embedding_neardup",
-    f"""
-    WITH bucketed AS (
-      SELECT vec_id AS id, embedding, {_lsh_bucket_sql("embedding")} AS bucket
-      FROM embeddings)
-    SELECT CAST(a.id AS BIGINT) AS id_a, CAST(b.id AS BIGINT) AS id_b,
-           CAST({_PAIR_COS_SQL} AS DOUBLE) AS cosine
-    FROM bucketed a JOIN bucketed b ON a.bucket = b.bucket AND a.id < b.id
-    WHERE {_PAIR_COS_SQL} >= CAST(0.35 AS DOUBLE)
-    """,
-)
-def q_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs — the LSH-bucketed SCALE
-    path (operators.similarity.all_pairs_above): quantized-hyperplane
-    buckets, ONE equi-join on the bucket key (no cartesian anywhere),
-    exact cosine on candidates only. The oracle reproduces the buckets
-    with the same integer arithmetic; pytest cross-checks recall against
-    the exact all-pairs join at sf (tests/test_operators.py)."""
-    emb = _emb(spark, sf_dir)
-    pairs = S.all_pairs_above(emb, threshold=-1.0, n_planes=6, seed=42, dim=64)
-    return (
-        pairs.withColumn("cosine_r", pround(F.col("cosine"), 5))
-        .filter(F.col("cosine_r") >= 0.35)
-        .select(
-            F.col("id_a").cast("long").alias("id_a"),
-            F.col("id_b").cast("long").alias("id_b"),
-            F.col("cosine_r").cast("double").alias("cosine"),
-        )
-    )
-
-
-@register(
-    "ann_topk_multiprobe",
-    f"""
-    WITH bucketed AS (
-      SELECT vec_id, embedding, {_lsh_bucket_sql("embedding")} AS bucket
-      FROM embeddings),
-    q AS (SELECT embedding, bucket FROM bucketed WHERE vec_id = 0)
-    SELECT CAST(e.vec_id AS BIGINT) AS id, CAST({_QDOT_SQL} AS BIGINT) AS qdot
-    FROM bucketed e, q
-    WHERE e.vec_id <> 0 AND bit_count(xor(e.bucket, q.bucket)) <= 1
-    ORDER BY qdot DESC, id LIMIT 10
-    """,
-)
-def q_ann_topk_multiprobe(spark, sf_dir):
-    """Multiprobe LSH ANN: candidates = the query's bucket plus every
-    Hamming-1 neighbor bucket (one flipped hyperplane), then exact
-    integer-quantized scoring of candidates only. The Hamming filter is
-    expressed as bit_count(bucket XOR q_bucket) <= 1 so both engines
-    derive the probe set from the data; at 100 TB the probe list is
-    materialized driver-side instead and prunes bucket-partitioned files
-    (similarity.probe_buckets)."""
-    from .functions.hashing import quantized_dot_expr
-
-    emb = _emb(spark, sf_dir)
-    bucketed = emb.withColumn("bucket", S.lsh_bucket_udf(64, 6, 42)(F.col("embedding")))
-    qrow = bucketed.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_embedding"), F.col("bucket").alias("q_bucket")
-    )
-    cands = (
-        bucketed.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qrow))
-        .filter(F.bit_count(F.col("bucket").bitwiseXOR(F.col("q_bucket"))) <= 1)
-    )
-    scored = cands.select(
-        F.col("vec_id").cast("long").alias("id"),
-        quantized_dot_expr(F.col("embedding"), F.col("q_embedding")).alias("qdot"),
-    )
-    return scored.orderBy(F.desc("qdot"), F.asc("id")).limit(10)
-
-
-@register(
-    "ann_topk_pruned",
-    f"""
-    WITH bucketed AS (
-      SELECT vec_id, embedding, {_lsh_bucket_sql("embedding")} AS bucket
-      FROM embeddings),
-    q AS (SELECT embedding, bucket FROM bucketed WHERE vec_id = 0)
-    SELECT CAST(e.vec_id AS BIGINT) AS id, CAST({_QDOT_SQL} AS BIGINT) AS qdot
-    FROM bucketed e, q
-    WHERE e.vec_id <> 0 AND bit_count(xor(e.bucket, q.bucket)) <= 1
-    ORDER BY qdot DESC, id LIMIT 10
-    """,
-)
-def q_ann_topk_pruned(spark, sf_dir):
-    """The PRUNED-SCAN half of the multiprobe ANN story (r2 verdict
-    Missing #2): embeddings are written ONCE partitioned by LSH bucket
-    (similarity.write_bucketed_store), and the query's probe set —
-    computed driver-side — reaches the scan as a partition IN-filter,
-    so only n_planes+1 of the 2^n_planes bucket directories are read
-    (PartitionFilters pruning asserted in tests/test_plan_shape.py).
-    Same candidate set and top-k as ann_topk_multiprobe, selected at
-    the FILE level instead of the row level; same oracle."""
-    import hashlib as _hl
-    from pathlib import Path as _P
-
-    store = f"/tmp/ann_store_{_hl.md5(sf_dir.encode()).hexdigest()[:8]}"
-    emb = _emb(spark, sf_dir)
-    if not (_P(store) / "_SUCCESS").exists():
-        S.write_bucketed_store(emb.filter(F.col("vec_id") != 0), store, dim=64, n_planes=6, seed=42)
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
-    out = S.ann_topk_pruned(spark, store, qvec, k=10, n_planes=6, seed=42, max_hamming=1)
-    return out.select(F.col("id").cast("long").alias("id"), F.col("qdot").cast("long").alias("qdot"))
-
-
 # ==========================================================================
 # 6. Curation operators: repetition gates, contamination, PII, strata
 # ==========================================================================
@@ -2521,14 +2201,10 @@ def q_jsonl_roundtrip(spark, sf_dir):
     full extra scan). The oracle reads the original parquet, so the
     value-hash match proves the JSONL write+read round-trip is
     byte-lossless, including non-ASCII text."""
-    import hashlib as _hl
-    from pathlib import Path as _P
-
     from .sources.tableio import read_jsonl, write_jsonl
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/tmp/docs_jsonl_{tag}"
-    if not (_P(path) / "_SUCCESS").exists():
+    path = _staging_path(sf_dir, "docs_jsonl", "documents")
+    if not (Path(path) / "_SUCCESS").exists():
         write_jsonl(_t(spark, sf_dir, "documents"), path)
     out = read_jsonl(spark, path, "doc_id long, text string, lang string, source string, n_chars long")
     return out.select(
@@ -2832,11 +2508,7 @@ def q_csv_roundtrip(spark, sf_dir):
     option a naive 100 TB CSV reader gets wrong, silently splitting
     rows). The oracle builds the same augmented text from parquet, so
     the hash match proves escaping round-trips byte-exactly."""
-    import hashlib as _hl
-    from pathlib import Path as _P
-
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/tmp/docs_csv_{tag}"
+    path = _staging_path(sf_dir, "docs_csv", "documents")
     aug = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"),
         F.concat(
@@ -2846,7 +2518,7 @@ def q_csv_roundtrip(spark, sf_dir):
         ).alias("text"),
         "lang",
     )
-    if not (_P(path) / "_SUCCESS").exists():
+    if not (Path(path) / "_SUCCESS").exists():
         aug.write.mode("overwrite").option("header", "true").csv(path)
     out = (
         spark.read.schema("id long, text string, lang string")
@@ -3203,70 +2875,6 @@ def q_nfc_canonicalize(spark, sf_dir):
 
 
 @register(
-    "semantic_dedup",
-    f"""
-    WITH cent AS (
-      SELECT vec_id AS centroid_id, embedding AS centroid
-      FROM embeddings WHERE vec_id BETWEEN 1 AND 16),
-    assigned AS (
-      SELECT vec_id, embedding, centroid_id, q,
-             row_number() OVER (PARTITION BY vec_id ORDER BY q DESC, centroid_id) AS rn
-      FROM (SELECT v.vec_id, v.embedding, c.centroid_id,
-                   {_qdot_sql("v.embedding", "c.centroid")} AS q
-            FROM embeddings v, cent c)),
-    cells AS (SELECT vec_id AS id, embedding, centroid_id AS cell, q AS cent_qdot
-              FROM assigned WHERE rn = 1),
-    pairs AS (
-      SELECT a.id AS id_a, b.id AS id_b, a.cent_qdot AS qa, b.cent_qdot AS qb
-      FROM cells a JOIN cells b ON a.cell = b.cell AND a.id < b.id
-      -- zero-norm guard: NaN orders above the threshold in DuckDB/Spark
-      -- but not numpy; zero-quantized vectors must never pair (see
-      -- operators.similarity.semantic_dedup)
-      WHERE {_qdot_sql("a.embedding", "a.embedding")} > 0
-        AND {_qdot_sql("b.embedding", "b.embedding")} > 0
-        AND floor(CAST({_qdot_sql("a.embedding", "b.embedding")} AS DOUBLE)
-                  / (sqrt(CAST({_qdot_sql("a.embedding", "a.embedding")} AS DOUBLE))
-                   * sqrt(CAST({_qdot_sql("b.embedding", "b.embedding")} AS DOUBLE)))
-                  * 100000 + 0.5) / 100000 >= CAST(0.35 AS DOUBLE)),
-    losers AS (
-      SELECT DISTINCT CASE WHEN qa > qb THEN id_a
-                           WHEN qb > qa THEN id_b
-                           ELSE greatest(id_a, id_b) END AS id
-      FROM pairs)
-    SELECT CAST(c.id AS BIGINT) AS id,
-           CAST(c.cell AS BIGINT) AS cell,
-           CAST(c.cent_qdot AS BIGINT) AS cent_qdot
-    FROM cells c ANTI JOIN losers l ON c.id = l.id
-    """,
-)
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023): coarse-cluster the embedding
-    column with the 16-entry codebook, then drop within-cluster
-    semantic duplicates — any member that loses an above-threshold
-    QUANTIZED-cosine pair to a cluster-mate (int64 dots -> sqrt/divide
-    on exact integers, floor-rounded 1e-5 — bit-identical in numpy,
-    Spark and DuckDB), the loser being the one CLOSER to the centroid
-    (the redundant copy; SemDeDup keeps the outlier). Assignment is
-    the numpy argmax kernel; the per-cluster pairwise step is ONE
-    exchange + a blocked int64 Gram-matrix grouped-map kernel (each
-    vector crosses Arrow once, never the m x m pair join) — at 100 TB
-    the codebook's k bounds cell size, exactly the paper's regime.
-    The oracle reproduces assignment (quantized dots, ties to lowest
-    centroid id), the quantized pair cosine and the loser rule
-    exactly via the cell-key equi-join form."""
-    emb = _emb(spark, sf_dir)
-    centroids = emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 16)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-    )
-    out = S.semantic_dedup(emb, centroids, threshold=0.35)
-    return out.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("cell").cast("long").alias("cell"),
-        F.col("cent_qdot").cast("long").alias("cent_qdot"),
-    )
-
-
-@register(
     "unigram_kl_drift",
     """
     WITH w AS (
@@ -3594,9 +3202,9 @@ def q_bloom_membership(spark, sf_dir):
     4096-bit / k=4 filter over the custkeys of urgent finished orders
     (one exploded projection + one map-side-combined bit_or groupBy —
     the filter IS the shuffle output, 128 int64 words however large the
-    fact table), collect it (control-plane, <= 128 rows — the IVF
-    codebook pattern), and probe EVERY customer as a ZERO-SHUFFLE
-    projection (`with_bloom_maybe`: array literal + per-row bit test,
+    fact table), collect it (control-plane, <= 128 rows), and probe
+    EVERY customer as a ZERO-SHUFFLE projection (`with_bloom_maybe`:
+    array literal + per-row bit test,
     single WholeStageCodegen span, no join). At 100 TB this is explicit
     runtime-filter pushdown: the broadcast filter prunes a fact scan to
     probable matches before the exact join runs. `is_present` (exact
@@ -3796,7 +3404,7 @@ def q_quality_classifier(spark, sf_dir):
     scan → whole-stage-codegen project, so at 100 TB the filter rides
     the scan. Weights derive from slot ids by the md5-prefix integer
     convention (a learned vector would broadcast as an array literal —
-    the ``bloom_collect``/IVF-codebook pattern); the DuckDB oracle
+    the ``bloom_collect`` pattern); the DuckDB oracle
     reproduces every feature hash, weight, and logit bit-for-bit."""
     from .operators import classifier as CLF
 
@@ -3828,24 +3436,23 @@ def q_bucketed_join_stats(spark, sf_dir):
     the recurring-join playbook: the fact table's daily joins against
     co-bucketed dimensions never re-shuffle the fact side. The oracle
     computes the same join flat — layout must never change values."""
-    import hashlib as _hl
-
     from .sources import bucketed as B
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
+    orders_path = _staging_path(sf_dir, "bkt_orders", "orders")
     orders = B.ensure_bucketed(
         spark,
         lambda: _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice"),
-        f"bkt_orders_{tag}",
-        f"/tmp/keras_ocr_spark_bucketed_{tag}/orders",
+        Path(orders_path).name,
+        orders_path,
         "o_custkey",
         8,
     )
+    cust_path = _staging_path(sf_dir, "bkt_customer", "customer")
     cust = B.ensure_bucketed(
         spark,
         lambda: _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
-        f"bkt_customer_{tag}",
-        f"/tmp/keras_ocr_spark_bucketed_{tag}/customer",
+        Path(cust_path).name,
+        cust_path,
         "c_custkey",
         8,
     )
@@ -4273,14 +3880,10 @@ def q_orc_roundtrip(spark, sf_dir):
     the ORC side selects the identical row set (ORC min/max pushdown
     is exercised, not just format plumbing; the filter reaches the
     scan — see tests/test_loaders.py plan assert)."""
-    import hashlib as _hl
-    from pathlib import Path as _P
-
     from .sources.tableio import read_orc, write_orc
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/tmp/docs_orc_{tag}"
-    if not (_P(path) / "_SUCCESS").exists():
+    path = _staging_path(sf_dir, "docs_orc", "documents")
+    if not (Path(path) / "_SUCCESS").exists():
         write_orc(_t(spark, sf_dir, "documents"), path)
     out = read_orc(spark, path).filter(F.col("n_chars") >= 100)
     return out.select(
@@ -4345,14 +3948,10 @@ def q_time_travel_read(spark, sf_dir):
     through ``plans.observe.commit``: the data is written first, with
     the manifest's row count and hash observed on that write job, and
     the manifest, the commit point, is published last, atomically."""
-    import hashlib as _hl
-    from pathlib import Path as _P
-
     from .sources.snapshots import read_snapshot, write_snapshot
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    table = f"/tmp/docs_versioned_{tag}"
-    if not (_P(table) / "_snapshots" / "v2.json").exists():
+    table = _staging_path(sf_dir, "docs_versioned", "documents")
+    if not (Path(table) / "_snapshots" / "v2.json").exists():
         docs = _t(spark, sf_dir, "documents")
         write_snapshot(docs, table)
         mutated = docs.filter(F.expr("doc_id % 10 <> 0")).select(
@@ -4402,14 +4001,10 @@ def q_snapshot_change_feed(spark, sf_dir):
     shuffles an md5 per row, not the row (table_diff); the oracle
     recomputes the same verbs with IS DISTINCT FROM column compares —
     digest inequality == any-column inequality, hash-attested."""
-    import hashlib as _hl
-    from pathlib import Path as _P
-
     from .sources.snapshots import snapshot_changes, write_snapshot
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    table = f"/tmp/docs_cdc_{tag}"
-    if not (_P(table) / "_snapshots" / "v2.json").exists():
+    table = _staging_path(sf_dir, "docs_cdc", "documents")
+    if not (Path(table) / "_snapshots" / "v2.json").exists():
         docs = _t(spark, sf_dir, "documents")
         write_snapshot(docs, table)
         v2 = docs.filter(F.expr("doc_id % 10 <> 0")).select(
@@ -4570,9 +4165,6 @@ _R3_ATTESTED = [
     "dedup_resolve",
     "dedup_simhash",
     "simhash_near_pairs",
-    "ann_topk_quantized",
-    "ann_cosine_topk",
-    "ann_topk_ivf",
     "lang_scores",
     "quality_scores",
     "token_counts",

@@ -112,21 +112,3 @@ def simhash_block_key_expr(simhash: Column, block: int) -> Column:
     mask makes the result shift-semantics-proof (arithmetic vs logical)."""
     return F.shiftright(simhash, 16 * block).bitwiseAND(F.lit(65535))
 
-
-def dot_expr(a: Column, b: Column) -> Column:
-    """Dot product of two float arrays via zip_with + aggregate (JVM-side)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
-def quantized_dot_expr(a: Column, b: Column, scale: int = 1000) -> Column:
-    """INTEGER dot product of quantized embeddings — exact across engines
-    (float sums are order-dependent; int sums are not)."""
-
-    def q(x: Column) -> Column:
-        return F.round(x * F.lit(scale)).cast("long")
-
-    return F.aggregate(F.zip_with(a, b, lambda x, y: q(x) * q(y)), F.lit(0).cast("long"), lambda acc, v: acc + v)

@@ -17,8 +17,3 @@ from pyspark.sql import functions as F
 def pround(col: Column, n: int) -> Column:
     scale = float(10**n)
     return (F.floor(col * F.lit(scale) + F.lit(0.5)) / F.lit(scale)).cast("double")
-
-
-def pround_sql(expr: str, n: int) -> str:
-    scale = 10**n
-    return f"floor(({expr}) * {scale} + 0.5) / {scale}"

@@ -27,7 +27,6 @@ Reference analog: `get_balanced_weights` co-occurrence balancing over
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 

@@ -11,8 +11,7 @@ algebra (``transform``/``aggregate`` higher-order functions), so at
 filter predicate (``logit > 0``) pushes into the same stage.
 
 Weights: a real deployment broadcasts learned weights (array literal /
-map — the IVF-codebook / ``bloom_collect`` pattern, <= n_buckets
-values). Here weights are derived from the bucket id by the repo's
+map — the ``bloom_collect`` pattern, <= n_buckets values). Here weights are derived from the bucket id by the repo's
 md5-prefix integer convention (``functions/hashing.py``) so the DuckDB
 oracle reproduces every feature hash, every weight, and every logit
 bit-for-bit — integer milli-units end to end, no float accumulation.

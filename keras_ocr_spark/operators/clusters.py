@@ -1,10 +1,10 @@
 """Duplicate-cluster resolution: candidate pairs -> connected components
 -> one keeper per cluster.
 
-The dedup family (``operators.dedup``, ``operators.similarity``) emits
-near-duplicate PAIRS; an actual 100 TB curation pipeline must then drop
-rows, which needs the transitive closure — if a~b and b~c, then {a,b,c}
-is ONE cluster with ONE keeper, even though (a,c) may never have been a
+The dedup family (``operators.dedup``) emits near-duplicate PAIRS; an
+actual 100 TB curation pipeline must then drop rows, which needs the
+transitive closure — if a~b and b~c, then {a,b,c} is ONE cluster with
+ONE keeper, even though (a,c) may never have been a
 candidate pair. Graft analog: the reference de-duplicates overlapping
 detections with set semantics (``/root/reference/keras_ocr/detection.py:
 432-438``); this lifts that from one image's boxes to a corpus-sized

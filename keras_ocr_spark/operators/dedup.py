@@ -14,7 +14,6 @@ Five strategies over a ``(id, text)``-shaped DataFrame, all Spark-first:
                          all-pairs).
 - **SimHash**          — per-row 16..64-bit fingerprints, near-dups =
                          small Hamming distance.
-- **embedding cosine** — see ``operators.similarity``.
 
 All hashing is md5-based (``functions.hashing``) so every operator has an
 exact DuckDB oracle. Signature computation never shuffles; only the
@@ -34,10 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import (
-    minhash_expr,
     shingles_expr,
     simhash64_from_nibbles_expr,
-    simhash64_py,
     simhash_block_key_expr,
     word_nibbles_expr,
     words_expr,
@@ -757,7 +754,7 @@ def simhash_near_pairs(
     # before exploding into blocks and self-joining: both join branches
     # (and the optional hot-bucket count) would otherwise re-evaluate
     # the Arrow kernel — the same double-eval Catalyst pushdown waste
-    # fixed for minhash/all_pairs_above (r3 What's wrong #2/#3). The
+    # fixed for minhash (r3 What's wrong #2/#3). The
     # checkpointed frame is one (id, int64) row per doc — tiny relative
     # to the corpus; at full scale persist it as the fingerprint store.
     # Lifecycle: the blocks live until Spark's ContextCleaner collects

@@ -9,9 +9,9 @@ Reference analog: ``get_maximum_uniform_contour``'s pick-the-dominant-
 region idea (``/root/reference/keras_ocr/tools.py:131-150``) lifted
 from one image's contours to corpus-level dominance.
 
-Determinism across engines (same discipline as
-``similarity.kmeans_refine``'s quantized Lloyd iterations): ranks live
-in int64 MICRO-units and every update is integer arithmetic —
+Determinism across engines (the repo's integer fixed-point
+discipline): ranks live in int64 MICRO-units and every update is
+integer arithmetic —
 ``r' = floor((1-d)*1e6) + (d_num * Σ_in (r DIV deg)) DIV d_den`` with
 the damping factor held as the exact rational ``d_num/d_den`` (17/20 =
 0.85). Truncating integer division of non-negative values is identical

@@ -13,7 +13,7 @@ numerator/denominator
 
 are exact BIGINTs — no float exists, an SQL mirror (e.g. DuckDB)
 matches bit-for-bit, and two moment rows MERGE by plain addition (the same
-merge-theorem contract as the HDR/HLL sketches). The division is left
+merge-theorem contract as the CMS/HDR sketches). The division is left
 to the consumer (num/den), keeping the frame exact; int64 bounds hold
 while n·Σxy < 2^63 — for TB-scale groups, pre-scale y (document the
 unit) or widen to DECIMAL(38,0) at the consumer.

@@ -1,31 +1,21 @@
-"""Mergeable sketches: HyperLogLog (distinct), Count-Min (frequency),
-Bloom (membership), and HDR log-bucket histogram (quantiles).
+"""Mergeable sketches: Count-Min (frequency), Bloom (membership), and
+HDR log-bucket histogram (quantiles).
 
-The fixed-size-summary answer to 100 TB aggregation: both sketches are
-bounded-size state (HLL: 2^b registers per group; CMS: d*w cells TOTAL
-regardless of corpus size), built with ONE map-side-combinable groupBy,
-and mergeable (HLL: elementwise max; CMS: elementwise sum) — so shards,
-days, or streaming micro-batches combine without re-reading data.
+The fixed-size-summary answer to 100 TB aggregation: every sketch is
+bounded-size state (CMS: d*w cells TOTAL regardless of corpus size;
+Bloom: m_bits / 32 words; HDR: a bounded bucket set per group), built
+with ONE map-side-combinable groupBy, and mergeable (CMS: elementwise
+sum; Bloom: bitwise or; HDR: per-bucket sum) — so shards, days, or
+streaming micro-batches combine without re-reading data.
 Reference analog: the recognizer's alphabet/frequency audits over its
-training corpus (/root/reference/keras_ocr/recognition.py:61-74), lifted
-to sublinear sketch form.
+training corpus (keras_ocr ``recognition.py:61-74``), lifted to
+sublinear sketch form.
 
 Cross-engine exactness (the repo's oracle bar): every hash is the md5
-hex-prefix integer convention from ``functions/hashing.py``, every
-register/cell is integer arithmetic, and the one float op in the HLL
-estimator divides two values that are EXACT in double (the fixed-point
-harmonic sum is <= 2^53 by construction), so Spark and DuckDB agree to
-the bit — the value hash attests the sketch itself, not a tolerance.
-
-HLL estimator notes (Flajolet et al. 2007): we emit the RAW estimator
-``alpha_m * m^2 / sum(2^-reg)`` without the small/large-range
-corrections — linear counting needs ``ln``, whose last-ulp behavior is
-not guaranteed identical across libms, and the raw form keeps the
-cross-engine contract exact. The harmonic sum is computed in integer
-fixed point: ``sum(1 << (rho_max - reg))`` with empty buckets
-contributing ``1 << rho_max``; the bound ``m * 2^rho_max = 2^53`` holds
-for every b (rho_max = 53 - b), so the int64 sum neither overflows nor
-rounds when cast to double.
+hex-prefix integer convention from ``functions/hashing.py`` and every
+cell, bit and bucket id is integer arithmetic (HDR first quantizes each
+value to int64 fixed point), so Spark and DuckDB agree to the bit —
+the value hash attests the sketch itself, not a tolerance.
 """
 
 from __future__ import annotations
@@ -44,90 +34,6 @@ def _h52(col):
     """52-bit integer from the md5 hex prefix (same convention as the
     weighted-sample draws and MinHash order keys)."""
     return F.conv(F.substring(F.md5(col), 1, _HEX_LEN), 16, 10).cast("long")
-
-
-def hll_alpha_numerator(b: int) -> float:
-    """The double literal ``alpha_m * m^2 * 2^rho_max`` shared verbatim
-    by the Spark plan and the DuckDB oracle (computed once in Python so
-    both engines parse the SAME shortest-repr literal)."""
-    m = 1 << b
-    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1 + 1.079 / m))
-    return alpha * m * m * float(1 << (_HASH_BITS - b + 1))
-
-
-def hll_registers(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    b: int = 6,
-) -> DataFrame:
-    """Per-group HLL registers: ``key_cols... , bucket, reg``.
-
-    bucket = low ``b`` bits of the 52-bit md5 hash; rho = 1 + leading
-    zeros of the remaining ``52-b`` bits (all-zero remainder pins rho at
-    its max ``53-b``); reg = max(rho) per bucket. ONE groupBy with
-    map-side partial max — at most ``|groups| * 2^b`` rows survive the
-    exchange no matter the input size.
-    """
-    if not 1 <= b <= 16:
-        raise ValueError("b must be in [1, 16]")
-    rho_max = _HASH_BITS - b + 1
-    h = _h52(F.col(value_col).cast("string"))
-    w = F.shiftright(h, b)
-    rho = F.when(w == 0, F.lit(rho_max)).otherwise(F.lit(rho_max) - F.length(F.bin(w)))
-    return (
-        df.select(
-            *key_cols,
-            F.pmod(h, F.lit(1 << b)).cast("int").alias("bucket"),
-            rho.cast("int").alias("rho"),
-        )
-        .groupBy(*key_cols, "bucket")
-        .agg(F.max("rho").alias("reg"))
-    )
-
-
-def hll_merge(a: DataFrame, b_regs: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Union two register frames: elementwise max per (keys, bucket) —
-    the mergeability that lets shards/days/streams combine."""
-    return (
-        a.unionByName(b_regs)
-        .groupBy(*key_cols, "bucket")
-        .agg(F.max("reg").alias("reg"))
-    )
-
-
-def hll_estimate(regs: DataFrame, key_cols: list[str], b: int = 6) -> DataFrame:
-    """Raw HLL estimate per key group: ``key_cols..., n_buckets,
-    hll_estimate`` (estimate floor-rounded 1e-6 for the oracle hash).
-
-    Integer fixed-point harmonic sum (see module docstring), one tiny
-    groupBy over at most ``2^b`` rows per group.
-    """
-    m = 1 << b
-    rho_max = _HASH_BITS - b + 1
-    # F.shiftleft only takes a Python-int shift; the per-row shift needs
-    # the SQL expression form.
-    term = F.expr(f"shiftleft(CAST(1 AS BIGINT), {rho_max} - reg)")
-    empty = F.lit(1 << rho_max).cast("long")
-    agg = regs.groupBy(*key_cols).agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(term).alias("_present_sum"),
-    )
-    sum_int = F.col("_present_sum") + (F.lit(m) - F.col("n_buckets")) * empty
-    est = F.lit(hll_alpha_numerator(b)) / sum_int.cast("double")
-    from ..functions.numeric import pround
-
-    return agg.select(*key_cols, "n_buckets", pround(est, 6).alias("hll_estimate"))
-
-
-def hll_distinct(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    b: int = 6,
-) -> DataFrame:
-    """End-to-end: registers -> estimate, one composed plan."""
-    return hll_estimate(hll_registers(df, key_cols, value_col, b), key_cols, b)
 
 
 # ---------------------------------------------------------------------------
@@ -262,8 +168,8 @@ def bloom_build(df: DataFrame, value_col: str, k: int = 4, m_bits: int = 4096) -
     shift strictly below 2^32, so Spark and DuckDB agree to the bit
     with no sign-extension edge anywhere.
 
-    The membership summary that completes the sketch family (HLL =
-    distinct, CMS = frequency, Bloom = membership): at 100 TB the
+    The membership summary that completes the sketch family (CMS =
+    frequency, Bloom = membership): at 100 TB the
     128-word filter BROADCASTS in place of a multi-gigabyte semi-join
     build side, pruning a fact scan down to probable matches before the
     exact join runs. Build is one exploded projection + one map-side-
@@ -330,8 +236,7 @@ def bloom_probe(
 def bloom_collect(bloom: DataFrame, m_bits: int = 4096) -> list:
     """Densify a ``(word_idx, bits)`` filter frame into a Python list of
     ``m_bits/32`` int64 words (missing words = 0). Control-plane only:
-    the frame is <= m_bits/32 rows by construction — same pattern as the
-    IVF centroid codebook collect."""
+    the frame is <= m_bits/32 rows by construction."""
     words = [0] * (m_bits >> 5)
     for row in bloom.collect():
         words[row["word_idx"]] = row["bits"]
@@ -426,8 +331,8 @@ def hdr_histogram(
 ) -> DataFrame:
     """Per-group HDR/DDSketch-style log-bucket histogram:
     ``key_cols..., bucket, cnt`` — the quantile summary that completes
-    the sketch family (HLL = distinct, CMS = frequency, Bloom =
-    membership, HDR = quantiles; Dynatrace HdrHistogram / Masson et al.
+    the sketch family (CMS = frequency, Bloom = membership,
+    HDR = quantiles; Dynatrace HdrHistogram / Masson et al.
     2019 DDSketch, deterministic variant).
 
     Values are quantized to NON-NEGATIVE int64 fixed point

@@ -29,10 +29,6 @@ LANG_MARKERS = {
 TOKEN_PATTERN = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 
-def _count_word(words: Column, word: str) -> Column:
-    return F.size(F.filter(words, lambda w: w == F.lit(word)))
-
-
 def lang_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-doc stopword hit counts per language + argmax prediction.
 

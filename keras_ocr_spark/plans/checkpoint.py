@@ -64,7 +64,7 @@ MANIFEST_DIR = "_manifests"
 ROW_SIG = "xxhash64(concat_ws(chr(30), conv_id, turn_idx, clean_text))"
 
 
-def _input_listing(input_path: str) -> list:
+def input_listing(input_path: str) -> list:
     """Relative name, size and mtime of every file of the input. A path
     this process cannot list (a remote URI) contributes nothing."""
     root = Path(input_path)
@@ -75,7 +75,7 @@ def _input_listing(input_path: str) -> list:
 
 def _config_fingerprint(cfg: ExtractionConfig, input_path: str, n_buckets: int) -> str:
     payload = json.dumps(
-        {"cfg": asdict(cfg), "input": input_path, "listing": _input_listing(input_path), "n_buckets": n_buckets},
+        {"cfg": asdict(cfg), "input": input_path, "listing": input_listing(input_path), "n_buckets": n_buckets},
         sort_keys=True,
     )
     return hashlib.sha256(payload.encode()).hexdigest()[:16]

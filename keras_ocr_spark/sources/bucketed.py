@@ -1,9 +1,8 @@
 """Hive-style bucketed tables: pay the shuffle ONCE at write time.
 
-The co-located-join half of the 100 TB layout story (next to
-``similarity.write_bucketed_store``'s file-level partition pruning):
-``bucketBy(N, key).sortBy(key)`` hashes every row into one of N bucket
-files per write-task and records the bucket spec in the catalog, so a
+The co-located join of the 100 TB layout story: ``bucketBy(N,
+key).sortBy(key)`` hashes every row into one of N bucket files per
+write-task and records the bucket spec in the catalog, so a
 later join of two tables bucketed on the SAME key with the SAME N
 needs NO Exchange on either input — Spark's SortMergeJoin reads
 bucket i against bucket i directly. For a fact table joined daily

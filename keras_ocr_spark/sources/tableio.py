@@ -10,8 +10,9 @@ Iceberg runtime jars and no network, so the seam has two backends:
   epochs);
 - ``IcebergTableIO`` (stub, import-gated): the production backend —
   ``spark.read.table(...)`` / ``df.writeTo(tbl).append()`` with snapshot
-  pinning via ``VERSION AS OF``. Swapping backends is a config change;
-  no pipeline code references a concrete backend.
+  pinning via ``VERSION AS OF``. Both expose the same
+  ``read``/``append``/``overwrite``; no pipeline code references a
+  concrete backend.
 """
 
 from __future__ import annotations
@@ -65,12 +66,6 @@ class IcebergTableIO:
 
     def overwrite(self, df: DataFrame, name: str) -> None:
         df.writeTo(name).overwritePartitions()
-
-
-def get_table_io(spark: SparkSession, backend: str = "parquet"):
-    if backend == "iceberg":
-        return IcebergTableIO(spark)
-    return ParquetTableIO(spark)
 
 
 def write_jsonl(df: DataFrame, path: str) -> None:

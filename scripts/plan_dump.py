@@ -37,12 +37,6 @@ HEADLINERS = {
         "new-batch band index broadcast; no corpus-vs-corpus pairing",
         {"cartesian": ("==", 0), "bnlj": ("==", 0)},
     ),
-    "embedding_neardup": (
-        "bucket kernel materialized once (lazy localCheckpoint: join scans "
-        "the RDD, zero Python in the join plan); LSH-bucket equi-join; "
-        "no BroadcastNestedLoop/cartesian",
-        {"python_nodes": ("==", 0), "cartesian": ("==", 0), "bnlj": ("==", 0)},
-    ),
     "curate_corpus": (
         "end-to-end curation: equi-joins + aggs only",
         {"cartesian": ("==", 0), "bnlj": ("==", 0), "single_partition": ("==", 0)},
@@ -107,13 +101,6 @@ HEADLINERS = {
         "quality-bucket) windows + broadcast offsets — no SinglePartition, "
         "no one-task-per-language sort",
         {"single_partition": ("==", 0), "cartesian": ("==", 0), "python_nodes": ("==", 0)},
-    ),
-    "semantic_dedup": (
-        "SemDeDup: numpy argmax cell assignment materialized once "
-        "(localCheckpoint — zero EvalPython downstream), ONE exchange + "
-        "ONE blocked int64 Gram grouped-map kernel per cell (never the "
-        "m x m pair join), loser anti-join — never all-pairs",
-        {"cartesian": ("==", 0), "bnlj": ("==", 0), "python_nodes": ("==", 0), "grouped_map": ("==", 1)},
     ),
     "unigram_kl_drift": (
         "slice-drift monitor: one word groupBy (map-side-combined "
@@ -198,7 +185,6 @@ def features(plan: str) -> dict:
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
         "cartesian": plan.count("CartesianProduct"),
         "python_nodes": plan.count("EvalPython"),
-        "grouped_map": plan.count("FlatMapGroupsInPandas"),
         "single_partition": plan.count("SinglePartition"),
         "take_ordered": plan.count("TakeOrderedAndProject"),
         "pushed_filters": sorted(

@@ -52,13 +52,6 @@ BUILD_JOB_EXCEPTIONS = {
     "dedup_resolve": 13,
     "dedup_best_keeper": 13,
     "leakage_safe_split": 13,
-    # the IVF assignment collects the codebook to inline it as a
-    # literal; the trained variant also collects each Lloyd step's
-    "ann_topk_ivf_trained": 10,
-    "ann_topk_ivf": 3,
-    # first run writes the bucket-partitioned store (5 when it exists);
-    # the query vector is read with head()
-    "ann_topk_pruned": 8,
     # approxQuantile range splits, then per-bucket totals collected for
     # the prefix offsets
     "pack_sequences": 7,
@@ -71,8 +64,6 @@ BUILD_JOB_EXCEPTIONS = {
     # first run writes the two snapshot versions (1-2 jobs after)
     "snapshot_change_feed": 5,
     "time_travel_read": 4,
-    # the centroids are collected and inlined as a literal
-    "semantic_dedup": 4,
     # both sides are written once as bucketed tables
     "bucketed_join_stats": 4,
     # one schema-inference job per table read
@@ -126,6 +117,29 @@ def test_each_query_is_lazy_plannable(spark, stream_starts, name):
     assert stream_starts.n == streams_before, f"{name}: building it started a streaming query"
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= BUILD_JOB_EXCEPTIONS.get(name, MAX_BUILD_JOBS), f"{name}: build ran {jobs} jobs"
+
+
+def test_staged_query_follows_rewritten_input(spark, tmp_path):
+    """A query that stages a copy of its input answers from the input
+    as it is now: after ``documents.parquet`` is rewritten in place, the
+    next ``jsonl_roundtrip`` build must not read the first build's copy."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    docs_path = tmp_path / "documents.parquet"
+    shutil.copy(f"{SF_SMOKE}/documents.parquet", docs_path)
+    build = entry_mod.queries()["jsonl_roundtrip"]
+    assert build(spark, str(tmp_path)).count() == pq.read_metadata(docs_path).num_rows
+
+    docs = pq.read_table(docs_path)
+    subset = docs.slice(0, docs.num_rows // 3)
+    pq.write_table(subset, docs_path)
+    want = sorted(
+        zip(*(subset.column(c).to_pylist() for c in ("doc_id", "text", "lang", "source", "n_chars")))
+    )
+    got = sorted(tuple(r) for r in build(spark, str(tmp_path)).collect())
+    assert got == want
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])

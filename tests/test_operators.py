@@ -1,4 +1,4 @@
-"""Operator-level tests: dedup, similarity, text stats, multimodal.
+"""Operator-level tests: dedup, text stats, multimodal.
 
 Small hand-built inputs with exactly known answers (the reference's
 golden-unit-test style, tests/test_tools.py + test_evaluation.py).
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from keras_ocr_spark.operators import dedup as D
 from keras_ocr_spark.operators import multimodal as M
-from keras_ocr_spark.operators import similarity as S
 from keras_ocr_spark.operators import textstats as TS
 
 DOCS = [
@@ -226,161 +225,6 @@ class TestSimHash:
     def test_pigeonhole_block_count_enforced(self, docs):
         with pytest.raises(ValueError, match="pigeonhole"):
             D.simhash_near_pairs(docs, max_hamming=4)
-
-
-class TestSimilarity:
-    @pytest.fixture(scope="class")
-    def vecs(self, spark):
-        import math
-
-        rows = []
-        for i in range(50):
-            base = [math.sin(i * 0.7 + j) for j in range(8)]
-            rows.append((i, [float(x) for x in base]))
-        rows.append((99, rows[7][1]))  # exact copy of vec 7
-        return spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-
-    def test_brute_force_finds_exact_copy_first(self, vecs):
-        query = vecs.filter(F.col("vec_id") == 7).collect()[0].embedding
-        top = S.brute_force_topk(vecs.filter(F.col("vec_id") != 7), query, k=3).collect()
-        assert top[0].id == 99
-        assert abs(top[0].cosine - 1.0) < 1e-6
-
-    def test_quantized_matches_bruteforce_leader(self, vecs):
-        query = vecs.filter(F.col("vec_id") == 7).collect()[0].embedding
-        top = S.brute_force_topk_quantized(vecs.filter(F.col("vec_id") != 7), query, k=3).collect()
-        assert top[0].id == 99
-
-    def test_lsh_ann_contains_exact_copy(self, vecs):
-        query = vecs.filter(F.col("vec_id") == 7).collect()[0].embedding
-        top = S.ann_topk_lsh(vecs.filter(F.col("vec_id") != 7), query, k=5, n_planes=4)
-        ids = [r.id for r in top.collect()]
-        assert 99 in ids  # same bucket as its exact copy, by construction
-
-    def test_all_pairs_above_finds_duplicate_pair(self, vecs):
-        pairs = S.all_pairs_above(vecs, threshold=0.999, n_planes=4, dim=8).collect()
-        assert any((r.id_a, r.id_b) == (7, 99) for r in pairs)
-
-    def test_bucket_python_matches_spark(self, vecs):
-        rows = vecs.withColumn("bucket", S.lsh_bucket_expr(F.col("embedding"), 8, 4, 42)).collect()
-        for r in rows:
-            assert r.bucket == S.lsh_bucket_py(list(r.embedding), 4, 42), r.vec_id
-
-    def test_multiprobe_beats_single_bucket_recall(self, spark):
-        """Hamming-1 probing must recover >= the single-bucket candidate
-        set and reach high recall vs brute force on real-ish data."""
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        query = emb.filter(F.col("vec_id") == 0).collect()[0].embedding
-        rest = emb.filter(F.col("vec_id") != 0)
-        exact = {r.id for r in S.brute_force_topk(rest, query, k=10).collect()}
-        single = {r.id for r in S.ann_topk_lsh(rest, query, k=10, n_planes=6, max_hamming=0).collect()}
-        multi = {r.id for r in S.ann_topk_lsh(rest, query, k=10, n_planes=6, max_hamming=1).collect()}
-        multi2 = {r.id for r in S.ann_topk_lsh(rest, query, k=10, n_planes=6, max_hamming=2).collect()}
-        # Recall grows monotonically with probe radius (the random-vector
-        # fixture has no true near neighbors, so absolute recall is low by
-        # construction; the cliff fix is the monotone improvement).
-        assert len(multi & exact) >= len(single & exact)
-        assert len(multi2 & exact) >= len(multi & exact)
-        assert len(multi & exact) >= 2
-        assert len(multi2 & exact) >= 5
-
-    def test_all_pairs_bucketed_subset_of_exact_with_recall(self, vecs):
-        """The bucketed near-dup pairs are a subset of the exact all-pairs
-        result, and on near-identical vectors recall is perfect (an exact
-        copy is never separated by any hyperplane)."""
-        got = {(r.id_a, r.id_b) for r in S.all_pairs_above(vecs, threshold=0.999, n_planes=4, dim=8).collect()}
-        a = vecs.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
-        b = vecs.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-        va = F.transform(F.col("va"), lambda x: x.cast("double"))
-        vb = F.transform(F.col("vb"), lambda x: x.cast("double"))
-        exact = {
-            (r.id_a, r.id_b)
-            for r in a.join(b, F.col("id_a") < F.col("id_b"))
-            .filter(S.cosine_expr(va, vb) >= 0.999)
-            .collect()
-        }
-        assert got <= exact
-        assert (7, 99) in got  # identical pair always survives bucketing
-
-    def test_all_pairs_plan_is_equi_join(self, vecs):
-        plan = S.all_pairs_above(vecs, threshold=0.9, n_planes=4, dim=8)._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-
-    def test_semantic_dedup_drops_exact_copy_tie_to_higher_id(self, spark, vecs):
-        """7 and 99 are identical -> same cell, equal cent_qdot: the tie
-        breaks to the HIGHER id (99 dropped, 7 kept); everyone else
-        survives at a near-1 threshold."""
-        centroids = vecs.filter(F.col("vec_id") < 4).select(
-            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-        )
-        surv = {r.id for r in S.semantic_dedup(vecs, centroids, threshold=0.999).collect()}
-        # the exact-copy pair (7, 99): equal cent_qdot, tie drops 99
-        assert 7 in surv and 99 not in surv
-        # sin(i*0.7+j) repeats with period ~9 (0.7*9 ~ 2pi), so stride-9
-        # pairs are also near-identical; dedup keeps a strict subset
-        assert surv < {r[0] for r in vecs.select("vec_id").collect()}
-
-    def test_semantic_dedup_keeps_member_farther_from_centroid(self, spark):
-        """SemDeDup keep policy: of an above-threshold pair, the member
-        CLOSER to its centroid is the redundant copy that drops."""
-        df = spark.createDataFrame(
-            [(10, [1.0, 0.0]), (11, [0.98, 0.2]), (12, [0.0, 1.0])],
-            "vec_id int, embedding array<float>",
-        )
-        cents = spark.createDataFrame([(1, [1.0, 0.0])], "centroid_id int, centroid array<float>")
-        surv = {r.id: r for r in S.semantic_dedup(df, cents, threshold=0.9).collect()}
-        # cos(10,11) ~ 0.98 >= 0.9; 10 has the higher centroid dot -> dropped
-        assert set(surv) == {11, 12}
-        assert surv[11].cell == 1 and surv[12].cell == 1
-
-    def test_semantic_dedup_fast_matches_expression_twin(self, vecs):
-        """The numpy scored-assignment kernel must be value-identical to
-        the inlined-expression argmax (same quantized-integer
-        arithmetic, same ties-to-lowest-centroid rule)."""
-        centroids = vecs.filter(F.col("vec_id") < 4).select(
-            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-        )
-        fast = S.semantic_dedup(vecs, centroids, threshold=0.9, fast=True)
-        slow = S.semantic_dedup(vecs, centroids, threshold=0.9, fast=False)
-        assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
-
-    def test_semantic_dedup_zero_vector_never_pairs(self, spark):
-        """A zero-quantized vector has norm 0 -> cosine NaN; Spark and
-        DuckDB order NaN above any threshold while numpy's nan >= t is
-        False. Both paths must agree: zero vectors never pair (both
-        survive), including against each other."""
-        df = spark.createDataFrame(
-            [(1, [0.0, 0.0]), (2, [0.0001, 0.0]), (3, [1.0, 0.0]), (4, [0.99, 0.1])],
-            "vec_id int, embedding array<float>",
-        )
-        cents = spark.createDataFrame([(1, [1.0, 0.0])], "centroid_id int, centroid array<float>")
-        fast = sorted(r.id for r in S.semantic_dedup(df, cents, threshold=0.9, fast=True).collect())
-        slow = sorted(r.id for r in S.semantic_dedup(df, cents, threshold=0.9, fast=False).collect())
-        assert fast == slow
-        # 1 and 2 both quantize to the zero vector and survive; of the
-        # genuine near-pair (3, 4), 3 is closer to the centroid -> drops
-        assert fast == [1, 2, 4]
-
-    def test_semantic_dedup_plan_is_equi_join_no_python(self, vecs):
-        centroids = vecs.filter(F.col("vec_id") < 4).select(
-            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-        )
-        for fast in (True, False):
-            plan = (
-                S.semantic_dedup(vecs, centroids, threshold=0.9, fast=fast)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            assert "BroadcastNestedLoopJoin" not in plan, fast
-            assert "CartesianProduct" not in plan, fast
-            # fast: scored kernel materialized once via lazy
-            # localCheckpoint (no EvalPython anywhere), per-cluster
-            # pairwise step is exactly ONE grouped-map Gram kernel;
-            # slow: expression-only equi-join
-            assert "EvalPython" not in plan, fast
-            assert plan.count("FlatMapGroupsInPandas") == (1 if fast else 0), fast
 
 
 class TestTextStats:
@@ -747,171 +591,6 @@ class TestPdfExtract:
         assert r.pdf_text is None and r.n_bytes == 9
 
 
-class TestIvf:
-    def test_ivf_recall_and_nprobe_monotone(self, spark):
-        from pyspark.sql import functions as F
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        cents = emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 16)).select(
-            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-        )
-        vecs = emb.filter(F.col("vec_id") != 0)
-        qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_embedding"))
-        query = emb.filter(F.col("vec_id") == 0).collect()[0].embedding
-        exact = {r.id for r in S.brute_force_topk_quantized(vecs, query, k=10).collect()}
-        got = {}
-        for nprobe in (1, 2, 4, 16):
-            got[nprobe] = {r.id for r in S.ivf_topk(vecs, cents, qdf, k=10, nprobe=nprobe).collect()}
-        # recall grows with nprobe; probing ALL cells == brute force
-        assert len(got[1] & exact) <= len(got[2] & exact) <= len(got[4] & exact)
-        assert got[16] == exact
-
-    def test_ivf_assign_is_total_and_deterministic(self, spark):
-        from pyspark.sql import functions as F
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        cents = emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-        )
-        a1 = {r.id: r.cell for r in S.ivf_assign(emb, cents).collect()}
-        a2 = {r.id: r.cell for r in S.ivf_assign(emb, cents).collect()}
-        assert a1 == a2  # deterministic
-        assert len(a1) == emb.count()  # every vector assigned exactly once
-
-    def test_ivf_assign_matches_window_argmax_and_never_shuffles(self, spark):
-        from pyspark.sql import Window as W
-        from pyspark.sql import functions as F
-
-        from keras_ocr_spark.functions.hashing import quantized_dot_expr
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        cents = emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 16)).select(
-            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-        )
-        # Reference semantics: explode N x C, window argmax, ties to
-        # lowest centroid_id (what the r2 formulation — and the DuckDB
-        # oracle — compute).
-        joined = emb.crossJoin(F.broadcast(cents)).select(
-            F.col("vec_id").alias("id"),
-            "centroid_id",
-            quantized_dot_expr(F.col("embedding"), F.col("centroid")).alias("cdot"),
-        )
-        w = W.partitionBy("id").orderBy(F.desc("cdot"), F.asc("centroid_id"))
-        want = {
-            r.id: r.centroid_id
-            for r in joined.withColumn("rn", F.row_number().over(w)).filter("rn = 1").collect()
-        }
-        assigned = S.ivf_assign(emb, cents)
-        got = {r.id: r.cell for r in assigned.collect()}
-        assert got == want
-        # The scale claim: assignment is a per-row projection — NO
-        # exchange of any kind in the plan (r2 verdict "What's wrong #2").
-        plan = assigned._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-
-    def test_ivf_assign_fast_equals_expression_twin(self, spark):
-        """The numpy argmax kernel (r4 fast path) must agree with the
-        literal-expression fold row-for-row, including argmax ties
-        (ties -> lowest centroid_id: ascending sort + first-max)."""
-        from pyspark.sql import functions as F
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        cents = emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 16)).select(
-            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-        )
-        fast = {r.id: r.cell for r in S.ivf_assign(emb, cents, fast=True).collect()}
-        slow = {r.id: r.cell for r in S.ivf_assign(emb, cents, fast=False).collect()}
-        assert fast == slow
-        # duplicate centroids force exact ties: lowest centroid_id wins
-        dup = spark.createDataFrame(
-            [(5, [1.0, 0.0]), (2, [1.0, 0.0]), (9, [1.0, 0.0])],
-            "centroid_id long, centroid array<double>",
-        )
-        vec = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
-        assert S.ivf_assign(vec, dup, fast=True).collect()[0].cell == 2
-        assert S.ivf_assign(vec, dup, fast=False).collect()[0].cell == 2
-
-    def test_kmeans_refine_improves_recall_on_planted_clusters(self, spark):
-        """r3 verdict Next #5: trained (Lloyd-refined) centroids must be
-        representative of real IVF recall. Planted corpus: 16 tight,
-        well-separated clusters; seed centroids are 16 deterministic
-        pseudo-random directions UNRELATED to the data. After 2 Lloyd
-        iterations the codebook moves onto the clusters, so nprobe=2
-        recall@10 improves."""
-        import hashlib
-        import struct
-
-        import numpy as np
-        from pyspark.sql import functions as F
-
-        dim, n_clusters, per = 16, 16, 40
-        rng = np.random.RandomState(7)
-        centers = rng.randn(n_clusters, dim) * 10.0
-        rows = []
-        vid = 1
-        for c in range(n_clusters):
-            for _ in range(per):
-                v = centers[c] + rng.randn(dim) * 0.05
-                rows.append((vid, [float(round(x, 3)) for x in v]))
-                vid += 1
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        # seeds: md5-derived directions, deliberately unrelated to data
-        def seed_vec(i):
-            h = hashlib.md5(f"seedcent:{i}".encode()).digest()
-            return [float(struct.unpack(">h", h[2 * j % 16 : 2 * j % 16 + 2])[0] % 19 - 9) for j in range(dim)]
-
-        seeds = spark.createDataFrame(
-            [(i, seed_vec(i)) for i in range(1, n_clusters + 1)],
-            "centroid_id long, centroid array<double>",
-        )
-        trained = S.kmeans_refine(df, seeds, n_iters=2, vec_col="embedding")
-        # one query per planted cluster; recall@10 averaged over all 16
-        # (single-query recall is too lucky/unlucky to compare fairly)
-        def total_recall(cents):
-            hits = 0
-            for c in range(n_clusters):
-                qrow = df.filter(F.col("vec_id") == c * per + 1).collect()[0]
-                qdf = spark.createDataFrame([(qrow.embedding,)], "q_embedding array<double>")
-                exact = {
-                    r.id for r in S.brute_force_topk_quantized(df, qrow.embedding, k=10).collect()
-                }
-                got = {r.id for r in S.ivf_topk(df, cents, qdf, k=10, nprobe=1).collect()}
-                hits += len(got & exact)
-            return hits  # out of 160
-
-        seed_total = total_recall(seeds)
-        trained_total = total_recall(trained)
-        assert trained_total > seed_total, (trained_total, seed_total)
-        assert trained_total >= 140  # near-perfect after training
-
-    def test_kmeans_refine_empty_cell_keeps_seed(self, spark):
-        """A centroid that captures no vectors must survive unchanged
-        (left join + coalesce), keeping the codebook total."""
-        df = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, [0.9, 0.1])], "vec_id long, embedding array<double>"
-        )
-        seeds = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, [-50.0, -50.0])], "centroid_id long, centroid array<double>"
-        )
-        out = {r.centroid_id: list(r.centroid) for r in S.kmeans_refine(df, seeds, 1).collect()}
-        assert set(out) == {1, 2}
-        assert out[2] == [-50.0, -50.0]  # empty cell: seed retained
-
-
-class TestLshBucketFastPath:
-    def test_udf_equals_expression_and_python(self, spark):
-        from pyspark.sql import functions as F
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        both = emb.select(
-            "vec_id",
-            S.lsh_bucket_expr(F.col("embedding"), 64, 6, 42).alias("b_expr"),
-            S.lsh_bucket_udf(64, 6, 42)(F.col("embedding")).alias("b_udf"),
-        ).collect()
-        for r in both:
-            assert r.b_expr == r.b_udf, r.vec_id
-
-
 class TestApproxAggregates:
     def test_approx_count_distinct_within_tolerance(self, spark):
         """approx_count_distinct (HLL++) has no cross-engine oracle (the
@@ -1064,18 +743,6 @@ class TestDirtyInputDegradation:
     """r4 self-review regressions: dirty rows degrade, never crash or
     diverge from the oracle semantics."""
 
-    def test_ivf_fast_path_null_and_ragged_vectors(self, spark):
-        emb = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, None), (3, [0.5]), (4, [0.0, 1.0])],
-            "vec_id long, embedding array<double>",
-        )
-        cents = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "centroid_id long, centroid array<double>"
-        )
-        got = {r.id: r.cell for r in S.ivf_assign(emb, cents, fast=True).collect()}
-        assert got[1] == 1 and got[4] == 2
-        assert got[2] is None and got[3] is None  # degrade, not task failure
-
     def test_substring_dedup_null_text_matches_oracle_contract(self, spark):
         docs = spark.createDataFrame(
             [(1, None), (2, "a b c d e f g")], "doc_id long, text string"
@@ -1084,12 +751,6 @@ class TestDirtyInputDegradation:
         # oracle COALESCEs to '' for the null-text doc; Spark must agree
         assert rows[1].clean_text == "" and rows[1].dup_words == 0
         assert rows[1].n_words is None  # len(split(NULL)) is NULL both engines
-
-    def test_kmeans_refine_rejects_mismatched_scale(self, spark):
-        emb = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
-        cents = spark.createDataFrame([(1, [1.0, 0.0])], "centroid_id long, centroid array<double>")
-        with pytest.raises(ValueError, match="VEC_SCALE"):
-            S.kmeans_refine(emb, cents, scale=10_000)
 
 
 class TestJsonFieldRollup:

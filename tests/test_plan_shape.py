@@ -133,11 +133,11 @@ class TestExpressionOperatorsStayJvmSide:
 
 
 class TestSinglePandasUdfEvaluation:
-    """Regression pins for the r3 double-evaluation wastes: a pandas-UDF
+    """Regression pins for the r3 double-evaluation waste: a pandas-UDF
     projection filtered on its OWN output gets its null-filter pushed
     below an upstream exchange by Catalyst, duplicating the
-    ArrowEvalPython node (observed python=2 for minhash, python=4 for
-    the near-dup self-join). Both operators now avoid it structurally."""
+    ArrowEvalPython node (observed python=2 for minhash). The operator
+    now avoids it structurally."""
 
     @pytest.fixture(scope="class")
     def docs(self, spark, tmp_path_factory):
@@ -171,21 +171,6 @@ class TestSinglePandasUdfEvaluation:
         assert 102 in ids and 0 in ids
         assert out.filter(F.col("signature").isNull()).count() == 0
 
-    def test_all_pairs_above_join_plan_has_no_python(self, spark):
-        from keras_ocr_spark.operators import similarity as S
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        df = S.all_pairs_above(emb, threshold=0.8, fast=True)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # the bucket kernel is materialized once via lazy localCheckpoint;
-        # the self-join scans the RDD — zero Python nodes in the join plan
-        assert "EvalPython" not in plan, plan[:1500]
-        assert "CartesianProduct" not in plan
-        # and values are unchanged vs the pure-expression twin
-        slow = S.all_pairs_above(emb, threshold=0.8, fast=False)
-        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, slow.collect()))
-
-
 class TestFilterPushdown:
     def test_predicate_reaches_parquet(self, spark, transcripts_path):
         df = spark.read.parquet(transcripts_path).filter(F.col("role") == "user").select("conv_id")
@@ -196,20 +181,13 @@ class TestFilterPushdown:
 class TestNoAccidentalCartesian:
     """Blanket guarantee over the ENTIRE driver contract: no query plan
     contains a CartesianProduct, and BroadcastNestedLoopJoin appears only
-    where a single-row broadcast side is the intended plan (the ANN
-    queries broadcast the 1-row query vector / probe-cell list)."""
+    where a single-row broadcast side is the intended plan (a 1-row
+    totals or stats frame broadcast onto the rows it scales)."""
 
     #: Queries where a BNLJ against a broadcast 1-row side is the design.
     ALLOW_BNLJ = {
-        "ann_cosine_topk",
-        "ann_topk_quantized",
-        "ann_topk_multiprobe",
-        "ann_topk_ivf",
-        # same 1-row-broadcast BNLJ design (query vector + probe cells)
-        # over the Lloyd-refined codebook.
-        "ann_topk_ivf_trained",
-        # single-row broadcast of the corpus stats (N, avgdl, dfs) —
-        # the same 1-row-side BNLJ design as the ANN queries.
+        # single-row broadcast of the corpus stats (N, avgdl, dfs) onto
+        # the scored documents.
         "bm25_search",
         # r6: string min/max split into a grouping-free 1-row aggregate
         # attached by a 1-row broadcast, so the Expand multi-distinct
@@ -247,45 +225,6 @@ class TestNoAccidentalCartesian:
             if "BroadcastNestedLoopJoin" in plan and name not in self.ALLOW_BNLJ:
                 bad.append((name, "BroadcastNestedLoopJoin"))
         assert not bad, bad
-
-
-class TestBucketPartitionedAnnPruning:
-    """The pruned-scan half of the ANN scale story (r2 verdict
-    Missing #2): a bucket-partitioned store + a driver-side probe list
-    must reach the parquet scan as PartitionFilters pruning to exactly
-    n_planes+1 of the 2^n_planes bucket directories."""
-
-    def test_partition_filters_prune_probe_set(self, spark, tmp_path):
-        from keras_ocr_spark.operators import similarity as S
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        store = str(tmp_path / "ann_store")
-        S.write_bucketed_store(emb.filter(F.col("vec_id") != 0), store, dim=64, n_planes=6, seed=42)
-        qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
-        out = S.ann_topk_pruned(spark, store, qvec, k=10, n_planes=6, seed=42, max_hamming=1)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        m = re.search(r"PartitionFilters: \[bucket#\d+ IN \(([\d,]+)\)\]", plan)
-        assert m, plan[:1500]
-        probes = {int(x) for x in m.group(1).split(",")}
-        assert len(probes) == 7  # n_planes + 1 of 2^6 = 64 buckets
-        assert probes == set(S.probe_buckets(S.lsh_bucket_py(qvec, 6, 42), 6, 1))
-        # and the pruned result equals the full-scan multiprobe answer
-        # (same scoring: integer-quantized dot, ties to lowest id)
-        from keras_ocr_spark.functions.hashing import quantized_dot_expr
-
-        qb = S.lsh_bucket_py(qvec, 6, 42)
-        qcol = F.array(*[F.lit(float(x)) for x in qvec])
-        full = (
-            emb.filter(F.col("vec_id") != 0)
-            .withColumn("bucket", S.lsh_bucket_udf(64, 6, 42)(F.col("embedding")))
-            .filter(F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qb))) <= 1)
-            .select(F.col("vec_id").alias("id"), quantized_dot_expr(F.col("embedding"), qcol).alias("qdot"))
-            .orderBy(F.desc("qdot"), F.asc("id"))
-            .limit(10)
-        )
-        got = [(r.id, r.qdot) for r in out.collect()]
-        want = [(r.id, r.qdot) for r in full.collect()]
-        assert got == want
 
 
 class TestAqeSkewJoin:

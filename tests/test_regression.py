@@ -4,7 +4,6 @@ and the one-exchange plan."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from keras_ocr_spark.operators.regression import merge_moments, ols_moments
 

@@ -4,7 +4,6 @@ map-only plan, and the Python UDTF twin (§2.10 API surface) equal to
 the JVM hot path."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from keras_ocr_spark.operators.textstats import SENTENCE_RE, split_sentences
 

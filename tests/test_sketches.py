@@ -1,4 +1,4 @@
-"""Mergeable-sketch properties: HLL (distinct) and Count-Min (frequency).
+"""Mergeable-sketch properties: Count-Min (frequency), Bloom and HDR.
 
 The cross-engine VALUE contract of Count-Min is attested by the driver
 oracle (`cms_heavy_hitters` — every cell reproduces bit-for-bit in
@@ -11,44 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from keras_ocr_spark.operators import sketches as SK
-
-
-@pytest.fixture(scope="module")
-def ids(spark):
-    # 2000 distinct user ids, each appearing 1-3 times (duplicates must
-    # not move the registers).
-    rows = [(i % 2000,) for i in range(4700)]
-    return spark.createDataFrame(rows, "user_id long").withColumn("g", F.lit("all"))
-
-
-class TestHLL:
-    def test_estimate_within_standard_error_band(self, spark, ids):
-        out = SK.hll_distinct(ids, ["g"], "user_id", b=6).collect()[0]
-        # m=64 -> relative standard error ~1.04/sqrt(64) = 13%; allow 3 sigma.
-        assert abs(out.hll_estimate - 2000) / 2000 < 0.39
-        assert out.n_buckets == 64  # 2000 >> 64 buckets: all occupied
-
-    def test_duplicates_do_not_move_registers(self, spark, ids):
-        once = ids.dropDuplicates(["user_id"])
-        r_dup = {(r.bucket): r.reg for r in SK.hll_registers(ids, ["g"], "user_id").collect()}
-        r_once = {(r.bucket): r.reg for r in SK.hll_registers(once, ["g"], "user_id").collect()}
-        assert r_dup == r_once
-
-    def test_merge_equals_sketch_of_union(self, spark, ids):
-        a = ids.filter(F.col("user_id") < 1200)
-        b = ids.filter(F.col("user_id") >= 800)  # overlapping shards
-        ra = SK.hll_registers(a, ["g"], "user_id")
-        rb = SK.hll_registers(b, ["g"], "user_id")
-        merged = {r.bucket: r.reg for r in SK.hll_merge(ra, rb, ["g"]).collect()}
-        union = {r.bucket: r.reg for r in SK.hll_registers(ids, ["g"], "user_id").collect()}
-        assert merged == union
-
-    def test_b_validation(self, spark, ids):
-        with pytest.raises(ValueError):
-            SK.hll_registers(ids, ["g"], "user_id", b=0)
-
-    def test_register_count_bounded(self, spark, ids):
-        assert SK.hll_registers(ids, ["g"], "user_id", b=4).count() <= 16
 
 
 @pytest.fixture(scope="module")

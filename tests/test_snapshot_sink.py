@@ -7,7 +7,6 @@ side effect); pinned here end-to-end."""
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from keras_ocr_spark.sources.snapshots import history, read_snapshot
 from keras_ocr_spark.streaming.snapshot_sink import (

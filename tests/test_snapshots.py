@@ -4,7 +4,6 @@ the commit protocol: manifest-as-commit-point, immutability, history
 ordering, unknown-version errors, crash-orphan invisibility, and the
 manifest's Observation-collected lineage metrics."""
 
-import json
 from pathlib import Path
 
 import pytest

@@ -3,7 +3,6 @@
 cases per spec arm, idempotence, the dedup-collapse property the
 operator exists for, and the zero-shuffle plan."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from keras_ocr_spark.operators.urltools import canonicalize_url, url_host

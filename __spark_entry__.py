@@ -7,10 +7,10 @@ its fields — see ``keras_ocr_spark/plans/pipeline.py``) over transcripts
 synthesized deterministically from the sf0.001 documents table.
 
 ``queries()`` / ``oracle_sql()`` expose the query registry in
-``keras_ocr_spark/driver_queries.py``: extraction and decode, evaluation,
-the corpus-curation operators (dedup, quality, PII, contamination,
-split, mix, ``curate_corpus``), snapshots and a set of general
-SQL/TPC-H shapes, each with an exact DuckDB oracle.
+``keras_ocr_spark/driver_queries.py``, all over ``documents``:
+extraction and decode, evaluation, the corpus-curation operators (dedup,
+quality, PII, contamination, split, mix, ``curate_corpus``) and
+snapshots, each with an exact DuckDB oracle.
 """
 
 from __future__ import annotations

@@ -1,11 +1,10 @@
 """Driver-contract query registry: name -> (spark_fn, duckdb_oracle_sql).
 
-Two families: text and corpus queries over ``documents`` (extraction
-and decode, evaluation, dedup, quality, language and token stats, PII,
-contamination, split, mix, ``curate_corpus``, snapshots and the change
-feed), and general SQL/TPC-H shapes over the TPC-H tables. Each Spark
+Every query reads ``documents``: extraction and decode, evaluation,
+dedup, quality, language and token stats, PII, contamination, split,
+mix, ``curate_corpus``, snapshots and the change feed. Each Spark
 callable takes ``(spark, sf_dir)`` and returns a DataFrame; each oracle
-is ANSI-ish SQL DuckDB runs on the same parquet tables.
+is ANSI-ish SQL DuckDB runs on the same parquet table.
 
 Column-name AND column-type discipline: every computed column is aliased
 identically on both sides; integers are cast to BIGINT, floats rounded
@@ -27,6 +26,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import shutil
 from collections.abc import Callable
 from pathlib import Path
 from typing import Dict, Tuple
@@ -69,12 +69,18 @@ def _b(col):
 
 def _staging_path(sf_dir: str, name: str, *tables: str) -> str:
     """Temp path at which a query stages a copy of ``tables`` from
-    ``sf_dir``. Keyed on the directory and on the listing (file names,
-    sizes, mtimes) of those tables, so a rewritten input is staged
-    afresh instead of being answered from an earlier build's copy."""
+    ``sf_dir``: ``/tmp/{name}_{md5(sf_dir)}/{md5(listing)}``. The listing
+    (file names, sizes, mtimes) of those tables keys the copy, so a
+    rewritten input is staged afresh instead of being answered from an
+    earlier build's copy. Staging afresh deletes the copies of earlier
+    listings: one copy per ``(sf_dir, name)`` remains."""
     listing = [input_listing(f"{sf_dir}/{t}.parquet") for t in tables]
-    key = json.dumps([sf_dir, listing]).encode()
-    return f"/tmp/{name}_{hashlib.md5(key).hexdigest()[:12]}"
+    root = Path(f"/tmp/{name}_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}")
+    path = root / hashlib.md5(json.dumps(listing).encode()).hexdigest()[:12]
+    if not path.exists() and root.is_dir():
+        for stale in root.iterdir():
+            shutil.rmtree(stale, ignore_errors=True)
+    return str(path)
 
 
 QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
@@ -89,382 +95,7 @@ def register(name: str, sql: str | None):
 
 
 # ==========================================================================
-# 1. Relational operator checks (SURVEY.md §2 mappings)
-# ==========================================================================
-
-
-@register(
-    "ordering_window",
-    """
-    SELECT * FROM (
-      SELECT CAST(o_custkey AS BIGINT) AS o_custkey,
-             CAST(o_orderkey AS BIGINT) AS o_orderkey,
-             strftime(o_orderdate, '%Y-%m-%d') AS o_date,
-             CAST(row_number() OVER (PARTITION BY o_custkey
-                                     ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS rn
-      FROM orders)
-    WHERE rn <= 3
-    """,
-)
-def q_ordering_window(spark, sf_dir):
-    """Stable in-group ordering — fix_line analog (tools.py:584-600)."""
-    orders = _t(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (
-        orders.select(
-            _b("o_custkey"),
-            _b("o_orderkey"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_date"),
-            F.row_number().over(w).cast("long").alias("rn"),
-        )
-        .filter(F.col("rn") <= 3)
-    )
-
-
-@register(
-    "running_offset",
-    """
-    SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
-           CAST(l_linenumber AS BIGINT) AS l_linenumber,
-           CAST(floor(sum(l_quantity) OVER (PARTITION BY l_orderkey
-                     ORDER BY l_linenumber, l_quantity, l_partkey, l_suppkey
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 100 + 0.5) / 100 AS DOUBLE) AS running_qty
-    FROM lineitem
-    """,
-)
-def q_running_offset(spark, sf_dir):
-    """Running totals — the start_end offset bookkeeping
-    (recognition.py:520-522) as a window frame."""
-    li = _t(spark, sf_dir, "lineitem")
-    # (l_orderkey, l_linenumber) is NOT unique in the synthetic data:
-    # full tie-breakers make the frame order engine-independent.
-    w = (
-        W.partitionBy("l_orderkey")
-        .orderBy("l_linenumber", "l_quantity", "l_partkey", "l_suppkey")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return li.select(
-        _b("l_orderkey"),
-        _b("l_linenumber"),
-        pround(F.sum("l_quantity").over(w), 2).alias("running_qty"),
-    )
-
-
-@register(
-    "percentiles_by_brand",
-    """
-    SELECT p_brand,
-           CAST(floor(quantile_cont(p_retailprice, 0.5) * 1000000 + 0.5) / 1000000 AS DOUBLE) AS median_price,
-           CAST(floor(quantile_cont(p_retailprice, 0.9) * 1000000 + 0.5) / 1000000 AS DOUBLE) AS p90_price,
-           CAST(min(p_retailprice) AS DOUBLE) AS min_price,
-           CAST(max(p_retailprice) AS DOUBLE) AS max_price
-    FROM part GROUP BY p_brand
-    """,
-)
-def q_percentiles_by_brand(spark, sf_dir):
-    """Exact interpolated percentiles per group (Spark ``percentile`` ==
-    DuckDB ``quantile_cont`` — both linear interpolation on the sorted
-    values; floor-rounded for cross-engine float hashing)."""
-    p = _t(spark, sf_dir, "part")
-    return p.groupBy("p_brand").agg(
-        pround(F.expr("percentile(p_retailprice, 0.5)"), 6).alias("median_price"),
-        pround(F.expr("percentile(p_retailprice, 0.9)"), 6).alias("p90_price"),
-        F.min("p_retailprice").cast("double").alias("min_price"),
-        F.max("p_retailprice").cast("double").alias("max_price"),
-    )
-
-
-@register(
-    "ntile_quartiles",
-    """
-    SELECT CAST(q AS BIGINT) AS q, CAST(count(*) AS BIGINT) AS n,
-           CAST(floor(sum(c_acctbal) * 100 + 0.5) / 100 AS DOUBLE) AS total_bal
-    FROM (
-      SELECT c_acctbal, ntile(4) OVER (ORDER BY c_acctbal, c_custkey) AS q
-      FROM customer)
-    GROUP BY q
-    """,
-)
-def q_ntile_quartiles(spark, sf_dir):
-    """ntile bucketing (quartiles over a deterministic total order) +
-    per-bucket rollup. NOT the partition-less ``ntile OVER (ORDER BY)``
-    window (single-task sort — a 100x scale-killer, r2 verdict): the
-    three-phase distributed rank in operators/ranking.py — range-bucket
-    by sampled quantiles, per-bucket window, broadcast prefix offsets —
-    reproduces ntile semantics exactly (parity vs F.ntile asserted in
-    tests) with only a hash exchange on the bucket key."""
-    from .operators.ranking import exact_ntile
-
-    c = _t(spark, sf_dir, "customer")
-    return (
-        exact_ntile(c, 4, ["c_acctbal", "c_custkey"], ntile_col="q")
-        .groupBy("q")
-        .agg(F.count("*").cast("long").alias("n"), pround(F.sum("c_acctbal"), 2).alias("total_bal"))
-        .select(_b("q"), "n", "total_bal")
-    )
-
-
-@register(
-    "group_max_filter",
-    """
-    SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
-           CAST(floor(max(l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100 AS DOUBLE) AS max_rev
-    FROM lineitem GROUP BY l_orderkey
-    HAVING max(l_extendedprice * (1 - l_discount)) >= 1500.0
-    """,
-)
-def q_group_max_filter(spark, sf_dir):
-    """Group-max predicate — the detection_threshold cull
-    (detection.py:238-241)."""
-    li = _t(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.groupBy("l_orderkey")
-        .agg(F.max(rev).alias("_max_rev"))
-        .filter(F.col("_max_rev") >= 1500.0)
-        .select(_b("l_orderkey"), pround(F.col("_max_rev"), 2).alias("max_rev"))
-    )
-
-
-@register(
-    "having_count",
-    """
-    SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey, CAST(count(*) AS BIGINT) AS n_items
-    FROM lineitem GROUP BY l_orderkey HAVING count(*) >= 5
-    """,
-)
-def q_having_count(spark, sf_dir):
-    """Size filter — the component-area threshold (detection.py:233-236)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_orderkey")
-        .agg(F.count("*").cast("long").alias("n_items"))
-        .filter(F.col("n_items") >= 5)
-        .select(_b("l_orderkey"), "n_items")
-    )
-
-
-@register(
-    "anti_join_customers",
-    """
-    SELECT CAST(c_custkey AS BIGINT) AS c_custkey FROM customer
-    WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-    """,
-)
-def q_anti_join_customers(spark, sf_dir):
-    """Left-anti join — the unmatched-prediction FP complement
-    (evaluation.py:132-136)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(_b("c_custkey"))
-
-
-@register(
-    "semi_join_customers",
-    """
-    SELECT CAST(c_custkey AS BIGINT) AS c_custkey FROM customer
-    WHERE c_custkey IN (SELECT o_custkey FROM orders)
-    """,
-)
-def q_semi_join_customers(spark, sf_dir):
-    """Left-semi join (EXISTS) — matched-set membership
-    (evaluation.py:93,104)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(_b("c_custkey"))
-
-
-@register(
-    "levenshtein_pairs",
-    """
-    SELECT CAST(a.p_partkey AS BIGINT) AS id_a, CAST(b.p_partkey AS BIGINT) AS id_b,
-           CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS lev
-    FROM part a JOIN part b
-      ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-    WHERE levenshtein(a.p_name, b.p_name) <= 5
-    """,
-)
-def q_levenshtein_pairs(spark, sf_dir):
-    """Edit-distance similarity — evaluation.py:116-123 via built-in
-    levenshtein.
-
-    Scale shape: the length band ``abs(len(a)-len(b)) <= 5`` rides INSIDE
-    the join condition — a necessary condition for lev <= 5 (each insert/
-    delete changes length by 1), so it prunes the within-brand cross
-    product before the O(len^2) levenshtein evaluates, without changing
-    the result set. Spark 4 also caps the DP early via the 3-arg
-    ``levenshtein(a, b, threshold)`` form."""
-    p = _t(spark, sf_dir, "part")
-    a = p.alias("a")
-    b = p.alias("b")
-    lev = F.levenshtein(F.col("a.p_name"), F.col("b.p_name"), 5)
-    band = F.abs(F.length(F.col("a.p_name")) - F.length(F.col("b.p_name"))) <= 5
-    return (
-        a.join(
-            b,
-            (F.col("a.p_brand") == F.col("b.p_brand"))
-            & (F.col("a.p_partkey") < F.col("b.p_partkey"))
-            & band,
-        )
-        .filter((lev <= 5) & (lev >= 0))
-        .select(
-            F.col("a.p_partkey").cast("long").alias("id_a"),
-            F.col("b.p_partkey").cast("long").alias("id_b"),
-            lev.cast("long").alias("lev"),
-        )
-    )
-
-
-@register(
-    "union_limit",
-    """
-    SELECT * FROM (
-      SELECT c_name AS name, CAST(floor(c_acctbal * 100 + 0.5) / 100 AS DOUBLE) AS acctbal, 'customer' AS src FROM customer
-      UNION ALL
-      SELECT s_name AS name, CAST(floor(s_acctbal * 100 + 0.5) / 100 AS DOUBLE) AS acctbal, 'supplier' AS src FROM supplier)
-    ORDER BY name, src LIMIT 50
-    """,
-)
-def q_union_limit(spark, sf_dir):
-    """Union + deterministic order + limit — datasets.py:163-190 splits
-    union; datasets.py:81-88 limit."""
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name"),
-        pround(F.col("c_acctbal"), 2).alias("acctbal"),
-        F.lit("customer").alias("src"),
-    )
-    s = _t(spark, sf_dir, "supplier").select(
-        F.col("s_name").alias("name"),
-        pround(F.col("s_acctbal"), 2).alias("acctbal"),
-        F.lit("supplier").alias("src"),
-    )
-    return c.unionByName(s).orderBy("name", "src").limit(50)
-
-
-@register(
-    "intersect_nations",
-    """
-    SELECT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer
-    INTERSECT
-    SELECT CAST(s_nationkey AS BIGINT) FROM supplier
-    """,
-)
-def q_intersect_nations(spark, sf_dir):
-    """INTERSECT set op (nations having both customers and suppliers) —
-    completes the union/except/distinct family (SURVEY §2.7)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").cast("long").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").cast("long").alias("nationkey"))
-    return c.intersect(s)
-
-
-@register(
-    "scalar_subquery_above_avg",
-    """
-    SELECT CAST(p.p_partkey AS BIGINT) AS p_partkey, p.p_brand,
-           CAST(floor(p.p_retailprice * 100 + 0.5) / 100 AS DOUBLE) AS p_retailprice
-    FROM part p
-    WHERE p.p_retailprice > (SELECT avg(p2.p_retailprice) FROM part p2
-                             WHERE p2.p_brand = p.p_brand)
-    """,
-)
-def q_scalar_subquery_above_avg(spark, sf_dir):
-    """Correlated scalar subquery (parts above their brand's average):
-    Catalyst decorrelates this into an aggregate + join — the optimizer
-    surface a declarative engine must handle, free at any scale."""
-    p = _t(spark, sf_dir, "part")
-    p.createOrReplaceTempView("_part_ssq")
-    return spark.sql(
-        """
-        SELECT CAST(p.p_partkey AS BIGINT) AS p_partkey, p.p_brand,
-               CAST(floor(p.p_retailprice * 100 + 0.5) / 100 AS DOUBLE) AS p_retailprice
-        FROM _part_ssq p
-        WHERE p.p_retailprice > (SELECT avg(p2.p_retailprice) FROM _part_ssq p2
-                                 WHERE p2.p_brand = p.p_brand)
-        """
-    )
-
-
-@register(
-    "topk_argmax",
-    """
-    SELECT p_brand, CAST(p_partkey AS BIGINT) AS p_partkey,
-           CAST(floor(p_retailprice * 100 + 0.5) / 100 AS DOUBLE) AS p_retailprice
-    FROM (
-      SELECT p_brand, p_partkey, p_retailprice,
-             row_number() OVER (PARTITION BY p_brand
-                                ORDER BY p_retailprice DESC, p_partkey) AS rn
-      FROM part) WHERE rn = 1
-    """,
-)
-def q_topk_argmax(spark, sf_dir):
-    """Top-1 per group — max_by / argmax (data_generation.py:105-108)."""
-    p = _t(spark, sf_dir, "part")
-    w = W.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
-    return (
-        p.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("p_brand", _b("p_partkey"), pround(F.col("p_retailprice"), 2).alias("p_retailprice"))
-    )
-
-
-@register(
-    "uniqueness_check",
-    """
-    SELECT 'customer.c_custkey' AS key, CAST(count(*) AS BIGINT) AS n,
-           CAST(count(DISTINCT c_custkey) AS BIGINT) AS n_distinct,
-           count(*) = count(DISTINCT c_custkey) AS is_unique
-    FROM customer
-    UNION ALL
-    SELECT 'orders.o_orderkey', CAST(count(*) AS BIGINT),
-           CAST(count(DISTINCT o_orderkey) AS BIGINT),
-           count(*) = count(DISTINCT o_orderkey) FROM orders
-    UNION ALL
-    SELECT 'lineitem.(l_orderkey,l_linenumber)', CAST(count(*) AS BIGINT),
-           CAST(count(DISTINCT l_orderkey * 100 + l_linenumber) AS BIGINT),
-           count(*) = count(DISTINCT l_orderkey * 100 + l_linenumber) FROM lineitem
-    """,
-)
-def q_uniqueness_check(spark, sf_dir):
-    """Uniqueness assertion as data (count == countDistinct per key) —
-    the alphabet-uniqueness check of data_generation.py:633-636 as a
-    quality gate; note (l_orderkey, l_linenumber) is intentionally NOT
-    unique in the synthetic data (why every ROWS window here carries
-    full tie-breakers)."""
-    c = _t(spark, sf_dir, "customer").agg(
-        F.lit("customer.c_custkey").alias("key"),
-        F.count("*").cast("long").alias("n"),
-        F.countDistinct("c_custkey").cast("long").alias("n_distinct"),
-        (F.count("*") == F.countDistinct("c_custkey")).alias("is_unique"),
-    )
-    o = _t(spark, sf_dir, "orders").agg(
-        F.lit("orders.o_orderkey").alias("key"),
-        F.count("*").cast("long").alias("n"),
-        F.countDistinct("o_orderkey").cast("long").alias("n_distinct"),
-        (F.count("*") == F.countDistinct("o_orderkey")).alias("is_unique"),
-    )
-    pair = F.col("l_orderkey") * 100 + F.col("l_linenumber")
-    li = _t(spark, sf_dir, "lineitem").agg(
-        F.lit("lineitem.(l_orderkey,l_linenumber)").alias("key"),
-        F.count("*").cast("long").alias("n"),
-        F.countDistinct(pair).cast("long").alias("n_distinct"),
-        (F.count("*") == F.countDistinct(pair)).alias("is_unique"),
-    )
-    return c.unionByName(o).unionByName(li)
-
-
-@register(
-    "distinct_segments",
-    """
-    SELECT DISTINCT c_mktsegment, CAST(c_nationkey AS BIGINT) AS c_nationkey FROM customer
-    """,
-)
-def q_distinct_segments(spark, sf_dir):
-    """distinct() — set de-dup (detection.py:432-438)."""
-    return _t(spark, sf_dir, "customer").select("c_mktsegment", _b("c_nationkey")).distinct()
-
-
-# ==========================================================================
-# 2. Extraction operators (the flagship, SQL-expressible pieces)
+# 1. Extraction operators (the flagship, SQL-expressible pieces)
 # ==========================================================================
 
 
@@ -591,7 +222,7 @@ def q_pdf_extract_pipeline(spark, sf_dir):
 
 
 # ==========================================================================
-# 3. Dedup operators (training-data pipeline, first-class)
+# 2. Dedup operators (training-data pipeline, first-class)
 # ==========================================================================
 
 
@@ -857,7 +488,7 @@ def q_simhash_near_pairs(spark, sf_dir):
 
 
 # ==========================================================================
-# 4. Text analysis (training-data curation)
+# 3. Text analysis (training-data curation)
 # ==========================================================================
 
 
@@ -970,33 +601,8 @@ def q_doc_fingerprint(spark, sf_dir):
 
 
 # ==========================================================================
-# 5. Remaining SURVEY §2 scalar/agg mappings
+# 4. Remaining SURVEY §2 scalar/agg mappings
 # ==========================================================================
-
-
-@register(
-    "combine_line",
-    """
-    SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
-           string_agg(l_returnflag, '' ORDER BY l_linenumber, l_quantity, l_partkey, l_suppkey) AS flags,
-           CAST(min(l_linenumber) AS BIGINT) AS first_line,
-           CAST(max(l_linenumber) AS BIGINT) AS last_line
-    FROM lineitem GROUP BY l_orderkey
-    """,
-)
-def q_combine_line(spark, sf_dir):
-    """combine_line (tools.py:124-147): ordered in-group concatenation +
-    bounding extent — sort_array(collect_list(struct)) then join, with the
-    group bbox as min/max."""
-    li = _t(spark, sf_dir, "lineitem")
-    ordered = F.sort_array(
-        F.collect_list(F.struct("l_linenumber", "l_quantity", "l_partkey", "l_suppkey", "l_returnflag"))
-    )
-    return li.groupBy("l_orderkey").agg(
-        F.array_join(F.transform(ordered, lambda s: s["l_returnflag"]), "").alias("flags"),
-        F.min("l_linenumber").cast("long").alias("first_line"),
-        F.max("l_linenumber").cast("long").alias("last_line"),
-    ).select(_b("l_orderkey"), "flags", "first_line", "last_line")
 
 
 @register(
@@ -1268,69 +874,7 @@ def q_profile_documents(spark, sf_dir):
 
 
 # ==========================================================================
-# 5b. Multi-level aggregation (rollup / cube) — beyond the reference:
-# the summary-table primitives a curation dashboard needs. Both shuffle
-# once on the grouping keys; Spark expands grouping sets map-side, so no
-# extra passes over the input.
-# ==========================================================================
-
-
-@register(
-    "rollup_lineitem",
-    """
-    SELECT coalesce(l_returnflag, '<all>') AS l_returnflag,
-           coalesce(l_linestatus, '<all>') AS l_linestatus,
-           CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(floor(sum(l_quantity) * 100 + 0.5) / 100 AS DOUBLE) AS sum_qty
-    FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-)
-def q_rollup_lineitem(spark, sf_dir):
-    """ROLLUP hierarchy totals (flag -> flag+status -> grand total);
-    grouping_id disambiguates subtotal rows, whose NULL keys surface as
-    a '<all>' sentinel (keeps the driver's sort-based value hash away
-    from NULL comparisons)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.grouping_id().cast("long").alias("gid"),
-        F.count("*").cast("long").alias("n"),
-        pround(F.sum("l_quantity"), 2).alias("sum_qty"),
-    ).select(
-        F.coalesce("l_returnflag", F.lit("<all>")).alias("l_returnflag"),
-        F.coalesce("l_linestatus", F.lit("<all>")).alias("l_linestatus"),
-        "gid",
-        "n",
-        "sum_qty",
-    )
-
-
-@register(
-    "cube_orders",
-    """
-    SELECT coalesce(o_orderstatus, '<all>') AS o_orderstatus,
-           coalesce(o_orderpriority, '<all>') AS o_orderpriority,
-           CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
-           CAST(count(*) AS BIGINT) AS n
-    FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    """,
-)
-def q_cube_orders(spark, sf_dir):
-    """CUBE over two dimensions — every marginal in one shuffle."""
-    o = _t(spark, sf_dir, "orders")
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.grouping_id().cast("long").alias("gid"),
-        F.count("*").cast("long").alias("n"),
-    ).select(
-        F.coalesce("o_orderstatus", F.lit("<all>")).alias("o_orderstatus"),
-        F.coalesce("o_orderpriority", F.lit("<all>")).alias("o_orderpriority"),
-        "gid",
-        "n",
-    )
-
-
-# ==========================================================================
-# 6a. Encoding / alphabet / shuffle / geometry (§2 tail)
+# 5. Encoding / alphabet / shuffle (§2 tail)
 # ==========================================================================
 
 
@@ -1433,49 +977,6 @@ def q_epoch_shuffle(spark, sf_dir):
 
 
 @register(
-    "inclusion_filter",
-    """
-    WITH spans AS (
-      SELECT l_orderkey, l_partkey,
-             l_partkey % 100 AS s, l_partkey % 100 + CAST(l_quantity * 2 AS INTEGER) AS e
-      FROM lineitem)
-    SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey, CAST(l_partkey AS BIGINT) AS l_partkey,
-           CAST(s AS BIGINT) AS start, CAST(e AS BIGINT) AS "end",
-           CAST(greatest(s, 25) AS BIGINT) AS clip_start, CAST(least(e, 75) AS BIGINT) AS clip_end,
-           CAST(floor(CAST(greatest(least(e, 75) - greatest(s, 25), 0) AS DOUBLE) / (e - s) * 1000000 + 0.5) / 1000000 AS DOUBLE) AS keep_ratio
-    FROM spans
-    WHERE e - s > 0
-      AND CAST(greatest(least(e, 75) - greatest(s, 25), 0) AS DOUBLE) / (e - s) >= 0.5
-      AND greatest(least(e, 75) - greatest(s, 25), 0) > 5
-    """,
-)
-def q_inclusion_filter(spark, sf_dir):
-    """Geometric inclusion filter (tools.py:301-311): keep a span only if
-    >= 50% of it survives the clip to [25, 75) and the clipped length
-    exceeds min_len — span arithmetic over spans synthesized from
-    lineitem."""
-    from .operators.geometry import inclusion_filter
-
-    li = _t(spark, sf_dir, "lineitem")
-    spans = li.select(
-        "l_orderkey",
-        "l_partkey",
-        (F.col("l_partkey") % 100).cast("int").alias("start"),
-        ((F.col("l_partkey") % 100) + (F.col("l_quantity") * 2).cast("int")).cast("int").alias("end"),
-    )
-    out = inclusion_filter(spans, lo=25, hi=75, area_threshold=0.5, min_len=5)
-    return out.select(
-        _b("l_orderkey"),
-        _b("l_partkey"),
-        F.col("start").cast("long").alias("start"),
-        F.col("end").cast("long").alias("end"),
-        F.col("clip_start").cast("long").alias("clip_start"),
-        F.col("clip_end").cast("long").alias("clip_end"),
-        pround(F.col("keep_ratio"), 6).alias("keep_ratio"),
-    )
-
-
-@register(
     "pdf_extract",
     """
     WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents),
@@ -1520,7 +1021,7 @@ def q_pdf_extract(spark, sf_dir):
 
 
 # ==========================================================================
-# 6b. Evaluation (precision/recall) — reference evaluation.py:56-147
+# 6. Evaluation (precision/recall) — reference evaluation.py:56-147
 # ==========================================================================
 
 #: Golden IoU pairs: 1-D analogs of the reference goldens
@@ -1737,7 +1238,7 @@ def q_threshold_sweep(spark, sf_dir):
 
 
 # ==========================================================================
-# 6. Curation operators: repetition gates, contamination, PII, strata
+# 7. Curation operators: repetition gates, contamination, PII, strata
 # ==========================================================================
 
 
@@ -2038,103 +1539,6 @@ def q_topk_per_lang(spark, sf_dir):
     )
 
 
-# ==========================================================================
-# 7. TPC-H classics — the canonical OLAP shapes, exact oracles
-# ==========================================================================
-
-
-@register(
-    "tpch_q1",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(floor(sum(l_quantity) * 100 + 0.5) / 100 AS DOUBLE) AS sum_qty,
-           CAST(floor(sum(l_extendedprice) * 100 + 0.5) / 100 AS DOUBLE) AS sum_base_price,
-           CAST(floor(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100 AS DOUBLE) AS sum_disc_price,
-           CAST(floor(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) * 100 + 0.5) / 100 AS DOUBLE) AS sum_charge,
-           CAST(floor(avg(l_quantity) * 1000000 + 0.5) / 1000000 AS DOUBLE) AS avg_qty,
-           CAST(floor(avg(l_extendedprice) * 100 + 0.5) / 100 AS DOUBLE) AS avg_price,
-           CAST(floor(avg(l_discount) * 1000000 + 0.5) / 1000000 AS DOUBLE) AS avg_disc,
-           CAST(count(*) AS BIGINT) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q_tpch_q1(spark, sf_dir):
-    """TPC-H Q1 pricing summary — THE canonical scan+filter+agg shape.
-    Scale notes: the shipdate filter reaches the parquet scan as a
-    pushed predicate, only the 7 referenced columns are read, and the
-    agg is partial (map-side combine) before the single tiny shuffle
-    to at most |flag|x|status| groups."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
-    )
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    out = li.groupBy("l_returnflag", "l_linestatus").agg(
-        pround(F.sum("l_quantity"), 2).alias("sum_qty"),
-        pround(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-        pround(F.sum(disc), 2).alias("sum_disc_price"),
-        pround(F.sum(disc * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-        pround(F.avg("l_quantity"), 6).alias("avg_qty"),
-        pround(F.avg("l_extendedprice"), 2).alias("avg_price"),
-        pround(F.avg("l_discount"), 6).alias("avg_disc"),
-        F.count("*").cast("long").alias("count_order"),
-    )
-    return out
-
-
-@register(
-    "tpch_q3",
-    """
-    SELECT CAST(l.l_orderkey AS BIGINT) AS l_orderkey,
-           CAST(floor(sum(l.l_extendedprice * (1 - l.l_discount)) * 100 + 0.5) / 100 AS DOUBLE) AS revenue,
-           strftime(o.o_orderdate, '%Y-%m-%d') AS o_date,
-           o.o_orderpriority
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-      AND l.l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-    GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-    ORDER BY revenue DESC, o_date, l_orderkey
-    LIMIT 10
-    """,
-)
-def q_tpch_q3(spark, sf_dir):
-    """TPC-H Q3 shipping priority — the canonical selective
-    dim-fact-fact join + agg + top-k. Scale notes: the filtered
-    customer side is explicitly broadcast (dimension ~1/5 of
-    customers); orders⋈lineitem shuffles once on the orderkey; both
-    date filters push to the scans; the top-10 is
-    TakeOrderedAndProject (no global sort materialization). The extra
-    orderkey tie-break makes the LIMIT deterministic cross-engine."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-03-15 00:00:00").cast("timestamp")
-    )
-    j = li.join(
-        orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    )
-    out = j.groupBy("l_orderkey", "o_orderdate", "o_orderpriority").agg(
-        pround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
-    )
-    return (
-        out.select(
-            F.col("l_orderkey").cast("long").alias("l_orderkey"),
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_date"),
-            "o_orderpriority",
-        )
-        .orderBy(F.desc("revenue"), F.asc("o_date"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
 @register(
     "dedup_incremental",
     f"""
@@ -2233,8 +1637,7 @@ def q_merge_upsert_documents(spark, sf_dir):
     %10==0 re-extracted as uppercase) plus genuinely new rows
     (%100==0, shifted ids) merged into the corpus — matched rows
     UPDATE, unmatched INSERT, rest carry over. ONE full-outer
-    equi-join; on Iceberg this plan IS `MERGE INTO` (tableio docstring
-    maps the seam)."""
+    equi-join; on Iceberg this plan IS `MERGE INTO`."""
     from .operators.merge import merge_upsert
 
     docs = _t(spark, sf_dir, "documents")
@@ -3164,209 +2567,6 @@ def q_cms_heavy_hitters(spark, sf_dir):
 
 
 @register(
-    "bloom_membership",
-    """
-    WITH m AS (
-      SELECT DISTINCT CAST(o_custkey AS VARCHAR) AS v FROM orders
-      WHERE o_orderpriority = '1-URGENT' AND o_orderstatus = 'F'),
-    i4 AS (SELECT unnest([0, 1, 2, 3]) AS i),
-    mh AS (SELECT ('0x' || substr(md5(v), 1, 13))::BIGINT AS h FROM m),
-    pos AS (SELECT ((h >> (12 * i)) % 4096) AS p FROM mh CROSS JOIN i4),
-    bloom AS (
-      SELECT p >> 5 AS word_idx,
-             bit_or(1::BIGINT << CAST(p % 32 AS INT)) AS bits
-      FROM pos GROUP BY p >> 5),
-    c AS (
-      SELECT c_custkey,
-             ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 13))::BIGINT AS h
-      FROM customer),
-    probes AS (SELECT c_custkey, ((h >> (12 * i)) % 4096) AS p FROM c CROSS JOIN i4),
-    hits AS (
-      SELECT c_custkey,
-             CASE WHEN bits IS NOT NULL
-                   AND ((bits >> CAST(p % 32 AS INT)) & 1) = 1
-                  THEN 1 ELSE 0 END AS hit
-      FROM probes LEFT JOIN bloom ON (p >> 5) = word_idx)
-    SELECT h.c_custkey,
-           CAST(CASE WHEN sum(hit) = 4 THEN 1 ELSE 0 END AS INT) AS bloom_maybe,
-           CAST(CASE WHEN h.c_custkey IN (
-                 SELECT o_custkey FROM orders
-                 WHERE o_orderpriority = '1-URGENT' AND o_orderstatus = 'F')
-                THEN 1 ELSE 0 END AS INT) AS is_present
-    FROM hits h GROUP BY h.c_custkey
-    """,
-)
-def q_bloom_membership(spark, sf_dir):
-    """Bloom-filter membership, a leg of the sketch family (CMS =
-    frequency, Bloom = membership; Bloom 1970): build a
-    4096-bit / k=4 filter over the custkeys of urgent finished orders
-    (one exploded projection + one map-side-combined bit_or groupBy —
-    the filter IS the shuffle output, 128 int64 words however large the
-    fact table), collect it (control-plane, <= 128 rows), and probe
-    EVERY customer as a ZERO-SHUFFLE projection (`with_bloom_maybe`:
-    array literal + per-row bit test,
-    single WholeStageCodegen span, no join). At 100 TB this is explicit
-    runtime-filter pushdown: the broadcast filter prunes a fact scan to
-    probable matches before the exact join runs. `is_present` (exact
-    semi-join) rides along as the accuracy exhibit: bloom_maybe is 1 for
-    every present key (NO false negatives, structurally) and the
-    oracle's bit-identical rebuild attests every false positive too
-    (both engines slice the same md5 into the same 4 x 12-bit fields).
-    """
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    members = (
-        orders.filter(
-            (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderstatus") == "F")
-        )
-        .select(F.col("o_custkey").cast("string").alias("v"))
-        .distinct()
-    )
-    bloom = SK.bloom_build(members, "v", k=4, m_bits=4096)
-    words = SK.bloom_collect(bloom, 4096)
-    probed = SK.with_bloom_maybe(
-        cust.select("c_custkey", F.col("c_custkey").cast("string").alias("_v")),
-        words,
-        "_v",
-        k=4,
-        m_bits=4096,
-    ).drop("_v")
-    present = (
-        orders.filter(
-            (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderstatus") == "F")
-        )
-        .select("o_custkey")
-        .distinct()
-    )
-    return (
-        probed.join(
-            present.withColumn("is_present", F.lit(1)),
-            probed.c_custkey == present.o_custkey,
-            "left",
-        )
-        .select(
-            "c_custkey",
-            F.col("bloom_maybe").cast("int").alias("bloom_maybe"),
-            F.coalesce(F.col("is_present"), F.lit(0)).cast("int").alias("is_present"),
-        )
-    )
-
-
-@register(
-    "incremental_agg_merge",
-    """
-    SELECT o_orderpriority,
-           CAST(year(o_orderdate) AS INT) AS o_year,
-           CAST(count(*) AS BIGINT) AS cnt,
-           CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-             AS sum_cents,
-           CAST(min(o_totalprice) AS DOUBLE) AS min_v,
-           CAST(max(o_totalprice) AS DOUBLE) AS max_v,
-           CAST(floor(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) / 100.0
-                      / count(*) * 1000000 + 0.5) / 1000000 AS DOUBLE) AS avg_v
-    FROM orders
-    GROUP BY o_orderpriority, year(o_orderdate)
-    """,
-)
-def q_incremental_agg_merge(spark, sf_dir):
-    """Incremental materialized-view maintenance: per (priority, year)
-    order stats kept as a STATE table and refreshed by FOLDING a delta
-    instead of rescanning history. The Spark side deliberately computes
-    state(base < 1999) and state(delta >= 1999) separately and merges
-    them (`operators/incremental.py`); the oracle is the flat GROUP BY
-    over everything — their hash equality is the maintenance theorem
-    ``merge(state(A), state(B)) == state(A U B)`` attested on real
-    splits (1995-1998 keys live only in base, 1999-2001 only in delta,
-    so pass-through, fold, and new-key paths all execute). Sums are
-    int64 cents quantized BEFORE aggregation: integer addition is
-    associative, so the fold is bit-identical to the recompute under
-    ANY partitioning — the discipline that makes cross-job state exact
-    at 100 TB, where the nightly delta is the only thing scanned and
-    the merge input is two |keys|-sized frames."""
-    from .operators import incremental as INC
-
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        F.year("o_orderdate").cast("int").alias("o_year"),
-        "o_totalprice",
-        "o_orderdate",
-    )
-    keys = ["o_orderpriority", "o_year"]
-    cutoff = F.lit("1999-01-01").cast("timestamp")
-    base = INC.agg_state(orders.filter(F.col("o_orderdate") < cutoff), keys, "o_totalprice")
-    delta = INC.agg_state(orders.filter(F.col("o_orderdate") >= cutoff), keys, "o_totalprice")
-    return INC.finalize_state(INC.merge_agg_state(base, delta, keys), keys)
-
-
-@register(
-    "hdr_quantile_sketch",
-    """
-    WITH c AS (
-      SELECT o_orderpriority AS pri,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-      FROM orders
-    ),
-    b AS (
-      SELECT pri,
-             CASE WHEN cents < 32 THEN cents
-                  ELSE (length(bin(cents)) - 5) * 16
-                       + (cents >> (length(bin(cents)) - 5)) END AS bucket
-      FROM c
-    ),
-    h AS (SELECT pri, bucket, count(*) AS cnt FROM b GROUP BY pri, bucket),
-    w AS (
-      SELECT pri, bucket, cnt,
-             sum(cnt) OVER (PARTITION BY pri ORDER BY bucket) AS cum,
-             sum(cnt) OVER (PARTITION BY pri) AS n
-      FROM h
-    ),
-    l AS (
-      SELECT *,
-             CASE WHEN bucket < 32 THEN bucket
-                  ELSE ((bucket % 16) + 16) << (bucket // 16 - 1) END AS lb
-      FROM w
-    )
-    SELECT pri AS o_orderpriority,
-           CAST(max(n) AS BIGINT) AS n_rows,
-           CAST(count(*) AS BIGINT) AS n_buckets,
-           CAST(min(CASE WHEN cum >= (n * 500 + 999) // 1000 THEN lb END) AS BIGINT)
-             AS p500_cents_lb,
-           CAST(min(CASE WHEN cum >= (n * 900 + 999) // 1000 THEN lb END) AS BIGINT)
-             AS p900_cents_lb,
-           CAST(min(CASE WHEN cum >= (n * 990 + 999) // 1000 THEN lb END) AS BIGINT)
-             AS p990_cents_lb
-    FROM l
-    GROUP BY pri
-    """,
-)
-def q_hdr_quantile_sketch(spark, sf_dir):
-    """Mergeable quantile sketch (HDR/DDSketch log-bucket histogram) —
-    the third member of the sketch family (CMS = frequency, Bloom =
-    membership, HDR = quantiles). Per-priority
-    p50/p90/p99 of o_totalprice read from bounded bucket state instead
-    of a rank-exact data shuffle: the Spark side deliberately builds
-    TWO shard histograms (orders < 1999 / >= 1999), merges them by
-    per-bucket addition, and reads quantiles off the merged state; the
-    DuckDB oracle recomputes flat over everything — hash equality IS
-    merge(state(A), state(B)) == state(A ∪ B) on top of the bucket and
-    readout formulas reproducing bit-for-bit (pure integer ops:
-    fixed-point cents, length(bin(x)) octaves, shifts, integer-ceiling
-    ranks). At 100 TB the histogram is <= 16*63 rows per group however
-    large the scan; days/shards/micro-batches fold exactly like
-    ``operators/incremental.py`` state."""
-    from .operators import sketches as SK
-
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderpriority", "o_totalprice", "o_orderdate"
-    )
-    cutoff = F.lit("1999-01-01").cast("timestamp")
-    keys = ["o_orderpriority"]
-    base = SK.hdr_histogram(orders.filter(F.col("o_orderdate") < cutoff), keys, "o_totalprice")
-    delta = SK.hdr_histogram(orders.filter(F.col("o_orderdate") >= cutoff), keys, "o_totalprice")
-    return SK.hdr_quantiles(SK.hdr_merge(base, delta, keys), keys, (500, 900, 990))
-
-
-@register(
     "quality_classifier",
     """
     WITH t AS (
@@ -3413,200 +2613,6 @@ def q_quality_classifier(spark, sf_dir):
             F.col("doc_id").cast("long").alias("doc_id"), "text"
         )
     )
-
-
-@register(
-    "bucketed_join_stats",
-    """
-    SELECT c_mktsegment,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-             AS sum_cents
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_mktsegment
-    """,
-)
-def q_bucketed_join_stats(spark, sf_dir):
-    """Co-located join via Hive-style bucketed tables
-    (``sources/bucketed.py``): both sides are written ONCE with
-    ``bucketBy(8, custkey)`` — paying the hash shuffle at ingest — then
-    the join plan needs NO Exchange on either input (SortMergeJoin
-    reads bucket i vs bucket i; zero-exchange plan machine-asserted in
-    tests/test_bucketed.py with broadcast disabled). At 100 TB this is
-    the recurring-join playbook: the fact table's daily joins against
-    co-bucketed dimensions never re-shuffle the fact side. The oracle
-    computes the same join flat — layout must never change values."""
-    from .sources import bucketed as B
-
-    orders_path = _staging_path(sf_dir, "bkt_orders", "orders")
-    orders = B.ensure_bucketed(
-        spark,
-        lambda: _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice"),
-        Path(orders_path).name,
-        orders_path,
-        "o_custkey",
-        8,
-    )
-    cust_path = _staging_path(sf_dir, "bkt_customer", "customer")
-    cust = B.ensure_bucketed(
-        spark,
-        lambda: _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
-        Path(cust_path).name,
-        cust_path,
-        "c_custkey",
-        8,
-    )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    return (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum(cents).cast("long").alias("sum_cents"),
-        )
-    )
-
-
-def _zspread_sql(e: str) -> str:
-    """DuckDB twin of ``sources.layout.zspread``: the shift-or-mask
-    ladder as nested SQL (textually duplicated per round — fine for an
-    oracle; Spark's side uses Column ops without duplication)."""
-    s = f"({e} & 65535)"
-    for sh, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555)):
-        s = f"((({s}) | (({s}) << {sh})) & {mask})"
-    return s
-
-
-@register(
-    "zorder_cells",
-    f"""
-    WITH z AS (
-      SELECT (l_orderkey & 65535) AS x, (l_partkey & 65535) AS y,
-             ({_zspread_sql('l_orderkey')} | ({_zspread_sql('l_partkey')} << 1))
-               AS zval
-      FROM lineitem)
-    SELECT CAST(zval >> 24 AS BIGINT) AS cell,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(min(x) AS BIGINT) AS min_x,
-           CAST(max(x) AS BIGINT) AS max_x,
-           CAST(min(y) AS BIGINT) AS min_y,
-           CAST(max(y) AS BIGINT) AS max_y
-    FROM z
-    GROUP BY zval >> 24
-    """,
-)
-def q_zorder_cells(spark, sf_dir):
-    """Z-order (Morton) clustering made measurable
-    (``sources/layout.py:zorder_key`` — the multi-dim upgrade of the
-    writer's 1-D range clustering; Delta/Iceberg OPTIMIZE ZORDER
-    semantics): per quadtree cell (top 8 z-bits = 4 bits of each
-    dimension) the occupancy and bounding box of (l_partkey,
-    l_suppkey). The box IS the pruning guarantee — every cell confines
-    BOTH dimensions to a 2^12 range, so a z-ordered file layout keeps
-    parquet min/max footers tight for predicates on EITHER column.
-    The bit-spread ladder is pure int64 shift/or/mask, reproduced
-    bit-for-bit by the DuckDB oracle; one map-side-combined groupBy
-    over <= 256 cells — layout math, not a data shuffle."""
-    from .sources import layout as L
-
-    return L.zcell_stats(_t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey", 4)
-
-
-@register(
-    "profile_orders",
-    """
-    SELECT 'o_orderkey' AS col_name,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(*) - count(o_orderkey) AS BIGINT) AS n_null,
-           CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_distinct,
-           CAST(min(o_orderkey) AS VARCHAR) AS min_repr,
-           CAST(max(o_orderkey) AS VARCHAR) AS max_repr
-    FROM orders
-    UNION ALL
-    SELECT 'o_orderpriority',
-           CAST(count(*) AS BIGINT),
-           CAST(count(*) - count(o_orderpriority) AS BIGINT),
-           CAST(count(DISTINCT o_orderpriority) AS BIGINT),
-           min(o_orderpriority), max(o_orderpriority)
-    FROM orders
-    UNION ALL
-    SELECT 'o_totalprice',
-           CAST(count(*) AS BIGINT),
-           CAST(count(*) - count(o_totalprice) AS BIGINT),
-           CAST(count(DISTINCT o_totalprice) AS BIGINT),
-           CAST(CAST(floor(min(o_totalprice) * 100 + 0.5) AS BIGINT) AS VARCHAR),
-           CAST(CAST(floor(max(o_totalprice) * 100 + 0.5) AS BIGINT) AS VARCHAR)
-    FROM orders
-    UNION ALL
-    SELECT 'o_orderdate',
-           CAST(count(*) AS BIGINT),
-           CAST(count(*) - count(o_orderdate) AS BIGINT),
-           CAST(count(DISTINCT o_orderdate) AS BIGINT),
-           CAST(epoch_us(min(o_orderdate)) AS VARCHAR),
-           CAST(epoch_us(max(o_orderdate)) AS VARCHAR)
-    FROM orders
-    """,
-)
-def q_profile_orders(spark, sf_dir):
-    """One-scan data profile (``operators/profile.py``): per-column
-    null count, exact cardinality, and type-rendered min/max for four
-    orders columns — computed in ONE aggregate over ONE scan (Expand
-    replicates rows per distinct-agg AFTER column pruning; the
-    HLL-sketch swap is documented for very wide tables), then pivoted
-    row-per-column with ``stack``. Min/max render engine-portably
-    (ints/strings cast, doubles as floor cents, timestamps as unix
-    micros), so the DuckDB oracle — four per-column aggregates UNION
-    ALL'd — matches bit-for-bit."""
-    from .operators.profile import profile_table
-
-    return profile_table(
-        _t(spark, sf_dir, "orders"),
-        ["o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"],
-    )
-
-
-_EXPECT_RULES = [
-    ("shipdate present", "l_shipdate IS NOT NULL"),
-    ("qty le 30", "l_quantity <= 30"),
-    ("tax le 5pct", "l_tax <= 0.05"),
-    ("discount le 8pct", "l_discount <= 0.08"),
-    ("returnflag known", "l_returnflag IN ('A', 'N', 'R')"),
-]
-
-_EXPECT_ORACLE = (
-    "WITH t AS (SELECT CAST(count(*) AS BIGINT) AS n, "
-    + ", ".join(
-        "CAST(sum(CASE WHEN NOT coalesce({p}, false) THEN 1 ELSE 0 END) AS BIGINT) AS v{i}".format(
-            p=p, i=i
-        )
-        for i, (_, p) in enumerate(_EXPECT_RULES)
-    )
-    + " FROM lineitem) "
-    + " UNION ALL ".join(
-        "SELECT CAST({i} AS BIGINT) AS rule_idx, '{n}' AS rule_name, n AS n_rows, "
-        "v{i} AS n_violations, "
-        "CAST(CASE WHEN n = 0 THEN 0 ELSE v{i} * 1000000 // n END AS BIGINT) AS violation_ppm, "
-        "CAST(CASE WHEN v{i} = 0 THEN 1 ELSE 0 END AS BIGINT) AS passed FROM t".format(
-            i=i, n=n
-        )
-        for i, (n, _) in enumerate(_EXPECT_RULES)
-    )
-)
-
-
-@register("expectations_lineitem", _EXPECT_ORACLE)
-def q_expectations_lineitem(spark, sf_dir):
-    """Data-contract gate (``operators/expectations.py``): five SQL
-    rules over lineitem — the SAME predicate text runs in Spark and in
-    the DuckDB oracle — evaluated in ONE aggregate over ONE scan (no
-    Expand: plain conditional sums, whole-stage codegen), pivoted
-    row-per-rule with ``stack``. NULL predicates count as violations
-    (strict-gate semantics). The mix matters: two rules pass clean
-    (TPC-H invariants) and three carry real violation counts, so the
-    hash attests both arms of the ppm/passed arithmetic."""
-    from .operators.expectations import check_expectations
-
-    return check_expectations(_t(spark, sf_dir, "lineitem"), _EXPECT_RULES)
 
 
 #: Deterministic dirty-URL synthesis from doc_id — identical text runs
@@ -3675,129 +2681,6 @@ def q_url_canonicalize(spark, sf_dir):
         "url",
         canonicalize_url(F.col("url")).alias("canon_url"),
         url_host(F.col("url")).alias("host"),
-    )
-
-
-@register(
-    "tpch_q5",
-    """
-    SELECT n.n_name,
-           CAST(floor(sum(l.l_extendedprice * (1 - l.l_discount)) * 100 + 0.5) / 100 AS DOUBLE) AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY n.n_name
-    """,
-)
-def q_tpch_q5(spark, sf_dir):
-    """TPC-H Q5 local-supplier revenue — the canonical 6-table snowflake
-    join. Scale notes: the dimension chain region->nation->customer
-    folds into ONE broadcast side carrying (custkey, nationkey, n_name);
-    orders joins it after its date filter pushes to the scan; lineitem
-    joins orders on the orderkey (the one fact-fact shuffle); supplier
-    broadcasts with the c_nationkey = s_nationkey "local supplier"
-    condition as part of the join key, so no post-join filter survives.
-    Revenue rendered by the shared pround(2) convention."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation").join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-    )
-    cust = (
-        _t(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", "c_nationkey", "n_name")
-    )
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-    )
-    o_c = orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")).select(
-        "o_orderkey", "c_nationkey", "n_name"
-    )
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    j = (
-        li.join(o_c, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            F.broadcast(sup),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-    )
-    return j.groupBy("n_name").agg(
-        pround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-            "revenue"
-        )
-    )
-
-
-@register(
-    "tpch_q10",
-    """
-    SELECT CAST(c.c_custkey AS BIGINT) AS c_custkey,
-           c.c_name,
-           CAST(floor(sum(l.l_extendedprice * (1 - l.l_discount)) * 100 + 0.5) / 100 AS DOUBLE) AS revenue,
-           CAST(floor(c.c_acctbal * 100 + 0.5) / 100 AS DOUBLE) AS c_acctbal,
-           n.n_name
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-      AND l.l_returnflag = 'R'
-    GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-    """,
-)
-def q_tpch_q10(spark, sf_dir):
-    """TPC-H Q10 returned-item reporting — fact-fact join with a
-    selective fact filter on EACH side (quarter of orders, 'R'
-    lineitems), grouped by customer, top-20 by lost revenue. Scale
-    notes: both filters push to the scans; lineitem⋈orders shuffles on
-    the orderkey; customer+nation fold into one broadcast side; top-20
-    is TakeOrderedAndProject with a custkey tie-break for
-    cross-engine-deterministic LIMIT."""
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cust = (
-        _t(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", "c_name", "c_acctbal", "n_name")
-    )
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    j = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey")).join(
-        F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
-    )
-    out = j.groupBy("c_custkey", "c_name", "c_acctbal", "n_name").agg(
-        pround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-            "revenue"
-        )
-    )
-    return (
-        out.select(
-            F.col("c_custkey").cast("long").alias("c_custkey"),
-            "c_name",
-            "revenue",
-            pround(F.col("c_acctbal"), 2).alias("c_acctbal"),
-            "n_name",
-        )
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
     )
 
 
@@ -3888,45 +2771,6 @@ def q_orc_roundtrip(spark, sf_dir):
     out = read_orc(spark, path).filter(F.col("n_chars") >= 100)
     return out.select(
         F.col("doc_id").cast("long").alias("id"), "text", "lang", "source", _b("n_chars")
-    )
-
-
-@register(
-    "copurchase_lift",
-    """
-    WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
-    kept AS (SELECT * FROM items WHERE b IN
-             (SELECT b FROM items GROUP BY b HAVING count(*) <= 100)),
-    nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS n_baskets FROM kept),
-    ic AS (SELECT i, CAST(count(*) AS BIGINT) AS cnt FROM kept GROUP BY 1),
-    pairs AS (SELECT a.i AS item_a, b2.i AS item_b,
-                     CAST(count(*) AS BIGINT) AS pair_count
-              FROM kept a JOIN kept b2 ON a.b = b2.b AND a.i < b2.i
-              GROUP BY 1, 2)
-    SELECT p.item_a, p.item_b, p.pair_count,
-           ca.cnt AS count_a, cb.cnt AS count_b, nb.n_baskets,
-           CAST(p.pair_count * 1000000 // ca.cnt * nb.n_baskets // cb.cnt AS BIGINT) AS lift_x1e6
-    FROM pairs p
-    JOIN ic ca ON p.item_a = ca.i
-    JOIN ic cb ON p.item_b = cb.i
-    CROSS JOIN nb
-    ORDER BY pair_count DESC, item_a, item_b LIMIT 20
-    """,
-)
-def q_copurchase_lift(spark, sf_dir):
-    """Market-basket co-occurrence (``operators/basket.py``): top-20
-    part pairs bought in one order, with integer lift (division order
-    is part of the contract, mirrored in the oracle). The scale story
-    is the basket-size CAP applied BEFORE the self-join — pairs are
-    quadratic in basket size, so one degenerate basket would emit its
-    square; capped baskets are excluded whole (partial baskets would
-    bias pair counts). 1-row n_baskets broadcast (whitelisted BNLJ);
-    top-20 is TakeOrderedAndProject."""
-    from .operators.basket import copurchase_pairs
-
-    return copurchase_pairs(
-        _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey",
-        max_items_per_basket=100, top_k=20,
     )
 
 
@@ -4027,41 +2871,6 @@ def q_snapshot_change_feed(spark, sf_dir):
     return out.select(F.col("doc_id").cast("long").alias("doc_id"), "change")
 
 
-_SQL_IFACE = """
-WITH daily AS (
-    SELECT date_format(o_orderdate, 'yyyy-MM') AS month,
-           date_format(o_orderdate, 'yyyy-MM-dd') AS day,
-           CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT) AS revenue_cents,
-           CAST(count(*) AS BIGINT) AS n_orders
-    FROM orders GROUP BY 1, 2
-), ranked AS (
-    SELECT *, row_number() OVER (
-        PARTITION BY month ORDER BY revenue_cents DESC, day
-    ) AS rn
-    FROM daily
-)
-SELECT month, day, revenue_cents, n_orders
-FROM ranked WHERE rn = 1
-"""
-
-
-@register(
-    "sql_interface",
-    _SQL_IFACE.replace("date_format(o_orderdate, 'yyyy-MM')", "strftime(o_orderdate, '%Y-%m')")
-    .replace("date_format(o_orderdate, 'yyyy-MM-dd')", "strftime(o_orderdate, '%Y-%m-%d')"),
-)
-def q_sql_interface(spark, sf_dir):
-    """SQL-first interface: the tables registered as TEMP VIEWS and the
-    whole query — CTEs, window rank, integer rendering — written as ONE
-    ``spark.sql`` string (top revenue day per month). Proves a user of
-    the reference can drive this engine with plain ANSI SQL, not just
-    the DataFrame API; Catalyst plans both identically. Only the
-    date-format function name differs from the DuckDB oracle
-    (date_format vs strftime — dialect, not semantics)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(_SQL_IFACE.replace("FROM orders", "FROM orders_v"))
-
-
 @register(
     "sentence_split",
     """
@@ -4093,40 +2902,6 @@ def q_sentence_split(spark, sf_dir):
     )
 
 
-@register(
-    "unpivot_brand_metrics",
-    """
-    WITH a AS (
-        SELECT p_brand,
-               CAST(floor(sum(p_retailprice) * 100 + 0.5) / 100 AS DOUBLE) AS total_retail,
-               CAST(floor(avg(p_size) * 1000000 + 0.5) / 1000000 AS DOUBLE) AS avg_size,
-               CAST(count(*) AS DOUBLE) AS n_parts
-        FROM part GROUP BY p_brand
-    )
-    SELECT p_brand, 'total_retail' AS metric, total_retail AS value FROM a
-    UNION ALL SELECT p_brand, 'avg_size' AS metric, avg_size AS value FROM a
-    UNION ALL SELECT p_brand, 'n_parts' AS metric, n_parts AS value FROM a
-    """,
-)
-def q_unpivot_brand_metrics(spark, sf_dir):
-    """Wide→long reshape via the native ``DataFrame.unpivot`` (UNPIVOT/
-    MELT) — the one relational surface the registry lacked. Per-brand
-    aggregates are unpivoted into ``(p_brand, metric, value)``; the
-    oracle is the engine-portable UNION ALL form, pinning Spark's
-    unpivot value/name semantics. Unpivot is a zero-shuffle Expand
-    (3× the already-aggregated frame), so the only exchange is the
-    groupBy."""
-    part = _t(spark, sf_dir, "part")
-    agg = part.groupBy("p_brand").agg(
-        pround(F.sum("p_retailprice"), 2).alias("total_retail"),
-        pround(F.avg("p_size"), 6).alias("avg_size"),
-        F.count(F.lit(1)).cast("double").alias("n_parts"),
-    )
-    return agg.unpivot(
-        ["p_brand"], ["total_retail", "avg_size", "n_parts"], "metric", "value"
-    )
-
-
 # ==========================================================================
 # Driver-window ordering
 # ==========================================================================
@@ -4140,21 +2915,6 @@ def q_unpivot_brand_metrics(spark, sf_dir):
 # round so CORRECTNESS_r04 ∪ CORRECTNESS_r05 covers the whole registry.
 
 _R3_ATTESTED = [
-    "ordering_window",
-    "running_offset",
-    "percentiles_by_brand",
-    "ntile_quartiles",
-    "group_max_filter",
-    "having_count",
-    "anti_join_customers",
-    "semi_join_customers",
-    "levenshtein_pairs",
-    "union_limit",
-    "intersect_nations",
-    "scalar_subquery_above_avg",
-    "topk_argmax",
-    "uniqueness_check",
-    "distinct_segments",
     "decode_chain",
     "extract_documents",
     "conversation_rollup",
@@ -4169,14 +2929,11 @@ _R3_ATTESTED = [
     "quality_scores",
     "token_counts",
     "doc_fingerprint",
-    "combine_line",
     "sha256_manifest",
     "curate_corpus",
     "bm25_search",
     "sample_documents",
     "profile_documents",
-    "rollup_lineitem",
-    "cube_orders",
 ]
 
 

@@ -21,11 +21,8 @@ with summation order. min/max/avg never do cross-row float arithmetic
 (avg divides two exact values at read time).
 
 The correctness contract IS the maintenance theorem:
-``merge(state(A), state(B)) == state(A UNION ALL B)`` for any split —
-the registered ``incremental_agg_merge`` query computes the left side
-on Spark (explicit base/delta fold) and its DuckDB oracle computes the
-right side (one flat GROUP BY over everything), so the value hash
-attests the fold, not just the arithmetic.
+``merge(state(A), state(B)) == state(A UNION ALL B)`` for any split
+(``tests/test_incremental.py``).
 
 Reference analog: the recognizer's running corpus statistics
 (/root/reference/keras_ocr/recognition.py:61-74) recomputed per epoch;

@@ -4,8 +4,7 @@ A daily ingest doesn't append blindly: corrected turns / re-crawled
 docs must UPDATE their row, genuinely new keys INSERT. On Iceberg this
 is ``MERGE INTO target USING source ON key WHEN MATCHED THEN UPDATE
 WHEN NOT MATCHED THEN INSERT`` (copy-on-write / merge-on-read decided
-by the table); this sandbox has no Iceberg jars (see
-``sources/tableio.IcebergTableIO``), so the operator computes the
+by the table); without the Iceberg jars the operator computes the
 exact post-MERGE table as a plan any backend can write back.
 
 Plan shape: ONE full-outer equi-join on the key (source wins where

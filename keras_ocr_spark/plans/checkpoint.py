@@ -30,8 +30,7 @@ Graft analog of the reference's resume-from-checkpoint training loop
 
 At 10^12-turn scale the real implementation is Iceberg snapshot IDs +
 partition-level commit metadata; the manifest JSON here mirrors exactly
-those fields behind a thin seam (``TableIO``), so the catalog swap is a
-config change, not a rewrite.
+those fields.
 
 Atomicity is ``plans.observe.commit``'s: the data is written first and
 each manifest is published last, atomically, and names the partition

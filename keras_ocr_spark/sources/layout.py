@@ -9,8 +9,7 @@ At 100 TB the writer's file layout decides every later scan's cost:
   (``conv_id, turn_idx``) plus an in-file sort gives readers contiguous
   conversations and parquet min/max pruning on the cluster keys (the
   poor man's Z-order for a 1-D-dominant access pattern; real Iceberg
-  would express this as a sort order in table metadata — same seam as
-  ``TableIO``).
+  would express this as a sort order in table metadata).
 
 Sizing uses the actual on-disk bytes of the input (driver-side file
 listing — cheap metadata, no data read), so the target holds for any

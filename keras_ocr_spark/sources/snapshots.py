@@ -6,9 +6,8 @@ not: every write is a new immutable VERSION, readers pick a version
 (latest by default, any historical one on demand), and the commit
 point is a tiny metadata swap — never the data files themselves. This
 module provides that contract on the same parquet+manifest substrate
-as ``plans/checkpoint.py``, for deployments without the Iceberg jars
-(``sources/tableio.py`` holds the config-swap seam for when they
-exist).
+as ``plans/checkpoint.py``, for deployments without the Iceberg
+jars.
 
 Layout:
 

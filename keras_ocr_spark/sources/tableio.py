@@ -1,71 +1,9 @@
-"""TableIO seam: Iceberg-style table access behind a thin interface.
-
-The north rule targets Iceberg transcript tables. This sandbox has no
-Iceberg runtime jars and no network, so the seam has two backends:
-
-- ``ParquetTableIO`` (active): plain parquet reads and writes. The
-  snapshot/partition metadata an Iceberg catalog keeps is emulated by
-  the JSON manifests that ``plans.observe.commit`` publishes after
-  each write (checkpoint buckets, snapshot versions, streaming
-  epochs);
-- ``IcebergTableIO`` (stub, import-gated): the production backend —
-  ``spark.read.table(...)`` / ``df.writeTo(tbl).append()`` with snapshot
-  pinning via ``VERSION AS OF``. Both expose the same
-  ``read``/``append``/``overwrite``; no pipeline code references a
-  concrete backend.
-"""
+"""Interchange formats: JSON-lines and ORC reads and writes. JSON-lines
+reads take an explicit schema, so no inference pass runs."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-@dataclass
-class ParquetTableIO:
-    """Parquet-backed tables (sandbox default)."""
-
-    spark: SparkSession
-
-    def read(self, path_or_name: str) -> DataFrame:
-        return self.spark.read.parquet(path_or_name)
-
-    def append(self, df: DataFrame, path_or_name: str) -> None:
-        df.write.mode("append").parquet(path_or_name)
-
-    def overwrite(self, df: DataFrame, path_or_name: str) -> None:
-        df.write.mode("overwrite").parquet(path_or_name)
-
-
-@dataclass
-class IcebergTableIO:
-    """Iceberg catalog tables (production; requires iceberg-spark-runtime
-    on the classpath and a configured catalog)."""
-
-    spark: SparkSession
-    snapshot_id: int | None = None
-
-    def __post_init__(self):
-        jars = self.spark.conf.get("spark.jars.packages", "")
-        if "iceberg" not in jars:
-            raise NotImplementedError(
-                "Iceberg runtime not on the classpath in this sandbox; "
-                "configure spark.jars.packages=org.apache.iceberg:iceberg-spark-runtime-... "
-                "and a catalog, then this backend is a drop-in"
-            )
-
-    def read(self, name: str) -> DataFrame:
-        reader = self.spark.read
-        if self.snapshot_id is not None:
-            reader = reader.option("snapshot-id", str(self.snapshot_id))
-        return reader.table(name)
-
-    def append(self, df: DataFrame, name: str) -> None:
-        df.writeTo(name).append()
-
-    def overwrite(self, df: DataFrame, name: str) -> None:
-        df.writeTo(name).overwritePartitions()
 
 
 def write_jsonl(df: DataFrame, path: str) -> None:

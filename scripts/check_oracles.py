@@ -19,7 +19,7 @@ import duckdb  # noqa: E402
 from keras_ocr_spark.driver_queries import QUERIES  # noqa: E402
 from keras_ocr_spark.plans.session import build_session  # noqa: E402
 
-TABLES = "region nation customer supplier part orders lineitem documents".split()
+TABLES = ["documents"]
 
 
 def norm(v):

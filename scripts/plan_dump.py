@@ -45,14 +45,6 @@ HEADLINERS = {
         "distributed prefix sum: no SinglePartition window",
         {"single_partition": ("==", 0), "cartesian": ("==", 0)},
     ),
-    "tpch_q1": (
-        "pushed shipdate filter; partial agg before one exchange",
-        {"exchanges": ("<=", 2), "python_nodes": ("==", 0)},
-    ),
-    "tpch_q3": (
-        "pushed filters on all 3 scans; broadcast dim; TakeOrderedAndProject",
-        {"take_ordered": ("==", 1), "cartesian": ("==", 0), "python_nodes": ("==", 0)},
-    ),
     "gopher_repetition": (
         "per-row array algebra: zero Python; single final-agg exchange",
         {"exchanges": ("<=", 1), "python_nodes": ("==", 0)},
@@ -138,31 +130,6 @@ HEADLINERS = {
         "no shuffle beyond the sf-scale _docs repartition (which the "
         "scan's own partitioning replaces at 100 TB), zero Python",
         {"exchanges": ("<=", 1), "take_ordered": ("==", 1), "python_nodes": ("==", 0), "cartesian": ("==", 0)},
-    ),
-    "tpch_q5": (
-        "6-table snowflake: dim chain folds into broadcasts, at most one "
-        "fact-fact sort-merge, zero Python",
-        {"cartesian": ("==", 0), "python_nodes": ("==", 0), "sortmerge_joins": ("<=", 1)},
-    ),
-    "profile_orders": (
-        "profiler: row-volume aggregate (counts + exact distincts through "
-        "Expand) all HASH-based off one scan; string min/max split to a "
-        "sortless grouping-free aggregate on a pruned string-only scan, "
-        "attached as the 1-row broadcast (r6: string agg buffers forced "
-        "the whole Expand aggregate to SortAggregate) — three exchanges "
-        "(multi-distinct partial + final + the 1-row string agg + its "
-        "BroadcastExchange), no Sort",
-        {"exchanges": ("<=", 4), "python_nodes": ("==", 0), "cartesian": ("==", 0)},
-    ),
-    "copurchase_lift": (
-        "basket pairs: size cap BEFORE the self equi-join, TakeOrdered "
-        "top-k, n_baskets as the one allowed 1-row broadcast",
-        {"cartesian": ("==", 0), "bnlj": ("<=", 1), "take_ordered": ("==", 1), "python_nodes": ("==", 0)},
-    ),
-    "unpivot_brand_metrics": (
-        "wide-to-long unpivot: zero-shuffle Expand over the aggregated "
-        "frame — the only exchange is the groupBy's own",
-        {"exchanges": ("<=", 1), "cartesian": ("==", 0), "python_nodes": ("==", 0)},
     ),
 }
 

@@ -55,22 +55,12 @@ BUILD_JOB_EXCEPTIONS = {
     # approxQuantile range splits, then per-bucket totals collected for
     # the prefix offsets
     "pack_sequences": 7,
-    "ntile_quartiles": 5,
     # the shingle vocabulary is collected to rank shingles by rarity
     "dedup_containment": 5,
     "dedup_prefix_filter": 5,
-    # the Bloom filter is built and collected before the probe
-    "bloom_membership": 5,
     # first run writes the two snapshot versions (1-2 jobs after)
     "snapshot_change_feed": 5,
     "time_travel_read": 4,
-    # both sides are written once as bucketed tables
-    "bucketed_join_stats": 4,
-    # one schema-inference job per table read
-    "tpch_q5": 6,
-    "tpch_q10": 4,
-    "tpch_q3": 3,
-    "uniqueness_check": 3,
 }
 
 
@@ -122,11 +112,17 @@ def test_each_query_is_lazy_plannable(spark, stream_starts, name):
 def test_staged_query_follows_rewritten_input(spark, tmp_path):
     """A query that stages a copy of its input answers from the input
     as it is now: after ``documents.parquet`` is rewritten in place, the
-    next ``jsonl_roundtrip`` build must not read the first build's copy."""
+    next ``jsonl_roundtrip`` build must not read the first build's copy,
+    and the first build's copy is gone."""
+    import glob
     import shutil
 
     import pyarrow.parquet as pq
 
+    def staged_copies():
+        return set(glob.glob("/tmp/docs_jsonl_*/**/_SUCCESS", recursive=True))
+
+    before = staged_copies()
     docs_path = tmp_path / "documents.parquet"
     shutil.copy(f"{SF_SMOKE}/documents.parquet", docs_path)
     build = entry_mod.queries()["jsonl_roundtrip"]
@@ -140,6 +136,7 @@ def test_staged_query_follows_rewritten_input(spark, tmp_path):
     )
     got = sorted(tuple(r) for r in build(spark, str(tmp_path)).collect())
     assert got == want
+    assert len(staged_copies() - before) == 1
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
@@ -162,3 +159,66 @@ def test_documents_shape_precondition_for_extract_oracle(sf):
     ).fetchone()
     assert bad == 0, "documents now contain markup chars: extract_documents oracle is invalid"
     assert minlen >= 41, "documents shorter than eval_score span offsets: eval oracle is invalid"
+
+
+#: ``keras_ocr_spark`` modules that no module of the package, no script,
+#: ``__spark_entry__.py`` and no perfbench module imports; only tests
+#: reach them. Shrinking this dict (give a module a caller, or delete it
+#: with its tests) is progress; a new module may not join it.
+NO_CALLER = {
+    "keras_ocr_spark.operators.asof": "library operator, no caller since the events prune",
+    "keras_ocr_spark.operators.cogroup": "library operator, no caller since the events prune",
+    "keras_ocr_spark.operators.funnel": "library operator, no caller since the events prune",
+    "keras_ocr_spark.operators.refintegrity": "library operator, no caller since the events prune",
+    "keras_ocr_spark.operators.regression": "library operator, no caller since the events prune",
+    "keras_ocr_spark.operators.semistructured": "library operator, no caller since the events prune",
+    "keras_ocr_spark.operators.skewjoin": "library operator, no caller since the events prune",
+    "keras_ocr_spark.operators.incremental": "library operator, no caller since the TPC-H prune",
+    "keras_ocr_spark.operators.expectations": "library operator, no caller since the TPC-H prune",
+    "keras_ocr_spark.sources.layout": "compaction and z-order, no caller since the TPC-H prune",
+    "keras_ocr_spark.sources.loaders": "reference-format loaders, tested directly",
+    "keras_ocr_spark.streaming.snapshot_sink": "entry point for a streaming snapshot ingest, tested directly",
+}
+
+
+def _modules_imported_outside_tests() -> tuple[set[str], set[str]]:
+    """(every ``keras_ocr_spark`` module, those some non-test source
+    imports), with relative imports resolved against the importer."""
+    import ast
+
+    def modname(path: Path) -> str:
+        parts = path.relative_to(REPO).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    pkg_dir = REPO / "keras_ocr_spark"
+    modules = {modname(p) for p in pkg_dir.rglob("*.py") if p.name != "__init__.py"}
+    sources = [
+        *pkg_dir.rglob("*.py"),
+        *(REPO / "scripts").rglob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
+        REPO / "__spark_entry__.py",
+    ]
+    imported = set()
+    for src in sources:
+        me = modname(src) if src.is_relative_to(pkg_dir) else ""
+        package = me if src.name == "__init__.py" else me.rpartition(".")[0]
+        for node in ast.walk(ast.parse(src.read_text())):
+            if isinstance(node, ast.Import):
+                targets = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    anchor = package.split(".")[: len(package.split(".")) - node.level + 1]
+                    base = ".".join([*anchor, base] if base else anchor)
+                targets = [base, *(f"{base}.{a.name}" for a in node.names)]
+            else:
+                continue
+            imported.update(t for t in targets if t in modules and t != me)
+    return modules, imported
+
+
+def test_no_new_module_without_a_caller():
+    # equality, not subset: an entry whose module gained a caller, or
+    # was deleted, comes off the dict too
+    modules, imported = _modules_imported_outside_tests()
+    assert sorted(modules - imported) == sorted(NO_CALLER)

@@ -1,7 +1,7 @@
-"""check_expectations: values are driver-attested
-(`expectations_lineitem`, both passing and violating rules). These pin
-the strict NULL-as-violation semantics, the empty-input guard, the
-one-scan/no-Expand plan, and rule validation."""
+"""check_expectations: the operator has no registered caller, so these
+tests are its only contract. They pin the strict NULL-as-violation
+semantics, the empty-input guard, the one-scan/no-Expand plan, and rule
+validation."""
 
 import pytest
 

@@ -1,11 +1,10 @@
 """Incremental aggregate-state maintenance: the fold theorem
 ``merge(state(A), state(B)) == state(A UNION ALL B)`` and its edges.
 
-The cross-engine VALUE contract is attested by the driver oracle
-(`incremental_agg_merge`: Spark folds base+delta, DuckDB recomputes
-flat).  These tests pin the algebra the oracle exercises only once:
-arbitrary split points, disjoint-key pass-through, associativity across
-three shards, and partitioning-invariance of the int64 cents sum.
+The operator has no registered caller, so these tests are its only
+contract: arbitrary split points, disjoint-key pass-through,
+associativity across three shards, and partitioning-invariance of the
+int64 cents sum.
 """
 
 import pytest

@@ -510,22 +510,6 @@ class TestEncodeAndFilters:
         with pytest.raises(ValueError):
             E.bpe_pair_counts(df, min_word_len=1)
 
-    def test_inclusion_filter_goldens(self, spark):
-        """tools.py:301-311 semantics: ratio threshold + min length +
-        zero-length rejection."""
-        from keras_ocr_spark.operators.geometry import inclusion_filter
-
-        df = spark.createDataFrame(
-            [(0, 30, 70), (1, 0, 30), (2, 20, 80), (3, 74, 120), (4, 50, 50)],
-            "sid int, start int, end int",
-        )
-        kept = {r.sid: r.keep_ratio for r in inclusion_filter(df, 25, 75, 0.5, 5).collect()}
-        assert kept[0] == 1.0          # fully inside
-        assert 2 not in kept or kept[2] >= 0.5  # [20,80): 55/60 -> kept
-        assert 1 not in kept           # [0,30): 5/30 < 0.5
-        assert 3 not in kept           # [74,120): survives 1 char <= min_len
-        assert 4 not in kept           # zero-length
-
 
 class TestPdfExtract:
     def test_roundtrip_with_parens(self, spark):
@@ -868,22 +852,3 @@ class TestShinglePagerank:
         df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
         with pytest.raises(ValueError, match="iters"):
             shingle_graph_pagerank(df, iters=0)
-
-
-class TestUnpivotQuery:
-    def test_long_form_row_count_and_values(self, spark):
-        from keras_ocr_spark.driver_queries import QUERIES
-
-        fn, _ = QUERIES["unpivot_brand_metrics"]
-        out = fn(spark, "/root/testdata/sf0.001")
-        rows = out.collect()
-        brands = {r["p_brand"] for r in rows}
-        assert len(rows) == 3 * len(brands)
-        by_metric = {}
-        for r in rows:
-            by_metric.setdefault(r["metric"], 0)
-            by_metric[r["metric"]] += 1
-        assert set(by_metric) == {"total_retail", "avg_size", "n_parts"}
-        # n_parts values sum to the part table row count
-        n = sum(r["value"] for r in rows if r["metric"] == "n_parts")
-        assert n == spark.read.parquet("/root/testdata/sf0.001/part.parquet").count()

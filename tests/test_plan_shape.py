@@ -189,11 +189,10 @@ class TestNoAccidentalCartesian:
         # single-row broadcast of the corpus stats (N, avgdl, dfs) onto
         # the scored documents.
         "bm25_search",
-        # r6: string min/max split into a grouping-free 1-row aggregate
+        # string min/max split into a grouping-free 1-row aggregate
         # attached by a 1-row broadcast, so the Expand multi-distinct
         # aggregate stays hash-based (string agg buffers forced the
         # whole aggregate to SortAggregate).
-        "profile_orders",
         "profile_drift_documents",
         # 1-row broadcast of the unigram grand total onto the
         # vocabulary-sized frequency table (both tiny).
@@ -210,9 +209,6 @@ class TestNoAccidentalCartesian:
         # 1-row broadcast of the corpus size N onto the tf⋈df frame
         # (same 1-row-side shape).
         "tfidf_top_terms",
-        # 1-row broadcast of n_baskets onto the pair-count frame
-        # (same 1-row-side shape).
-        "copurchase_lift",
     }
     def test_no_cartesian_any_query(self, spark):
         from keras_ocr_spark.driver_queries import QUERIES

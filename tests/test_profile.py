@@ -1,7 +1,7 @@
-"""Data profiling: the value contract is driver-attested
-(`profile_orders` — counts, cardinalities, and type-rendered min/max
-reproduce in DuckDB). These pin null handling, dtype rendering for
-types the registered query doesn't cover, and the one-scan plan."""
+"""Data profiling: the registered query that calls ``profile_table`` is
+``profile_drift_documents`` (through ``profile_drift``, on three
+``documents`` columns). These pin null handling, dtype rendering for
+types that query doesn't cover, and the one-scan plan."""
 
 import datetime as dt
 

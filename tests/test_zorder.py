@@ -1,9 +1,9 @@
-"""Z-order clustering: the cell/bbox value contract is driver-attested
-(`zorder_cells` — every spread/interleave bit reproduces in DuckDB).
-These pin the layout-theoretic guarantees: the interleave matches a
-Python bit-reference, quadtree cells bound BOTH dimensions, and a
-z-ordered file layout beats a 1-D-sorted layout on two-dimensional
-file pruning (the reason the technique exists)."""
+"""Z-order clustering: ``sources/layout`` has no registered caller, so
+these tests are its only contract. They pin the layout-theoretic
+guarantees: the interleave matches a Python bit-reference, quadtree
+cells bound BOTH dimensions, and a z-ordered file layout beats a
+1-D-sorted layout on two-dimensional file pruning (the reason the
+technique exists)."""
 
 import pytest
 from pyspark.sql import functions as F

@@ -72,14 +72,18 @@ def _staging_path(sf_dir: str, name: str, *tables: str) -> str:
     ``sf_dir``: ``/tmp/{name}_{md5(sf_dir)}/{md5(listing)}``. The listing
     (file names, sizes, mtimes) of those tables keys the copy, so a
     rewritten input is staged afresh instead of being answered from an
-    earlier build's copy. Staging afresh deletes the copies of earlier
-    listings: one copy per ``(sf_dir, name)`` remains."""
+    earlier build's copy. Staging afresh deletes everything else under
+    the root, directories and plain files alike: one copy per
+    ``(sf_dir, name)`` remains."""
     listing = [input_listing(f"{sf_dir}/{t}.parquet") for t in tables]
     root = Path(f"/tmp/{name}_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}")
     path = root / hashlib.md5(json.dumps(listing).encode()).hexdigest()[:12]
     if not path.exists() and root.is_dir():
         for stale in root.iterdir():
-            shutil.rmtree(stale, ignore_errors=True)
+            if stale.is_dir():
+                shutil.rmtree(stale, ignore_errors=True)
+            else:
+                stale.unlink(missing_ok=True)
     return str(path)
 
 

@@ -1,9 +1,7 @@
-from .convstats import conv_stats
 from .detect import detect, propose_spans_udf
 from .fused import decode_reassemble_fused
 
 __all__ = [
-    "conv_stats",
     "decode_reassemble_fused",
     "detect",
     "propose_spans_udf",

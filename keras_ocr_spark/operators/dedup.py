@@ -32,6 +32,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import zipguard
 from ..functions.hashing import (
     shingles_expr,
     simhash64_from_nibbles_expr,
@@ -72,6 +73,8 @@ def shingle_docs_arrow(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _sh(texts: pd.Series) -> pd.Series:
+        zipguard.install()
+
         def one(t):
             if t is None:
                 return []
@@ -147,6 +150,8 @@ def _rarity_coded_docs(
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _sh_arr(texts: pd.Series) -> pd.Series:
+        zipguard.install()
+
         def one(t):
             if t is None:
                 return []
@@ -189,6 +194,7 @@ def _rarity_coded_docs(
     # verification with the default nullable element type.
     @F.pandas_udf(T.ArrayType(T.IntegerType(), containsNull=False))
     def _codes(shs: pd.Series) -> pd.Series:
+        zipguard.install()
         m = mapping
 
         def one(arr):
@@ -444,6 +450,7 @@ def minhash_signatures(
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _sig(texts: pd.Series) -> pd.Series:
+        zipguard.install()
         return texts.map(_one)
 
     # Null-signature rows are excluded by filtering the kernel's exact
@@ -645,6 +652,8 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = 
 
     @F.pandas_udf(T.LongType())
     def _sh(texts: pd.Series) -> pd.Series:
+        zipguard.install()
+
         # Vectorized twin of functions.hashing.simhash64_py (the pure
         # kernel stays as the cross-engine golden; equality pinned in
         # tests): the naive form runs a 64-iteration Python vote loop
@@ -891,6 +900,7 @@ def substring_dup_stats(
     # — at half the shuffle bytes and cheaper key compares.
     @F.pandas_udf(T.ArrayType(T.BinaryType(), containsNull=False))
     def _grams(texts: pd.Series) -> pd.Series:
+        zipguard.install()
         md5 = hashlib.md5
 
         def one(t):
@@ -905,6 +915,7 @@ def substring_dup_stats(
 
     @F.pandas_udf("n_words long, dup_words long, clean_text string")
     def _span_stats(texts: pd.Series, starts: pd.Series) -> pd.DataFrame:
+        zipguard.install()
         n_out, dup_out, clean_out = [], [], []
         for t, ds in zip(texts, starts):
             if t is None:

@@ -65,8 +65,9 @@ def propose_spans_udf(cfg: ExtractionConfig = DEFAULT_CONFIG):
     through the same loop (the ``model.predict``-over-batches pattern of
     ``detection.py:698-743``; also where a heavyweight model/tokenizer
     would be loaded once per executor). The setup installs
-    ``zipguard``, so a reused worker stops re-reading the zip
-    directories on its path at every later task. Per turn the loop runs
+    ``zipguard``, as every package UDF's first statement does, so a
+    reused worker stops re-reading the zip directories on its path at
+    every later task. Per turn the loop runs
     exactly ``extract_turn``; the output is built from flat lists (one
     offsets list, one start and one end list per batch).
     """

@@ -1,6 +1,5 @@
-"""Salted join — the explicit skew-join technique, next to the salted
-AGGREGATION in ``operators/convstats.py`` and AQE's automatic skew
-split (``tests/test_aqe_skew.py``).
+"""Salted join — the explicit skew-join technique, the manual
+counterpart of AQE's automatic skew split (``tests/test_aqe_skew.py``).
 
 When one join key holds a disproportionate share of the fact side
 (the 700-turn conversation; the bot user with 10^8 events), a plain

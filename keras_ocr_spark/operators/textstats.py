@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import zipguard
 from ..functions.hashing import words_expr
 from ..functions.numeric import pround
 
@@ -252,6 +253,8 @@ def compression_ratios(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
 
     @F.pandas_udf("double")
     def _cr(texts: pd.Series) -> pd.Series:
+        zipguard.install()
+
         def one(t):
             if t is None:
                 return None
@@ -286,6 +289,7 @@ def nfc_normalize_texts(df: DataFrame, id_col: str = "doc_id", text_col: str = "
 
     @F.pandas_udf("string")
     def _nfc(texts: pd.Series) -> pd.Series:
+        zipguard.install()
         return texts.map(lambda t: None if t is None else unicodedata.normalize("NFC", t))
 
     # kernel referenced ONCE in its own projection (three references in

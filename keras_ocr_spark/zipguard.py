@@ -15,6 +15,13 @@ before its last read; otherwise the importer takes the directory already
 in ``zipimport._zip_directory_cache``. A re-shipped ``--py-files`` zip
 changes its stamp, so it is still re-read. Stdlib only, idempotent, and
 a no-op on Python >= 3.12.
+
+Every function the package decorates with ``F.pandas_udf`` or
+``F.arrow_udf`` calls ``install()`` as its first statement (pinned by
+``tests/test_zipguard.py``). The UDFs are closures that cloudpickle
+ships by value, so that reference is what makes a worker import this
+module at all; after the worker's first task the later ones take every
+unchanged archive's directory from the cache.
 """
 
 from __future__ import annotations

@@ -119,24 +119,54 @@ def test_staged_query_follows_rewritten_input(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
+    from keras_ocr_spark.driver_queries import _staging_path
+
     def staged_copies():
         return set(glob.glob("/tmp/docs_jsonl_*/**/_SUCCESS", recursive=True))
 
     before = staged_copies()
     docs_path = tmp_path / "documents.parquet"
     shutil.copy(f"{SF_SMOKE}/documents.parquet", docs_path)
-    build = entry_mod.queries()["jsonl_roundtrip"]
-    assert build(spark, str(tmp_path)).count() == pq.read_metadata(docs_path).num_rows
+    root = Path(_staging_path(str(tmp_path), "docs_jsonl", "documents")).parent
+    try:
+        build = entry_mod.queries()["jsonl_roundtrip"]
+        assert build(spark, str(tmp_path)).count() == pq.read_metadata(docs_path).num_rows
 
-    docs = pq.read_table(docs_path)
-    subset = docs.slice(0, docs.num_rows // 3)
-    pq.write_table(subset, docs_path)
-    want = sorted(
-        zip(*(subset.column(c).to_pylist() for c in ("doc_id", "text", "lang", "source", "n_chars")))
-    )
-    got = sorted(tuple(r) for r in build(spark, str(tmp_path)).collect())
-    assert got == want
-    assert len(staged_copies() - before) == 1
+        docs = pq.read_table(docs_path)
+        subset = docs.slice(0, docs.num_rows // 3)
+        pq.write_table(subset, docs_path)
+        want = sorted(
+            zip(*(subset.column(c).to_pylist() for c in ("doc_id", "text", "lang", "source", "n_chars")))
+        )
+        got = sorted(tuple(r) for r in build(spark, str(tmp_path)).collect())
+        assert got == want
+        assert len(staged_copies() - before) == 1
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_staging_path_removes_stale_files_and_directories(tmp_path):
+    """Staging a new listing clears the root of both earlier copies
+    (directories) and the plain files of an older flat copy."""
+    import shutil
+
+    from keras_ocr_spark.driver_queries import _staging_path
+
+    sf_dir = str(tmp_path)
+    (tmp_path / "documents.parquet").write_bytes(b"v1")
+    old_copy = Path(_staging_path(sf_dir, "stg_test", "documents"))
+    root = old_copy.parent
+    try:
+        (old_copy / "sub").mkdir(parents=True)
+        (old_copy / "sub" / "part-0").write_bytes(b"x")
+        (root / "part-00000.json").write_bytes(b"flat")
+        (root / "_SUCCESS").write_bytes(b"")
+        (tmp_path / "documents.parquet").write_bytes(b"v2 rewritten")
+        new_copy = Path(_staging_path(sf_dir, "stg_test", "documents"))
+        assert new_copy != old_copy
+        assert list(root.iterdir()) == []
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])

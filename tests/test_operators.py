@@ -422,27 +422,6 @@ class TestMultimodal:
         assert all(r.frame_idx % 10 == 0 for r in frames)
 
 
-class TestConvStats:
-    def test_salted_equals_direct(self, spark):
-        from keras_ocr_spark.operators.convstats import conv_profile, conv_stats
-        from keras_ocr_spark.sources.transcripts import spark_transcripts
-
-        df = spark_transcripts(spark, n_convs=10, make_skewed=False)
-        direct = {r.conv_id: (r.n_turns, r.n_chars, r.n_roles) for r in conv_stats(df).collect()}
-        salted = {r.conv_id: (r.n_turns, r.n_chars, r.n_roles) for r in conv_stats(df, n_salt=4).collect()}
-        assert direct == salted
-
-    def test_apply_in_pandas_profile(self, spark):
-        from keras_ocr_spark.operators.convstats import conv_profile
-        from keras_ocr_spark.sources.transcripts import spark_transcripts
-
-        df = spark_transcripts(spark, n_convs=5, make_skewed=False)
-        rows = {r.conv_id: r for r in conv_profile(df).collect()}
-        n_by_conv = {r.conv_id: r.n for r in df.groupBy("conv_id").agg(F.count("*").alias("n")).collect()}
-        assert {c: r.n_turns for c, r in rows.items()} == n_by_conv
-        assert all(r.max_gap_sec >= r.mean_gap_sec >= 0 for r in rows.values() if r.n_turns > 1)
-
-
 class TestEncodeAndFilters:
     def test_vocab_encode_matches_reference_semantics(self, spark):
         """[alphabet.index(c)] + [-1]*pad (recognition.py:450-459)."""

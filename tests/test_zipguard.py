@@ -7,11 +7,13 @@ changed: an unchanged archive costs no read, a rewritten one is re-read
 and its new modules import.
 """
 
+import ast
 import importlib
 import os
 import sys
 import zipfile
 import zipimport
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -95,3 +97,56 @@ def test_stage1_worker_stops_rereading_zip_directories(spark):
     guarded = [r for r in rows if r.guarded]
     assert guarded, rows
     assert all(r.reads == 0 and r.zip_importers > 0 for r in guarded), rows
+
+
+UDF_DECORATORS = {"pandas_udf", "arrow_udf"}
+INSTALL = ast.dump(ast.parse("zipguard.install()").body[0])
+
+
+def _udf_functions():
+    """``(module path, qualified name, node)`` of every function in the
+    package decorated with ``F.pandas_udf`` or ``F.arrow_udf``."""
+    pkg = Path(__file__).resolve().parent.parent / "keras_ocr_spark"
+
+    def is_udf_decorator(dec) -> bool:
+        target = dec.func if isinstance(dec, ast.Call) else dec
+        return (
+            isinstance(target, ast.Attribute)
+            and target.attr in UDF_DECORATORS
+            and isinstance(target.value, ast.Name)
+            and target.value.id == "F"
+        )
+
+    def walk(node, path, prefix):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                name = f"{prefix}{child.name}"
+                if not isinstance(child, ast.ClassDef) and any(map(is_udf_decorator, child.decorator_list)):
+                    yield path, name, child
+                yield from walk(child, path, f"{name}.")
+            else:
+                yield from walk(child, path, prefix)
+
+    for path in sorted(pkg.rglob("*.py")):
+        yield from walk(ast.parse(path.read_text()), path.relative_to(pkg).as_posix(), "")
+
+
+def _starts_with_install(fn) -> bool:
+    body = fn.body[1:] if ast.get_docstring(fn) is not None else fn.body  # a docstring may come first
+    return bool(body) and ast.dump(body[0]) == INSTALL
+
+
+def test_every_package_udf_installs_zipguard_first():
+    """A package UDF ships to the worker by value, so only a reference
+    in its body makes the worker import and install the guard; without
+    it every task re-reads the zip directories on the worker's path."""
+    udfs = {f"{path}:{name}": fn for path, name, fn in _udf_functions()}
+    assert {
+        "operators/dedup.py:shingle_docs_arrow._sh",
+        "operators/dedup.py:minhash_signatures._sig",
+        "operators/dedup.py:substring_dup_stats._grams",
+        "operators/dedup.py:substring_dup_stats._span_stats",
+        "operators/detect.py:propose_spans_udf._extract",
+    } <= set(udfs), sorted(udfs)
+    unguarded = sorted(name for name, fn in udfs.items() if not _starts_with_install(fn))
+    assert unguarded == []

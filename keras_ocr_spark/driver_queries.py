@@ -44,7 +44,7 @@ from .operators import encode as E
 from .operators import sketches as SK
 from .operators import textstats as TS
 from .plans.checkpoint import input_listing
-from .plans.pipeline import extract
+from .plans.pipeline import curate, extract
 
 # --------------------------------------------------------------------------
 # helpers
@@ -721,79 +721,14 @@ def q_sha256_manifest(spark, sf_dir):
 )
 def q_curate_corpus(spark, sf_dir):
     """The END-TO-END CURATION PIPELINE in one plan — what this engine
-    exists to run at 100 TB, now spanning the full r4 operator set (r4
-    verdict Next #7): near-dup clusters resolved to one keeper per
-    cluster (minhash LSH candidates -> exact-Jaccard verify ->
-    large-star/small-star closure), keepers gated by the quality score,
-    then by EXACT substring-span duplication over the survivors (Lee et
-    al. 2022 — dup_frac <= 0.5), leakage-safe train/test split keyed on
-    the cluster label (test side held out), and finally the
-    per-language token-budget mix (en 3000 BPE-ish tokens, others 1000
-    — both genuinely truncate at sf0.01) assembling the training
-    corpus in deterministic md5 order. Exact dups are subsumed
-    (Jaccard 1 -> same cluster). Output: the assembled train-side rows
-    with quality, dup_frac and inclusive running token totals. The
-    oracle composes the same stages as CTEs, so the whole pipeline
-    value-hash-matches end to end.
-
-    Every lineage cut here, and each closure round, is a
-    ``localCheckpoint``: after an executor loss the job fails instead of
-    recomputing, and it is rerun — ``scripts/curate_job.py`` is
-    idempotent. A reliable ``checkpoint()`` would need a checkpoint
-    directory, which ``build_session`` does not set, and one write per
-    cut."""
-    from .operators.clusters import leakage_safe_split
-    from .operators.curation import token_budget_mix
-
-    # Lineage cuts. Under AQE a "lazy" localCheckpoint(eager=False) runs
-    # the shuffle and broadcast stages upstream of it as soon as it is
-    # called; only its last stage waits for a consumer. Each cut below
-    # is kept because removing it cost more than it saved, measured by
-    # removing one cut at a time (1,000 docs, 4 vCPUs, CPU of passes 5-8
-    # of one session):
-    # - docs: without it each job re-runs the scan and repartition, and
-    #   the pass runs 25 jobs instead of 23 and 0.5 CPU-s more.
-    #   Calling it runs 2 jobs (schema inference, the repartition).
-    docs = _docs(spark, sf_dir).localCheckpoint(eager=False)
-    pairs = D.minhash_dedup_pairs(docs, threshold=0.5)
-    # The split rows keep the doc columns, so the keepers need no join
-    # back for their text and language. Building the split runs the
-    # closure's checkpoint jobs (10 here, the pair pipeline included).
-    split = leakage_safe_split(docs, pairs, id_col="doc_id")
-    # - surv: the substring gate reads the survivors twice and the
-    #   gated join once more. Without the cut each reader re-runs the
-    #   keeper window and the quality expressions: same 23 jobs,
-    #   0.1-1.9 CPU-s more over two runs. Calling it runs 1 job.
-    surv = (
-        split.filter(F.col("id") == F.col("keeper_id"))
-        .select("id", "text", "lang", "split", *TS.curation_feature_columns(F.col("text")))
-        .filter(F.col("quality") >= 0.5)
-    ).localCheckpoint(eager=False)
-    subs = D.substring_dup_stats(surv, k=5, id_col="id").select("id", "dup_frac")
-    # - gated: the mix reads it and so does the join that brings back
-    #   quality and dup_frac. Without the cut the pass runs 25 jobs
-    #   instead of 23 at equal CPU. Calling it runs 4 jobs.
-    gated = (
-        surv.join(subs, "id")
-        .filter((F.col("dup_frac") <= 0.5) & (F.col("split") == "train"))
-        .select("id", "lang", "n_bpe_tokens", "quality", "dup_frac")
-    ).localCheckpoint(eager=False)
-    mixed = token_budget_mix(
-        gated,
-        {"en": 3000},
-        default_budget=1000,
-        id_col="id",
-        tokens_col=F.col("n_bpe_tokens"),
-    )
-    out = mixed.join(gated.select("id", "quality", "dup_frac"), "id")
-    return out.select(
-        F.col("id").cast("long").alias("id"),
-        "lang",
-        F.col("n_tokens").cast("long").alias("n_bpe_tokens"),
-        pround(F.col("quality"), 6).alias("quality"),
-        F.col("dup_frac").cast("double").alias("dup_frac"),
-        F.col("cum_tokens").cast("long").alias("cum_tokens"),
-    )
+    exists to run at 100 TB: ``plans.pipeline.curate`` over documents,
+    the same plan ``scripts/curate_job.py`` writes. Near-dup clusters ->
+    one keeper each -> quality gate -> exact substring-span gate ->
+    leakage-safe split (train side) -> per-language token-budget mix
+    (both budgets genuinely truncate at sf0.01). The oracle composes
+    the same stages as CTEs, so the whole pipeline value-hash-matches
+    end to end."""
+    return curate(_docs(spark, sf_dir))
 
 
 def _bm25_oracle() -> str:

@@ -156,8 +156,9 @@ def connected_components(
     Fault tolerance: each round ends in an eager ``localCheckpoint``,
     whose blocks live on the executors and cannot be recomputed. If an
     executor is lost after a round, the job that reads it fails; the
-    remedy is to rerun the whole job, which ``scripts/curate_job.py``
-    makes safe (same input and config, same output). ``checkpoint()``
+    remedy is to rerun the whole job. The curation plan that calls this
+    (``plans.pipeline.curate``, written by ``scripts/curate_job.py``)
+    is idempotent: same input and config, same output. ``checkpoint()``
     is not used: ``plans.session.build_session`` sets no checkpoint
     directory, and a reliable checkpoint writes every round's edges to
     it.

@@ -1,22 +1,15 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns.
+"""Binary document payloads: PDF-like bytes as an opaque binary column.
 
-The reference consumes images as ndarrays decoded by OpenCV
-(``/root/reference/keras_ocr/tools.py:19-38`` read; ``:455-481``
-read_and_fit). In a 100 TB lakehouse the payload is an opaque ``binary``
-column plus typed metadata, and decode/feature-extraction runs inside
-``mapInPandas`` so bytes never round-trip through the driver.
-
-The image/audio codecs are NOT in this container, so the decode kernel is
-STUBBED: ``decode_stub=True`` (default) derives deterministic fake
-features from the bytes (sha-seeded), while the real kernel raises
-``NotImplementedError`` with the dependency named. Everything Spark-side
-— schema, Arrow batch shape, partitioning, UDF signatures — is real and
-tested; swapping the stub for cv2/PIL/librosa is a one-function change.
+The reference reads its inputs as decoded ndarrays (keras_ocr's
+``tools.read``). In a 100 TB lakehouse the payload is an opaque ``binary`` column, and parsing runs
+inside ``mapInPandas`` so bytes never round-trip through the driver.
+No PDF library is in this runtime, so ``synth_pdf_payloads`` writes
+deterministic PDF-like content streams and ``parse_pdf_text`` reads
+their text-show subset; the binary column and Arrow plumbing are real.
 """
 
 from __future__ import annotations
 
-import hashlib
 import re
 from typing import Iterator
 
@@ -24,143 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id string, kind string, payload binary, width int, height int, duration_ms int"
-)
-
-FEATURE_SCHEMA = "media_id string, kind string, n_bytes long, feat array<double>"
-
-FRAME_SCHEMA = "media_id string, frame_idx int, frame_sha string"
-
-
-import functools
-
-
-@functools.lru_cache(maxsize=1)
-def _media_capabilities() -> dict:
-    """Probe which decode backends exist in THIS runtime (r3 verdict
-    Next #10): the kernels below light up the day the image gains
-    codecs, with zero code change. Cached — the probe is called per
-    decoded row inside mapInPandas, and a MISSING backend cannot be
-    cached in sys.modules, so an uncached miss would re-scan sys.path
-    per row."""
-    import importlib.util
-
-    return {
-        "image": importlib.util.find_spec("PIL") is not None
-        or importlib.util.find_spec("cv2") is not None,
-        "audio": importlib.util.find_spec("librosa") is not None,
-    }
-
-
-def _real_decode(payload: bytes, kind: str, dim: int = 8) -> list:
-    """Real decode kernel, capability-gated. Image path: decode via
-    PIL (preferred) or cv2, downscale to a dim-length gray intensity
-    profile (row-mean buckets, [0,1]) — the same shape the stub emits,
-    so the Spark plumbing (schema, Arrow batches, callers) is identical.
-    Raises ``NotImplementedError`` naming the dependency when no backend
-    is installed (the honest sandbox gate — reference decode is
-    ``tools.read``, /root/reference/keras_ocr/tools.py:19-38)."""
-    caps = _media_capabilities()
-    if kind == "image" and caps["image"]:
-        import io
-
-        import numpy as np
-
-        try:
-            from PIL import Image
-
-            arr = np.asarray(Image.open(io.BytesIO(payload)).convert("L"), dtype="float64")
-        except ImportError:
-            import cv2
-
-            decoded = cv2.imdecode(np.frombuffer(payload, dtype="uint8"), cv2.IMREAD_GRAYSCALE)
-            if decoded is None:
-                # cv2 signals an undecodable payload with None rather than
-                # raising; dereferencing it would fail the whole Spark task
-                # on one dirty row.
-                raise ValueError(
-                    f"undecodable image payload ({len(payload)} bytes): cv2.imdecode returned None"
-                )
-            arr = decoded.astype("float64")
-        rows = np.array_split(arr.mean(axis=1), dim)
-        return [float(r.mean()) / 255.0 if r.size else 0.0 for r in rows]
-    if kind == "audio" and caps["audio"]:
-        import io
-
-        import librosa
-        import numpy as np
-
-        y, _sr = librosa.load(io.BytesIO(payload), sr=None, mono=True)
-        rows = np.array_split(np.abs(y), dim)
-        return [float(r.mean()) if r.size else 0.0 for r in rows]
-    raise NotImplementedError(
-        f"media decode for kind={kind!r} requires cv2/PIL (image) or librosa (audio) — "
-        "not in this runtime image; the stub path exercises the identical Spark plumbing"
-    )
-
-
-def _stub_features(payload: bytes, dim: int = 8) -> list:
-    """Deterministic fake embedding from the bytes (sha256-seeded) —
-    exercises the full Arrow path with stable values."""
-    if payload is None:
-        return [0.0] * dim
-    h = hashlib.sha256(payload).digest()
-    return [int.from_bytes(h[i * 2 : i * 2 + 2], "big") / 65535.0 for i in range(dim)]
-
-
-def extract_features(df: DataFrame, decode_stub: bool = True, dim: int = 8) -> DataFrame:
-    """media table -> per-item feature vectors via mapInPandas.
-
-    Batch shape: the UDF receives Arrow batches of (media_id, kind,
-    payload); binary stays in Arrow buffers end to end (no driver
-    collect). Real decoders slot into the same iterator.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _stub_features(p, dim) if decode_stub else _real_decode(p, k, dim)
-                for p, k in zip(pdf["payload"], pdf["kind"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                    "feat": feats,
-                }
-            )
-
-    return df.select("media_id", "kind", "payload").mapInPandas(op, schema=FEATURE_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_n: int = 10, decode_stub: bool = True) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per sampled frame.
-
-    The stub derives a deterministic per-frame hash from (payload sha,
-    frame_idx); a real kernel would decode with pyav/cv2. Row expansion
-    (1 video -> N frames) happens inside the UDF so the explode cost is
-    Arrow-batched, mirroring the crop flattening of
-    ``recognition.py:504-526``.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_idx, out_sha = [], [], []
-            for mid, payload, dur in zip(pdf["media_id"], pdf["payload"], pdf["duration_ms"]):
-                if not decode_stub:
-                    _real_decode(payload, "video")
-                n_frames = max(int((dur or 0) / (1000 / 30)), 1)  # assume 30fps
-                base = hashlib.sha256(payload or b"").hexdigest()
-                for i in range(0, n_frames, every_n):
-                    out_ids.append(mid)
-                    out_idx.append(i)
-                    out_sha.append(hashlib.sha256(f"{base}:{i}".encode()).hexdigest()[:16])
-            yield pd.DataFrame({"media_id": out_ids, "frame_idx": out_idx, "frame_sha": out_sha})
-
-    return df.filter(F.col("kind") == "video").mapInPandas(op, schema=FRAME_SCHEMA)
-
+from .. import zipguard
 
 PDF_TEXT_SCHEMA = "id long, pdf_text string, n_bytes long"
 
@@ -246,6 +103,7 @@ def pdf_extract_text(df: DataFrame) -> DataFrame:
     with multi-block streams and both Tj/TJ forms."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        zipguard.install()
         for pdf in batches:
             texts, sizes = [], []
             for payload in pdf["payload"]:
@@ -273,24 +131,3 @@ def extract_from_pdfs(df: DataFrame, cfg=None) -> DataFrame:
     )
     return extract(texts, cfg=cfg or DEFAULT_CONFIG)
 
-
-def synth_media(spark, n: int = 20, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table (binary payloads from md5 bytes)."""
-    import random
-
-    rng = random.Random(seed)
-    rows = []
-    for i in range(n):
-        kind = ("image", "audio", "video")[i % 3]
-        payload = hashlib.md5(f"{seed}:{i}".encode()).digest() * rng.randint(1, 8)
-        rows.append(
-            (
-                f"m{i:04d}",
-                kind,
-                bytearray(payload),
-                rng.randint(16, 512) if kind == "image" else None,
-                rng.randint(16, 512) if kind == "image" else None,
-                rng.randint(500, 5000) if kind != "image" else None,
-            )
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)

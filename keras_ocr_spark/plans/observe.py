@@ -8,17 +8,13 @@ execute the write and become available the moment the action finishes —
 zero extra jobs, zero extra IO (exactly-once semantics per action,
 unlike accumulators which double-count task retries).
 
-``write_with_audit`` wires this to the expectation-suite idiom of
-``operators/expectations.py``: pass named SQL expressions (counts, null
-counts, violation sums) and get their values back WITH the write. The
-strict NULL handling and rule grammar mirror check_expectations, so the
-same contract can gate an ingest either way: pre-write (a cheap extra
-pass at small scale) or in-flight (free at 100 TB).
-
-``commit`` is the commit protocol every manifest-attested writer in the
-package shares — checkpoint buckets (``plans/checkpoint.py``), snapshot
-versions (``sources/snapshots.py``, ``streaming/snapshot_sink.py``) and
-streaming epochs (``streaming/extraction.py``):
+``commit`` writes a frame and returns named SQL aggregates (counts,
+null counts, sums) observed on that write. It is the commit protocol
+every manifest-attested writer shares — checkpoint buckets
+(``plans/checkpoint.py``), snapshot versions (``sources/snapshots.py``,
+``streaming/snapshot_sink.py``), streaming epochs
+(``streaming/extraction.py``) and the curation job's ``_summary.json``
+(``scripts/curate_job.py``):
 
 1. the data is written ONCE, in one job, with the manifest metrics
    observed on that write (the manifest attests what the write job
@@ -100,10 +96,3 @@ def commit(
         publish_json(manifest_path, manifest)
     return audit
 
-
-def write_with_audit(df: DataFrame, path: str, metrics: dict[str, str], mode: str = "overwrite") -> dict:
-    """Write ``df`` to ``path`` while collecting ``metrics`` — a mapping
-    of name -> aggregate SQL expression (e.g. ``{"n": "count(*)",
-    "null_text": "sum(cast(text is null as bigint))"}``) — in the SAME
-    job. Returns the observed values. One scan total."""
-    return commit(df, path, metrics, lambda audit: {}, mode)

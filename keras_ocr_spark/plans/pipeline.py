@@ -20,6 +20,9 @@ Physical shape (verified in tests/test_plan_shape.py):
   one exchange;
 - the scan reads only the columns the plan needs (conv_id, turn_idx,
   text) — column pruning reaches the parquet reader.
+
+``curate`` is the one curation plan, on the same engine: the
+``curate_corpus`` query and ``scripts/curate_job.py`` both build it.
 """
 
 from __future__ import annotations
@@ -41,3 +44,86 @@ def extract(df: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG, n_salt: int =
     """
     slim = df.select("conv_id", "turn_idx", "text")
     return decode_reassemble_fused(detect(slim, cfg=cfg, n_salt=n_salt))
+
+
+def curate(docs: DataFrame, threshold: float = 0.5, min_quality: float = 0.5) -> DataFrame:
+    """Documents -> the curated training corpus, in one plan:
+    near-dup clusters resolved to one keeper per cluster (minhash LSH
+    candidates at Jaccard ``threshold`` -> exact-Jaccard verify ->
+    large-star/small-star closure), keepers gated by quality score
+    (``>= min_quality``), then by EXACT substring-span duplication over
+    the survivors (Lee et al. 2022 — dup_frac <= 0.5), a leakage-safe
+    train/test split keyed on the cluster label (the test side held
+    out), and finally the per-language token-budget mix (en 3000
+    BPE-ish tokens, others 1000) in deterministic md5 order. Exact dups
+    are subsumed (Jaccard 1 -> same cluster).
+
+    ``docs`` needs ``doc_id``, ``text`` and ``lang``. Output: one row per
+    kept train-side document — ``id`` (its ``doc_id``), ``lang``,
+    ``n_bpe_tokens``, ``quality``, ``dup_frac`` and the inclusive running
+    ``cum_tokens``; no text.
+
+    Every lineage cut here, and each closure round, is a
+    ``localCheckpoint``: after an executor loss the job fails instead of
+    recomputing, and it is rerun — ``scripts/curate_job.py`` is
+    idempotent. A reliable ``checkpoint()`` would need a checkpoint
+    directory, which ``build_session`` does not set, and one write per
+    cut."""
+    from pyspark.sql import functions as F
+
+    from ..functions.numeric import pround
+    from ..operators import dedup as D
+    from ..operators import textstats as TS
+    from ..operators.clusters import leakage_safe_split
+    from ..operators.curation import token_budget_mix
+
+    # Lineage cuts. Under AQE a "lazy" localCheckpoint(eager=False) runs
+    # the shuffle and broadcast stages upstream of it as soon as it is
+    # called; only its last stage waits for a consumer. Each cut below
+    # is kept because removing it cost more than it saved, measured by
+    # removing one cut at a time on ``curate_corpus`` (1,000 docs,
+    # 4 vCPUs, CPU of passes 5-8 of one session):
+    # - docs: without it each job re-runs the scan and repartition, and
+    #   the pass runs 25 jobs instead of 23 and 0.5 CPU-s more. In
+    #   ``curate_corpus`` calling it runs 2 jobs (schema inference, the
+    #   repartition).
+    docs = docs.localCheckpoint(eager=False)
+    pairs = D.minhash_dedup_pairs(docs, threshold=threshold)
+    # The split rows keep the doc columns, so the keepers need no join
+    # back for their text and language. Building the split runs the
+    # closure's checkpoint jobs (10 here, the pair pipeline included).
+    split = leakage_safe_split(docs, pairs, id_col="doc_id")
+    # - surv: the substring gate reads the survivors twice and the
+    #   gated join once more. Without the cut each reader re-runs the
+    #   keeper window and the quality expressions: same 23 jobs,
+    #   0.1-1.9 CPU-s more over two runs. Calling it runs 1 job.
+    surv = (
+        split.filter(F.col("id") == F.col("keeper_id"))
+        .select("id", "text", "lang", "split", *TS.curation_feature_columns(F.col("text")))
+        .filter(F.col("quality") >= min_quality)
+    ).localCheckpoint(eager=False)
+    subs = D.substring_dup_stats(surv, k=5, id_col="id").select("id", "dup_frac")
+    # - gated: the mix reads it and so does the join that brings back
+    #   quality and dup_frac. Without the cut the pass runs 25 jobs
+    #   instead of 23 at equal CPU. Calling it runs 4 jobs.
+    gated = (
+        surv.join(subs, "id")
+        .filter((F.col("dup_frac") <= 0.5) & (F.col("split") == "train"))
+        .select("id", "lang", "n_bpe_tokens", "quality", "dup_frac")
+    ).localCheckpoint(eager=False)
+    mixed = token_budget_mix(
+        gated,
+        {"en": 3000},
+        default_budget=1000,
+        id_col="id",
+        tokens_col=F.col("n_bpe_tokens"),
+    )
+    out = mixed.join(gated.select("id", "quality", "dup_frac"), "id")
+    return out.select(
+        F.col("id").cast("long").alias("id"),
+        "lang",
+        F.col("n_tokens").cast("long").alias("n_bpe_tokens"),
+        pround(F.col("quality"), 6).alias("quality"),
+        F.col("dup_frac").cast("double").alias("dup_frac"),
+        F.col("cum_tokens").cast("long").alias("cum_tokens"),
+    )

@@ -316,23 +316,6 @@ class TestMergeUpsert:
             merge_upsert(a, b, ["id"])
 
 
-class TestCogroup:
-    def test_full_outer_keys(self, spark):
-        from keras_ocr_spark.operators.cogroup import cogroup_user_activity
-
-        ev = spark.createDataFrame(
-            [(1, 2.0), (1, 3.0), (5, 1.0)], "user_id long, value double"
-        )
-        orders = spark.createDataFrame(
-            [(1, 10.0), (7, 20.0)], "o_custkey long, o_totalprice double"
-        )
-        got = {r["user_id"]: r for r in cogroup_user_activity(ev, orders).collect()}
-        assert set(got) == {1, 5, 7}
-        assert got[1]["n_events"] == 2 and got[1]["events_value"] == 5.0
-        assert got[1]["n_orders"] == 1 and got[1]["orders_total"] == 10.0
-        assert got[5]["n_orders"] == 0 and got[7]["n_events"] == 0
-
-
 class TestTableDiff:
     def test_statuses(self, spark):
         from keras_ocr_spark.operators.merge import table_diff
@@ -410,18 +393,6 @@ class TestTableDiffDigestSafety:
         b = spark.createDataFrame([(1, "a", "b\x1fc")], "id long, x string, y string")
         got = [r["status"] for r in table_diff(a, b, ["id"]).collect()]
         assert got == ["changed"]
-
-
-class TestCogroupNullKey:
-    def test_null_key_group_survives(self, spark):
-        from keras_ocr_spark.operators.cogroup import cogroup_user_activity
-
-        ev = spark.createDataFrame([(None, 2.0), (1, 1.0)], "user_id long, value double")
-        orders = spark.createDataFrame([(1, 5.0)], "o_custkey long, o_totalprice double")
-        rows = cogroup_user_activity(ev, orders).collect()
-        by_key = {r["user_id"]: r for r in rows}
-        assert None in by_key and by_key[None]["n_events"] == 1
-        assert by_key[1]["n_orders"] == 1
 
 
 class TestFrequentNgrams:

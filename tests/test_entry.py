@@ -197,7 +197,6 @@ def test_documents_shape_precondition_for_extract_oracle(sf):
 #: with its tests) is progress; a new module may not join it.
 NO_CALLER = {
     "keras_ocr_spark.operators.asof": "library operator, no caller since the events prune",
-    "keras_ocr_spark.operators.cogroup": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.funnel": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.refintegrity": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.regression": "library operator, no caller since the events prune",

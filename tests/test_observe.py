@@ -1,19 +1,20 @@
-"""write_with_audit: one-scan write-time metrics via Observation.
-No oracle query (the value IS the side-effect-free metric delivery on a
-write action); pinned here against a recomputation, with the
-single-job claim checked via the Spark status tracker."""
+"""commit: one-scan write-time metrics via Observation, here with no
+manifest to publish. No oracle query (the value IS the side-effect-free
+metric delivery on a write action); pinned here against a
+recomputation, with the single-job claim checked via the Spark status
+tracker."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from keras_ocr_spark.plans.observe import write_with_audit
+from keras_ocr_spark.plans.observe import commit
 
 
 class TestWriteWithAudit:
     def test_metrics_match_recompute_and_files_land(self, spark, tmp_path):
         df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         path = str(tmp_path / "audited")
-        got = write_with_audit(
+        got = commit(
             df,
             path,
             {
@@ -21,6 +22,7 @@ class TestWriteWithAudit:
                 "null_lang": "sum(cast(lang is null as bigint))",
                 "short_docs": "sum(cast(n_chars < 100 as bigint))",
             },
+            manifests=lambda a: {},
         )
         want = df.agg(
             F.expr("count(*)").alias("n"),
@@ -38,7 +40,7 @@ class TestWriteWithAudit:
         df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         tracker = spark.sparkContext.statusTracker()
         before = len(tracker.getJobIdsForGroup(None) or [])
-        write_with_audit(df, str(tmp_path / "one_job"), {"n": "count(*)"})
+        commit(df, str(tmp_path / "one_job"), {"n": "count(*)"}, manifests=lambda a: {})
         after = len(tracker.getJobIdsForGroup(None) or [])
         # the write is one job; the metric must NOT add another
         assert after - before == 1
@@ -48,11 +50,11 @@ class TestWriteWithAudit:
         # attached to. Attached AFTER the filter, they count kept rows.
         df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         kept = df.filter(F.col("n_chars") >= 100)
-        got = write_with_audit(kept, str(tmp_path / "final"), {"n": "count(*)"})
+        got = commit(kept, str(tmp_path / "final"), {"n": "count(*)"}, manifests=lambda a: {})
         assert got["n"] == kept.count()
         assert got["n"] < df.count()
 
     def test_validation(self, spark, tmp_path):
         df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         with pytest.raises(ValueError):
-            write_with_audit(df, str(tmp_path / "x"), {})
+            commit(df, str(tmp_path / "x"), {}, manifests=lambda a: {})

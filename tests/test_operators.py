@@ -1,4 +1,4 @@
-"""Operator-level tests: dedup, text stats, multimodal.
+"""Operator-level tests: dedup, text stats, PDF payloads.
 
 Small hand-built inputs with exactly known answers (the reference's
 golden-unit-test style, tests/test_tools.py + test_evaluation.py).
@@ -11,7 +11,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from keras_ocr_spark.operators import dedup as D
-from keras_ocr_spark.operators import multimodal as M
 from keras_ocr_spark.operators import textstats as TS
 
 DOCS = [
@@ -373,53 +372,6 @@ class TestContainmentPairs:
         want = sorted(con.execute(sql.replace("CAST(0.8 AS DOUBLE)", "CAST(0.56 AS DOUBLE)")).fetchall())
         assert want == [(1, 2, 25, 34, 0.56)]
         assert got == want
-
-
-class TestMultimodal:
-    def test_feature_extraction_deterministic(self, spark):
-        media = M.synth_media(spark, n=12)
-        a = sorted((r.media_id, tuple(r.feat)) for r in M.extract_features(media).collect())
-        b = sorted((r.media_id, tuple(r.feat)) for r in M.extract_features(media).collect())
-        assert a == b
-        assert all(len(f) == 8 for _, f in a)
-        assert all(all(0.0 <= x <= 1.0 for x in f) for _, f in a)
-
-    def test_real_decoder_gated_by_capability_probe(self, spark):
-        """Without codecs in the image, the real path raises the honest
-        NotImplementedError; WITH codecs (skipped here unless present)
-        it decodes through the identical mapInPandas plumbing."""
-        media = M.synth_media(spark, n=3)
-        if not M._media_capabilities()["image"]:
-            with pytest.raises(Exception, match="NotImplementedError|media decode"):
-                M.extract_features(media, decode_stub=False).collect()
-        else:
-            got = M.extract_features(media, decode_stub=False).collect()
-            assert all(len(r.feat) == 8 for r in got)
-
-    @pytest.mark.skipif(
-        not M._media_capabilities()["image"], reason="no PIL/cv2 in this runtime image"
-    )
-    def test_real_image_decode_kernel(self, spark):
-        """Lights up automatically the day the image gains codecs: a
-        real PNG decodes to a dim-8 intensity profile in [0,1]."""
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.new("L", (16, 16), color=128).save(buf, format="PNG")
-        df = spark.createDataFrame(
-            [("m1", "image", bytearray(buf.getvalue()), 16, 16, 0)],
-            "media_id string, kind string, payload binary, width int, height int, duration_ms int",
-        )
-        r = M.extract_features(df, decode_stub=False).collect()[0]
-        assert len(r.feat) == 8 and all(abs(x - 128 / 255) < 0.01 for x in r.feat)
-
-    def test_frame_sampling(self, spark):
-        media = M.synth_media(spark, n=9)
-        frames = M.sample_frames(media, every_n=10).collect()
-        assert len(frames) > 0
-        assert all(r.frame_idx % 10 == 0 for r in frames)
 
 
 class TestEncodeAndFilters:

@@ -63,8 +63,13 @@ def test_spark_submit_py_files(spark, tmp_path):
 @pytest.mark.slow
 def test_spark_submit_curate_job(spark, tmp_path):
     """The curation job through spark-submit with only the zip on the
-    python path; idempotence: a re-run produces the identical summary
-    (deterministic keepers + content hash)."""
+    python path writes the ``curate_corpus`` plan: its rows, text
+    dropped, equal the query's (the DuckDB oracle's 113 rows and 6,860
+    tokens at sf0.001), each with its input text. Idempotence: a re-run
+    publishes the identical ``_summary.json`` (deterministic keepers +
+    content hash)."""
+    from keras_ocr_spark.driver_queries import q_curate_corpus
+
     spark_submit = shutil.which("spark-submit")
     if spark_submit is None:
         pytest.skip("spark-submit not on PATH")
@@ -72,8 +77,9 @@ def test_spark_submit_curate_job(spark, tmp_path):
     subprocess.run(["bash", str(REPO / "scripts/package.sh")], check=True, capture_output=True)
     zip_path = REPO / "dist/keras_ocr_spark.zip"
 
-    inp = "/root/testdata/sf0.001/documents.parquet"
-    out = str(tmp_path / "curated")
+    sf_dir = "/root/testdata/sf0.001"
+    inp = f"{sf_dir}/documents.parquet"
+    out = tmp_path / "curated"
 
     def run():
         proc = subprocess.run(
@@ -86,7 +92,7 @@ def test_spark_submit_curate_job(spark, tmp_path):
                 "--py-files", str(zip_path),
                 str(REPO / "scripts/curate_job.py"),
                 "--input", inp,
-                "--output", out,
+                "--output", str(out),
             ],
             capture_output=True,
             text=True,
@@ -94,16 +100,22 @@ def test_spark_submit_curate_job(spark, tmp_path):
             cwd=str(tmp_path),
         )
         assert proc.returncode == 0, proc.stderr[-3000:]
-        return json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
+        printed = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
+        published = (out / "_summary.json").read_text()
+        assert json.loads(published) == printed
+        return published
 
     s1 = run()
-    assert s1["n_in"] == 500
-    # pairs count EDGES (a cyclic 3-cluster has 3 edges, drops 2 docs),
-    # so the only sound bounds are 0 < kept <= n_in, and strictly
-    # fewer than n_in whenever any near-dup pair exists.
-    assert 0 < s1["n_kept"] <= 500
-    if s1["near_dup_pairs"] > 0:
-        assert s1["n_kept"] < 500
-    assert s1["kept_tokens"] > 0
-    s2 = run()  # idempotent re-run
-    assert s2 == s1
+    written = spark.read.parquet(str(out))
+    cols = ["id", "lang", "n_bpe_tokens", "quality", "dup_frac", "cum_tokens"]
+    assert written.columns == [*cols, "text"]
+    want = sorted(map(tuple, q_curate_corpus(spark, sf_dir).collect()))
+    assert sorted(map(tuple, written.select(*cols).collect())) == want
+    assert (len(want), sum(r[2] for r in want)) == (113, 6860)
+    texts = {r.doc_id: r.text for r in spark.read.parquet(inp).collect()}
+    assert all(texts[r.id] == r.text for r in written.select("id", "text").collect())
+    summary = json.loads(s1)
+    assert {k: summary[k] for k in ("n_in", "n_kept", "kept_tokens")} == {
+        "n_in": 500, "n_kept": 113, "kept_tokens": 6860,
+    }
+    assert run() == s1  # idempotent re-run

@@ -100,12 +100,16 @@ def test_stage1_worker_stops_rereading_zip_directories(spark):
 
 
 UDF_DECORATORS = {"pandas_udf", "arrow_udf"}
+UDF_METHODS = {"mapInPandas", "mapInArrow", "applyInPandas", "applyInArrow"}
 INSTALL = ast.dump(ast.parse("zipguard.install()").body[0])
 
 
 def _udf_functions():
     """``(module path, qualified name, node)`` of every function in the
-    package decorated with ``F.pandas_udf`` or ``F.arrow_udf``."""
+    package decorated with ``F.pandas_udf`` or ``F.arrow_udf``, or passed
+    to ``mapInPandas``, ``mapInArrow``, ``applyInPandas`` or
+    ``applyInArrow``. A function passed as anything but the name of a
+    function defined in an enclosing scope comes back with node ``None``."""
     pkg = Path(__file__).resolve().parent.parent / "keras_ocr_spark"
 
     def is_udf_decorator(dec) -> bool:
@@ -117,29 +121,50 @@ def _udf_functions():
             and target.value.id == "F"
         )
 
-    def walk(node, path, prefix):
+    def passed_function(node, scope):
+        """``(qualified name, node)`` of the function a boundary call
+        passes, or None when ``node`` is no boundary call."""
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            return None
+        if node.func.attr not in UDF_METHODS:
+            return None
+        arg = node.args[0] if node.args else None
+        if isinstance(arg, ast.Name) and arg.id in scope:
+            return scope[arg.id]
+        return f"<{node.func.attr} of {ast.unparse(arg) if arg else 'nothing'}>", None
+
+    def walk(node, path, prefix, scope):
+        functions = (ast.FunctionDef, ast.AsyncFunctionDef)
+        defined = [c for c in ast.iter_child_nodes(node) if isinstance(c, functions)]
+        scope = {**scope, **{c.name: (f"{prefix}{c.name}", c) for c in defined}}
         for child in ast.iter_child_nodes(node):
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if isinstance(child, (*functions, ast.ClassDef)):
                 name = f"{prefix}{child.name}"
                 if not isinstance(child, ast.ClassDef) and any(map(is_udf_decorator, child.decorator_list)):
                     yield path, name, child
-                yield from walk(child, path, f"{name}.")
+                yield from walk(child, path, f"{name}.", scope)
             else:
-                yield from walk(child, path, prefix)
+                passed = passed_function(child, scope)
+                if passed is not None:
+                    yield path, *passed
+                yield from walk(child, path, prefix, scope)
 
     for path in sorted(pkg.rglob("*.py")):
-        yield from walk(ast.parse(path.read_text()), path.relative_to(pkg).as_posix(), "")
+        yield from walk(ast.parse(path.read_text()), path.relative_to(pkg).as_posix(), "", {})
 
 
 def _starts_with_install(fn) -> bool:
+    if fn is None:
+        return False
     body = fn.body[1:] if ast.get_docstring(fn) is not None else fn.body  # a docstring may come first
     return bool(body) and ast.dump(body[0]) == INSTALL
 
 
 def test_every_package_udf_installs_zipguard_first():
-    """A package UDF ships to the worker by value, so only a reference
-    in its body makes the worker import and install the guard; without
-    it every task re-reads the zip directories on the worker's path."""
+    """A package UDF, or a function handed to a ``mapIn*``/``applyIn*``
+    boundary, ships to the worker by value, so only a reference in its
+    body makes the worker import and install the guard; without it every
+    task re-reads the zip directories on the worker's path."""
     udfs = {f"{path}:{name}": fn for path, name, fn in _udf_functions()}
     assert {
         "operators/dedup.py:shingle_docs_arrow._sh",
@@ -147,6 +172,7 @@ def test_every_package_udf_installs_zipguard_first():
         "operators/dedup.py:substring_dup_stats._grams",
         "operators/dedup.py:substring_dup_stats._span_stats",
         "operators/detect.py:propose_spans_udf._extract",
+        "operators/multimodal.py:pdf_extract_text.op",
     } <= set(udfs), sorted(udfs)
     unguarded = sorted(name for name, fn in udfs.items() if not _starts_with_install(fn))
     assert unguarded == []

@@ -297,10 +297,10 @@ def _band_sql_values(n_bands: int, rows: int) -> str:
     return ", ".join(vals)
 
 
-@register(
-    "dedup_minhash_lsh",
-    f"""
-    WITH sh0 AS ({_SHINGLES_SQL}),
+#: The CTEs every MinHash oracle starts from: ``sh0`` (each document's
+#: distinct 3-gram shingles), ``digs`` and ``sig`` (the 16-component
+#: signature) and ``bands`` (4 LSH band keys of 4 components each).
+_MINHASH_BANDS_SQL = f"""sh0 AS ({_SHINGLES_SQL}),
     digs AS (
       SELECT id, list_transform(shingles, s -> md5(s) || md5(s || '#')) AS digests
       FROM sh0 WHERE len(shingles) > 0),
@@ -308,35 +308,12 @@ def _band_sql_values(n_bands: int, rows: int) -> str:
       SELECT id, [{_minhash_sql_components(16)}] AS signature FROM digs),
     bands AS (
       SELECT id, b.band_idx, b.band_key
-      FROM sig, LATERAL (VALUES {_band_sql_values(4, 4)}) AS b(band_idx, band_key))
-    SELECT DISTINCT CAST(a.id AS BIGINT) AS id_a, CAST(b.id AS BIGINT) AS id_b
-    FROM bands a JOIN bands b
-      ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.id < b.id
-    """,
-)
-def q_dedup_minhash_lsh(spark, sf_dir):
-    # Explicit opt-in hot-bucket cap (scale guard; the oracle is the
-    # uncapped candidate set — equal while no band bucket nears 10k,
-    # which exact-dedup-first guarantees on real pipelines too).
-    docs = _docs(spark, sf_dir)
-    sigs = D.minhash_signatures(docs, n_hashes=16)
-    out = D.lsh_candidate_pairs(sigs, n_bands=4, rows_per_band=4, max_bucket_size=10_000)
-    return out.select(F.col("id_a").cast("long").alias("id_a"), F.col("id_b").cast("long").alias("id_b"))
+      FROM sig, LATERAL (VALUES {_band_sql_values(4, 4)}) AS b(band_idx, band_key))"""
 
-
-@register(
-    "dedup_resolve",
-    f"""
-    WITH RECURSIVE
-    sh0 AS ({_SHINGLES_SQL}),
-    digs AS (
-      SELECT id, list_transform(shingles, s -> md5(s) || md5(s || '#')) AS digests
-      FROM sh0 WHERE len(shingles) > 0),
-    sig AS (
-      SELECT id, [{_minhash_sql_components(16)}] AS signature FROM digs),
-    bands AS (
-      SELECT id, b.band_idx, b.band_key
-      FROM sig, LATERAL (VALUES {_band_sql_values(4, 4)}) AS b(band_idx, band_key)),
+#: ``minhash_dedup_pairs(threshold=0.5)`` resolved into clusters, after
+#: the bands: ``pairs`` (verified candidate pairs) and ``resolved``
+#: (``id, keeper_id``, the component minimum). Needs ``WITH RECURSIVE``.
+_RESOLVED_SQL = f"""{_MINHASH_BANDS_SQL},
     cand AS (
       SELECT DISTINCT a.id AS id_a, b.id AS id_b
       FROM bands a JOIN bands b
@@ -361,7 +338,32 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     comp AS (SELECT id, min(r) AS keeper FROM reach GROUP BY id),
     resolved AS (
       SELECT d.doc_id AS id, coalesce(c.keeper, d.doc_id) AS keeper_id
-      FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+      FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)"""
+
+
+@register(
+    "dedup_minhash_lsh",
+    f"""
+    WITH {_MINHASH_BANDS_SQL}
+    SELECT DISTINCT CAST(a.id AS BIGINT) AS id_a, CAST(b.id AS BIGINT) AS id_b
+    FROM bands a JOIN bands b
+      ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.id < b.id
+    """,
+)
+def q_dedup_minhash_lsh(spark, sf_dir):
+    # Explicit opt-in hot-bucket cap (scale guard; the oracle is the
+    # uncapped candidate set — equal while no band bucket nears 10k,
+    # which exact-dedup-first guarantees on real pipelines too).
+    docs = _docs(spark, sf_dir)
+    sigs = D.minhash_signatures(docs, n_hashes=16)
+    out = D.lsh_candidate_pairs(sigs, n_bands=4, rows_per_band=4, max_bucket_size=10_000)
+    return out.select(F.col("id_a").cast("long").alias("id_a"), F.col("id_b").cast("long").alias("id_b"))
+
+
+@register(
+    "dedup_resolve",
+    f"""
+    WITH RECURSIVE {_RESOLVED_SQL},
     csize AS (SELECT keeper_id, count(*) AS cluster_size FROM resolved GROUP BY keeper_id)
     SELECT CAST(r.id AS BIGINT) AS id, CAST(r.keeper_id AS BIGINT) AS keeper_id,
            CAST(s.cluster_size AS BIGINT) AS cluster_size,
@@ -395,9 +397,11 @@ def q_dedup_resolve(spark, sf_dir):
 
 def _simhash64_sql() -> str:
     """64-bit SimHash terms over a precomputed ``nibs`` column
-    (list of per-word 16-nibble lists) — the DuckDB twin of
-    ``functions.hashing.simhash64_from_nibbles_expr``. Bit 63 contributes
-    -2^63 so the fingerprint is the signed int64 both engines store."""
+    (list of per-word 16-nibble lists) — the DuckDB form of
+    ``functions.hashing.simhash64_py``: bit b votes on nibble 16 - b//4
+    (1-based from the left), at within-nibble position b%4. Bit 63
+    contributes -2^63 so the fingerprint is the signed int64 both
+    engines store."""
     bits = []
     for b in range(64):
         j = 16 - b // 4  # 1-based nibble index from the left
@@ -626,41 +630,7 @@ def q_sha256_manifest(spark, sf_dir):
 @register(
     "curate_corpus",
     f"""
-    WITH RECURSIVE
-    sh0 AS ({_SHINGLES_SQL}),
-    digs AS (
-      SELECT id, list_transform(shingles, s -> md5(s) || md5(s || '#')) AS digests
-      FROM sh0 WHERE len(shingles) > 0),
-    sig AS (
-      SELECT id, [{_minhash_sql_components(16)}] AS signature FROM digs),
-    bands AS (
-      SELECT id, b.band_idx, b.band_key
-      FROM sig, LATERAL (VALUES {_band_sql_values(4, 4)}) AS b(band_idx, band_key)),
-    cand AS (
-      SELECT DISTINCT a.id AS id_a, b.id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.id < b.id),
-    sh AS (SELECT id, unnest(shingles) AS shingle FROM sh0),
-    sizes AS (SELECT id, count(*) AS n_shingles FROM sh GROUP BY id),
-    common AS (
-      SELECT c.id_a, c.id_b, count(*) AS n_common
-      FROM cand c
-      JOIN sh a ON a.id = c.id_a
-      JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle
-      GROUP BY c.id_a, c.id_b),
-    pairs AS (
-      SELECT id_a, id_b
-      FROM common JOIN sizes sa ON sa.id = common.id_a JOIN sizes sb ON sb.id = common.id_b
-      WHERE CAST(n_common AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_common) >= CAST(0.5 AS DOUBLE)),
-    edges AS (SELECT id_a AS u, id_b AS v FROM pairs UNION SELECT id_b, id_a FROM pairs),
-    reach(id, r) AS (
-      SELECT u, u FROM edges
-      UNION
-      SELECT e.u, reach.r FROM edges e JOIN reach ON reach.id = e.v),
-    comp AS (SELECT id, min(r) AS keeper FROM reach GROUP BY id),
-    resolved AS (
-      SELECT d.doc_id AS id, coalesce(c.keeper, d.doc_id) AS keeper_id
-      FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+    WITH RECURSIVE {_RESOLVED_SQL},
     feats AS (
       SELECT doc_id AS id, length(text) AS n_chars,
              len(string_split(text, ' ')) AS n_words,
@@ -1481,15 +1451,7 @@ def q_topk_per_lang(spark, sf_dir):
 @register(
     "dedup_incremental",
     f"""
-    WITH sh0 AS ({_SHINGLES_SQL}),
-    digs AS (
-      SELECT id, list_transform(shingles, s -> md5(s) || md5(s || '#')) AS digests
-      FROM sh0 WHERE len(shingles) > 0),
-    sig AS (
-      SELECT id, [{_minhash_sql_components(16)}] AS signature FROM digs),
-    bands AS (
-      SELECT id, b.band_idx, b.band_key
-      FROM sig, LATERAL (VALUES {_band_sql_values(4, 4)}) AS b(band_idx, band_key)),
+    WITH {_MINHASH_BANDS_SQL},
     cand AS (
       SELECT DISTINCT n.id AS new_id, c.id AS corpus_id
       FROM bands n JOIN bands c
@@ -1751,41 +1713,7 @@ def q_dedup_containment(spark, sf_dir):
 @register(
     "dedup_best_keeper",
     f"""
-    WITH RECURSIVE
-    sh0 AS ({_SHINGLES_SQL}),
-    digs AS (
-      SELECT id, list_transform(shingles, s -> md5(s) || md5(s || '#')) AS digests
-      FROM sh0 WHERE len(shingles) > 0),
-    sig AS (
-      SELECT id, [{_minhash_sql_components(16)}] AS signature FROM digs),
-    bands AS (
-      SELECT id, b.band_idx, b.band_key
-      FROM sig, LATERAL (VALUES {_band_sql_values(4, 4)}) AS b(band_idx, band_key)),
-    cand AS (
-      SELECT DISTINCT a.id AS id_a, b.id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.id < b.id),
-    sh AS (SELECT id, unnest(shingles) AS shingle FROM sh0),
-    sizes AS (SELECT id, count(*) AS n_shingles FROM sh GROUP BY id),
-    common AS (
-      SELECT c.id_a, c.id_b, count(*) AS n_common
-      FROM cand c
-      JOIN sh a ON a.id = c.id_a
-      JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle
-      GROUP BY c.id_a, c.id_b),
-    pairs AS (
-      SELECT id_a, id_b
-      FROM common JOIN sizes sa ON sa.id = common.id_a JOIN sizes sb ON sb.id = common.id_b
-      WHERE CAST(n_common AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_common) >= CAST(0.5 AS DOUBLE)),
-    edges AS (SELECT id_a AS u, id_b AS v FROM pairs UNION SELECT id_b, id_a FROM pairs),
-    reach(id, r) AS (
-      SELECT u, u FROM edges
-      UNION
-      SELECT e.u, reach.r FROM edges e JOIN reach ON reach.id = e.v),
-    comp AS (SELECT id, min(r) AS keeper FROM reach GROUP BY id),
-    resolved AS (
-      SELECT d.doc_id AS id, coalesce(c.keeper, d.doc_id) AS keeper_id
-      FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+    WITH RECURSIVE {_RESOLVED_SQL},
     feats AS (
       SELECT doc_id AS id, length(text) AS n_chars,
              len(string_split(text, ' ')) AS n_words,
@@ -2040,41 +1968,7 @@ def q_dedup_substring(spark, sf_dir):
 @register(
     "leakage_safe_split",
     f"""
-    WITH RECURSIVE
-    sh0 AS ({_SHINGLES_SQL}),
-    digs AS (
-      SELECT id, list_transform(shingles, s -> md5(s) || md5(s || '#')) AS digests
-      FROM sh0 WHERE len(shingles) > 0),
-    sig AS (
-      SELECT id, [{_minhash_sql_components(16)}] AS signature FROM digs),
-    bands AS (
-      SELECT id, b.band_idx, b.band_key
-      FROM sig, LATERAL (VALUES {_band_sql_values(4, 4)}) AS b(band_idx, band_key)),
-    cand AS (
-      SELECT DISTINCT a.id AS id_a, b.id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.id < b.id),
-    sh AS (SELECT id, unnest(shingles) AS shingle FROM sh0),
-    sizes AS (SELECT id, count(*) AS n_shingles FROM sh GROUP BY id),
-    common AS (
-      SELECT c.id_a, c.id_b, count(*) AS n_common
-      FROM cand c
-      JOIN sh a ON a.id = c.id_a
-      JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle
-      GROUP BY c.id_a, c.id_b),
-    pairs AS (
-      SELECT id_a, id_b
-      FROM common JOIN sizes sa ON sa.id = common.id_a JOIN sizes sb ON sb.id = common.id_b
-      WHERE CAST(n_common AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_common) >= CAST(0.5 AS DOUBLE)),
-    edges AS (SELECT id_a AS u, id_b AS v FROM pairs UNION SELECT id_b, id_a FROM pairs),
-    reach(id, r) AS (
-      SELECT u, u FROM edges
-      UNION
-      SELECT e.u, reach.r FROM edges e JOIN reach ON reach.id = e.v),
-    comp AS (SELECT id, min(r) AS keeper FROM reach GROUP BY id),
-    resolved AS (
-      SELECT d.doc_id AS id, coalesce(c.keeper, d.doc_id) AS keeper_id
-      FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)
+    WITH RECURSIVE {_RESOLVED_SQL}
     SELECT CAST(id AS BIGINT) AS id,
            CAST(keeper_id AS BIGINT) AS keeper_id,
            CASE WHEN substr(md5(CAST(keeper_id AS VARCHAR)), 1, 1) IN ('0','1','2','3')

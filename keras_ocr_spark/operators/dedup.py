@@ -1,25 +1,34 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five strategies over a ``(id, text)``-shaped DataFrame, all Spark-first:
+Strategies over a ``(id, text)``-shaped DataFrame, all Spark-first:
 
 - **exact**            — md5 groupBy (one shuffle on the hash, perfectly
                          distributable; at 100 TB this is the canonical
                          pre-pass before any near-dup work).
 - **n-gram Jaccard**   — shingle -> explode -> equi-join on shingle ->
-                         count-based Jaccard.
-- **MinHash + LSH**    — per-row signatures (zero shuffle, higher-order
-                         fns), band keys, equi-join on band -> candidate
-                         pairs; optional exact-Jaccard verification of
-                         candidates only (the scale path: candidates ≪
-                         all-pairs).
-- **SimHash**          — per-row 16..64-bit fingerprints, near-dups =
+                         count-based Jaccard; the prefix-filter form
+                         (:func:`prefix_filter_jaccard_pairs`) returns the
+                         same pairs from far fewer candidates, and
+                         :func:`containment_pairs` scores asymmetric
+                         overlap the same way.
+- **MinHash + LSH**    — per-row signatures (one Arrow kernel, zero
+                         shuffle), band keys, equi-join on band ->
+                         candidate pairs; optional exact-Jaccard
+                         verification of candidates only (the scale path:
+                         candidates ≪ all-pairs).
+- **SimHash**          — per-row 64-bit fingerprints, near-dups =
                          small Hamming distance.
+- **substring spans**  — corpus-repeated word k-grams mark duplicated
+                         spans (:func:`substring_dup_stats`).
 
-All hashing is md5-based (``functions.hashing``) so every operator has an
-exact DuckDB oracle. Signature computation never shuffles; only the
-candidate-pair equi-joins do, and those are plain hash joins Catalyst/AQE
-handle (skewed shingle keys — stopword shingles — are filtered by a
-document-frequency cap before the join, the classic hot-key guard).
+Each per-document kernel has one implementation, a pandas UDF, checked in
+tests against an independent reference (the DuckDB oracle SQL or
+``functions.hashing.simhash64_py``). All hashing is md5-based
+(``functions.hashing``) so every operator has an exact DuckDB oracle.
+Signature computation never shuffles; only the candidate-pair equi-joins
+do, and those are plain hash joins Catalyst/AQE handle (skewed shingle
+keys — stopword shingles — are filtered by a document-frequency cap
+before the join, the classic hot-key guard).
 """
 
 from __future__ import annotations
@@ -33,13 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import zipguard
-from ..functions.hashing import (
-    shingles_expr,
-    simhash64_from_nibbles_expr,
-    simhash_block_key_expr,
-    word_nibbles_expr,
-    words_expr,
-)
+from ..functions.hashing import shingles_expr, simhash_block_key_expr, words_expr
 from ..functions.numeric import pround
 
 
@@ -61,15 +64,10 @@ def shingle_docs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", 
     )
 
 
-def shingle_docs_arrow(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3) -> DataFrame:
-    """Arrow-vectorized twin of :func:`shingle_docs` — identical rows
-    (pinned in tests), ~20x cheaper per doc: ``shingles_expr``'s
-    interpreted higher-order chain (transform + slice + concat_ws +
-    array_distinct, no whole-stage codegen) costs ~100us/doc, which
-    dominates any plan that shingles the corpus; the Python kernel
-    crosses the boundary once with only (id, text) and joins k-grams
-    with plain str.join. Used by the prefix-filter dedup paths; plans
-    that must stay zero-Python keep :func:`shingle_docs`."""
+def _shingle_array_udf(k: int):
+    """The Arrow shingle kernel: text -> its distinct word k-grams in
+    first-occurrence order, the same array ``shingles_expr`` builds
+    (empty for null text or fewer than ``k`` words)."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _sh(texts: pd.Series) -> pd.Series:
@@ -85,7 +83,20 @@ def shingle_docs_arrow(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
 
         return texts.map(one)
 
-    return df.select(F.col(id_col).alias("id"), F.explode(_sh(F.col(text_col))).alias("shingle"))
+    return _sh
+
+
+def shingle_docs_arrow(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3) -> DataFrame:
+    """Arrow-vectorized twin of :func:`shingle_docs` — identical rows
+    (pinned in tests), ~20x cheaper per doc: ``shingles_expr``'s
+    interpreted higher-order chain (transform + slice + concat_ws +
+    array_distinct, no whole-stage codegen) costs ~100us/doc, which
+    dominates any plan that shingles the corpus; the Python kernel
+    crosses the boundary once with only (id, text) and joins k-grams
+    with plain str.join. Used by the MinHash verification paths; plans
+    that must stay zero-Python keep :func:`shingle_docs`."""
+    sh = _shingle_array_udf(k)
+    return df.select(F.col(id_col).alias("id"), F.explode(sh(F.col(text_col))).alias("shingle"))
 
 
 def ngram_jaccard_pairs(
@@ -148,20 +159,7 @@ def _rarity_coded_docs(
     unchanged either way.
     """
 
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _sh_arr(texts: pd.Series) -> pd.Series:
-        zipguard.install()
-
-        def one(t):
-            if t is None:
-                return []
-            ws = t.split(" ")
-            if len(ws) < k:
-                return []
-            return list(dict.fromkeys(" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)))
-
-        return texts.map(one)
-
+    sh = _shingle_array_udf(k)
     # Parallelism floor: this build and EVERYTHING downstream of it
     # (prefix explode, candidate join probe, verification) is map-side
     # relative to the coded frame, so its partitioning IS the query's
@@ -172,7 +170,7 @@ def _rarity_coded_docs(
     # repartition is a no-op-sized shuffle of (id, text).
     spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     sh_arr = (
-        spread.select(F.col(id_col).alias("id"), _sh_arr(F.col(text_col)).alias("_sh"))
+        spread.select(F.col(id_col).alias("id"), sh(F.col(text_col)).alias("_sh"))
         .filter(F.size("_sh") > 0)
         .localCheckpoint(eager=False)
     )
@@ -397,17 +395,21 @@ def minhash_signatures(
 ) -> DataFrame:
     """id -> array of n_hashes MinHash components (Arrow-vectorized).
 
-    Semantically identical to :func:`minhash_signatures_sql` (asserted in
-    tests) but ~40x faster: Spark's higher-order functions evaluate
-    interpreted (no whole-stage codegen), which makes md5-per-shingle
-    loops pay ~20us per op. The kernel hashes each shingle twice
-    (md5(s), md5(s+'#') — the fixed cross-engine scheme) into one byte
-    buffer and takes the 16 per-window minima as a single numpy >u2
-    column-min: lexicographic min over lowercase-hex 4-grams == integer
-    min over the big-endian uint16 of the same two bytes (measured 2.1x
-    over the per-window string-min loop; within 26% of the md5-only
-    floor). Still per-row map-only — NO shuffle at 100 TB.
+    Hashing scheme (the one the DuckDB oracles recompute; equality
+    pinned in tests): md5 is the only hash bit-identical across Spark
+    and DuckDB, so each shingle gets ONE 64-hex digest
+    (md5(s) || md5(s + '#')) and the components are minima over
+    DISJOINT 4-hex windows of it — 16 independent 16-bit hash functions
+    for 2 md5 calls per shingle. ``n_hashes`` is therefore at most 16.
+    The kernel hashes each shingle into one byte buffer and takes the
+    per-window minima as a single numpy >u2 column-min: lexicographic
+    min over lowercase-hex 4-grams == integer min over the big-endian
+    uint16 of the same two bytes (measured 2.1x over the per-window
+    string-min loop; within 26% of the md5-only floor). Per-row
+    map-only — NO shuffle at 100 TB.
     """
+    if n_hashes > 16:
+        raise ValueError("n_hashes > 16 needs more digest windows")
     import numpy as np
 
     # n_hashes <= 8 fits in ONE md5 digest (8 u16 windows) — half the
@@ -467,48 +469,6 @@ def minhash_signatures(
     return eligible.select(
         F.col(id_col).alias("id"), _sig(F.col(text_col)).alias("signature")
     )
-
-
-def minhash_signatures_sql(
-    df: DataFrame,
-    n_hashes: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
-    """Pure-expression variant of :func:`minhash_signatures` (JVM-only
-    plan, used where a no-Python plan is required; same values).
-
-    Hashing strategy: md5 is the only hash bit-identical across Spark
-    and DuckDB, but 16 md5 calls per shingle is the dominant cost. So
-    each shingle gets ONE 64-hex digest (md5(s) || md5(s + '#')) and the
-    16 components are minima over 16 DISJOINT 4-hex windows of it — 16
-    independent 16-bit hash functions for 2 md5 calls per shingle (8x
-    less hashing; 16-bit range is ample for per-doc shingle counts).
-
-    Plan hygiene: shingles and digests materialize ONCE in their own
-    projections — inlining the shingle expression per component (16x)
-    made Catalyst optimize + codegen a pathologically large tree.
-    """
-    if n_hashes > 16:
-        raise ValueError("n_hashes > 16 needs more digest windows")
-    staged = df.select(
-        F.col(id_col).alias("id"),
-        shingles_expr(words_expr(F.col(text_col)), k).alias("_shingles"),
-    ).filter(F.size("_shingles") > 0)
-    one = lambda s: F.md5(s)  # noqa: E731 — n_hashes <= 8: one digest
-    two = lambda s: F.concat(F.md5(s), F.md5(F.concat(s, F.lit("#"))))  # noqa: E731
-    digests = staged.select(
-        "id",
-        F.transform("_shingles", two if n_hashes > 8 else one).alias("_digests"),
-    )
-    sig = F.array(
-        *[
-            F.array_min(F.transform("_digests", lambda d: F.substring(d, 4 * i + 1, 4)))
-            for i in range(n_hashes)
-        ]
-    )
-    return digests.select("id", sig.alias("signature"))
 
 
 def lsh_candidate_pairs(
@@ -643,9 +603,8 @@ def minhash_dedup_pairs(
 def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """id -> 64-bit SimHash as a signed int64 (per-row, zero shuffle).
 
-    Arrow-vectorized pandas-UDF fast path over the shared pure-Python
-    kernel (``functions.hashing.simhash64_py``); the pure-expression twin
-    is :func:`simhash_fingerprints_sql` (equality asserted in tests, and
+    Arrow-vectorized pandas UDF; the pure-Python golden is
+    ``functions.hashing.simhash64_py`` (equality asserted in tests, and
     the DuckDB oracle recomputes the same nibble arithmetic). 64 bits
     keeps the fingerprint space collision-safe at >=10^9 docs — the
     16-bit variant collided catastrophically past ~10^7."""
@@ -686,21 +645,11 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = 
             u = int(np.packbits(pos, bitorder="little").view(np.uint64)[0])
             return u - (1 << 64) if u >= (1 << 63) else u
 
-        return texts.map(one)
+        # object dtype: ``texts.map`` infers float64 for a batch holding
+        # a null text, which rounds every int64 print in it to 53 bits.
+        return pd.Series([one(t) for t in texts], dtype=object)
 
     return df.select(F.col(id_col).alias("id"), _sh(F.col(text_col)).alias("simhash"))
-
-
-def simhash_fingerprints_sql(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Pure-expression (JVM-only) twin of :func:`simhash_fingerprints` —
-    same values, no Python worker; used where a no-Python plan matters
-    more than raw md5 throughput. Nibbles materialize once in their own
-    projection (plan hygiene, cf. minhash_signatures_sql)."""
-    staged = df.select(
-        F.col(id_col).alias("id"),
-        word_nibbles_expr(words_expr(F.col(text_col))).alias("_nibs"),
-    )
-    return staged.select("id", simhash64_from_nibbles_expr(F.col("_nibs")).alias("simhash"))
 
 
 def simhash_blocks(fp: DataFrame, n_blocks: int = 4) -> DataFrame:
@@ -848,20 +797,23 @@ def incremental_dedup_pairs(
     """
     rows_per_band = n_hashes // n_bands
     corpus_bands = band_projection(
-        minhash_signatures_sql(corpus_docs, n_hashes, id_col, text_col, k), n_bands, rows_per_band
+        minhash_signatures(corpus_docs, n_hashes, id_col, text_col, k), n_bands, rows_per_band
     )
     new_bands = band_projection(
-        minhash_signatures_sql(new_docs, n_hashes, id_col, text_col, k), n_bands, rows_per_band
+        minhash_signatures(new_docs, n_hashes, id_col, text_col, k), n_bands, rows_per_band
     ).withColumnRenamed("id", "new_id")
     cands = (
         corpus_bands.join(F.broadcast(new_bands), ["band_idx", "band_key"])
         .select(F.col("new_id"), F.col("id").alias("corpus_id"))
         .distinct()
     )
+    # No localCheckpoint, unlike :func:`minhash_dedup_pairs`: over a
+    # repartitioned input it runs that exchange when the frame is
+    # built, and this plan stays lazy until an action.
     return verify_jaccard(
         cands,
-        shingle_docs(new_docs, id_col, text_col, k).withColumnRenamed("id", "new_id"),
-        shingle_docs(corpus_docs, id_col, text_col, k).withColumnRenamed("id", "corpus_id"),
+        shingle_docs_arrow(new_docs, id_col, text_col, k).withColumnRenamed("id", "new_id"),
+        shingle_docs_arrow(corpus_docs, id_col, text_col, k).withColumnRenamed("id", "corpus_id"),
         "new_id",
         "corpus_id",
         threshold,
@@ -876,22 +828,25 @@ def substring_dup_stats(
 ) -> DataFrame:
     """EXACT substring-span dedup stats — Arrow-kernel fast path.
 
-    Same rows as :func:`substring_dup_stats_sql` (pinned in tests):
-    the r5 pure-expression form spent its wall on two interpreted
-    higher-order chains — md5(concat_ws(slice)) per gram position, and
-    the O(n_words x n_spans) exists/filter span-coverage algebra —
-    which cost ~15s at sf1.0 the moment a consumer actually reads
-    ``dup_frac``/``clean_text`` (the curation pipeline does; a bare
-    count() prunes it all away, which is why the standalone bench line
-    never showed it). Here gram digests come from one pandas UDF
-    (raw hashlib.md5 bytes — hex is an injective encoding, so equality
-    classes match F.md5/DuckDB md5 exactly) and the span union + text
-    rebuild from a second struct-returning pandas UDF;
-    the corpus-wide duplicated-digest count is a window over one
+    The Lee et al. 2022 "Deduplicating Training Data Makes Language
+    Models Better" flow, shingle-hash formulation: every word k-gram
+    occurring MORE THAN ONCE across the corpus (any doc, including
+    repeats within one doc) marks its k-word span as duplicated; per doc
+    we report the union size of duplicated spans and the text with
+    those spans removed. Same rows as the ``dedup_substring`` DuckDB
+    oracle (pinned in tests). An interpreted higher-order-function form
+    (md5(concat_ws(slice)) per gram position plus O(n_words x n_spans)
+    exists/filter span-coverage algebra) cost ~15s at sf1.0 once a
+    consumer reads ``dup_frac``/``clean_text``, so gram digests come
+    from one pandas UDF (raw hashlib.md5 bytes — hex is an injective
+    encoding, so equality classes match F.md5/DuckDB md5 exactly) and
+    the span union + text rebuild from a second struct-returning pandas
+    UDF; the corpus-wide duplicated-digest count is a window over one
     exchange on the digest (positions, not text, ride it), and each
     document collects its start list in one more exchange on the id.
 
-    Output: (id, n_words, dup_words, dup_frac, clean_text).
+    Output: (id, n_words, dup_words, dup_frac, clean_text), one row per
+    input doc; docs shorter than k words pass through untouched.
     """
 
     # RAW 16-byte digests, not 32-char hex: the digest column exists
@@ -919,7 +874,7 @@ def substring_dup_stats(
         n_out, dup_out, clean_out = [], [], []
         for t, ds in zip(texts, starts):
             if t is None:
-                # matches the expression form: size(NULL words) is NULL,
+                # matches the oracle: len(split(NULL)) is NULL,
                 # dup_words falls through to 0, clean_text to ''.
                 n_out.append(None)
                 dup_out.append(0)
@@ -980,87 +935,4 @@ def substring_dup_stats(
         .cast("double")
         .alias("dup_frac"),
         F.col("_s.clean_text").alias("clean_text"),
-    )
-
-
-def substring_dup_stats_sql(
-    df: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """EXACT substring-span deduplication stats (the Lee et al. 2022
-    "Deduplicating Training Data Makes Language Models Better" flow,
-    shingle-hash formulation): every word k-gram occurring MORE THAN
-    ONCE across the corpus (any doc, including repeats within one doc)
-    marks its k-word span as duplicated; per doc we report the union
-    size of duplicated spans and the text with those spans removed.
-
-    Reference analog: the recognizer's blank/duplicate-label collapse
-    (``/root/reference/keras_ocr/recognition.py:353-358`` CTC decode
-    dedup) lifted from token-level to corpus-substring-level.
-
-    Scale shape (the standard Spark approximation of the paper's suffix
-    array): one explode of per-position k-gram md5s -> ONE count
-    shuffle keyed by the 32-hex digest with map-side partial
-    aggregation -> equi-join the duplicated digests back -> per-doc
-    start-position lists (second bounded shuffle) -> span-union +
-    text-rebuild as PER-ROW array algebra (exists/filter over the word
-    array — no further shuffle). Positions, not text, ride the joins.
-
-    Output: (id, n_words, dup_words, dup_frac, clean_text), one row per
-    input doc; docs shorter than k words pass through untouched.
-    """
-    words = words_expr(F.col(text_col))
-    n = F.size(words)
-    grams = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(k - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(words, i, k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    g = df.select(F.col(id_col).alias("id"), F.posexplode(grams).alias("pos0", "h")).select(
-        "id", (F.col("pos0") + 1).alias("pos"), "h"
-    )
-    # The corpus-wide count is a window over the one ``h`` exchange, so
-    # the gram rows are produced and shuffled once (a groupBy plus a
-    # join back would evaluate ``_grams`` for each side).
-    starts = (
-        g.select("id", "pos", F.count(F.lit(1)).over(W.partitionBy("h")).alias("c"))
-        .filter(F.col("c") > 1)
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_list("pos")).alias("dup_starts"))
-    )
-    base = df.select(F.col(id_col).alias("id"), words.alias("_ws"))
-    joined = base.join(starts, "id", "left").select(
-        "id", "_ws", F.coalesce("dup_starts", F.array().cast("array<int>")).alias("_ds")
-    )
-    covered = lambda wp: F.exists(  # noqa: E731 — word pos inside any dup span
-        F.col("_ds"), lambda d: (wp >= d) & (wp <= d + F.lit(k - 1))
-    )
-    n_words = F.size("_ws")
-    dup_words = F.size(
-        F.filter(F.sequence(F.lit(1), n_words), lambda wp: covered(wp))
-    )
-    # coalesce: a NULL-text doc has _ws = NULL -> array_join yields NULL,
-    # but the contract (and the DuckDB oracle's COALESCE) is empty text —
-    # NULL would silently break the value-hash parity on dirty corpora.
-    clean = F.coalesce(
-        F.array_join(F.filter("_ws", lambda w, i: ~covered(i + F.lit(1))), " "),
-        F.lit(""),
-    )
-    return joined.select(
-        "id",
-        n_words.cast("long").alias("n_words"),
-        F.when(n_words > 0, dup_words).otherwise(F.lit(0)).cast("long").alias("dup_words"),
-        F.when(
-            n_words > 0,
-            F.floor(dup_words.cast("double") / n_words.cast("double") * 1000000 + F.lit(0.5))
-            / 1000000,
-        )
-        .otherwise(F.lit(0.0))
-        .cast("double")
-        .alias("dup_frac"),
-        clean.alias("clean_text"),
     )

@@ -62,7 +62,7 @@ HEADLINERS = {
         "substring-span dedup: gram digests + span union/text rebuild as "
         "two Arrow kernels (r6 — the interpreted per-gram md5 chain and "
         "the O(words x spans) coverage algebra cost ~15s at sf1.0 when "
-        "consumed; zero-Python twin kept as substring_dup_stats_sql); "
+        "consumed); "
         "same one-count-shuffle shape, positions not text ride the joins "
         "(3 static python nodes = gram kernel planned twice + span kernel; "
         "the duplicated gram subtrees share one exchange at runtime via "

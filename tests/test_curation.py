@@ -533,12 +533,14 @@ class TestSubstringDedup:
         nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln and "_span_stats" in ln]
         assert len(nodes) == 1 and plan.count("_span_stats(") == 1, plan
 
-    def test_arrow_kernel_equals_sql_twin(self, spark):
-        """The r6 Arrow-kernel fast path must return EXACTLY the
-        pure-expression form's rows — gram digests, span unions,
-        rebuilt text, nulls, multi-space round-trips, everything."""
+    def test_arrow_kernel_equals_sql_twin(self, spark, oracle_rows):
+        """The Arrow kernel must return EXACTLY the registered
+        ``dedup_substring`` oracle SQL's rows on the same input — gram
+        digests, span unions, rebuilt text, nulls, multi-space
+        round-trips, everything."""
         import random
 
+        from keras_ocr_spark.driver_queries import QUERIES
         from keras_ocr_spark.operators import dedup as D
 
         rnd = random.Random(17)
@@ -554,8 +556,8 @@ class TestSubstringDedup:
         rows.append((nid + 1, f"{core} tail tail {core}"))
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         fast = sorted(tuple(r) for r in D.substring_dup_stats(docs, k=5).collect())
-        slow = sorted(tuple(r) for r in D.substring_dup_stats_sql(docs, k=5).collect())
-        assert fast == slow
+        want = sorted(oracle_rows(QUERIES["dedup_substring"][1], rows))
+        assert fast == want
 
 
 class TestCurationFeatures:

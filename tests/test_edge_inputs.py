@@ -12,16 +12,36 @@ from keras_ocr_spark.operators import textstats as TS
 from keras_ocr_spark.plans.pipeline import extract
 
 
+EDGE_ROWS = [
+    (0, None),
+    (1, ""),
+    (2, "   "),
+    (3, "x"),
+    (4, "a perfectly ordinary sentence with enough words to extract and shingle nicely"),
+]
+
+_SENTENCE = EDGE_ROWS[4][1]
+
+#: Every input class the dedup kernels must agree with their independent
+#: references on: the edge texts, fewer than k words, multi-space runs,
+#: and exact and near duplicates (which also plant duplicated 5-grams).
+DEDUP_ROWS = [
+    *EDGE_ROWS,
+    (5, "two words"),
+    (6, "multi  spaced   text with  gaps between its words"),
+    (7, _SENTENCE),
+    (8, _SENTENCE.replace("nicely", "neatly")),
+]
+
+
 @pytest.fixture(scope="module")
 def edge_docs(spark):
-    rows = [
-        (0, None),
-        (1, ""),
-        (2, "   "),
-        (3, "x"),
-        (4, "a perfectly ordinary sentence with enough words to extract and shingle nicely"),
-    ]
-    return spark.createDataFrame(rows, "doc_id int, text string")
+    return spark.createDataFrame(EDGE_ROWS, "doc_id int, text string")
+
+
+@pytest.fixture(scope="module")
+def dedup_docs(spark):
+    return spark.createDataFrame(DEDUP_ROWS, "doc_id int, text string")
 
 
 class TestEdgeTexts:
@@ -36,20 +56,46 @@ class TestEdgeTexts:
         assert rows["c0"] == ("", 0) and rows["c1"] == ("", 0)  # null/empty -> blank turn
         assert rows["c4"][1] == 1  # the real sentence extracts
 
-    def test_dedup_family(self, edge_docs):
-        assert D.exact_dedup(edge_docs).count() >= 4  # null hashes to null key, no crash
-        sigs = {r.id for r in D.minhash_signatures(edge_docs).collect()}
+    def test_dedup_family(self, dedup_docs, minhash_oracle, oracle_rows):
+        """Each per-document dedup kernel equals its independent
+        reference on every input class."""
+        from keras_ocr_spark.driver_queries import QUERIES
+        from keras_ocr_spark.functions.hashing import simhash64_py
+
+        assert D.exact_dedup(dedup_docs).count() >= 4  # null hashes to null key, no crash
+        for n in (16, 8):
+            sigs = {r.id: list(r.signature) for r in D.minhash_signatures(dedup_docs, n_hashes=n).collect()}
+            assert sigs == minhash_oracle(DEDUP_ROWS, n)
         # Whitespace-only text splits into >= k empty "words" and signs
         # with degenerate shingles — all-whitespace docs bucket together
-        # (they ARE near-dups); the pandas kernel and the SQL twin agree.
-        assert sigs == {2, 4}
-        twin = {r.id for r in D.minhash_signatures_sql(edge_docs).collect()}
-        assert twin == sigs
-        fps = {r.id: r.simhash for r in D.simhash_fingerprints(edge_docs).collect()}
+        # (they ARE near-dups).
+        assert set(sigs) == {2, 4, 6, 7, 8}
+        assert sigs[7] == sigs[4]  # exact dups sign alike
+        fps = {r.id: r.simhash for r in D.simhash_fingerprints(dedup_docs).collect()}
         assert fps[0] is None  # null text -> null fingerprint
-        assert all(v is not None for k, v in fps.items() if k != 0)
-        pairs = D.ngram_jaccard_pairs(edge_docs, threshold=0.1).collect()
+        assert fps == {i: simhash64_py(t) for i, t in DEDUP_ROWS}
+        subs = sorted(tuple(r) for r in D.substring_dup_stats(dedup_docs, k=5).collect())
+        assert subs == sorted(oracle_rows(QUERIES["dedup_substring"][1], DEDUP_ROWS))
+        assert {r[0] for r in subs if r[2] > 0} == {4, 7, 8}
+        pairs = D.ngram_jaccard_pairs(dedup_docs, threshold=0.1).collect()
         assert all(r.id_a < r.id_b for r in pairs)
+
+    def test_shingle_forms_agree(self, dedup_docs, oracle_rows):
+        """The JVM expression, the Arrow kernel and the oracle SQL build
+        the same (id, shingle) rows."""
+        from keras_ocr_spark.driver_queries import _SHINGLES_SQL
+
+        jvm = sorted(tuple(r) for r in D.shingle_docs(dedup_docs).collect())
+        arrow = sorted(tuple(r) for r in D.shingle_docs_arrow(dedup_docs).collect())
+        duck = sorted(oracle_rows(f"SELECT id, unnest(shingles) FROM ({_SHINGLES_SQL})", DEDUP_ROWS))
+        assert {i for i, _ in jvm} == {2, 4, 6, 7, 8}
+        assert jvm == arrow == duck
+
+    def test_minhash_rejects_more_hashes_than_digest_windows(self, edge_docs):
+        # a 64-hex digest holds 16 windows: a 17th component would
+        # silently be missing, and its band key equal for every doc
+        with pytest.raises(ValueError, match="digest windows"):
+            D.minhash_signatures(edge_docs, n_hashes=17)
 
     def test_textstats_family(self, edge_docs):
         nn = edge_docs.filter(F.col("text").isNotNull())

@@ -196,11 +196,9 @@ def test_documents_shape_precondition_for_extract_oracle(sf):
 #: reach them. Shrinking this dict (give a module a caller, or delete it
 #: with its tests) is progress; a new module may not join it.
 NO_CALLER = {
-    "keras_ocr_spark.operators.asof": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.funnel": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.refintegrity": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.regression": "library operator, no caller since the events prune",
-    "keras_ocr_spark.operators.semistructured": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.skewjoin": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.incremental": "library operator, no caller since the TPC-H prune",
     "keras_ocr_spark.operators.expectations": "library operator, no caller since the TPC-H prune",

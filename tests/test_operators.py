@@ -134,17 +134,15 @@ class TestPrefixFilterJaccard:
 
 
 class TestMinHashLSH:
-    def test_signature_shape_and_determinism(self, docs):
+    def test_signature_shape_and_determinism(self, docs, minhash_oracle):
         sigs = D.minhash_signatures(docs, n_hashes=16).collect()
-        # pandas and pure-SQL engines agree value for value
-        sql_sigs = {r.id: list(r.signature) for r in D.minhash_signatures_sql(docs, n_hashes=16).collect()}
-        assert {r.id: list(r.signature) for r in sigs} == sql_sigs
-        # the single-digest scheme (n_hashes <= 8, one md5/shingle) has
-        # an agreeing twin too, and is a strict prefix of the 16-hash
-        # signature (same windows over md5(s))
+        # the Arrow kernel and the DuckDB oracle SQL agree value for value
+        assert {r.id: list(r.signature) for r in sigs} == minhash_oracle(DOCS, 16)
+        # the single-digest scheme (n_hashes <= 8, one md5/shingle)
+        # agrees too, and is a strict prefix of the 16-hash signature
+        # (same windows over md5(s))
         a8 = {r.id: list(r.signature) for r in D.minhash_signatures(docs, n_hashes=8).collect()}
-        b8 = {r.id: list(r.signature) for r in D.minhash_signatures_sql(docs, n_hashes=8).collect()}
-        assert a8 == b8
+        assert a8 == minhash_oracle(DOCS, 8)
         assert all(a8[r.id] == list(r.signature)[:8] for r in sigs)
         assert all(len(r.signature) == 16 for r in sigs)
         assert {r.id for r in sigs} == {0, 1, 2, 3}  # doc 4 has no shingles
@@ -189,9 +187,11 @@ class TestSimHash:
         assert ham_near < ham_far
 
     def test_expression_twin_equals_python_kernel(self, docs):
+        # the Arrow kernel equals the pure-Python golden, row by row
+        from keras_ocr_spark.functions.hashing import simhash64_py
+
         fast = {r.id: r.simhash for r in D.simhash_fingerprints(docs).collect()}
-        twin = {r.id: r.simhash for r in D.simhash_fingerprints_sql(docs).collect()}
-        assert fast == twin
+        assert fast == {i: simhash64_py(t) for i, t in DOCS}
 
     def test_near_pairs(self, docs):
         pairs = {(r.id_a, r.id_b): r.hamming for r in D.simhash_near_pairs(docs, max_hamming=3).collect()}
@@ -521,70 +521,6 @@ class TestApproxAggregates:
         assert abs(row.approx - row.exact) <= max(3, 0.15 * row.exact)
 
 
-class TestAsofJoin:
-    def test_inclusive_match_misses_and_one_shuffle(self, spark):
-        from keras_ocr_spark.operators.asof import asof_join
-
-        left = spark.createDataFrame(
-            [(1, 1, 100), (2, 1, 205), (3, 2, 50), (4, 3, 10)],
-            "event_id long, user_id long, ts long",
-        )
-        right = spark.createDataFrame(
-            [(1, 100, 10.0), (1, 200, 20.0), (2, 60, 5.0)],
-            "user_id long, ts long, value double",
-        )
-        out = {
-            r.event_id: r.value_asof
-            for r in asof_join(left, right, ["user_id"], right_vals=("value",)).collect()
-        }
-        assert out[1] == 10.0  # inclusive: right ts == left ts matches
-        assert out[2] == 20.0  # latest preceding, not first
-        assert out[3] is None  # right row is AFTER the left row -> miss
-        assert out[4] is None  # no right rows for the key at all
-        # scale shape: exactly ONE hash exchange (the per-key window);
-        # no range join, no cartesian
-        plan = (
-            asof_join(left, right, ["user_id"], right_vals=("value",))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert plan.count("Exchange hashpartitioning") == 1
-        assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-
-    def test_multiple_payload_columns(self, spark):
-        from keras_ocr_spark.operators.asof import asof_join
-
-        left = spark.createDataFrame([(1, 1, 100)], "event_id long, user_id long, ts long")
-        right = spark.createDataFrame(
-            [(1, 90, 7.0, "a")], "user_id long, ts long, value double, tag string"
-        )
-        r = asof_join(left, right, ["user_id"], right_vals=("value", "tag")).collect()[0]
-        assert (r.value_asof, r.tag_asof) == (7.0, "a")
-
-    def test_null_payload_from_latest_match_wins(self, spark):
-        """DuckDB ASOF semantics under NULL payloads (r3 ADVICE medium):
-        the LATEST matching right row's values win even when they are
-        NULL — an older row's non-null value must NOT carry forward, and
-        multiple payload columns must come from the SAME right row."""
-        from keras_ocr_spark.operators.asof import asof_join
-
-        left = spark.createDataFrame(
-            [(1, 1, 100), (2, 1, 300)], "event_id long, user_id long, ts long"
-        )
-        right = spark.createDataFrame(
-            [(1, 50, 7.0, "old"), (1, 90, None, "newer"), (1, 250, 9.0, None)],
-            "user_id long, ts long, value double, tag string",
-        )
-        out = {
-            r.event_id: (r.value_asof, r.tag_asof)
-            for r in asof_join(left, right, ["user_id"], right_vals=("value", "tag")).collect()
-        }
-        # latest match at ts=90 has value NULL: NULL wins, tag comes
-        # from the SAME row ("newer"), not mixed with ts=50's 7.0
-        assert out[1] == (None, "newer")
-        # latest match at ts=250: value 9.0, tag NULL — again atomic
-        assert out[2] == (9.0, None)
-
-
 class TestBm25:
     def test_goldens_and_ordering(self, spark):
         from keras_ocr_spark.operators.retrieval import bm25_scores
@@ -666,37 +602,6 @@ class TestDirtyInputDegradation:
         # oracle COALESCEs to '' for the null-text doc; Spark must agree
         assert rows[1].clean_text == "" and rows[1].dup_words == 0
         assert rows[1].n_words is None  # len(split(NULL)) is NULL both engines
-
-
-class TestJsonFieldRollup:
-    def test_rollup_and_dirty_json_degrades_to_null(self, spark):
-        from keras_ocr_spark.operators.semistructured import json_field_rollup
-
-        events = spark.createDataFrame(
-            [
-                (0, "click", '{"k": 10}'),
-                (1, "click", '{"k": 30}'),
-                (2, "click", "not json at all"),
-                (3, "view", '{"other": 1}'),
-                (4, "view", None),
-            ],
-            "event_id long, event_type string, props string",
-        )
-        out = {r.event_type: r for r in json_field_rollup(events).collect()}
-        c = out["click"]
-        assert (c.n_events, c.n_with_field, c.min_val, c.max_val) == (3, 2, 10, 30)
-        assert c.avg_val == 20.0
-        v = out["view"]  # field absent everywhere: coverage 0, NULL stats
-        assert (v.n_events, v.n_with_field, v.min_val, v.avg_val) == (2, 0, None, None)
-
-    def test_json_parse_stays_jvm_side(self, spark):
-        from keras_ocr_spark.operators.semistructured import json_field_rollup
-
-        events = spark.createDataFrame(
-            [(0, "click", '{"k": 1}')], "event_id long, event_type string, props string"
-        )
-        plan = json_field_rollup(events)._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" not in plan and "Exchange" in plan
 
 
 class TestShinglePagerank:

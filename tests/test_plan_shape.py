@@ -6,8 +6,10 @@ Asserts properties of `.explain()` output that matter at 100 TB:
 - exactly ONE Python boundary (stage-1 ArrowEvalPython, an Arrow
   iterator UDF running the whole per-turn kernel); the JVM side only
   projects its struct fields, with no lambda functions;
-- pure-expression operators (textstats, simhash, minhash signatures)
-  have NO exchange and NO Python nodes at all;
+- pure-expression operators (textstats) have NO exchange and NO Python
+  nodes at all;
+- a pandas-UDF dedup kernel is evaluated once per plan, not once per
+  consumer;
 - the flagship plan is MAP-ONLY — zero exchanges; salting adds exactly
   one.
 """
@@ -121,10 +123,8 @@ class TestExpressionOperatorsStayJvmSide:
             lambda d: TS.quality_scores(d),
             lambda d: TS.token_counts(d),
             lambda d: TS.fingerprints(d),
-            lambda d: D.minhash_signatures_sql(d),
-            lambda d: D.simhash_fingerprints_sql(d),
         ],
-        ids=["lang", "quality", "tokens", "fingerprint", "minhash_sigs", "simhash_sql_twin"],
+        ids=["lang", "quality", "tokens", "fingerprint"],
     )
     def test_no_python_no_shuffle(self, docs, build):
         plan = plan_of(build(docs))

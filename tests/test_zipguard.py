@@ -167,7 +167,7 @@ def test_every_package_udf_installs_zipguard_first():
     task re-reads the zip directories on the worker's path."""
     udfs = {f"{path}:{name}": fn for path, name, fn in _udf_functions()}
     assert {
-        "operators/dedup.py:shingle_docs_arrow._sh",
+        "operators/dedup.py:_shingle_array_udf._sh",
         "operators/dedup.py:minhash_signatures._sig",
         "operators/dedup.py:substring_dup_stats._grams",
         "operators/dedup.py:substring_dup_stats._span_stats",

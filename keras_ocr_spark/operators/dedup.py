@@ -21,7 +21,12 @@ Strategies over a ``(id, text)``-shaped DataFrame, all Spark-first:
 - **substring spans**  — corpus-repeated word k-grams mark duplicated
                          spans (:func:`substring_dup_stats`).
 
-Each per-document kernel has one implementation, a pandas UDF, checked in
+Each per-document kernel has one implementation, an Arrow iterator UDF
+(``F.arrow_udf``) that reads its batch with ``to_pylist()`` and builds
+its output from flat lists, so no pandas object sits on either side of
+the boundary.
+MinHash signatures and shingle sets come from ONE kernel
+(:func:`_doc_udf`), one split per document. Each kernel is checked in
 tests against an independent reference (the DuckDB oracle SQL or
 ``functions.hashing.simhash64_py``). All hashing is md5-based
 (``functions.hashing``) so every operator has an exact DuckDB oracle.
@@ -34,12 +39,14 @@ before the join, the classic hot-key guard).
 from __future__ import annotations
 
 import hashlib
+from typing import Iterator, Tuple
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import zipguard
 from ..functions.hashing import shingles_expr, simhash_block_key_expr, words_expr
@@ -64,39 +71,129 @@ def shingle_docs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", 
     )
 
 
-def _shingle_array_udf(k: int):
-    """The Arrow shingle kernel: text -> its distinct word k-grams in
-    first-occurrence order, the same array ``shingles_expr`` builds
-    (empty for null text or fewer than ``k`` words)."""
+#: The per-document kernel's output: the MinHash signature (null when
+#: the text is null or has fewer than k words, or when the kernel does
+#: not hash) and the distinct word k-grams in first-occurrence order.
+DOC_TYPE = T.StructType(
+    [
+        T.StructField("signature", T.ArrayType(T.StringType(), False), True),
+        T.StructField("shingles", T.ArrayType(T.StringType(), False), False),
+    ]
+)
 
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _sh(texts: pd.Series) -> pd.Series:
+#: Byte budget of the per-task md5 digest memo. An entry costs its str
+#: key (49 B + one byte per ASCII char), its bytes value (33 B + 16 or
+#: 32) and its dict slot (40-80 B amortized over resizes): 160-180 B for
+#: a typical 3-gram, measured with tracemalloc.
+_MEMO_BYTES = 32 << 20
+_MEMO_ENTRY_OVERHEAD = 136
+
+
+def _doc_udf(k: int, n_hashes: int):
+    """The per-document dedup kernel, an Arrow iterator UDF:
+    text -> ``struct<signature, shingles>`` (:data:`DOC_TYPE`) from one
+    split of the text.
+
+    ``shingles`` is the array ``shingles_expr`` builds: the distinct
+    word k-grams in first-occurrence order, empty for null text or
+    fewer than ``k`` words. ``signature`` holds ``n_hashes`` MinHash
+    components over those shingles (the scheme of
+    :func:`minhash_signatures`); it is null when ``shingles`` is empty.
+    ``n_hashes=0`` is the shingle-only kernel: it hashes nothing and
+    every signature is null.
+
+    The output is built from flat lists (one offsets and one values
+    list per array column and batch), as ``operators.detect`` does."""
+    if n_hashes > 16:
+        raise ValueError("n_hashes > 16 needs more digest windows")
+    doc_type = to_arrow_type(DOC_TYPE)
+    sig_type = doc_type.field("signature").type
+    sh_type = doc_type.field("shingles").type
+    # n_hashes <= 8 fits in ONE md5 digest (8 u16 windows) — half the
+    # hashing cost; the 16-hash scheme appends md5(s + '#') for windows
+    # 9..16 (the fixed cross-engine layout the oracle mirrors).
+    two_digests = n_hashes > 8
+    width = 16 if two_digests else 8
+
+    @F.arrow_udf(DOC_TYPE)
+    def _doc(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         zipguard.install()
+        import numpy as np
 
-        def one(t):
-            if t is None:
-                return []
-            ws = t.split(" ")
-            if len(ws) < k:
-                return []
-            return list(dict.fromkeys(" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)))
+        md5 = hashlib.md5
+        # Per-task digest memo: shingles repeat across documents (Zipf),
+        # so most md5 work is redundant; the byte budget bounds worker
+        # memory on open-vocabulary corpora.
+        memo: dict = {}
+        memo_left = _MEMO_BYTES
 
-        return texts.map(one)
+        for texts in batches:
+            sig_offsets, sig_values, sig_null = [0], [], []
+            sh_offsets, sh_values = [0], []
+            for t in texts.to_pylist():
+                ws = t.split(" ") if t is not None else ()
+                if len(ws) < k:
+                    sh_offsets.append(len(sh_values))
+                    sig_offsets.append(len(sig_values))
+                    sig_null.append(True)
+                    continue
+                shingles = list(dict.fromkeys(" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)))
+                sh_values += shingles
+                sh_offsets.append(len(sh_values))
+                if n_hashes:
+                    digests = []
+                    for s in shingles:
+                        d = memo.get(s)
+                        if d is None:
+                            b = s.encode()
+                            d = md5(b).digest() + md5(b + b"#").digest() if two_digests else md5(b).digest()
+                            if memo_left > 0:
+                                memo[s] = d
+                                memo_left -= len(b) + len(d) + _MEMO_ENTRY_OVERHEAD
+                        digests.append(d)
+                    # 16 bytes per md5 digest = 8 big-endian uint16
+                    # windows; the components are the first n_hashes.
+                    # Lexicographic min over lowercase-hex 4-grams ==
+                    # integer min over the big-endian uint16 of the
+                    # same two bytes.
+                    mins = np.frombuffer(b"".join(digests), dtype=">u2").reshape(-1, width)[:, :n_hashes].min(axis=0)
+                    hexed = mins.astype(">u2").tobytes().hex()
+                    sig_values += [hexed[i : i + 4] for i in range(0, 4 * n_hashes, 4)]
+                sig_offsets.append(len(sig_values))
+                sig_null.append(not n_hashes)
+            signature = pa.ListArray.from_arrays(
+                pa.array(sig_offsets, pa.int32()),
+                pa.array(sig_values, pa.string()),
+                type=sig_type,
+                mask=pa.array(sig_null, pa.bool_()),
+            )
+            shingles_arr = pa.ListArray.from_arrays(
+                pa.array(sh_offsets, pa.int32()), pa.array(sh_values, pa.string()), type=sh_type
+            )
+            yield pa.StructArray.from_arrays([signature, shingles_arr], fields=list(doc_type))
 
-    return _sh
+    return _doc
+
+
+def _doc_frame(df: DataFrame, id_col: str, text_col: str, k: int, n_hashes: int) -> DataFrame:
+    """(id, signature, shingles): one kernel evaluation per document."""
+    doc = _doc_udf(k, n_hashes)(F.col(text_col))
+    return df.select(F.col(id_col).alias("id"), doc.alias("_doc")).select(
+        "id", F.col("_doc.signature").alias("signature"), F.col("_doc.shingles").alias("shingles")
+    )
 
 
 def shingle_docs_arrow(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3) -> DataFrame:
-    """Arrow-vectorized twin of :func:`shingle_docs` — identical rows
-    (pinned in tests), ~20x cheaper per doc: ``shingles_expr``'s
-    interpreted higher-order chain (transform + slice + concat_ws +
-    array_distinct, no whole-stage codegen) costs ~100us/doc, which
-    dominates any plan that shingles the corpus; the Python kernel
-    crosses the boundary once with only (id, text) and joins k-grams
-    with plain str.join. Used by the MinHash verification paths; plans
-    that must stay zero-Python keep :func:`shingle_docs`."""
-    sh = _shingle_array_udf(k)
-    return df.select(F.col(id_col).alias("id"), F.explode(sh(F.col(text_col))).alias("shingle"))
+    """(id, shingles): each document's distinct word k-grams as one
+    array, in first-occurrence order — per document, the set of rows
+    :func:`shingle_docs` explodes (pinned in tests); empty for null text
+    or fewer than ``k`` words. A projection of the shingle-only
+    per-document kernel, which hashes nothing. It is ~20x cheaper per
+    doc than ``shingles_expr``'s interpreted higher-order chain
+    (transform + slice + concat_ws + array_distinct, no whole-stage
+    codegen, ~100us/doc). This is the frame :func:`verify_jaccard`
+    takes; plans that must stay zero-Python keep :func:`shingle_docs`."""
+    return _doc_frame(df, id_col, text_col, k, 0).select("id", "shingles")
 
 
 def ngram_jaccard_pairs(
@@ -159,7 +256,6 @@ def _rarity_coded_docs(
     unchanged either way.
     """
 
-    sh = _shingle_array_udf(k)
     # Parallelism floor: this build and EVERYTHING downstream of it
     # (prefix explode, candidate join probe, verification) is map-side
     # relative to the coded frame, so its partitioning IS the query's
@@ -170,7 +266,8 @@ def _rarity_coded_docs(
     # repartition is a no-op-sized shuffle of (id, text).
     spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     sh_arr = (
-        spread.select(F.col(id_col).alias("id"), sh(F.col(text_col)).alias("_sh"))
+        shingle_docs_arrow(spread, id_col, text_col, k)
+        .select("id", F.col("shingles").alias("_sh"))
         .filter(F.size("_sh") > 0)
         .localCheckpoint(eager=False)
     )
@@ -190,17 +287,23 @@ def _rarity_coded_docs(
     # array_intersect (and the explode/join chain) off the primitive
     # specialization onto the boxed generic path — measured 10x slower
     # verification with the default nullable element type.
-    @F.pandas_udf(T.ArrayType(T.IntegerType(), containsNull=False))
-    def _codes(shs: pd.Series) -> pd.Series:
+    codes_type = T.ArrayType(T.IntegerType(), containsNull=False)
+    codes_arrow = to_arrow_type(codes_type)
+
+    @F.arrow_udf(codes_type)
+    def _codes(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         zipguard.install()
         m = mapping
-
-        def one(arr):
-            out = [m[s] for s in arr if s in m]
-            out.sort()
-            return out
-
-        return shs.map(one)
+        for shs in batches:
+            offsets, values = [0], []
+            for arr in shs.to_pylist():
+                values += sorted(m[s] for s in arr if s in m)
+                offsets.append(len(values))
+            yield pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                pa.array(values, pa.int32()),
+                type=codes_arrow,
+            )
 
     coded = sh_arr.select("id", _codes(F.col("_sh")).alias("codes"))
     return coded.select("id", "codes", F.size("codes").alias("n")).filter(F.col("n") > 0)
@@ -393,7 +496,9 @@ def minhash_signatures(
     text_col: str = "text",
     k: int = 3,
 ) -> DataFrame:
-    """id -> array of n_hashes MinHash components (Arrow-vectorized).
+    """id -> array of n_hashes MinHash components: the ``signature``
+    projection of the per-document kernel (:func:`_doc_udf`), for the
+    documents with at least ``k`` words.
 
     Hashing scheme (the one the DuckDB oracles recompute; equality
     pinned in tests): md5 is the only hash bit-identical across Spark
@@ -402,73 +507,22 @@ def minhash_signatures(
     DISJOINT 4-hex windows of it — 16 independent 16-bit hash functions
     for 2 md5 calls per shingle. ``n_hashes`` is therefore at most 16.
     The kernel hashes each shingle into one byte buffer and takes the
-    per-window minima as a single numpy >u2 column-min: lexicographic
-    min over lowercase-hex 4-grams == integer min over the big-endian
-    uint16 of the same two bytes (measured 2.1x over the per-window
-    string-min loop; within 26% of the md5-only floor). Per-row
-    map-only — NO shuffle at 100 TB.
+    per-window minima as a single numpy >u2 column-min (measured 2.1x
+    over the per-window string-min loop; within 26% of the md5-only
+    floor). Per-row map-only — NO shuffle at 100 TB.
     """
-    if n_hashes > 16:
-        raise ValueError("n_hashes > 16 needs more digest windows")
-    import numpy as np
-
-    # n_hashes <= 8 fits in ONE md5 digest (8 u16 windows) — half the
-    # hashing cost; the 16-hash scheme appends md5(s + '#') for windows
-    # 9..16 (the fixed cross-engine layout the oracle mirrors).
-    two_digests = n_hashes > 8
-
-    # Per-task digest memo: shingles repeat across documents (Zipf), so
-    # most md5 work is redundant; the cap bounds worker memory on
-    # open-vocabulary corpora (16-48 B per entry).
-    _cache: dict = {}
-    _CACHE_CAP = 1_000_000
-
-    def _one(text):
-        if text is None:
-            return None
-        words = text.split(" ")
-        if len(words) < k:
-            return None
-        shingles = {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
-        md5 = hashlib.md5
-
-        def dig(s):
-            d = _cache.get(s)
-            if d is None:
-                if two_digests:
-                    d = md5(s.encode()).digest() + md5((s + "#").encode()).digest()
-                else:
-                    d = md5(s.encode()).digest()
-                if len(_cache) < _CACHE_CAP:
-                    _cache[s] = d
-            return d
-
-        buf = b"".join(dig(s) for s in shingles)
-        width = 16 if two_digests else 8
-        # 16 bytes per md5 digest = 8 big-endian uint16 windows;
-        # components are the first n_hashes of them.
-        arr = np.frombuffer(buf, dtype=">u2").reshape(-1, width)[:, :n_hashes]
-        return [format(v, "04x") for v in arr.min(axis=0)]
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _sig(texts: pd.Series) -> pd.Series:
-        zipguard.install()
-        return texts.map(_one)
-
     # Null-signature rows are excluded by filtering the kernel's exact
     # null PREcondition on the raw input (text null / fewer than k
-    # words), never on the UDF's own output: a filter on _sig's output
-    # gets pushed below an upstream exchange by Catalyst and duplicates
-    # the ArrowEvalPython node — the plan then evaluates every signature
-    # TWICE (observed in PLANS.md r3: python=2 under dedup_minhash_lsh).
-    # tests/test_plan_shape.py pins python==1 for this subtree.
+    # words), never on the UDF's own output: a filter on the kernel's
+    # output gets pushed below an upstream exchange by Catalyst and
+    # duplicates the ArrowEvalPython node — the plan then evaluates
+    # every signature TWICE. tests/test_plan_shape.py pins python==1
+    # for this subtree.
     eligible = df.filter(
         F.col(text_col).isNotNull()
         & (F.size(F.split(F.col(text_col), " ", -1)) >= k)
     )
-    return eligible.select(
-        F.col(id_col).alias("id"), _sig(F.col(text_col)).alias("signature")
-    )
+    return _doc_frame(eligible, id_col, text_col, k, n_hashes).select("id", "signature")
 
 
 def lsh_candidate_pairs(
@@ -545,27 +599,28 @@ def verify_jaccard(
     threshold: float,
 ) -> DataFrame:
     """Exact-Jaccard verification of CANDIDATE pairs only (the scale
-    path — the expensive shingle join touches candidates, not all
-    pairs). ``sh_left`` / ``sh_right`` are exploded shingle frames
-    ``(left_col|right_col, shingle)``; emits
-    ``(left_col, right_col, jaccard)`` for pairs >= threshold."""
-    sh_right = sh_right.withColumnRenamed("shingle", "_shingle_r")
-    sizes_l = sh_left.groupBy(left_col).agg(F.count("*").alias("_n_l"))
-    sizes_r = sh_right.groupBy(right_col).agg(F.count("*").alias("_n_r"))
-    common = (
-        cands.join(sh_left, left_col)
-        .join(sh_right, right_col)
-        .filter(F.col("shingle") == F.col("_shingle_r"))
-        .groupBy(left_col, right_col)
-        .agg(F.count("*").alias("n_common"))
+    path — only candidates are ever compared). ``sh_left`` /
+    ``sh_right`` are per-document shingle-array frames
+    ``(left_col|right_col, shingles)`` whose arrays hold distinct
+    shingles (:func:`shingle_docs_arrow`). Each candidate pair is joined
+    to its two documents' arrays and scored as
+    ``|A ∩ B| / (|A| + |B| - |A ∩ B|)`` with
+    ``size(array_intersect(a, b))``: one row per document crosses the
+    joins, never one row per shingle, and no size aggregate is needed.
+    A candidate must have at least one shingle on one side (every
+    signed document does). Emits ``(left_col, right_col, jaccard)`` for
+    pairs >= threshold."""
+    left = sh_left.select(left_col, F.col("shingles").alias("_sh_l"))
+    right = sh_right.select(right_col, F.col("shingles").alias("_sh_r"))
+    scored = cands.join(left, left_col).join(right, right_col).select(
+        left_col,
+        right_col,
+        F.size("_sh_l").alias("_n_l"),
+        F.size("_sh_r").alias("_n_r"),
+        F.size(F.array_intersect("_sh_l", "_sh_r")).alias("_n_common"),
     )
-    return (
-        common.join(sizes_l, left_col)
-        .join(sizes_r, right_col)
-        .withColumn("jaccard", F.col("n_common") / (F.col("_n_l") + F.col("_n_r") - F.col("n_common")))
-        .filter(F.col("jaccard") >= threshold)
-        .select(left_col, right_col, pround(F.col("jaccard"), 6).alias("jaccard"))
-    )
+    jaccard = F.col("_n_common") / (F.col("_n_l") + F.col("_n_r") - F.col("_n_common"))
+    return scored.filter(jaccard >= threshold).select(left_col, right_col, pround(jaccard, 6).alias("jaccard"))
 
 
 def minhash_dedup_pairs(
@@ -582,18 +637,17 @@ def minhash_dedup_pairs(
     exact-Jaccard verification of candidates only (:func:`verify_jaccard`).
     The pipeline flow opts into the hot-bucket cap explicitly (scale
     guard); pass ``max_bucket_size=None`` for exhaustive recall work."""
-    sigs = minhash_signatures(df, n_hashes, id_col, text_col, k)
+    # ONE kernel evaluation per document feeds all three consumers (the
+    # band projection and the two verification join sides): the lazy
+    # localCheckpoint stops Catalyst re-planning the kernel subtree per
+    # consumer. Behind it, filtering on the kernel's own output is safe.
+    docs = _doc_frame(df, id_col, text_col, k, n_hashes).localCheckpoint(eager=False)
+    sigs = docs.filter(F.col("signature").isNotNull()).select("id", "signature")
     cands = lsh_candidate_pairs(sigs, n_bands, n_hashes // n_bands, max_bucket_size=max_bucket_size)
-    # ONE shingle evaluation for all four verification consumers (two
-    # join probes + two size aggs): the Arrow kernel replaces the
-    # interpreted higher-order explode (~100us/doc) and the lazy
-    # localCheckpoint stops Catalyst re-planning the shingle subtree
-    # per consumer — verification previously re-shingled the corpus 4x.
-    sh = shingle_docs_arrow(df, id_col, text_col, k).localCheckpoint(eager=False)
     return verify_jaccard(
         cands,
-        sh.withColumnRenamed("id", "id_a"),
-        sh.withColumnRenamed("id", "id_b"),
+        docs.select(F.col("id").alias("id_a"), "shingles"),
+        docs.select(F.col("id").alias("id_b"), "shingles"),
         "id_a",
         "id_b",
         threshold,
@@ -603,21 +657,21 @@ def minhash_dedup_pairs(
 def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """id -> 64-bit SimHash as a signed int64 (per-row, zero shuffle).
 
-    Arrow-vectorized pandas UDF; the pure-Python golden is
+    Arrow iterator UDF; the pure-Python golden is
     ``functions.hashing.simhash64_py`` (equality asserted in tests, and
     the DuckDB oracle recomputes the same nibble arithmetic). 64 bits
     keeps the fingerprint space collision-safe at >=10^9 docs — the
     16-bit variant collided catastrophically past ~10^7."""
 
-    @F.pandas_udf(T.LongType())
-    def _sh(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.LongType())
+    def _sh(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         zipguard.install()
 
         # Vectorized twin of functions.hashing.simhash64_py (the pure
         # kernel stays as the cross-engine golden; equality pinned in
         # tests): the naive form runs a 64-iteration Python vote loop
         # per word occurrence. Here each DISTINCT word's md5 prefix is
-        # memoized per worker (Zipf word distributions make the hit
+        # memoized per task (Zipf word distributions make the hit
         # rate ~1), and a doc's votes come from one numpy unpackbits +
         # column sum over its word-hash matrix.
         import numpy as np
@@ -645,9 +699,8 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = 
             u = int(np.packbits(pos, bitorder="little").view(np.uint64)[0])
             return u - (1 << 64) if u >= (1 << 63) else u
 
-        # object dtype: ``texts.map`` infers float64 for a batch holding
-        # a null text, which rounds every int64 print in it to 53 bits.
-        return pd.Series([one(t) for t in texts], dtype=object)
+        for texts in batches:
+            yield pa.array([one(t) for t in texts.to_pylist()], pa.int64())
 
     return df.select(F.col(id_col).alias("id"), _sh(F.col(text_col)).alias("simhash"))
 
@@ -789,7 +842,7 @@ def incremental_dedup_pairs(
 
     Shape: the corpus side contributes only its band index (at scale,
     read back from the persisted :func:`band_projection` output — the
-    text is never re-scanned) and its shingle rows for the candidates;
+    text is never re-scanned) and its shingle arrays for the candidates;
     the new batch is small by construction, so its band index is
     ``F.broadcast`` into the probe join. ONE broadcast join finds
     candidates; exact Jaccard verifies candidates only. Emits
@@ -809,7 +862,9 @@ def incremental_dedup_pairs(
     )
     # No localCheckpoint, unlike :func:`minhash_dedup_pairs`: over a
     # repartitioned input it runs that exchange when the frame is
-    # built, and this plan stays lazy until an action.
+    # built, and this plan stays lazy until an action. So each side's
+    # text goes through the kernel twice: hashing for its bands, and
+    # shingle-only for the one verification join on its side.
     return verify_jaccard(
         cands,
         shingle_docs_arrow(new_docs, id_col, text_col, k).withColumnRenamed("id", "new_id"),
@@ -838,66 +893,84 @@ def substring_dup_stats(
     (md5(concat_ws(slice)) per gram position plus O(n_words x n_spans)
     exists/filter span-coverage algebra) cost ~15s at sf1.0 once a
     consumer reads ``dup_frac``/``clean_text``, so gram digests come
-    from one pandas UDF (raw hashlib.md5 bytes — hex is an injective
+    from one Arrow UDF (raw hashlib.md5 bytes — hex is an injective
     encoding, so equality classes match F.md5/DuckDB md5 exactly) and
-    the span union + text rebuild from a second struct-returning pandas
+    the span union + text rebuild from a second, struct-returning Arrow
     UDF; the corpus-wide duplicated-digest count is a window over one
     exchange on the digest (positions, not text, ride it), and each
     document collects its start list in one more exchange on the id.
 
-    Output: (id, n_words, dup_words, dup_frac, clean_text), one row per
-    input doc; docs shorter than k words pass through untouched.
+    Output: (id, n_words, dup_words, dup_frac, clean_text) followed by
+    the other columns of ``df`` except the text, one row per input doc;
+    docs shorter than k words pass through untouched. The other columns
+    ride the id exchange with the text, so a pipeline keeps each row's
+    payload without joining the stats back by id.
     """
 
     # RAW 16-byte digests, not 32-char hex: the digest column exists
     # only for corpus-wide equality (groupBy + join-back), and hex is an
     # injective encoding of the bytes, so equality classes are identical
     # — at half the shuffle bytes and cheaper key compares.
-    @F.pandas_udf(T.ArrayType(T.BinaryType(), containsNull=False))
-    def _grams(texts: pd.Series) -> pd.Series:
+    grams_type = T.ArrayType(T.BinaryType(), containsNull=False)
+    grams_arrow = to_arrow_type(grams_type)
+
+    @F.arrow_udf(grams_type)
+    def _grams(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         zipguard.install()
         md5 = hashlib.md5
+        for texts in batches:
+            offsets, digests = [0], []
+            for t in texts.to_pylist():
+                ws = t.split(" ") if t is not None else ()
+                if len(ws) >= k:
+                    digests += [md5(" ".join(ws[i : i + k]).encode()).digest() for i in range(len(ws) - k + 1)]
+                offsets.append(len(digests))
+            yield pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()), pa.array(digests, pa.binary()), type=grams_arrow
+            )
 
-        def one(t):
-            if t is None:
-                return []
-            ws = t.split(" ")
-            if len(ws) < k:
-                return []
-            return [md5(" ".join(ws[i : i + k]).encode()).digest() for i in range(len(ws) - k + 1)]
+    stats_type = T.StructType(
+        [
+            T.StructField("n_words", T.LongType()),
+            T.StructField("dup_words", T.LongType()),
+            T.StructField("clean_text", T.StringType()),
+        ]
+    )
+    stats_fields = list(to_arrow_type(stats_type))
 
-        return texts.map(one)
-
-    @F.pandas_udf("n_words long, dup_words long, clean_text string")
-    def _span_stats(texts: pd.Series, starts: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(stats_type)
+    def _span_stats(batches: Iterator[Tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
         zipguard.install()
-        n_out, dup_out, clean_out = [], [], []
-        for t, ds in zip(texts, starts):
-            if t is None:
-                # matches the oracle: len(split(NULL)) is NULL,
-                # dup_words falls through to 0, clean_text to ''.
-                n_out.append(None)
-                dup_out.append(0)
-                clean_out.append("")
-                continue
-            ws = t.split(" ")
-            n = len(ws)
-            if ds is None or len(ds) == 0:
+        for texts, starts in batches:
+            n_out, dup_out, clean_out = [], [], []
+            for t, ds in zip(texts.to_pylist(), starts.to_pylist()):
+                if t is None:
+                    # matches the oracle: len(split(NULL)) is NULL,
+                    # dup_words falls through to 0, clean_text to ''.
+                    n_out.append(None)
+                    dup_out.append(0)
+                    clean_out.append("")
+                    continue
+                ws = t.split(" ")
+                n = len(ws)
+                if not ds:
+                    n_out.append(n)
+                    dup_out.append(0)
+                    clean_out.append(t)
+                    continue
+                cover = bytearray(n)
+                for d in ds:  # 1-based span start covers words d..d+k-1
+                    lo = d - 1
+                    hi = min(n, lo + k)
+                    if lo < n:
+                        cover[lo:hi] = b"\x01" * (hi - lo)
                 n_out.append(n)
-                dup_out.append(0)
-                clean_out.append(t)
-                continue
-            cover = bytearray(n)
-            for d in ds:  # 1-based span start covers words d..d+k-1
-                lo = d - 1
-                hi = min(n, lo + k)
-                if lo < n:
-                    cover[lo:hi] = b"\x01" * (hi - lo)
-            dup = sum(cover)
-            n_out.append(n)
-            dup_out.append(dup)
-            clean_out.append(" ".join(w for w, c in zip(ws, cover) if not c))
-        return pd.DataFrame({"n_words": n_out, "dup_words": dup_out, "clean_text": clean_out})
+                dup_out.append(sum(cover))
+                clean_out.append(" ".join(w for w, c in zip(ws, cover) if not c))
+            yield pa.StructArray.from_arrays(
+                [pa.array(n_out, pa.int64()), pa.array(dup_out, pa.int64()), pa.array(clean_out, pa.string())],
+                fields=stats_fields,
+            )
 
     g = df.select(F.col(id_col).alias("id"), F.posexplode(_grams(F.col(text_col))).alias("pos0", "h")).select(
         "id", (F.col("pos0") + 1).alias("pos"), "h"
@@ -912,13 +985,19 @@ def substring_dup_stats(
     )
     # Each document collects its duplicated start positions in one more
     # exchange: its row and its dup-gram rows are co-grouped by id (a
-    # groupBy plus a left join back costs an exchange per side).
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"), F.lit(True).alias("_row"))
+    # groupBy plus a left join back costs an exchange per side), and
+    # its other columns ride along.
+    rest = [c for c in df.columns if c not in (id_col, text_col)]
+    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"), *rest, F.lit(True).alias("_row"))
     grouped = base.unionByName(dup, allowMissingColumns=True).select(
-        "_row", "id", "_t", F.sort_array(F.collect_list("pos").over(W.partitionBy("id"))).alias("dup_starts")
+        "_row",
+        "id",
+        "_t",
+        *rest,
+        F.sort_array(F.collect_list("pos").over(W.partitionBy("id"))).alias("dup_starts"),
     )
     joined = grouped.filter(F.col("_row")).select(
-        "id", _span_stats(F.col("_t"), F.col("dup_starts")).alias("_s")
+        "id", _span_stats(F.col("_t"), F.col("dup_starts")).alias("_s"), *rest
     )
     n_words = F.col("_s.n_words")
     dup_words = F.col("_s.dup_words")
@@ -935,4 +1014,5 @@ def substring_dup_stats(
         .cast("double")
         .alias("dup_frac"),
         F.col("_s.clean_text").alias("clean_text"),
+        *rest,
     )

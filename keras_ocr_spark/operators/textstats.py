@@ -9,7 +9,9 @@ Each has an exact DuckDB oracle in ``__spark_entry__.py``.
 
 from __future__ import annotations
 
-import pandas as pd
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -241,7 +243,7 @@ def compression_ratios(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     near 0 flag pathological repetition, ratios near 1 flag
     high-entropy noise like base64 blobs or mojibake).
 
-    Arrow-vectorized pandas UDF over stdlib ``zlib`` at a FIXED level
+    Arrow iterator UDF over stdlib ``zlib`` at a FIXED level
     (6) so the ratio is deterministic for a given zlib build; per-row,
     zero shuffle — one scan at any scale. No SQL oracle exists (DuckDB
     has no deflate), so the registered query takes the driver's
@@ -251,8 +253,8 @@ def compression_ratios(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     """
     import zlib
 
-    @F.pandas_udf("double")
-    def _cr(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf("double")
+    def _cr(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         zipguard.install()
 
         def one(t):
@@ -263,7 +265,8 @@ def compression_ratios(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
                 return 1.0
             return round(len(zlib.compress(raw, 6)) / len(raw), 6)
 
-        return texts.map(one)
+        for texts in batches:
+            yield pa.array([one(t) for t in texts.to_pylist()], pa.float64())
 
     return df.select(
         F.col(id_col).alias("id"),
@@ -287,10 +290,13 @@ def nfc_normalize_texts(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     """
     import unicodedata
 
-    @F.pandas_udf("string")
-    def _nfc(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf("string")
+    def _nfc(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         zipguard.install()
-        return texts.map(lambda t: None if t is None else unicodedata.normalize("NFC", t))
+        for texts in batches:
+            yield pa.array(
+                [None if t is None else unicodedata.normalize("NFC", t) for t in texts.to_pylist()], pa.string()
+            )
 
     # kernel referenced ONCE in its own projection (three references in
     # one select would plan three Arrow nodes — the r3/r4 double-eval

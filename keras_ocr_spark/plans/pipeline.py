@@ -82,32 +82,35 @@ def curate(docs: DataFrame, threshold: float = 0.5, min_quality: float = 0.5) ->
     # called; only its last stage waits for a consumer. Each cut below
     # is kept because removing it cost more than it saved, measured by
     # removing one cut at a time on ``curate_corpus`` (1,000 docs,
-    # 4 vCPUs, CPU of passes 5-8 of one session):
-    # - docs: without it each job re-runs the scan and repartition, and
-    #   the pass runs 25 jobs instead of 23 and 0.5 CPU-s more. In
-    #   ``curate_corpus`` calling it runs 2 jobs (schema inference, the
-    #   repartition).
+    # 4 vCPUs, CPU of passes 5-8 of one session). With every cut a pass
+    # runs 18-19 jobs, 12-13 of them while the frame is built (parquet
+    # schema inference included), at about 6.4 CPU-s:
+    # - docs: without it each job re-runs the scan and repartition; the
+    #   pass runs one job more at equal CPU (within 0.3 CPU-s over four
+    #   passes). Calling it runs 1 job (the repartition).
     docs = docs.localCheckpoint(eager=False)
     pairs = D.minhash_dedup_pairs(docs, threshold=threshold)
     # The split rows keep the doc columns, so the keepers need no join
     # back for their text and language. Building the split runs the
-    # closure's checkpoint jobs (10 here, the pair pipeline included).
+    # closure's checkpoint jobs (7-8 here, the pair pipeline included).
     split = leakage_safe_split(docs, pairs, id_col="doc_id")
-    # - surv: the substring gate reads the survivors twice and the
-    #   gated join once more. Without the cut each reader re-runs the
-    #   keeper window and the quality expressions: same 23 jobs,
-    #   0.1-1.9 CPU-s more over two runs. Calling it runs 1 job.
+    # - surv: the substring gate reads the survivors twice. Without the
+    #   cut each reader re-runs the keeper window and the quality
+    #   expressions: one job more per pass and 0.6 CPU-s more per pass.
+    #   Calling it runs 1 job.
     surv = (
         split.filter(F.col("id") == F.col("keeper_id"))
         .select("id", "text", "lang", "split", *TS.curation_feature_columns(F.col("text")))
         .filter(F.col("quality") >= min_quality)
     ).localCheckpoint(eager=False)
-    subs = D.substring_dup_stats(surv, k=5, id_col="id").select("id", "dup_frac")
+    # The substring stats carry the survivors' other columns through
+    # their id exchange, so no join brings them back.
     # - gated: the mix reads it and so does the join that brings back
-    #   quality and dup_frac. Without the cut the pass runs 25 jobs
-    #   instead of 23 at equal CPU. Calling it runs 4 jobs.
+    #   quality and dup_frac. Without the cut both re-run the substring
+    #   stats: the same number of jobs, and 3 CPU-s more per pass.
+    #   Calling it runs 2 jobs.
     gated = (
-        surv.join(subs, "id")
+        D.substring_dup_stats(surv, k=5, id_col="id")
         .filter((F.col("dup_frac") <= 0.5) & (F.col("split") == "train"))
         .select("id", "lang", "n_bpe_tokens", "quality", "dup_frac")
     ).localCheckpoint(eager=False)

@@ -16,9 +16,10 @@ in ``zipimport._zip_directory_cache``. A re-shipped ``--py-files`` zip
 changes its stamp, so it is still re-read. Stdlib only, idempotent, and
 a no-op on Python >= 3.12.
 
-Every function the package decorates with ``F.pandas_udf`` or
-``F.arrow_udf`` calls ``install()`` as its first statement (pinned by
-``tests/test_zipguard.py``). The UDFs are closures that cloudpickle
+Every function the package decorates with ``F.arrow_udf`` (every
+package UDF now; ``F.pandas_udf`` is covered too, should one return) or
+hands to ``mapInPandas`` calls ``install()`` as its first statement
+(pinned by ``tests/test_zipguard.py``). The UDFs are closures that cloudpickle
 ships by value, so that reference is what makes a worker import this
 module at all; after the worker's first task the later ones take every
 unchanged archive's directory from the cache.

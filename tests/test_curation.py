@@ -559,6 +559,28 @@ class TestSubstringDedup:
         want = sorted(oracle_rows(QUERIES["dedup_substring"][1], rows))
         assert fast == want
 
+    def test_other_columns_ride_the_id_exchange(self, spark, oracle_rows):
+        """Columns beside the id and the text come out on their row, and
+        the stats are still the ``dedup_substring`` oracle's."""
+        import random
+
+        from keras_ocr_spark.driver_queries import QUERIES
+        from keras_ocr_spark.operators import dedup as D
+
+        rnd = random.Random(23)
+        vocab = [f"w{i}" for i in range(12)]
+        rows = [(0, None), (1, "a b")]
+        rows += [(i, " ".join(rnd.choice(vocab) for _ in range(rnd.randrange(1, 30)))) for i in range(2, 40)]
+        extra = {i: (f"l{i % 3}", i * 0.5) for i, _ in rows}
+        docs = spark.createDataFrame(
+            [(i, t, *extra[i]) for i, t in rows], "doc_id long, text string, lang string, score double"
+        )
+        out = D.substring_dup_stats(docs, k=5)
+        assert out.columns == ["id", "n_words", "dup_words", "dup_frac", "clean_text", "lang", "score"]
+        got = out.collect()
+        assert {r.id: (r.lang, r.score) for r in got} == extra
+        assert sorted(tuple(r)[:5] for r in got) == sorted(oracle_rows(QUERIES["dedup_substring"][1], rows))
+
 
 class TestCurationFeatures:
     def test_matches_quality_join_tokens(self, spark):

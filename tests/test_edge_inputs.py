@@ -3,6 +3,8 @@ single-char texts must flow through every text operator without
 crashing, with sensible (documented) outputs. A 100 TB corpus always
 contains these rows; an operator that throws on them kills the stage."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -82,14 +84,51 @@ class TestEdgeTexts:
 
     def test_shingle_forms_agree(self, dedup_docs, oracle_rows):
         """The JVM expression, the Arrow kernel and the oracle SQL build
-        the same (id, shingle) rows."""
+        the same (id, shingle) rows; the kernel's per-document arrays
+        hold each doc's distinct shingles in first-occurrence order."""
         from keras_ocr_spark.driver_queries import _SHINGLES_SQL
+        from keras_ocr_spark.functions.hashing import shingles_expr, words_expr
 
         jvm = sorted(tuple(r) for r in D.shingle_docs(dedup_docs).collect())
-        arrow = sorted(tuple(r) for r in D.shingle_docs_arrow(dedup_docs).collect())
+        arrays = {r.id: list(r.shingles) for r in D.shingle_docs_arrow(dedup_docs).collect()}
+        arrow = sorted((i, s) for i, shs in arrays.items() for s in shs)
         duck = sorted(oracle_rows(f"SELECT id, unnest(shingles) FROM ({_SHINGLES_SQL})", DEDUP_ROWS))
         assert {i for i, _ in jvm} == {2, 4, 6, 7, 8}
         assert jvm == arrow == duck
+        ordered = dedup_docs.select(
+            F.col("doc_id").alias("id"), shingles_expr(words_expr(F.col("text")), 3).alias("s")
+        )
+        assert {r.id: list(r.s) for r in ordered.collect() if r.s} == {i: s for i, s in arrays.items() if s}
+        assert set(arrays) == {i for i, _ in DEDUP_ROWS}  # one array per document
+
+    def test_array_verification_equals_oracle_jaccard(self, spark, oracle_rows):
+        """``verify_jaccard`` on per-document shingle arrays scores every
+        candidate pair as the DuckDB shingle-join oracle does: docs under
+        k words, shingles repeated within one doc, and seeded random
+        near-duplicates."""
+        from keras_ocr_spark.driver_queries import QUERIES
+
+        rng = random.Random(1305)
+        vocab = [f"w{i}" for i in range(10)]
+        rows = [*DEDUP_ROWS, (9, "a b c a b c a b c"), (10, "a b c a b c d"), (11, "a b")]
+        for i in range(12, 60):
+            if i % 2 and rows[-1][1]:
+                words = rows[-1][1].split(" ")
+                for _ in range(rng.randint(0, 2)):
+                    words[rng.randrange(len(words))] = rng.choice(vocab)
+            else:
+                words = [rng.choice(vocab) for _ in range(rng.randint(1, 14))]
+            rows.append((i, " ".join(words)))
+        empty = {i for i, t in rows if t is None or len(t.split(" ")) < 3}
+        pairs = [(a, b) for a, _ in rows for b, _ in rows if a < b and not (a in empty and b in empty)]
+        cands = spark.createDataFrame(pairs, "id_a int, id_b int")
+        sh = D.shingle_docs_arrow(spark.createDataFrame(rows, "doc_id int, text string"))
+        got = D.verify_jaccard(
+            cands, sh.withColumnRenamed("id", "id_a"), sh.withColumnRenamed("id", "id_b"), "id_a", "id_b", 0.5
+        )
+        want = sorted(oracle_rows(QUERIES["dedup_ngram_jaccard"][1], rows))
+        assert sorted(tuple(r) for r in got.collect()) == want
+        assert len(want) >= 10 and (9, 10, 0.75) in want
 
     def test_minhash_rejects_more_hashes_than_digest_windows(self, edge_docs):
         # a 64-hex digest holds 16 windows: a 17th component would

@@ -46,12 +46,13 @@ BUILD_JOB_EXCEPTIONS = {
     # docs repartition, the closure's checkpoint round with the
     # minhash -> LSH -> verify pair pipeline inside it, and the AQE
     # stages run when the surv and gated lineage cuts are taken
-    "curate_corpus": 17,
+    # (12 or 13 measured)
+    "curate_corpus": 13,
     # connected components take an eager localCheckpoint per star round,
-    # with the pair pipeline inside the first one
-    "dedup_resolve": 13,
-    "dedup_best_keeper": 13,
-    "leakage_safe_split": 13,
+    # with the pair pipeline inside the first one (9 or 10 measured)
+    "dedup_resolve": 10,
+    "dedup_best_keeper": 10,
+    "leakage_safe_split": 10,
     # approxQuantile range splits, then per-bucket totals collected for
     # the prefix offsets
     "pack_sequences": 7,

@@ -8,14 +8,16 @@ Asserts properties of `.explain()` output that matter at 100 TB:
   projects its struct fields, with no lambda functions;
 - pure-expression operators (textstats) have NO exchange and NO Python
   nodes at all;
-- a pandas-UDF dedup kernel is evaluated once per plan, not once per
-  consumer;
+- an Arrow-UDF dedup kernel is evaluated once per plan, not once per
+  consumer, and no dedup plan holds a pandas eval type;
 - the flagship plan is MAP-ONLY — zero exchanges; salting adds exactly
   one.
 """
 
 import re
+from typing import Iterator
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -133,11 +135,11 @@ class TestExpressionOperatorsStayJvmSide:
 
 
 class TestSinglePandasUdfEvaluation:
-    """Regression pins for the r3 double-evaluation waste: a pandas-UDF
+    """Regression pins for the r3 double-evaluation waste: a Python-UDF
     projection filtered on its OWN output gets its null-filter pushed
     below an upstream exchange by Catalyst, duplicating the
-    ArrowEvalPython node (observed python=2 for minhash). The operator
-    now avoids it structurally."""
+    ArrowEvalPython node (observed python=2 for minhash). The operators
+    now avoid it structurally, and their kernels are Arrow UDFs."""
 
     @pytest.fixture(scope="class")
     def docs(self, spark, tmp_path_factory):
@@ -170,6 +172,57 @@ class TestSinglePandasUdfEvaluation:
         assert 100 not in ids and 101 not in ids  # null / too short dropped
         assert 102 in ids and 0 in ids
         assert out.filter(F.col("signature").isNull()).count() == 0
+
+    def test_kernel_runs_once_per_document_in_minhash_dedup_pairs(self, spark, docs, monkeypatch):
+        # The band projection and both verification join sides read one
+        # checkpointed kernel evaluation; the kernel here counts the
+        # documents it sees through an accumulator.
+        seen = spark.sparkContext.accumulator(0)
+        real = D._doc_udf
+
+        def counting(k, n_hashes):
+            kernel = real(k, n_hashes).func
+
+            @F.arrow_udf(D.DOC_TYPE)
+            def _doc(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+                for out in kernel(batches):
+                    seen.add(len(out))
+                    yield out
+
+            return _doc
+
+        monkeypatch.setattr(D, "_doc_udf", counting)
+        pairs = D.minhash_dedup_pairs(docs.repartition(8), threshold=0.5)
+        assert pairs.count() > 0
+        assert seen.value == docs.count()
+
+    def test_dedup_plans_hold_only_arrow_eval_types(self, spark, docs):
+        # Every Python boundary of the dedup kernels is an Arrow
+        # iterator UDF, not a pandas one (the stage-1 check above).
+        from pyspark.util import PythonEvalType
+
+        arrow_iter = str(PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF)
+        builds = {
+            "minhash_dedup_pairs": (D.minhash_dedup_pairs(docs, threshold=0.5), 0),
+            "doc_kernel": (D._doc_frame(docs, "doc_id", "text", 3, 16), 1),
+            "shingle_docs_arrow": (D.shingle_docs_arrow(docs), 1),
+            "substring_dup_stats": (D.substring_dup_stats(docs, k=5), 2),
+            "simhash_fingerprints": (D.simhash_fingerprints(docs), 1),
+        }
+        for name, (df, n_python) in builds.items():
+            plan = plan_of(df)
+            eval_types = re.findall(r"\(\d+\) ArrowEvalPython\nInput \[\d+\]: .*\nArguments: .*, (\d+)\n", plan)
+            assert eval_types == [arrow_iter] * n_python, (name, plan)
+            assert "BatchEvalPython" not in plan, name
+
+    def test_incremental_dedup_evaluates_four_kernels(self, spark, docs):
+        # Per side, one hashing kernel for the bands and one
+        # shingle-only kernel for its verification join side; the
+        # exploded-shingle verification evaluated each side's shingle
+        # kernel twice (6 nodes).
+        df = docs.repartition(8)
+        out = D.incremental_dedup_pairs(df.filter(F.col("doc_id") % 10 == 0), df.filter(F.col("doc_id") % 10 != 0))
+        assert n_nodes(plan_of(out), "ArrowEvalPython") == 4
 
 class TestFilterPushdown:
     def test_predicate_reaches_parquet(self, spark, transcripts_path):

@@ -167,12 +167,15 @@ def test_every_package_udf_installs_zipguard_first():
     task re-reads the zip directories on the worker's path."""
     udfs = {f"{path}:{name}": fn for path, name, fn in _udf_functions()}
     assert {
-        "operators/dedup.py:_shingle_array_udf._sh",
-        "operators/dedup.py:minhash_signatures._sig",
+        "operators/dedup.py:_doc_udf._doc",
+        "operators/dedup.py:_rarity_coded_docs._codes",
+        "operators/dedup.py:simhash_fingerprints._sh",
         "operators/dedup.py:substring_dup_stats._grams",
         "operators/dedup.py:substring_dup_stats._span_stats",
         "operators/detect.py:propose_spans_udf._extract",
         "operators/multimodal.py:pdf_extract_text.op",
+        "operators/textstats.py:compression_ratios._cr",
+        "operators/textstats.py:nfc_normalize_texts._nfc",
     } <= set(udfs), sorted(udfs)
     unguarded = sorted(name for name, fn in udfs.items() if not _starts_with_install(fn))
     assert unguarded == []

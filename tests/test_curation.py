@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from keras_ocr_spark.operators import curation as C
 from keras_ocr_spark.operators import packing as P
-from keras_ocr_spark.operators.retrieval import inverted_index
+from keras_ocr_spark.operators.retrieval import inverted_index, tfidf_top_terms
 
 
 def _docs(spark, rows):
@@ -193,6 +193,32 @@ class TestInvertedIndex:
         assert got["a"]["postings"] == [1] and got["a"]["df"] == 1
         assert got["b"]["postings"] == [1, 2, 3] and got["b"]["df"] == 3
         assert got["c"]["postings"] == [2, 3]
+
+
+class TestTfidfTopTerms:
+    def test_scores_and_ranks(self, spark):
+        df = spark.createDataFrame(
+            [(0, "cat cat dog"), (1, "dog fish"), (2, "fish fish fish")],
+            "doc_id long, text string",
+        )
+        out = {(r.id, r.term): (r.score, r.rk) for r in tfidf_top_terms(df, k=2).collect()}
+
+        def s(tf, df_):
+            return math.floor(tf * math.log(4.0 / (df_ + 1.0)) * 1e6 + 0.5)
+
+        # doc 0: cat tf=2 df=1, dog tf=1 df=2 -> cat ranks 1
+        assert out[(0, "cat")] == (s(2, 1), 1)
+        assert out[(0, "dog")] == (s(1, 2), 2)
+        # doc 1: dog and fish both tf=1 df=2 -> tie cut by term ASC
+        assert out[(1, "dog")][1] == 1 and out[(1, "fish")][1] == 2
+        # doc 2: only one distinct term -> a single row, k=2 notwithstanding
+        assert out[(2, "fish")] == (s(3, 2), 1)
+        assert len([k for k in out if k[0] == 2]) == 1
+
+    def test_k_validation(self, spark):
+        df = spark.createDataFrame([(0, "a")], "doc_id long, text string")
+        with pytest.raises(ValueError):
+            tfidf_top_terms(df, k=0)
 
 
 class TestChunkDocuments:

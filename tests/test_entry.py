@@ -197,9 +197,6 @@ def test_documents_shape_precondition_for_extract_oracle(sf):
 #: reach them. Shrinking this dict (give a module a caller, or delete it
 #: with its tests) is progress; a new module may not join it.
 NO_CALLER = {
-    "keras_ocr_spark.operators.funnel": "library operator, no caller since the events prune",
-    "keras_ocr_spark.operators.refintegrity": "library operator, no caller since the events prune",
-    "keras_ocr_spark.operators.regression": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.skewjoin": "library operator, no caller since the events prune",
     "keras_ocr_spark.operators.incremental": "library operator, no caller since the TPC-H prune",
     "keras_ocr_spark.operators.expectations": "library operator, no caller since the TPC-H prune",
@@ -250,3 +247,24 @@ def test_no_new_module_without_a_caller():
     # was deleted, comes off the dict too
     modules, imported = _modules_imported_outside_tests()
     assert sorted(modules - imported) == sorted(NO_CALLER)
+
+
+#: ``scripts/*.py`` that no tier-1 test runs: ``check_oracles.py`` is the
+#: driver's gate, run on its own over every registered query.
+NOT_RUN_BY_TESTS = {"check_oracles.py"}
+
+
+def test_no_script_without_a_test_that_runs_it():
+    # A test runs a script by the path it hands to a subprocess
+    # (``REPO / "scripts/<name>.py"``). Equality, as above: a script that
+    # gains a test comes off the set.
+    import ast
+
+    constants = {
+        node.value
+        for path in (REPO / "tests").glob("test_*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+    }
+    scripts = {p.name for p in (REPO / "scripts").glob("*.py")}
+    assert sorted(n for n in scripts if f"scripts/{n}" not in constants) == sorted(NOT_RUN_BY_TESTS)

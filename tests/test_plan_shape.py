@@ -11,7 +11,11 @@ Asserts properties of `.explain()` output that matter at 100 TB:
 - an Arrow-UDF dedup kernel is evaluated once per plan, not once per
   consumer, and no dedup plan holds a pandas eval type;
 - the flagship plan is MAP-ONLY — zero exchanges; salting adds exactly
-  one.
+  one;
+- every registered query's executed plan stays within its ``PLAN_BOUNDS``
+  row: no CartesianProduct, a BroadcastNestedLoopJoin only onto a 1-row
+  broadcast side, and per-query bounds on exchanges, Python nodes,
+  SinglePartition and TakeOrderedAndProject.
 """
 
 import re
@@ -231,48 +235,89 @@ class TestFilterPushdown:
         assert "PushedFilters: [IsNotNull(role), EqualTo(role,user)]" in plan
 
 
-class TestNoAccidentalCartesian:
-    """Blanket guarantee over the ENTIRE driver contract: no query plan
-    contains a CartesianProduct, and BroadcastNestedLoopJoin appears only
-    where a single-row broadcast side is the intended plan (a 1-row
-    totals or stats frame broadcast onto the rows it scales)."""
+#: Every query's plan holds no CartesianProduct and no
+#: BroadcastNestedLoopJoin; ``PLAN_BOUNDS`` adds to or overrides these.
+DEFAULT_BOUNDS = {"cartesian": ("==", 0), "bnlj": ("==", 0)}
 
-    #: Queries where a BNLJ against a broadcast 1-row side is the design.
-    ALLOW_BNLJ = {
-        # single-row broadcast of the corpus stats (N, avgdl, dfs) onto
-        # the scored documents.
-        "bm25_search",
-        # string min/max split into a grouping-free 1-row aggregate
-        # attached by a 1-row broadcast, so the Expand multi-distinct
-        # aggregate stays hash-based (string agg buffers forced the
-        # whole aggregate to SortAggregate).
-        "profile_drift_documents",
-        # 1-row broadcast of the unigram grand total onto the
-        # vocabulary-sized frequency table (both tiny).
-        "unigram_logprob",
-        # 1-row broadcast of the vocabulary size onto the scoring join
-        # (same shape as unigram_logprob's grand-total broadcast).
-        "bigram_logprob",
-        # 1-row broadcast of (n_a, n_b, V) totals onto the
-        # vocabulary-sized counts frame (same 1-row-side shape).
-        "unigram_kl_drift",
-        # 1-row broadcast of (n_t, n_all) totals onto the
-        # n_buckets-row term table (same 1-row-side shape).
-        "dsir_importance",
-        # 1-row broadcast of the corpus size N onto the tf⋈df frame
-        # (same 1-row-side shape).
-        "tfidf_top_terms",
+#: query -> {feature: (op, value)}, op "==" or "<=", over the substring
+#: counts of ``plan_features``. Each bnlj bound is a 1-row broadcast side
+#: (a totals or stats frame attached to the rows it scales) and is set at
+#: its measured count.
+PLAN_BOUNDS = {
+    # map-only flagship: one stage-1 Arrow UDF, no shuffle
+    "extract_documents": {"exchanges": ("==", 0), "python_nodes": ("==", 1)},
+    # signatures computed map-side once, one band exchange
+    "dedup_minhash_lsh": {"python_nodes": ("==", 1)},
+    # the new batch's band index is broadcast: no corpus-vs-corpus pairing
+    "dedup_incremental": {},
+    # end-to-end curation: equi-joins and aggregates only
+    "curate_corpus": {"single_partition": ("==", 0)},
+    # distributed prefix sum, no SinglePartition window
+    "pack_sequences": {"single_partition": ("==", 0)},
+    # per-row array algebra, zero Python, one final-aggregate exchange
+    "gopher_repetition": {"exchanges": ("<=", 1), "python_nodes": ("==", 0)},
+    # eval vocabulary broadcast join plus one groupBy
+    "contamination_check": {"python_nodes": ("==", 0)},
+    # fingerprints come from a lazy localCheckpoint: no Python in the join plan
+    "simhash_near_pairs": {"python_nodes": ("==", 0)},
+    # one gram-digest kernel and one span kernel
+    "dedup_substring": {"python_nodes": ("==", 2)},
+    # running sums on (lang, md5-prefix bucket): the hot language spreads
+    "token_budget_mix": {"single_partition": ("==", 0), "python_nodes": ("==", 0)},
+    # vocabulary size is the 1-row broadcast onto the scoring join
+    "bigram_logprob": {"python_nodes": ("==", 0), "bnlj": ("<=", 1)},
+    # the shingle kernel now runs at build time, in _rarity_coded_docs'
+    # collect (ADVICE.md), so the plan reads 0; 1 once it moves back in
+    "dedup_containment": {"python_nodes": ("<=", 1)},
+    # exact rank on (lang, quality-bucket) windows with broadcast offsets
+    "quality_percentile_gate": {"single_partition": ("==", 0), "python_nodes": ("==", 0)},
+    # (n_a, n_b, V) totals are the 1-row broadcast onto the counts frame;
+    # their final scalar aggregate is SinglePartition, so that is not bounded
+    "unigram_kl_drift": {"python_nodes": ("==", 0), "bnlj": ("<=", 1)},
+    # digest-group-bounded edge build, integer join+agg rounds
+    "shingle_pagerank": {"python_nodes": ("==", 0)},
+    # (n_t, n_all) totals are the 1-row broadcast onto the term table
+    "dsir_importance": {"python_nodes": ("==", 0), "bnlj": ("<=", 1)},
+    # corpus size N is the 1-row broadcast onto tf x df; its scalar
+    # aggregate is SinglePartition, so that is not bounded
+    "tfidf_top_terms": {"python_nodes": ("==", 0), "bnlj": ("<=", 1)},
+    # one map pass and TakeOrderedAndProject: no global sort, no Python
+    "weighted_sample": {"exchanges": ("<=", 1), "take_ordered": ("==", 1), "python_nodes": ("==", 0)},
+    # corpus stats (N, avgdl, dfs) are the 1-row broadcast onto the scores
+    "bm25_search": {"bnlj": ("<=", 1)},
+    # string min/max as grouping-free 1-row aggregates, so the
+    # multi-distinct aggregate stays hash-based
+    "profile_drift_documents": {"bnlj": ("<=", 2)},
+    # the grand total is the 1-row broadcast onto the frequency table
+    "unigram_logprob": {"bnlj": ("<=", 1)},
+}
+
+
+def plan_features(plan: str) -> dict[str, int]:
+    """Substring counts over ``executedPlan().toString()``; "Exchange"
+    also counts broadcast and reused exchanges."""
+    return {
+        "exchanges": plan.count("Exchange"),
+        "bnlj": plan.count("BroadcastNestedLoopJoin"),
+        "cartesian": plan.count("CartesianProduct"),
+        "python_nodes": plan.count("EvalPython"),
+        "single_partition": plan.count("SinglePartition"),
+        "take_ordered": plan.count("TakeOrderedAndProject"),
     }
-    def test_no_cartesian_any_query(self, spark):
+
+
+class TestQueryPlanBounds:
+    def test_every_query_plan_within_bounds(self, spark):
         from keras_ocr_spark.driver_queries import QUERIES
 
+        assert set(PLAN_BOUNDS) <= set(QUERIES)
         bad = []
         for name, (fn, _sql) in QUERIES.items():
             plan = fn(spark, "/root/testdata/sf0.001")._jdf.queryExecution().executedPlan().toString()
-            if "CartesianProduct" in plan:
-                bad.append((name, "CartesianProduct"))
-            if "BroadcastNestedLoopJoin" in plan and name not in self.ALLOW_BNLJ:
-                bad.append((name, "BroadcastNestedLoopJoin"))
+            got = plan_features(plan)
+            for feature, (op, want) in {**DEFAULT_BOUNDS, **PLAN_BOUNDS.get(name, {})}.items():
+                if not (got[feature] == want if op == "==" else got[feature] <= want):
+                    bad.append((name, f"{feature}={got[feature]}, want {op} {want}"))
         assert not bad, bad
 
 

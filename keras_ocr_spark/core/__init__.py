@@ -5,7 +5,6 @@ the local parity oracle (parity by construction; see SURVEY.md §7 step 0).
 from .decoder import ENTITIES, decode_text
 from .oracle import TurnExtraction, extract_turn
 from .proposal import Span, propose_spans
-from .scoring import link_ratio, score_node
 from .tokenizer import BOILERPLATE_TAGS, Node, tokenize
 
 __all__ = [
@@ -16,8 +15,6 @@ __all__ = [
     "TurnExtraction",
     "decode_text",
     "extract_turn",
-    "link_ratio",
     "propose_spans",
-    "score_node",
     "tokenize",
 ]

@@ -26,23 +26,10 @@ DENSITY_KNEE = 15
 LINK_PENALTY = 0.8
 
 
-def score_node(node: Node) -> float:
-    """Content score in [0, 1] for one node."""
-    if node.boiler:
-        return 0.0
-    density = node.tlen / (node.tlen + DENSITY_KNEE)
-    link_ratio = node.link_len / node.tlen if node.tlen else 0.0
-    return density * (1.0 - LINK_PENALTY * link_ratio)
-
-
-def link_ratio(node: Node) -> float:
-    return node.link_len / node.tlen if node.tlen else 0.0
-
-
 def score_and_ratio(node: Node) -> tuple:
-    """(score, link_ratio) in one pass — the hot loop computes both per
-    node; sharing the division keeps this the single source of the
-    scoring arithmetic (identical to score_node/link_ratio)."""
+    """(content score in [0, 1], link ratio) for one node, in one pass:
+    the hot loop needs both, and they share the division. This is the
+    single source of the scoring arithmetic."""
     tlen = node.tlen
     ratio = node.link_len / tlen if tlen else 0.0
     if node.boiler:

@@ -2428,8 +2428,8 @@ def q_quality_classifier(spark, sf_dir):
     milli-unit weight sum, label = logit > 0. No UDF, no exchange —
     scan → whole-stage-codegen project, so at 100 TB the filter rides
     the scan. Weights derive from slot ids by the md5-prefix integer
-    convention (a learned vector would broadcast as an array literal —
-    the ``bloom_collect`` pattern); the DuckDB oracle
+    convention (a learned vector would broadcast as an array literal,
+    as ``packing.with_global_cumsum`` re-emits its offsets); the DuckDB oracle
     reproduces every feature hash, weight, and logit bit-for-bit."""
     from .operators import classifier as CLF
 

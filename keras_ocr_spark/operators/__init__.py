@@ -1,8 +1,2 @@
-from .detect import detect, propose_spans_udf
-from .fused import decode_reassemble_fused
-
-__all__ = [
-    "decode_reassemble_fused",
-    "detect",
-    "propose_spans_udf",
-]
+"""DataFrame operators: stage-1 detection and the corpus-curation operators
+that the registered queries compose."""

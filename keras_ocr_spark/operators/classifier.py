@@ -10,8 +10,9 @@ algebra (``transform``/``aggregate`` higher-order functions), so at
 100 TB the plan is scan → project with no exchange, no UDF, and the
 filter predicate (``logit > 0``) pushes into the same stage.
 
-Weights: a real deployment broadcasts learned weights (array literal /
-map — the ``bloom_collect`` pattern, <= n_buckets values). Here weights are derived from the bucket id by the repo's
+Weights: a real deployment broadcasts learned weights as an array or
+map literal of <= n_buckets values, the way ``packing.with_global_cumsum``
+re-emits its collected offsets. Here weights are derived from the bucket id by the repo's
 md5-prefix integer convention (``functions/hashing.py``) so the DuckDB
 oracle reproduces every feature hash, every weight, and every logit
 bit-for-bit — integer milli-units end to end, no float accumulation.

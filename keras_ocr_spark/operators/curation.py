@@ -627,35 +627,3 @@ def dsir_scores(
             (F.sum("qterm") / F.lit(1_000_000.0)).cast("double").alias("logw"),
         )
     )
-
-
-def pseudonymize(df, cols, secret: str, token_len: int = 16):
-    """Keyed deterministic pseudonymization — the GDPR-grade sibling of
-    :func:`pii_scrub`: where scrubbing DESTROYS identifiers,
-    pseudonymization replaces each with ``md5(secret || ':' || value)``
-    (truncated to ``token_len`` hex chars), so the SAME value maps to
-    the SAME token across every table and date — joins, sessionization
-    and per-user aggregation still work on the tokenized corpus, while
-    re-identification requires the secret. NULLs stay NULL (absence is
-    not an identity). Map-only projection, whole-stage codegen.
-
-    The secret must be managed outside the data path (env/keystore);
-    rotating it re-keys the corpus. md5 here is keyed-lookup
-    protection, not collision resistance — for adversarial settings
-    swap in sha2(...,256) (same expression shape, same tests).
-    """
-    if not cols:
-        raise ValueError("at least one column is required")
-    if not secret:
-        raise ValueError("secret must be non-empty")
-    if not (4 <= token_len <= 32):
-        raise ValueError("token_len must be in [4, 32]")
-    out = df
-    for c in cols:
-        tok = F.substring(
-            F.md5(F.concat(F.lit(secret), F.lit(":"), F.col(c).cast("string"))),
-            1,
-            token_len,
-        )
-        out = out.withColumn(c, F.when(F.col(c).isNull(), F.lit(None)).otherwise(tok))
-    return out

@@ -251,9 +251,9 @@ def _rarity_coded_docs(
     shuffle for the same result). The driver-side dictionary is
     vocabulary-bounded — the SAME assumption the broadcast-dict join
     made; at open-vocabulary 100 TB scale assign codes with the
-    distributed exact-rank device (operators/ranking.py) and attach
-    them with a shuffle join on shingle — the downstream prefix join is
-    unchanged either way.
+    distributed prefix sum ``packing.with_global_cumsum`` over a column
+    of ones (the rank) and attach them with a shuffle join on shingle —
+    the downstream prefix join is unchanged either way.
     """
 
     # Parallelism floor: this build and EVERYTHING downstream of it
@@ -612,7 +612,9 @@ def verify_jaccard(
     pairs >= threshold."""
     left = sh_left.select(left_col, F.col("shingles").alias("_sh_l"))
     right = sh_right.select(right_col, F.col("shingles").alias("_sh_r"))
-    scored = cands.join(left, left_col).join(right, right_col).select(
+    # Build on the candidates: left to AQE, the build side of this join
+    # flips between passes and each variant is newly generated code.
+    scored = F.broadcast(cands).join(left, left_col).join(right, right_col).select(
         left_col,
         right_col,
         F.size("_sh_l").alias("_n_l"),

@@ -9,9 +9,8 @@ a key-equi-join-shaped merge. That works exactly when every metric is a
 commutative monoid (count and sum add; min and max combine by min/max)
 — the same partial-aggregate algebra Spark's own map-side combine uses
 inside one job, lifted across jobs/days. Non-distributive metrics ride
-along in sketch form: a Count-Min or HDR cell column merges by
-elementwise sum (see ``operators/sketches.py``), slotting into the same
-state row.
+along in sketch form: a Count-Min cell column merges by elementwise
+sum (see ``operators/sketches.py``), slotting into the same state row.
 
 Exactness discipline: sums are carried as int64 fixed point (cents),
 quantized BEFORE the aggregation — integer addition is associative, so

@@ -95,49 +95,3 @@ def table_diff(
     )
     picked = [F.coalesce(l[k], r[k]).alias(k) for k in keys]
     return joined.select(*picked, status.alias("status")).filter(F.col("status").isNotNull())
-
-
-def scd2_build(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    attr_cols: Sequence[str],
-) -> DataFrame:
-    """SCD Type-2 dimension history from a change log: one row per
-    (key, version) with ``effective_from_us`` / ``effective_to_us``
-    (unix micros; NULL = open) and ``is_current`` — the warehouse
-    history shape next to :func:`merge_upsert`'s SCD1 overwrite.
-
-    Consecutive rows whose attributes did not change are COLLAPSED
-    (the real SCD2 subtlety: a no-op change must not open a new
-    version) via a null-safe struct compare ``lag(attrs) <=> attrs``
-    — null attribute values compare equal to themselves, and the
-    first row per key (lag = NULL struct) always opens a version.
-
-    Precondition: ``(key_cols, ts_col)`` unique (a change log).
-    Plan shape: ONE hash exchange on the key; the collapse filter and
-    the lead() readout reuse the same partitioning AND sort order, so
-    Spark plans a single Exchange + single Sort for both window passes
-    (asserted in tests). At 100 TB this is a partitioned-window op —
-    no global order, no driver state.
-    """
-    from pyspark.sql import Window
-
-    keys = list(key_cols)
-    attrs = list(attr_cols)
-    w = Window.partitionBy(*keys).orderBy(ts_col)
-    a = F.struct(*[F.col(c) for c in attrs])
-    changed = ~F.lag(a).over(w).eqNullSafe(a)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    return (
-        df.select(*keys, ts_col, *attrs)
-        .withColumn("_chg", changed)
-        .filter(F.col("_chg"))
-        .select(
-            *keys,
-            *attrs,
-            us.alias("effective_from_us"),
-            F.lead(us).over(w).alias("effective_to_us"),
-            F.lead(us).over(w).isNull().cast("int").alias("is_current"),
-        )
-    )

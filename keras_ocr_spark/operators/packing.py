@@ -9,9 +9,10 @@ chunks; a document therefore occupies the half-open token interval
 reduces to ONE exact global prefix sum over the doc order.
 
 ``SUM(...) OVER (ORDER BY ...)`` with no PARTITION BY is the naive
-form — Spark executes it in a single task (the same 100 TB wall as
-global ``ntile``; see ``operators/ranking.py``). This module computes
-the identical prefix sum three-phase, the textbook distributed scan:
+form — Spark executes it in a single task, a hard wall at 100 TB.
+This module computes the identical prefix sum three-phase, the
+textbook distributed scan (a global rank is the prefix sum of a
+column of ones, so the same device ranks too):
 
 1. range-bucket rows by approx quantiles of the leading order key
    (driver-side sample, scale-free) — buckets respect the order;
@@ -32,13 +33,20 @@ as the corpus-scale token-stream chunking an LLM pipeline runs.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import List, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .ranking import _range_bucket_expr
+
+def _range_bucket_expr(value: Column, splits: List[float]) -> Column:
+    """0-based range bucket: count of split points strictly below the
+    value (monotone in the value, ties share a bucket)."""
+    bucket = F.lit(0)
+    for s in splits:
+        bucket = bucket + F.when(value > F.lit(s), 1).otherwise(0)
+    return bucket
 
 
 def with_global_cumsum(

@@ -1,4 +1,2 @@
-from .pipeline import extract
-from .session import build_session
-
-__all__ = ["build_session", "extract"]
+"""Spark plans: the extraction and curation pipelines, the session, the
+checkpointed job and the manifest-commit protocol."""

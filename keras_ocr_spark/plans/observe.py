@@ -11,10 +11,9 @@ unlike accumulators which double-count task retries).
 ``commit`` writes a frame and returns named SQL aggregates (counts,
 null counts, sums) observed on that write. It is the commit protocol
 every manifest-attested writer shares — checkpoint buckets
-(``plans/checkpoint.py``), snapshot versions (``sources/snapshots.py``,
-``streaming/snapshot_sink.py``), streaming epochs
-(``streaming/extraction.py``) and the curation job's ``_summary.json``
-(``scripts/curate_job.py``):
+(``plans/checkpoint.py``), snapshot versions (``sources/snapshots.py``),
+streaming epochs (``streaming/extraction.py``) and the curation job's
+``_summary.json`` (``scripts/curate_job.py``):
 
 1. the data is written ONCE, in one job, with the manifest metrics
    observed on that write (the manifest attests what the write job

@@ -1,31 +1,2 @@
-from .transcripts import (
-    BLANK_CONV,
-    GOLDEN_CONV,
-    GOLDEN_HTML,
-    GOLDEN_TEXT,
-    MULTI_CONV,
-    MULTI_HTML,
-    MULTI_TEXT,
-    SKEW_CONV,
-    TRANSCRIPT_SCHEMA,
-    generate_pandas,
-    generate_rows,
-    spark_transcripts,
-    write_parquet,
-)
-
-__all__ = [
-    "BLANK_CONV",
-    "GOLDEN_CONV",
-    "GOLDEN_HTML",
-    "GOLDEN_TEXT",
-    "MULTI_CONV",
-    "MULTI_HTML",
-    "MULTI_TEXT",
-    "SKEW_CONV",
-    "TRANSCRIPT_SCHEMA",
-    "generate_pandas",
-    "generate_rows",
-    "spark_transcripts",
-    "write_parquet",
-]
+"""Input tables: the transcript generator and goldens, versioned snapshots,
+file-format round trips and reference-format loaders."""

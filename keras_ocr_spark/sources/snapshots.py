@@ -42,17 +42,11 @@ from ..plans.observe import commit, load_manifests
 
 def write_snapshot(df: DataFrame, table_dir: str) -> int:
     """Commit ``df`` as the next version of ``table_dir``; returns the
-    new version number. The manifest is the commit point."""
-    return _commit_version(df, table_dir)
-
-
-def _commit_version(df: DataFrame, table_dir: str, mode: str = "error", **fields) -> int:
-    """Commit ``df`` as the next version, its manifest carrying
-    ``fields`` too. Versions are immutable, so the data write refuses an
-    existing directory (``mode="error"``) unless the caller owns the
-    uncommitted one there. Versions are numbered from manifest file
-    names, torn ones included, so a damaged manifest's number is never
-    reused."""
+    new version number. The manifest is the commit point. Versions are
+    immutable, so the data write refuses an existing directory, an
+    orphan left by a crashed writer included. Versions are numbered
+    from manifest file names, torn ones included, so a damaged
+    manifest's number is never reused."""
     root = Path(table_dir)
     versions = sorted(int(p.stem[1:]) for p in (root / "_snapshots").glob("v*.json"))
     v = (versions[-1] + 1) if versions else 1
@@ -71,10 +65,9 @@ def _commit_version(df: DataFrame, table_dir: str, mode: str = "error", **fields
                 "parent": versions[-1] if versions else None,
                 "schema": df.schema.json(),
                 **audit,
-                **fields,
             }
         },
-        mode=mode,
+        mode="error",
     )
     return v
 
@@ -133,29 +126,6 @@ def snapshot_changes(
         .otherwise(F.lit("update"))
     )
     return diff.select(*key_cols, verb.alias("change"))
-
-
-def merge_into_snapshot(
-    spark: SparkSession,
-    table_dir: str,
-    source: DataFrame,
-    key_cols: list[str],
-) -> int:
-    """The lakehouse write path: MERGE ``source`` into the LATEST
-    version (SCD1 source-wins semantics — ``operators/merge.py:
-    merge_upsert``, incl. its unique-source-key precondition) and
-    commit the result as a NEW immutable version. Readers on any older
-    version are untouched (snapshot isolation by construction — they
-    hold their own data files); the CDC feed between the old and new
-    head is exactly the merge's effect. Returns the new version."""
-    hist = history(table_dir)
-    if not hist:
-        raise ValueError(f"no committed snapshots under {table_dir}")
-    from ..operators.merge import merge_upsert
-
-    target = read_snapshot(spark, table_dir)
-    merged = merge_upsert(target, source, key_cols)
-    return write_snapshot(merged, table_dir)
 
 
 def expire_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:

@@ -162,9 +162,3 @@ TRANSCRIPT_SCHEMA = "conv_id string, turn_idx int, role string, text string, too
 def spark_transcripts(spark, n_convs: int = 50, seed: int = 42, make_skewed: bool = True):
     """Transcripts as a Spark DataFrame (Arrow createDataFrame path)."""
     return spark.createDataFrame(generate_pandas(n_convs, seed, make_skewed), schema=TRANSCRIPT_SCHEMA)
-
-
-def write_parquet(path: str, n_convs: int = 50, seed: int = 42, make_skewed: bool = True) -> str:
-    """Materialize the table as a single parquet file (for bench/fixtures)."""
-    generate_pandas(n_convs, seed, make_skewed).to_parquet(path, index=False)
-    return path

@@ -18,9 +18,7 @@ continuously:
   A replayed batch (failure between commit and offset commit) finds its
   manifest and writes nothing; a killed epoch has no manifest, stays
   invisible to ``plans.checkpoint.read_committed`` and is overwritten by
-  its replay — end-to-end exactly-once for committed readers;
-- a watermarked windowed count stream is exposed for monitoring
-  (late-data handling: 10-minute watermark on ``ts``).
+  its replay — end-to-end exactly-once for committed readers.
 """
 
 from __future__ import annotations
@@ -28,7 +26,6 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
 from ..plans.checkpoint import MANIFEST_DIR, committed_manifests, manifest_metrics
@@ -86,13 +83,4 @@ def start_extraction(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def turn_rate_monitor(stream_df: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked windowed turn counts (late-data-tolerant monitoring)."""
-    return (
-        stream_df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "role")
-        .agg(F.count("*").alias("n_turns"))
     )

@@ -12,9 +12,9 @@ from keras_ocr_spark.core import (
     decode_text,
     extract_turn,
     propose_spans,
-    score_node,
     tokenize,
 )
+from keras_ocr_spark.core.scoring import score_and_ratio
 from keras_ocr_spark.sources.transcripts import (
     BLANK_HTML,
     GOLDEN_HTML,
@@ -79,17 +79,17 @@ class TestTokenizer:
 class TestScoring:
     def test_boilerplate_scores_zero(self):
         nodes = tokenize("<script>var alpha = some long script body here;</script>")
-        assert score_node(nodes[0]) == 0.0
+        assert score_and_ratio(nodes[0])[0] == 0.0
 
     def test_longer_text_scores_higher(self):
         short = tokenize("<p>tiny</p>")[0]
         long = tokenize("<p>" + "word " * 30 + "</p>")[0]
-        assert score_node(long) > score_node(short)
+        assert score_and_ratio(long)[0] > score_and_ratio(short)[0]
 
     def test_link_text_discounted(self):
         plain = tokenize("<p>some reasonable content</p>")[0]
         linked = tokenize("<a>some reasonable content</a>")[0]
-        assert score_node(linked) < score_node(plain)
+        assert score_and_ratio(linked)[0] < score_and_ratio(plain)[0]
 
 
 class TestProposal:

@@ -873,105 +873,3 @@ class TestWeightedSample:
         plan = C.weighted_sample(df, "w", k=5)._jdf.queryExecution().executedPlan().toString()
         assert "TakeOrderedAndProject" in plan
         assert "Exchange" not in plan
-
-
-class TestSCD2:
-    """scd2_build: the collapse/null/plan semantics."""
-
-    def _log(self, spark, rows):
-        return spark.createDataFrame(rows, "k long, ts timestamp, attr string, attr2 string")
-
-    def test_noop_changes_collapse_and_versions_chain(self, spark):
-        import datetime as dt
-
-        t = lambda s: dt.datetime(2024, 1, s)
-        rows = [
-            (1, t(1), "a", "x"),
-            (1, t(2), "a", "x"),  # no-op: must NOT open a version
-            (1, t(3), "b", "x"),  # attr change
-            (1, t(4), "b", "y"),  # attr2 change
-            (2, t(1), "z", None),
-        ]
-        from keras_ocr_spark.operators.merge import scd2_build
-
-        out = sorted(
-            scd2_build(self._log(spark, rows), ["k"], "ts", ["attr", "attr2"]).collect(),
-            key=lambda r: (r.k, r.effective_from_us),
-        )
-        assert [(r.k, r.attr, r.attr2, r.is_current) for r in out] == [
-            (1, "a", "x", 0),
-            (1, "b", "x", 0),
-            (1, "b", "y", 1),
-            (2, "z", None, 1),
-        ]
-        # versions chain: each effective_to == next effective_from
-        assert out[0].effective_to_us == out[1].effective_from_us
-        assert out[1].effective_to_us == out[2].effective_from_us
-        assert out[2].effective_to_us is None
-
-    def test_null_attr_noop_collapses_null_safely(self, spark):
-        import datetime as dt
-
-        t = lambda s: dt.datetime(2024, 1, s)
-        rows = [(1, t(1), None, None), (1, t(2), None, None), (1, t(3), "a", None)]
-        from keras_ocr_spark.operators.merge import scd2_build
-
-        out = scd2_build(self._log(spark, rows), ["k"], "ts", ["attr", "attr2"]).collect()
-        # NULL == NULL for the collapse (eqNullSafe): 2 versions, not 3.
-        assert len(out) == 2
-
-    def test_single_exchange_single_sort(self, spark):
-        import datetime as dt
-
-        rows = [(1, dt.datetime(2024, 1, 1), "a", "x")]
-        from keras_ocr_spark.operators.merge import scd2_build
-
-        plan = (
-            scd2_build(self._log(spark, rows), ["k"], "ts", ["attr"])
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("Exchange") == 1  # both window passes share it
-        assert sum(1 for l in plan.splitlines() if l.strip().startswith("+- Sort") or l.strip().startswith(":- Sort") or "Sort [" in l) <= 2
-
-
-class TestPseudonymize:
-    def test_tokens_deterministic_and_join_preserving(self, spark):
-        from keras_ocr_spark.operators.curation import pseudonymize
-
-        a = spark.createDataFrame([(1, "u1"), (2, "u2"), (3, "u1")], "id long, user string")
-        b = spark.createDataFrame([("u1", "x"), ("u3", "y")], "user string, attr string")
-        ta = pseudonymize(a, ["user"], secret="s")
-        tb = pseudonymize(b, ["user"], secret="s")
-        # same value -> same token (within and across frames)
-        toks = {r.id: r.user for r in ta.collect()}
-        assert toks[1] == toks[3] != toks[2]
-        joined = ta.join(tb, "user")
-        assert joined.count() == 2  # u1 matched twice, u3 unmatched — joins survive
-        # different secret -> different token space
-        other = {r.id: r.user for r in pseudonymize(a, ["user"], secret="z").collect()}
-        assert other[1] != toks[1]
-
-    def test_null_stays_null_and_validation(self, spark):
-        import pytest as _pt
-
-        from keras_ocr_spark.operators.curation import pseudonymize
-
-        df = spark.createDataFrame([(1, None), (2, "u")], "id long, user string")
-        rows = {r.id: r.user for r in pseudonymize(df, ["user"], secret="s").collect()}
-        assert rows[1] is None and rows[2] is not None
-        with _pt.raises(ValueError):
-            pseudonymize(df, [], secret="s")
-        with _pt.raises(ValueError):
-            pseudonymize(df, ["user"], secret="")
-        with _pt.raises(ValueError):
-            pseudonymize(df, ["user"], secret="s", token_len=2)
-
-    def test_map_only_plan(self, spark):
-        from keras_ocr_spark.operators.curation import pseudonymize
-
-        df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        out = pseudonymize(df, ["user_id"], secret="s")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan and "EvalPython" not in plan

@@ -202,8 +202,16 @@ NO_CALLER = {
     "keras_ocr_spark.operators.expectations": "library operator, no caller since the TPC-H prune",
     "keras_ocr_spark.sources.layout": "compaction and z-order, no caller since the TPC-H prune",
     "keras_ocr_spark.sources.loaders": "reference-format loaders, tested directly",
-    "keras_ocr_spark.streaming.snapshot_sink": "entry point for a streaming snapshot ingest, tested directly",
 }
+
+
+def _non_test_sources() -> list[Path]:
+    return [
+        *(REPO / "keras_ocr_spark").rglob("*.py"),
+        *(REPO / "scripts").rglob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
+        REPO / "__spark_entry__.py",
+    ]
 
 
 def _modules_imported_outside_tests() -> tuple[set[str], set[str]]:
@@ -217,14 +225,8 @@ def _modules_imported_outside_tests() -> tuple[set[str], set[str]]:
 
     pkg_dir = REPO / "keras_ocr_spark"
     modules = {modname(p) for p in pkg_dir.rglob("*.py") if p.name != "__init__.py"}
-    sources = [
-        *pkg_dir.rglob("*.py"),
-        *(REPO / "scripts").rglob("*.py"),
-        *(REPO / "perfbench").rglob("*.py"),
-        REPO / "__spark_entry__.py",
-    ]
     imported = set()
-    for src in sources:
+    for src in _non_test_sources():
         me = modname(src) if src.is_relative_to(pkg_dir) else ""
         package = me if src.name == "__init__.py" else me.rpartition(".")[0]
         for node in ast.walk(ast.parse(src.read_text())):
@@ -247,6 +249,41 @@ def test_no_new_module_without_a_caller():
     # was deleted, comes off the dict too
     modules, imported = _modules_imported_outside_tests()
     assert sorted(modules - imported) == sorted(NO_CALLER)
+
+
+#: Top-level functions and classes of called modules whose name no
+#: non-test source mentions outside its own ``def``. The same rule as
+#: ``NO_CALLER``, one level down: this dict may only shrink.
+NO_CALLER_FUNCTIONS = {
+    "clusters.large_star": "one star step as an operator; the loop runs its edge form, tested directly",
+    "transcripts.spark_transcripts": "the synthetic transcripts as a DataFrame, the parity tests' input",
+    "extraction.read_transcript_stream": "streaming extraction entry point; no kept job streams, tested directly",
+    "extraction.start_extraction": "streaming extraction entry point; no kept job streams, tested directly",
+}
+
+
+def test_no_new_function_without_a_caller():
+    # A name scan: a name that appears anywhere in a non-test source
+    # beyond its own ``def`` counts as called. Package ``__init__`` files
+    # only re-export, so they are not callers; decorated functions (the
+    # ``@register`` queries) are reached through their registry.
+    import ast
+    import re
+
+    text = "\n".join(src.read_text() for src in _non_test_sources() if src.name != "__init__.py")
+    uncalled = set()
+    for path in (REPO / "keras_ocr_spark").rglob("*.py"):
+        module = ".".join(path.relative_to(REPO).with_suffix("").parts)
+        if path.name == "__init__.py" or module in NO_CALLER:
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.decorator_list
+                and len(re.findall(rf"\b{node.name}\b", text)) == 1
+            ):
+                uncalled.add(f"{path.stem}.{node.name}")
+    assert sorted(uncalled) == sorted(NO_CALLER_FUNCTIONS)
 
 
 #: ``scripts/*.py`` that no tier-1 test runs: ``check_oracles.py`` is the

@@ -15,7 +15,8 @@ Asserts properties of `.explain()` output that matter at 100 TB:
 - every registered query's executed plan stays within its ``PLAN_BOUNDS``
   row: no CartesianProduct, a BroadcastNestedLoopJoin only onto a 1-row
   broadcast side, and per-query bounds on exchanges, Python nodes,
-  SinglePartition and TakeOrderedAndProject.
+  SinglePartition and TakeOrderedAndProject;
+- AQE splits a skewed join under the session ``build_session`` builds.
 """
 
 import re
@@ -325,11 +326,11 @@ class TestAqeSkewJoin:
     def test_skewed_join_is_split_by_aqe(self, spark, tmp_path):
         """The north rule's runtime skew remedy: a join where 90% of the
         probe side shares one key must show skew=true (split partitions)
-        in the FINAL adaptive plan. Thresholds are scaled down to fire
-        at test size; the same knobs govern the 100 TB configuration."""
-        # Runtime-settable AQE knobs on the shared session; restored after.
+        in the FINAL adaptive plan. Skew handling itself is what
+        ``build_session`` turns on; only the thresholds are scaled down to
+        fire at test size."""
+        # Runtime-settable AQE thresholds on the shared session; restored after.
         knobs = {
-            "spark.sql.adaptive.skewJoin.enabled": "true",
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
@@ -358,67 +359,3 @@ class TestAqeSkewJoin:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
-
-
-class TestDynamicPartitionPruning:
-    """Dynamic partition pruning: a partitioned fact scan is pruned at
-    RUNTIME by the dim's broadcast result, not statically."""
-
-    def test_dpp_expression_reaches_partition_filters(self, spark, tmp_path):
-        import re
-
-        from pyspark.sql import functions as F
-
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        path = str(tmp_path / "ev_by_type")
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
-        fact = spark.read.parquet(path)
-        dim = ev.filter(F.col("value") > 400).select("event_type").distinct()
-        j = fact.join(dim, "event_type").groupBy("event_type").count()
-        matched = [r.event_type for r in dim.collect()]
-        got = [r.event_type for r in j.collect()]
-        assert sorted(got) == sorted(matched)
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        pf = re.search(r"PartitionFilters: \[[^\]]*\]", plan)
-        assert pf and "dynamicpruningexpression" in pf.group(0), plan[:2000]
-
-
-class TestJoinStrategyHints:
-    """The three join strategies on the SAME equi-join, selected via
-    hints, all value-identical: the knob a 100 TB pipeline turns when
-    Catalyst's size estimates are wrong (e.g. a post-filter fact that
-    statistics still size at scan bytes). SHUFFLE_HASH beats SORT_MERGE
-    when one side fits a per-partition hash map (no sort); BROADCAST
-    removes the fact-side exchange entirely."""
-
-    @pytest.fixture(scope="class")
-    def sides(self, spark):
-        li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        return li.select("l_orderkey", "l_quantity"), orders.select("o_orderkey", "o_orderpriority")
-
-    def _join(self, li, orders, hint):
-        return li.join(orders.hint(hint) if hint else orders,
-                       li["l_orderkey"] == orders["o_orderkey"])
-
-    @pytest.mark.parametrize(
-        "hint,node",
-        [
-            ("broadcast", "BroadcastHashJoin"),
-            ("shuffle_hash", "ShuffledHashJoin"),
-            ("merge", "SortMergeJoin"),
-        ],
-    )
-    def test_hint_selects_strategy_and_values_agree(self, spark, sides, hint, node):
-        li, orders = sides
-        j = self._join(li, orders, hint)
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert node in plan, (hint, plan[:800])
-        chk = j.agg(
-            F.expr("count(*)"), F.expr("bit_xor(xxhash64(l_orderkey, l_quantity, o_orderpriority))")
-        ).collect()[0]
-        base = self._join(li, orders, None).agg(
-            F.expr("count(*)"), F.expr("bit_xor(xxhash64(l_orderkey, l_quantity, o_orderpriority))")
-        ).collect()[0]
-        assert tuple(chk) == tuple(base)

@@ -116,36 +116,6 @@ class TestSnapshotChanges:
         assert snapshot_changes(spark, table, 1, 2, ["doc_id"]).count() == 0
 
 
-class TestMergeIntoSnapshot:
-    def test_merge_commits_new_version_and_isolates_readers(self, spark, docs, tmp_path):
-        from keras_ocr_spark.sources.snapshots import merge_into_snapshot, snapshot_changes
-
-        table = str(tmp_path / "m")
-        base = docs.limit(6).cache()
-        write_snapshot(base, table)
-        k = sorted(r.doc_id for r in base.select("doc_id").collect())[0]
-        src = base.filter(F.col("doc_id") == k).withColumn("text", F.lit("PATCHED"))
-        v = merge_into_snapshot(spark, table, src, ["doc_id"])
-        assert v == 2
-        # new head has the patch; v1 reader is untouched (isolation)
-        head = read_snapshot(spark, table)
-        assert head.filter(F.col("doc_id") == k).collect()[0].text == "PATCHED"
-        assert read_snapshot(spark, table, 1).filter(
-            F.col("doc_id") == k
-        ).collect()[0].text != "PATCHED"
-        # the CDC feed between versions is exactly the merge's effect
-        got = {(r.doc_id, r.change) for r in
-               snapshot_changes(spark, table, 1, 2, ["doc_id"]).collect()}
-        base.unpersist()
-        assert got == {(k, "update")}
-
-    def test_merge_requires_existing_table(self, spark, docs, tmp_path):
-        from keras_ocr_spark.sources.snapshots import merge_into_snapshot
-
-        with pytest.raises(ValueError):
-            merge_into_snapshot(spark, str(tmp_path / "none"), docs.limit(1), ["doc_id"])
-
-
 class TestExpireSnapshots:
     def test_expiry_keeps_tail_and_reclaims(self, spark, docs, tmp_path):
         from keras_ocr_spark.sources.snapshots import expire_snapshots

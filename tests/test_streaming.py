@@ -11,7 +11,7 @@ from keras_ocr_spark.core.oracle import extract_turn
 from keras_ocr_spark.plans.checkpoint import read_committed
 from keras_ocr_spark.plans.pipeline import extract
 from keras_ocr_spark.sources.transcripts import generate_pandas
-from keras_ocr_spark.streaming import read_transcript_stream, start_extraction, turn_rate_monitor
+from keras_ocr_spark.streaming import read_transcript_stream, start_extraction
 
 _SENTENCE = "The quick brown fox jumps over the lazy dog near the riverbank."
 #: Turns whose content begins or ends with whitespace that str.strip()
@@ -129,10 +129,3 @@ def test_killed_epoch_is_invisible_to_read_committed(spark, landing, tmp_path):
     got = read_committed(spark, out)
     assert got.count() == turns.count()
     assert got.select("conv_id", "turn_idx").distinct().count() == turns.count()
-
-
-def test_watermarked_monitor_plan(spark, landing):
-    stream = read_transcript_stream(spark, str(landing / "transcripts"))
-    agg = turn_rate_monitor(stream)
-    assert agg.isStreaming
-    assert "window" in agg.columns and "n_turns" in agg.columns

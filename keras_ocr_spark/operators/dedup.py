@@ -612,9 +612,15 @@ def verify_jaccard(
     pairs >= threshold."""
     left = sh_left.select(left_col, F.col("shingles").alias("_sh_l"))
     right = sh_right.select(right_col, F.col("shingles").alias("_sh_r"))
-    # Build on the candidates: left to AQE, the build side of this join
-    # flips between passes and each variant is newly generated code.
-    scored = F.broadcast(cands).join(left, left_col).join(right, right_col).select(
+    # A document side whose size estimate is under the broadcast
+    # threshold is planned as this join's build side. The hint keeps it
+    # there: otherwise AQE swaps in the candidates whenever their shuffle
+    # finishes first, and each variant is newly generated code. Over the
+    # threshold there is no hint, so the join can still shuffle.
+    limit = left.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if left._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= limit:
+        left = F.broadcast(left)
+    scored = cands.join(left, left_col).join(right, right_col).select(
         left_col,
         right_col,
         F.size("_sh_l").alias("_n_l"),

@@ -132,6 +132,20 @@ class TestPacking:
         a = {r["id"]: r["cs"] for r in got.collect()}
         b = {r["id"]: r["cs"] for r in naive.collect()}
         assert a == b
+        # a leading key with ties (5 values over 300 rows, shuffled so
+        # input order is not id order) under a two-column order: ties
+        # share a range bucket, the second key orders within it
+        rows = [(i, rng.randint(0, 4), v) for i, v in enumerate(vals)]
+        rng.shuffle(rows)
+        tied = spark.createDataFrame(rows, "id long, val int, n_tokens long")
+        got = P.with_global_cumsum(tied, "n_tokens", ["val", "id"], "cs", n_range_buckets=7)
+        naive = tied.withColumn(
+            "cs",
+            F.sum("n_tokens").over(W.orderBy("val", "id").rowsBetween(W.unboundedPreceding, W.currentRow)),
+        )
+        a = {r["id"]: r["cs"] for r in got.collect()}
+        b = {r["id"]: r["cs"] for r in naive.collect()}
+        assert a == b
 
     def test_chunk_layout(self, spark):
         # capacity 10; docs of 4,4,4 tokens: third doc straddles chunk 0/1

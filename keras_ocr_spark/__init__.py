@@ -20,8 +20,6 @@ Spark-first: DataFrame/SQL + Catalyst everywhere; Python UDFs only where
 built-ins genuinely can't express the semantics (HTML tokenization).
 """
 
-from .config import DEFAULT_CONFIG, ExtractionConfig
-
 __version__ = "0.1.0"
 
-__all__ = ["DEFAULT_CONFIG", "ExtractionConfig", "__version__"]
+__all__ = ["__version__"]

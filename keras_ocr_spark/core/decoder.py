@@ -17,6 +17,10 @@ index -> alphabet char map                 | HTML entity -> char map
 span and drops the spans that decode to empty; the stage-1 Arrow UDF
 runs that same function, so the extraction pipeline decodes in the
 Python worker with this module itself.
+The tag strip is ``tokenizer.strip_tags``, built on the tokenizer's
+own linear-time tag scanner, so the decoder and the tokenizer agree on
+what a tag is, and an unclosed ``<`` costs one pass, not a rescan to
+the end of the span.
 CRITICAL parity contract: its JVM twin re-expresses the chain as
 built-ins (``regexp_replace``/``replace`` — see
 ``keras_ocr_spark/functions/text.py``, used by the ``decode_chain``
@@ -28,11 +32,9 @@ equality on fixtures and randomized inputs. Entity order matters:
 
 from __future__ import annotations
 
-import re
 from typing import Tuple
 
-TAG_RE = re.compile(r"<[^>]*>")
-WS_RE = re.compile(r"[ \t\r\n]+")
+from .tokenizer import WS_RE, strip_tags
 
 #: (entity, char) in APPLICATION ORDER — ``&amp;`` last.
 ENTITIES: Tuple[Tuple[str, str], ...] = (
@@ -57,7 +59,7 @@ def decode_text(fragment: str) -> str:
     ``tokenizer._visible_len``; the order — tags, entities, collapse —
     is unchanged, so an ``&nbsp;&nbsp;`` still produces the double
     space the collapse check then catches)."""
-    s = TAG_RE.sub("", fragment) if "<" in fragment else fragment
+    s = strip_tags(fragment) if "<" in fragment else fragment
     if "&" in s:
         for entity, char in ENTITIES:
             s = s.replace(entity, char)

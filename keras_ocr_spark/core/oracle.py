@@ -20,7 +20,7 @@ from typing import List, NamedTuple
 from ..config import DEFAULT_CONFIG, ExtractionConfig
 from .decoder import decode_text
 from .proposal import Span, propose_spans
-from .tokenizer import tokenize
+from .tokenizer import scan_nodes
 
 
 class TurnExtraction(NamedTuple):
@@ -29,8 +29,13 @@ class TurnExtraction(NamedTuple):
 
 
 def extract_turn(raw: str, cfg: ExtractionConfig = DEFAULT_CONFIG) -> TurnExtraction:
-    """Full per-turn extraction: truncate-cap -> tokenize -> score ->
-    propose -> decode -> reassemble.
+    """Full per-turn extraction: truncate-cap -> scan -> score and
+    group -> decode -> reassemble.
+
+    One pass proposes the spans: ``propose_spans`` scores and groups
+    each node as ``scan_nodes`` yields it, with no node list and no tag
+    paths. The scan and each span's tag strip are linear in the turn's
+    length for any markup, so the cap bounds the cost of a record.
 
     The ``max_len`` cap mirrors ``max_size`` bounding in
     ``pipeline.py:45-47`` — worst-case per-record cost is bounded before
@@ -43,7 +48,7 @@ def extract_turn(raw: str, cfg: ExtractionConfig = DEFAULT_CONFIG) -> TurnExtrac
     capped = (raw or "")[: cfg.max_len]
     pieces: List[str] = []
     kept: List[Span] = []
-    for span in propose_spans(tokenize(capped), len(capped), cfg):
+    for span in propose_spans(scan_nodes(capped), len(capped), cfg):
         piece = decode_text(capped[span.start : span.end])
         if piece:
             pieces.append(piece)

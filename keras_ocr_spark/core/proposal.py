@@ -28,11 +28,10 @@ by the single-process oracle, so parity is by construction (model:
 
 from __future__ import annotations
 
-from typing import List, NamedTuple, Sequence
+from typing import Iterable, List, NamedTuple
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
 from .scoring import score_and_ratio
-from .tokenizer import Node
 
 
 class Span(NamedTuple):
@@ -46,11 +45,17 @@ class Span(NamedTuple):
 
 
 def propose_spans(
-    nodes: Sequence[Node],
+    nodes: Iterable[tuple],
     raw_len: int,
     cfg: ExtractionConfig = DEFAULT_CONFIG,
 ) -> List[Span]:
-    """Group qualifying nodes into content spans.
+    """Group qualifying nodes into content spans, in one pass.
+
+    ``nodes`` is any iterable of tuples in ``Node``'s field order: a
+    ``tokenize`` list, or the ``scan_nodes`` stream that
+    ``core.oracle.extract_turn`` groups as the scan produces it (this
+    routine reads only ``start``, ``end``, ``tlen``, ``link_len`` and
+    ``boiler``).
 
     A node *seeds* a region if ``score >= text_threshold`` and its link
     ratio is ``<= link_threshold``. A link-heavy node with a nonzero score
@@ -58,54 +63,66 @@ def propose_spans(
     map gluing of ``detection.py:124-192``) but is trimmed from the edges.
     """
     spans: List[Span] = []
-    # Run entries carry (node, score, is_seed) — score/ratio computed
-    # ONCE per node (the trim + max passes in flush reused to recompute
-    # them 2-3x in the hot loop).
-    run: List[tuple] = []
     text_t = cfg.text_threshold
     link_t = cfg.link_threshold
-
-    def flush() -> None:
-        if not run:
-            return
-        # Trim leading/trailing connectors (cf. _strip_line,
-        # data_generation.py:159-184).
-        members = list(run)
-        run.clear()
-        i, j = 0, len(members)
-        while i < j and not members[i][2]:
-            i += 1
-        while j > i and not members[j - 1][2]:
-            j -= 1
-        if i >= j:
-            return
-        members = members[i:j]
-        total = sum(m[0].tlen for m in members)
-        if total < cfg.size_threshold:  # detection.py:233-236
-            return
-        best = max(m[1] for m in members)
-        if best < cfg.detection_threshold:  # detection.py:238-241
-            return
-        start = max(0, members[0][0].start - cfg.dilate)  # detection.py:257-270
-        end = min(raw_len, members[-1][0].end + cfg.dilate)
-        spans.append(Span(start=start, end=end, score=best, n_nodes=len(members)))
-
-    connector_streak = 0
-    for node in nodes:
-        score, ratio = score_and_ratio(node)
+    max_run = cfg.max_connector_run
+    # The open region runs from its first seed to its last: ``first`` is
+    # None while it holds no seed, so leading connectors are trimmed (cf.
+    # _strip_line, data_generation.py:159-184). Connectors after the last
+    # seed are held in ``held_*`` until a seed confirms them; a region
+    # that ends first drops them (the trailing-connector trim).
+    # ``held_best`` is the best score up to the last held connector.
+    first = None
+    last_end = total = n_nodes = held_n = held_total = 0
+    best = held_best = 0.0
+    streak = 0  # consecutive connectors
+    for _, _, start, end, tlen, link_len, boiler in nodes:
+        score, ratio = score_and_ratio(tlen, link_len, boiler)
         if score >= text_t and ratio <= link_t:  # seed
-            run.append((node, score, True))
-            connector_streak = 0
-        elif (not node.boiler) and ratio > link_t and node.tlen > 0:  # connector
-            connector_streak += 1
-            if connector_streak > cfg.max_connector_run:
-                # Link farm: >max_connector_run consecutive link nodes
-                # break the component (edge connectors trimmed in flush).
-                flush()
+            if first is None:
+                first, total, n_nodes, best = start, tlen, 1, score
             else:
-                run.append((node, score, False))
+                total += held_total + tlen
+                n_nodes += held_n + 1
+                best = score if score > held_best else held_best
+            last_end = end
+            held_best = best
+            held_n = held_total = streak = 0
+            continue
+        if (not boiler) and ratio > link_t and tlen > 0:  # connector
+            streak += 1
+            if streak <= max_run:
+                if first is not None:
+                    held_n += 1
+                    held_total += tlen
+                    if score > held_best:
+                        held_best = score
+                continue
+            # Link farm: >max_connector_run consecutive link nodes break
+            # the component.
         else:
-            flush()
-            connector_streak = 0
-    flush()
+            streak = 0
+        if first is not None:
+            _close(spans, first, last_end, total, best, n_nodes, raw_len, cfg)
+            first = None
+    if first is not None:
+        _close(spans, first, last_end, total, best, n_nodes, raw_len, cfg)
     return spans
+
+
+def _close(
+    spans: List[Span],
+    first: int,
+    last_end: int,
+    total: int,
+    best: float,
+    n_nodes: int,
+    raw_len: int,
+    cfg: ExtractionConfig,
+) -> None:
+    """Keep a finished region if it passes the size and detection
+    filters, as a span dilated by ``cfg.dilate`` and clipped to the
+    text."""
+    if total >= cfg.size_threshold and best >= cfg.detection_threshold:  # detection.py:233-241
+        start = max(0, first - cfg.dilate)  # detection.py:257-270
+        spans.append(Span(start=start, end=min(raw_len, last_end + cfg.dilate), score=best, n_nodes=n_nodes))

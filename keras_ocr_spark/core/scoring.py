@@ -15,8 +15,6 @@ construction (same code, same arithmetic).
 
 from __future__ import annotations
 
-from .tokenizer import Node
-
 #: Density soft-knee: a node reaches score 0.5 (before penalties) at this
 #: many visible characters. Analog of the gaussian heatmap spread
 #: (``detection.py:55-62``) — longer text, stronger evidence, saturating.
@@ -26,12 +24,12 @@ DENSITY_KNEE = 15
 LINK_PENALTY = 0.8
 
 
-def score_and_ratio(node: Node) -> tuple:
-    """(content score in [0, 1], link ratio) for one node, in one pass:
-    the hot loop needs both, and they share the division. This is the
-    single source of the scoring arithmetic."""
-    tlen = node.tlen
-    ratio = node.link_len / tlen if tlen else 0.0
-    if node.boiler:
+def score_and_ratio(tlen: int, link_len: int, boiler: bool) -> tuple:
+    """(content score in [0, 1], link ratio) for one node, given its
+    ``tlen``, ``link_len`` and ``boiler`` fields, in one pass: the hot
+    loop needs both, and they share the division. This is the single
+    source of the scoring arithmetic."""
+    ratio = link_len / tlen if tlen else 0.0
+    if boiler:
         return 0.0, ratio
     return (tlen / (tlen + DENSITY_KNEE)) * (1.0 - LINK_PENALTY * ratio), ratio

@@ -6,20 +6,25 @@ nodes*, each carrying the evidence stage 1 scores on — visible length,
 link length, tag path (cf. ``/root/reference/keras_ocr/detection.py``
 score maps, which carry per-pixel text/link evidence).
 
-Deliberately dependency-free (stdlib ``re`` only — no lxml/bs4 in the
-runtime image) and allocation-light: a single regex pass over the raw
-string, a tag stack for paths. Offsets are Python code-point offsets into
-the ORIGINAL raw string; generated fixtures stay in the BMP so Spark's
-``substring`` (UTF-16 code units) and Python slicing agree exactly.
+Deliberately dependency-free (stdlib only — no lxml/bs4 in the runtime
+image) and linear-time: ``cut_tags`` finds every tag with one C-level
+split, ``scan_nodes`` walks the pieces once, classifies each distinct
+tag text once (a bounded memo) and answers "is this tag open?" with a
+count per tag name, so no input shape costs more than a pass. The same
+cut serves ``strip_tags`` (the decoder's tag strip), so the tokenizer
+and the decoder agree on what a tag is. Offsets are Python code-point
+offsets into the ORIGINAL raw string; generated fixtures stay in the
+BMP so Spark's ``substring`` (UTF-16 code units) and Python slicing
+agree exactly.
 """
 
 from __future__ import annotations
 
 import re
-from typing import List, NamedTuple
+from typing import Iterator, List, NamedTuple, Tuple
 
-TAG_RE = re.compile(r"<[^>]*>")
-TAG_NAME_RE = re.compile(r"</?\s*([a-zA-Z][a-zA-Z0-9]*)")
+#: A tag's name, matched on its text between ``<`` and ``>``.
+TAG_NAME_RE = re.compile(r"/?\s*([a-zA-Z][a-zA-Z0-9]*)")
 WS_RE = re.compile(r"[ \t\r\n]+")
 
 #: Tags whose subtree is never content (cf. readability/boilerpipe
@@ -83,87 +88,153 @@ def _visible_len(segment: str) -> int:
     return len(stripped)
 
 
+def cut_tags(s: str) -> Tuple[List[str], str]:
+    """The tag scanner: ``s`` cut at its tags, with the semantics of the
+    regex ``<[^>]*>`` (leftmost matches) in linear time.
+
+    A tag runs from a ``<`` to the next ``>``, and a ``<`` opens one
+    only if some ``>`` follows it. So ``s`` up to its last ``>`` is split
+    at every ``>``: in each piece, the first ``<`` starts the tag that
+    the piece's ``>`` ends (``piece.partition("<")`` gives the text
+    before it, ``"<"`` and the tag's body), and a piece with no ``<`` is
+    text followed by a literal ``>``. ``tail`` is the text after the
+    last ``>``, where a ``<`` is literal too. The regex, by contrast,
+    rescans to the end of ``s`` from every ``<`` that no ``>`` follows.
+    """
+    last = s.rfind(">")
+    if last < 0:
+        return [], s
+    return s[:last].split(">"), s[last + 1 :]
+
+
+def strip_tags(s: str) -> str:
+    """``s`` with every tag removed: ``re.sub("<[^>]*>", "", s)``."""
+    pieces, tail = cut_tags(s)
+    kept = []
+    for piece in pieces:
+        text, lt, _ = piece.partition("<")
+        kept.append(text if lt else text + ">")
+    kept.append(tail)
+    return "".join(kept)
+
+
+#: Tag bodies (the text between ``<`` and ``>``) -> what the tag does to
+#: the open-element stack: an ``(name, is_link, is_boilerplate)`` tuple
+#: opens ``name``, a ``str`` closes that name, ``""`` does nothing.
+#: Tag texts repeat (``<p>``, ``</a>``), so most tags skip the regex.
+#: Bounded: emptied when full, and bodies longer than
+#: ``TAG_MEMO_MAX_BODY`` are classified without being stored.
+_TAG_MEMO: dict = {}
+TAG_MEMO_CAP = 4096
+TAG_MEMO_MAX_BODY = 128
+
+
+def _classify(body: str):
+    """The stack action of the tag ``<body>`` (see ``_TAG_MEMO``)."""
+    c1 = body[:1]
+    if c1 == "!":  # comment, doctype
+        return ""
+    m = TAG_NAME_RE.match(body)
+    if not m:
+        return ""
+    name = m.group(1).lower()
+    if c1 == "/":
+        return name
+    if body[-1] == "/" or name in VOID_TAGS:  # self-closing or void
+        return ""
+    return (name, name == "a", name in BOILERPLATE_TAGS)
+
+
+def scan_nodes(raw: str) -> Iterator[tuple]:
+    """The stage-1 scan: yield the text nodes of ``raw`` in order, as
+    tuples in ``Node``'s field order, except that the second field is the
+    open-element chain instead of the tag path (``tag_path`` builds the
+    path; only ``tokenize`` needs it).
+
+    The chain is a linked stack of ``(name, parent, in_link,
+    in_boilerplate)`` cells, where the two flags are the state below the
+    cell, so a pop restores them without a recount. A close tag pops to
+    the nearest open element of its name (tolerating mis-nesting) and is
+    ignored when none is open; ``open_count`` answers that in O(1).
+    Whitespace-only segments yield nothing.
+    """
+    pieces, _ = cut_tags(raw)  # the text after the last tag is raw[text_start:]
+    memo = _TAG_MEMO
+    open_count: dict = {}
+    chain = None
+    in_link = in_boiler = False
+    idx = 0
+    pos = text_start = 0  # start of the current piece / of the pending text
+    vis = _visible_len
+    for piece in pieces:
+        text, lt, body = piece.partition("<")
+        if not lt:  # a '>' outside any tag: the text goes on
+            pos += len(piece) + 1
+            continue
+        tag_start = pos + len(text)
+        if tag_start > text_start:
+            tlen = vis(text if text_start == pos else raw[text_start:tag_start])
+            if tlen:
+                yield (idx, chain, text_start, tag_start, tlen, tlen if in_link else 0, in_boiler)
+                idx += 1
+        pos = text_start = pos + len(piece) + 1
+        action = memo.get(body)
+        if action is None:
+            action = _classify(body)
+            if len(body) <= TAG_MEMO_MAX_BODY:
+                if len(memo) >= TAG_MEMO_CAP:
+                    memo.clear()
+                memo[body] = action
+        if action.__class__ is tuple:
+            name, is_link, is_boiler = action
+            open_count[name] = open_count.get(name, 0) + 1
+            chain = (name, chain, in_link, in_boiler)
+            in_link = in_link or is_link
+            in_boiler = in_boiler or is_boiler
+        elif open_count.get(action):
+            while True:
+                name, chain, in_link, in_boiler = chain
+                open_count[name] -= 1
+                if name == action:
+                    break
+    tlen = vis(raw[text_start:])
+    if tlen:
+        yield (idx, chain, text_start, len(raw), tlen, tlen if in_link else 0, in_boiler)
+
+
+def tag_path(chain, paths: dict) -> str:
+    """``">"``-joined names of an open-element chain, outermost first.
+
+    ``paths`` maps ``id(cell)`` to ``(cell, path)`` for the cells seen
+    so far in one document; holding the cell keeps its id unique. Each
+    cell's path is built once from its parent's, so deep nesting costs
+    the length of the paths, not a walk to the root per node."""
+    todo = []
+    while chain is not None:
+        hit = paths.get(id(chain))
+        if hit is not None:
+            path = hit[1]
+            break
+        todo.append(chain)
+        chain = chain[1]
+    else:
+        path = ""
+    for cell in reversed(todo):
+        path = f"{path}>{cell[0]}" if path else cell[0]
+        paths[id(cell)] = (cell, path)
+    return path
+
+
 def tokenize(raw: str) -> List[Node]:
     """Split raw markup into ordered text nodes.
 
     Plain text (no tags) yields a single node with empty ``tag_path``.
     Whitespace-only segments are dropped (they carry no evidence, like
-    zero-score pixels).
-
-    This is the stage-1 hot loop (profiled at ~75% of the stage-1 UDF
-    kernel), so the tag-stack state (joined path, link depth, boilerplate
-    depth) is maintained INCREMENTALLY on push/pop instead of rescanned
-    per emitted node, and tag classification slices two chars instead of
-    materializing the tag string. Behavior is byte-identical to the
-    straightforward version (asserted against recorded goldens and the
-    randomized parity suite).
+    zero-score pixels). ``core.oracle.extract_turn`` consumes
+    ``scan_nodes`` directly; this list form adds each node's tag path.
     """
-    nodes: List[Node] = []
-    if "<" not in raw:  # plain-text fast path: no tags, single node
-        tlen = _visible_len(raw)
-        if tlen:
-            nodes.append(Node(0, "", 0, len(raw), tlen, 0, False))
-        return nodes
-
-    stack: List[str] = []
-    path = ""  # cached ">".join(stack)
-    link_depth = 0  # nesting count of <a>
-    boiler_depth = 0  # nesting count of BOILERPLATE_TAGS
-    pos = 0
-    idx = 0
-    # hot-loop local bindings (the loop runs once per tag corpus-wide)
-    append = nodes.append
-    vis = _visible_len
-    tag_name_match = TAG_NAME_RE.match
-
-    for m in TAG_RE.finditer(raw):
-        seg_start = m.start()
-        if seg_start > pos:
-            tlen = vis(raw[pos:seg_start])
-            if tlen:
-                append(
-                    Node(
-                        idx,
-                        path,
-                        pos,
-                        seg_start,
-                        tlen,
-                        tlen if link_depth else 0,
-                        boiler_depth > 0,
-                    )
-                )
-                idx += 1
-        end = m.end()
-        c1 = raw[seg_start + 1] if seg_start + 1 < end else ""
-        if c1 == "/":
-            name_m = tag_name_match(raw, seg_start)
-            if name_m:
-                name = name_m.group(1).lower()
-                # Pop to the matching open tag (tolerate mis-nesting).
-                if name in stack:
-                    while stack:
-                        top = stack.pop()
-                        if top == "a":
-                            link_depth -= 1
-                        if top in BOILERPLATE_TAGS:
-                            boiler_depth -= 1
-                        if top == name:
-                            break
-                    path = ">".join(stack)
-        elif c1 != "!":
-            name_m = tag_name_match(raw, seg_start)
-            if name_m and raw[end - 2] != "/":  # not self-closing
-                name = name_m.group(1).lower()
-                if name not in VOID_TAGS:
-                    stack.append(name)
-                    path = f"{path}>{name}" if path else name
-                    if name == "a":
-                        link_depth += 1
-                    if name in BOILERPLATE_TAGS:
-                        boiler_depth += 1
-        pos = end
-    if pos < len(raw):
-        tlen = _visible_len(raw[pos:])
-        if tlen:
-            nodes.append(Node(idx, path, pos, len(raw), tlen, tlen if link_depth else 0, boiler_depth > 0))
-    return nodes
+    paths: dict = {}
+    return [
+        Node(idx, tag_path(chain, paths), start, end, tlen, link_len, boiler)
+        for idx, chain, start, end, tlen, link_len, boiler in scan_nodes(raw)
+    ]

@@ -106,7 +106,9 @@ def register(name: str, sql: str | None):
 def _decode_sql(col: str) -> str:
     """DuckDB twin of ``functions.text.decode_expr``, step for step; the
     final strip anchors the same explicit ``str.isspace()`` class (RE2
-    reads its ``\\x{..}`` escapes as Java regex does)."""
+    reads its ``\\x{..}`` escapes as Java regex does). The tag strip
+    needs no split at the last ``>``: RE2 is linear on an unclosed
+    ``<``, where Java's backtracking regex is not."""
     decoded = (
         "replace(replace(replace(replace(replace(replace("
         f"regexp_replace({col}, '<[^>]*>', '', 'g'),"

@@ -1,3 +1,2 @@
-from .text import decode_expr
-
-__all__ = ["decode_expr"]
+"""Column functions built from Spark built-ins: the decoder twin (``text``),
+hashing and numeric helpers."""

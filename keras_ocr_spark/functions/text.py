@@ -5,7 +5,11 @@ Catalyst expressions (whole-stage-codegen'd, no Python worker), for
 plans that decode markup columns without a Python boundary (the
 ``decode_chain`` query):
 
-    strip tags        regexp_replace(s, '<[^>]*>', '')
+    strip tags        regexp_replace(head, '<[^>]*>', '') || tail, where
+                      tail = substring_index(s, '>', -1) is the text
+                      after the last '>' (no '<' there opens a tag) and
+                      head the rest: Java's regex would otherwise scan
+                      to the end of ``s`` from every unclosed '<'
     decode entities   replace(...) chain in ENTITIES order (&amp; LAST)
     collapse ws       regexp_replace(s, '[ \\t\\r\\n]+', ' ')
     strip             regexp_replace(s, '^[ws]+|[ws]+$', '') over the
@@ -49,7 +53,9 @@ def decode_expr(col: Column) -> Column:
     Python decoder is unchanged (asserted on randomized fragments in
     tests/test_parity.py).
     """
-    s = F.when(col.contains("<"), F.regexp_replace(col, TAG_PATTERN, "")).otherwise(col)
+    tail = F.substring_index(col, ">", -1)
+    head = col.substr(F.lit(1), F.length(col) - F.length(tail))
+    s = F.when(col.contains("<"), F.concat(F.regexp_replace(head, TAG_PATTERN, ""), tail)).otherwise(col)
     decoded = s
     for entity, char in ENTITIES:
         decoded = F.replace(decoded, F.lit(entity), F.lit(char))

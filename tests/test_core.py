@@ -76,20 +76,24 @@ class TestTokenizer:
         assert nodes[1].tag_path == ""
 
 
+def _score(node):
+    return score_and_ratio(node.tlen, node.link_len, node.boiler)[0]
+
+
 class TestScoring:
     def test_boilerplate_scores_zero(self):
         nodes = tokenize("<script>var alpha = some long script body here;</script>")
-        assert score_and_ratio(nodes[0])[0] == 0.0
+        assert _score(nodes[0]) == 0.0
 
     def test_longer_text_scores_higher(self):
         short = tokenize("<p>tiny</p>")[0]
         long = tokenize("<p>" + "word " * 30 + "</p>")[0]
-        assert score_and_ratio(long)[0] > score_and_ratio(short)[0]
+        assert _score(long) > _score(short)
 
     def test_link_text_discounted(self):
         plain = tokenize("<p>some reasonable content</p>")[0]
         linked = tokenize("<a>some reasonable content</a>")[0]
-        assert score_and_ratio(linked)[0] < score_and_ratio(plain)[0]
+        assert _score(linked) < _score(plain)
 
 
 class TestProposal:

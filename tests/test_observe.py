@@ -38,12 +38,18 @@ class TestWriteWithAudit:
 
     def test_single_job_for_write_plus_metrics(self, spark, tmp_path):
         df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        tracker = spark.sparkContext.statusTracker()
-        before = len(tracker.getJobIdsForGroup(None) or [])
-        commit(df, str(tmp_path / "one_job"), {"n": "count(*)"}, manifests=lambda a: {})
-        after = len(tracker.getJobIdsForGroup(None) or [])
+        # Count the jobs of a group of their own: the status tracker drops
+        # the oldest jobs past spark.ui.retainedJobs, so a difference of
+        # two counts over the session's history can read below 1.
+        sc = spark.sparkContext
+        sc.setJobGroup("observe-one-job", "commit")
+        try:
+            commit(df, str(tmp_path / "one_job"), {"n": "count(*)"}, manifests=lambda a: {})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
         # the write is one job; the metric must NOT add another
-        assert after - before == 1
+        assert len(sc.statusTracker().getJobIdsForGroup("observe-one-job")) == 1
 
     def test_observe_sees_the_final_frame(self, spark, tmp_path):
         # The documented caveat: metrics describe the frame they are

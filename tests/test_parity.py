@@ -105,6 +105,10 @@ class TestDecodeChainParity:
             "  double  spaces  ", "", "x", "<>", "<!-- c -->", "a<b",
             # Whitespace str.strip() removes but Spark's trim() does not.
             "\u3000", "\u00a0", "\x0c", "\x0b", "\x1f",
+            # Unclosed '<' runs: the tag strip applies only up to the last '>'.
+            "<<<<", "<" * 40, "x < y ", "x < y x < y ",
+            # Multi-byte and non-BMP: the split counts characters, not bytes.
+            "\u00e9\U0001f600",
         ]
         fragments = ["".join(rng.choice(atoms) for _ in range(rng.randint(0, 12))) for _ in range(500)]
         sdf = spark.createDataFrame([(f,) for f in fragments], "frag string")

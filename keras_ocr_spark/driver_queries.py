@@ -1328,8 +1328,9 @@ def q_pack_sequences(spark, sf_dir):
     """GPT-style concat-and-chunk packing: the corpus token stream (in
     doc-id order) sliced into 512-token chunks; each doc gets its chunk
     span + in-chunk offset. The global prefix sum runs THREE-PHASE
-    (range-bucket -> partitioned local cumsum -> broadcast prefix
-    offsets, operators/packing.py) — the oracle is the naive
+    (range buckets from a lazy percentile_approx -> partitioned local
+    cumsum -> broadcast prefix offsets, operators/packing.py), and the
+    build runs no Spark job — the oracle is the naive
     partition-less SUM OVER window, so the distributed scan is
     value-checked bit-for-bit against the textbook form it replaces."""
     from .operators import packing as P
@@ -2015,8 +2016,8 @@ def q_token_budget_mix(spark, sf_dir):
     """Pretraining data-MIXING: each language keeps documents in a
     deterministic md5 systematic order until its token budget is
     exhausted (en 6000 tokens, others 2000 — both genuinely truncate
-    at sf0.01). One language-partitioned window (no global order), a
-    literal CASE budget lookup — the mixing-weights primitive of a
+    at sf0.01). Running sums on (lang, md5-bucket) windows with
+    broadcast offsets (no global order), a literal CASE budget lookup — the mixing-weights primitive of a
     100 TB corpus assembly, stable across runs/engines/partitionings
     where df.sample() is none of those."""
     from .operators.curation import token_budget_mix
@@ -2430,9 +2431,9 @@ def q_quality_classifier(spark, sf_dir):
     milli-unit weight sum, label = logit > 0. No UDF, no exchange —
     scan → whole-stage-codegen project, so at 100 TB the filter rides
     the scan. Weights derive from slot ids by the md5-prefix integer
-    convention (a learned vector would broadcast as an array literal,
-    as ``packing.with_global_cumsum`` re-emits its offsets); the DuckDB oracle
-    reproduces every feature hash, weight, and logit bit-for-bit."""
+    convention (a learned vector would broadcast as an array literal);
+    the DuckDB oracle reproduces every feature hash, weight, and logit
+    bit-for-bit."""
     from .operators import classifier as CLF
 
     return CLF.score_documents(

@@ -11,8 +11,7 @@ algebra (``transform``/``aggregate`` higher-order functions), so at
 filter predicate (``logit > 0``) pushes into the same stage.
 
 Weights: a real deployment broadcasts learned weights as an array or
-map literal of <= n_buckets values, the way ``packing.with_global_cumsum``
-re-emits its collected offsets. Here weights are derived from the bucket id by the repo's
+map literal of <= n_buckets values. Here weights are derived from the bucket id by the repo's
 md5-prefix integer convention (``functions/hashing.py``) so the DuckDB
 oracle reproduces every feature hash, every weight, and every logit
 bit-for-bit — integer milli-units end to end, no float accumulation.

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import shingles_expr, words_expr
 from ..functions.numeric import pround
+from .packing import md5_prefix_bucket, prefix_sum
 
 #: Email + North-American-phone patterns, restricted to the syntax
 #: subset Java regex and RE2 (DuckDB) parse identically.
@@ -415,14 +416,16 @@ def quality_percentile_gate(
     whose score distributions differ; CCNet buckets by perplexity
     percentile for exactly this reason).
 
-    Skew-safe exact rank, same device as :func:`token_budget_mix`: rows
-    bucket by their quality value (a monotone coarsening of the
-    quality-DESC sort), rank locally per (lang, bucket) window task,
-    and add tiny broadcast per-bucket prefix offsets — the dominant
-    language never sorts in one task, yet ranks equal the textbook
+    Skew-safe exact rank, on the prefix scan
+    (:func:`packing.prefix_sum`) over a column of ones: rows bucket by
+    their quality value (a monotone coarsening of the quality-DESC
+    sort), rank locally per (lang, bucket) window task, and add tiny
+    broadcast per-bucket prefix offsets — the dominant language never
+    sorts in one task, yet ranks equal the textbook
     ``row_number() OVER (PARTITION BY lang ORDER BY quality DESC, id)``
-    bit for bit (the DuckDB oracle computes that naive form). Ties
-    break on id, so the kept set is deterministic across engines.
+    bit for bit (the DuckDB oracle computes that naive form), and
+    ``n_lang`` is the scan's group total. Ties break on id, so the kept
+    set is deterministic across engines.
 
     Output: (id, lang, quality, lang_rank, n_lang), kept rows only.
     Rows with NULL quality are excluded up front (a NULL score is
@@ -433,32 +436,20 @@ def quality_percentile_gate(
     df = df.filter(F.col(quality_col).isNotNull())
     q = F.col(quality_col).cast("double")
     # bucket ascending in rank order (= descending quality); q is in
-    # [0, 1] so floor(q * n_b) is in [0, n_b] — clamp the q == 1 edge.
-    rb = (F.lit(n_b - 1) - F.least(F.floor(q * n_b), F.lit(n_b - 1))).cast("int")
+    # [0, 1], clamped so the q == 1 edge and stray scores stay in range
+    rb = F.lit(n_b - 1) - F.least(F.greatest(F.floor(q * n_b), F.lit(0)), F.lit(n_b - 1))
     staged = df.select(
         F.col(id_col).alias("id"),
         F.col(lang_col).alias("lang"),
         q.alias("quality"),
-    ).withColumn("_rb", rb)
-    # Lazy lineage cut: `staged` feeds both the local-rank window and
-    # the per-bucket counts; without it each consumer re-plans and
-    # re-runs the caller's upstream (at the registered query: the full
-    # quality-scoring projection over the corpus) once more.
-    staged = staged.localCheckpoint(eager=False)
-    w_local = W.partitionBy("lang", "_rb").orderBy(F.desc("quality"), F.asc("id"))
-    local = staged.withColumn("_lr", F.row_number().over(w_local))
-    per = staged.groupBy("lang", "_rb").agg(F.count("*").alias("_n"))
-    w_prefix = W.partitionBy("lang").orderBy("_rb").rowsBetween(W.unboundedPreceding, -1)
-    offs = per.withColumn("_off", F.coalesce(F.sum("_n").over(w_prefix), F.lit(0)))
-    totals = per.groupBy("lang").agg(F.sum("_n").alias("n_lang"))
-    out = (
-        local.join(F.broadcast(offs.select("lang", "_rb", "_off")), ["lang", "_rb"])
-        .join(F.broadcast(totals), "lang")
-        .withColumn("lang_rank", (F.col("_off") + F.col("_lr")).cast("long"))
+    )
+    order = [F.desc("quality"), F.asc("id")]
+    out = prefix_sum(
+        staged, F.lit(1), order, rb, n_b, "lang_rank", groups=["lang"], total_col="n_lang"
     )
     return out.filter(
         F.col("lang_rank") <= F.ceil(F.lit(float(frac)) * F.col("n_lang"))
-    ).select("id", "lang", "quality", "lang_rank", F.col("n_lang").cast("long").alias("n_lang"))
+    ).select("id", "lang", "quality", "lang_rank", "n_lang")
 
 
 def token_budget_mix(
@@ -477,18 +468,15 @@ def token_budget_mix(
     exhausted (every kept row's inclusive running total fits the
     budget; the first crossing row is excluded).
 
-    Scale shape (skew-hardened, r5): the naive form — one window
-    partition per language — serializes the dominant language's whole
-    stratum into ONE task (English ≈ half a real corpus). Instead the
-    md5 order key is range-bucketed by its leading 16 bits (monotone in
-    the key, uniform because md5 is), the running sum is computed per
-    (lang, bucket) window task, and per-bucket prefix offsets — a tiny
-    ``n_langs × n_order_buckets`` frame — are window-summed and
-    broadcast-joined back. Identical values to the single-window form
-    (the buckets are a monotone coarsening of the (md5, id) order;
-    pinned by the DuckDB oracle, which stays the partition-less SUM
-    OVER), but the hot language now parallelizes ``n_order_buckets``
-    ways. Budget lookup is a literal CASE projection. The md5 order
+    Scale shape (skew-hardened): the naive form — one window partition
+    per language — serializes the dominant language's whole stratum
+    into ONE task (English ≈ half a real corpus). Instead the running
+    sum is :func:`packing.prefix_sum` grouped by language and bucketed
+    by the md5 order key's leading 16 bits (monotone in the key,
+    uniform because md5 is), so the hot language parallelizes
+    ``n_order_buckets`` ways. Identical values to the single-window
+    form (pinned by the DuckDB oracle, which stays the partition-less
+    SUM OVER). Budget lookup is a literal CASE projection. The md5 order
     makes the kept set stable across runs, engines and partitionings —
     df.sample() can do none of that.
 
@@ -499,49 +487,21 @@ def token_budget_mix(
     for lang, b in sorted(budgets.items()):
         budget = F.when(F.col("lang") == lang, F.lit(int(b))).otherwise(budget)
     n_b = max(1, int(n_order_buckets))
-    ok = F.md5(F.col("id").cast("string"))
-    staged = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(lang_col).alias("lang"),
-            toks.cast("long").alias("n_tokens"),
-        )
-        .withColumn("_ok", ok)
-        # leading 16 bits of the hex key -> bucket; integer division by a
-        # constant preserves order, so bucket is monotone in _ok
-        .withColumn(
-            "_rb",
-            (F.conv(F.substring("_ok", 1, 4), 16, 10).cast("long") * n_b / 65536).cast("int"),
-        )
-        # The inner join on (lang, _rb) below drops these rows anyway;
-        # filtering them here gives both branches of that self-join the
-        # same plan below the window exchange, so the exchange is reused.
-        .filter(F.col("lang").isNotNull() & F.col("_rb").isNotNull())
+    staged = df.select(
+        F.col(id_col).alias("id"),
+        F.col(lang_col).alias("lang"),
+        toks.cast("long").alias("n_tokens"),
+    ).withColumn("_ok", F.md5(F.col("id").cast("string")))
+    out = prefix_sum(
+        staged,
+        F.col("n_tokens"),
+        [F.col("_ok"), F.col("id")],
+        md5_prefix_bucket(F.col("_ok"), n_b),
+        n_b,
+        "cum_tokens",
+        groups=["lang"],
     )
-    w_local = (
-        W.partitionBy("lang", "_rb")
-        .orderBy("_ok", "id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    staged = staged.withColumn("_local_cum", F.sum("n_tokens").over(w_local))
-    w_prefix = (
-        W.partitionBy("lang").orderBy("_rb").rowsBetween(W.unboundedPreceding, -1)
-    )
-    # A bucket's total is its last running sum (token counts are
-    # non-negative); reading it off the window output keeps the
-    # aggregate on the window's (lang, _rb) exchange.
-    offsets = (
-        staged.groupBy("lang", "_rb")
-        .agg(F.max("_local_cum").alias("_bucket_total"))
-        .withColumn("_offset", F.coalesce(F.sum("_bucket_total").over(w_prefix), F.lit(0)))
-        .select("lang", "_rb", "_offset")
-    )
-    out = staged.join(F.broadcast(offsets), ["lang", "_rb"]).withColumn(
-        "cum_tokens", F.col("_offset") + F.col("_local_cum")
-    )
-    return out.filter(F.col("cum_tokens") <= budget).select(
-        "id", "lang", "n_tokens", F.col("cum_tokens").cast("long").alias("cum_tokens")
-    )
+    return out.filter(F.col("cum_tokens") <= budget).select("id", "lang", "n_tokens", "cum_tokens")
 
 
 def dsir_scores(

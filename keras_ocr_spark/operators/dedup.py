@@ -244,16 +244,19 @@ def _rarity_coded_docs(
 
     Plan shape: ONE exchange total on corpus-sized data (the map-side-
     combined vocabulary count — partials are vocab-sized, not
-    row-sized); the ranked dictionary is then collected and applied as
-    a per-row Arrow kernel, so the corpus itself is never joined or
-    re-grouped to attach codes (the r6 first cut paid a broadcast join
-    over every exploded shingle row plus a groupBy(id)+collect_list
-    shuffle for the same result). The driver-side dictionary is
-    vocabulary-bounded — the SAME assumption the broadcast-dict join
-    made; at open-vocabulary 100 TB scale assign codes with the
-    distributed prefix sum ``packing.with_global_cumsum`` over a column
-    of ones (the rank) and attach them with a shuffle join on shingle —
-    the downstream prefix join is unchanged either way.
+    row-sized); the (shingle, df) vocabulary is then collected, ranked
+    on the driver and applied as a per-row Arrow kernel, so the corpus
+    itself is never joined or re-grouped to attach codes (an earlier
+    cut paid a broadcast join over every exploded shingle row plus a
+    groupBy(id)+collect_list shuffle for the same result). The
+    driver-side dictionary is vocabulary-bounded — the SAME assumption
+    the broadcast-dict join made. At open-vocabulary 100 TB scale, rank
+    with the distributed prefix scan (:func:`packing.prefix_sum` over a
+    column of ones, bucketed monotonically in (df, shingle)) and attach
+    the codes with a shuffle join on shingle; ranking in Spark while the
+    codes still reach the driver would add three AQE stages (each a
+    Spark job) to the build. The downstream prefix join is unchanged
+    either way.
     """
 
     # Parallelism floor: this build and EVERYTHING downstream of it
@@ -278,10 +281,10 @@ def _rarity_coded_docs(
     )
     if max_shingle_df is not None:
         vocab = vocab.filter(F.col("_df") <= max_shingle_df)
-    ranked = vocab.select(
-        "shingle", F.row_number().over(W.orderBy("_df", "shingle")).alias("_code")
-    )
-    mapping = {r["shingle"]: r["_code"] for r in ranked.collect()}
+    # The dictionary lands on the driver anyway, so rank it there: no
+    # window, and Python orders str by code point, as Spark orders UTF-8.
+    ranked = sorted((r["_df"], r["shingle"]) for r in vocab.collect())
+    mapping = {shingle: code for code, (_df, shingle) in enumerate(ranked, start=1)}
 
     # containsNull=False matters: nullable array elements knock
     # array_intersect (and the explode/join chain) off the primitive

@@ -19,20 +19,23 @@ Graft of the reference's recognizer-input preparation:
   in ANY engine (unlike rand(seed), whose stream is engine-specific).
 
 All pure JVM expressions — map-only passes at 100 TB except the shuffle,
-which is the one operator whose JOB is a total reorder (a range-partition
-sort on the hash column; at scale, assign positions per-partition rather
-than with a global window).
+which is the one operator whose JOB is a total reorder (positions come
+from the bucketed prefix scan of ``operators/packing.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
+
+from .packing import md5_prefix_bucket, prefix_sum
 
 #: The reference's default alphabet (recognition.py:25):
 #: string.digits + string.ascii_lowercase.
 DEFAULT_ALPHABET = "0123456789abcdefghijklmnopqrstuvwxyz"
+
+#: Shuffle-key buckets of the position scan.
+_N_BUCKETS = 64
 
 
 def vocab_map(alphabet: str) -> Column:
@@ -105,14 +108,16 @@ def epoch_shuffle_key_expr(key: Column, seed: int) -> Column:
 
 def epoch_shuffle(df: DataFrame, seed: int, key_col: str = "doc_id") -> DataFrame:
     """Deterministic seeded reshuffle with explicit positions —
-    datasets.py:379-381 per-epoch random.shuffle. At sf scale positions
-    come from a global-order window (single-partition sort: fine for
-    fixture-sized label lists, which is what the reference shuffles);
-    at 100 TB drop the position column and just orderBy the hash (a
-    distributed range-partition sort)."""
+    datasets.py:379-381 per-epoch random.shuffle. The position is the
+    rank over (shuffle key, key): :func:`packing.prefix_sum` over a
+    column of ones, bucketed by the shuffle key's leading md5 bits, so
+    no task sorts the whole frame. A NULL key sorts first, as in
+    Spark's ascending order."""
     k = epoch_shuffle_key_expr(F.col(key_col), seed)
-    w = W.orderBy(k.asc(), F.col(key_col).asc())
-    return df.withColumn("shuffle_pos", F.row_number().over(w))
+    order = [k.asc(), F.col(key_col).asc()]
+    return prefix_sum(
+        df, F.lit(1), order, md5_prefix_bucket(k, _N_BUCKETS), _N_BUCKETS, "shuffle_pos"
+    )
 
 
 def bpe_pair_counts(

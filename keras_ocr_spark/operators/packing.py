@@ -1,5 +1,5 @@
-"""Sequence packing for pretraining: concat-and-chunk documents into
-fixed-capacity token windows — WITHOUT a global-order window.
+"""Sequence packing for pretraining, and the one lazy distributed prefix
+scan the package's running sums and global ranks run on.
 
 The standard pretraining layout concatenates every document's tokens
 in a stable order and slices the stream into fixed ``capacity``-token
@@ -10,20 +10,24 @@ reduces to ONE exact global prefix sum over the doc order.
 
 ``SUM(...) OVER (ORDER BY ...)`` with no PARTITION BY is the naive
 form — Spark executes it in a single task, a hard wall at 100 TB.
-This module computes the identical prefix sum three-phase, the
-textbook distributed scan (a global rank is the prefix sum of a
-column of ones, so the same device ranks too):
+:func:`prefix_sum` computes the identical sum in three phases, the
+bucketed window aggregation of *Disco* (EDBT 2020); a rank is the
+prefix sum of a column of ones, so the same scan ranks too:
 
-1. range-bucket rows by approx quantiles of the leading order key
-   (driver-side sample, scale-free) — buckets respect the order;
-2. local cumulative sum inside each bucket with an ordinary
-   partitioned window (P parallel tasks);
-3. per-bucket totals (P tiny rows) collected and re-emitted as a
-   literal prefix-offset map; global cumsum = offset[bucket] + local.
+1. the caller's bucket, monotone in the order, splits each group's
+   rows; a running sum runs per ``(group…, bucket)`` window task;
+2. each bucket's total is a sum read off that window's output, so
+   both branches read the one window exchange;
+3. each total is exploded to every bucket of its group and summed per
+   target bucket (at most ``n_buckets²`` tiny rows per group, no
+   window), and the offsets are broadcast-joined back.
 
-Cost: two tiny driver actions + ONE hash exchange — vs the
-single-task global sort. Bit-exact vs the window form (integer sums;
-asserted on randomized inputs in tests).
+Building the plan runs no Spark job, and nothing is persisted or
+collected. When the input holds only the columns the scan reads, totals
+and local sums come from one shuffle, so the sums are exact for
+whatever rows that shuffle holds, nondeterministic inputs included.
+Bit-exact vs the window form (integer sums; asserted on randomized
+inputs in tests).
 
 Reference analog: the recognizer's batch assembly of variable-length
 labels into fixed-width padded training batches
@@ -33,20 +37,78 @@ as the corpus-scale token-stream chunking an LLM pipeline runs.
 
 from __future__ import annotations
 
-from typing import List, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def _range_bucket_expr(value: Column, splits: List[float]) -> Column:
-    """0-based range bucket: count of split points strictly below the
-    value (monotone in the value, ties share a bucket)."""
-    bucket = F.lit(0)
-    for s in splits:
-        bucket = bucket + F.when(value > F.lit(s), 1).otherwise(0)
-    return bucket
+def prefix_sum(
+    df: DataFrame,
+    value: Column,
+    order: Sequence[Column],
+    bucket: Column,
+    n_buckets: int,
+    out_col: str,
+    groups: Sequence[str] = (),
+    total_col: str | None = None,
+) -> DataFrame:
+    """Adds ``out_col``: the exact inclusive running sum (long) of
+    ``value`` over ``order`` within each ``groups`` group, and, when
+    ``total_col`` is given, the group's total.
+
+    ``bucket`` must be monotone non-decreasing in ``order`` and lie in
+    ``[0, n_buckets)``; a NULL bucket counts as bucket 0, where an
+    ascending (NULLS FIRST) order puts NULL keys. Ties in ``order``
+    get an arbitrary but consistent order, as ``row_number`` gives
+    them. Rows with a NULL group key are dropped. For both branches to
+    share the window exchange, ``df`` should hold only the columns the
+    scan reads (the order, value and group columns); extra columns are
+    pruned from the totals branch only, which then computes ``df`` and
+    shuffles again, so ``df`` must then be deterministic."""
+    keys = [*groups, "_rb"]
+    staged = df.withColumn("_rb", F.coalesce(bucket.cast("int"), F.lit(0)))
+    for g in groups:
+        # The join below infers these filters on its broadcast side;
+        # applying them before the window keeps both branches' plans
+        # identical below the window exchange, so it is reused.
+        staged = staged.filter(F.col(g).isNotNull())
+    w = W.partitionBy(*keys).orderBy(*order)
+    local = staged.select(
+        "*",
+        F.sum(value).over(w.rowsBetween(W.unboundedPreceding, W.currentRow)).alias("_lc"),
+        # the bucket total on the same window node: an aggregate of the
+        # value itself would prune the window and shuffle again
+        F.sum(value).over(w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)).alias("_bt"),
+    )
+    # _bt is one value per bucket; max reads it off
+    totals = local.groupBy(*keys).agg(F.max("_bt").alias("_t"))
+    to = F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1)))
+    offsets = (
+        totals.select(*groups, F.col("_rb").alias("_from"), "_t", to.alias("_rb"))
+        .groupBy(*keys)
+        .agg(
+            F.coalesce(
+                F.sum(F.when(F.col("_from") < F.col("_rb"), F.col("_t"))), F.lit(0)
+            ).alias("_off"),
+            F.sum("_t").alias("_tot"),
+        )
+    )
+    out = local.join(F.broadcast(offsets), keys, "left").withColumn(
+        out_col, (F.col("_off") + F.col("_lc")).cast("long")
+    )
+    if total_col is not None:
+        out = out.withColumn(total_col, F.col("_tot").cast("long"))
+    return out.drop("_rb", "_lc", "_bt", "_off", "_tot")
+
+
+def md5_prefix_bucket(hex_key: Column, n_buckets: int) -> Column:
+    """Bucket in ``[0, n_buckets)`` from the leading 16 bits of a hex
+    key: monotone in the key (integer division by a constant keeps
+    order) and uniform when the key is an md5 digest."""
+    lead16 = F.conv(F.substring(hex_key, 1, 4), 16, 10).cast("long")
+    return (lead16 * int(n_buckets) / 65536).cast("int")
 
 
 def with_global_cumsum(
@@ -58,71 +120,29 @@ def with_global_cumsum(
 ) -> DataFrame:
     """Adds the exact inclusive prefix sum of ``value_col`` over the
     total order ``order_cols`` (which must be a unique key sequence)
-    without a partition-less window.
+    without a partition-less window: :func:`prefix_sum` over range
+    buckets of the leading order key.
 
-    The input is touched three times (quantile sample, per-bucket
-    totals, the output job). It is persisted for the two driver-side
-    actions and UNPERSISTED (in a ``finally``, so a failing action
-    cannot leak the cache entry) before returning — the output job then
-    recomputes the input once (2 upstream computations total instead
-    of 3 uncached), but repeated calls cannot leak cache entries for
-    the session lifetime. Callers should pass the NARROW projection
-    (order cols + value col only) so the cached pass is cheap.
-
-    The input must be DETERMINISTIC under recomputation: the collected
-    per-bucket totals come from the cached pass, while the output job
-    recomputes the frame after unpersist — a nondeterministic upstream
-    can silently disagree with the offsets. The structural guard below
-    catches expression-level nondeterminism ONLY (``rand``,
-    ``monotonically_increasing_id``: these flip the analyzed plan's
-    ``deterministic`` flag). It does NOT catch ``df.sample()`` (Spark
-    fixes a seed at plan-build time, so the plan reports deterministic)
-    nor cross-run divergence from partition-layout changes between the
-    cached collect and the post-unpersist recompute — for those,
-    callers must materialize (checkpoint/write) upstream themselves."""
-    if not df._jdf.queryExecution().analyzed().deterministic():
-        raise ValueError(
-            "with_global_cumsum requires a deterministic input frame: "
-            "the per-bucket totals are collected from one computation "
-            "and the output job recomputes the input — nondeterministic "
-            "expressions (rand/monotonically_increasing_id) would "
-            "silently produce wrong offsets"
-        )
-    df = df.persist()
-    spark = df.sparkSession
-    n_range = n_range_buckets or spark.sparkContext.defaultParallelism
+    The range splits are a lazy ``percentile_approx`` of the leading
+    key, one scalar subquery computed once when the plan runs. Any
+    splits give exact sums (the bucket is monotone in the key and the
+    offsets are that bucket's own totals); the quantiles only balance
+    the window tasks. Callers should pass the NARROW projection (order
+    cols + value col only), so the window exchange is shared."""
+    n_range = max(1, n_range_buckets or df.sparkSession.sparkContext.defaultParallelism)
     lead = F.col(order_cols[0]).cast("double")
-    try:
-        splits: list[float] = []
-        if n_range > 1:
-            qs = [i / n_range for i in range(1, n_range)]
-            got = df.select(lead.alias("_v")).approxQuantile("_v", qs, 0.001)
-            splits = sorted(set(got))
-        staged = df.withColumn("_rb", _range_bucket_expr(lead, splits))
-        totals = {
-            int(r["_rb"]): int(r["s"])
-            for r in staged.groupBy("_rb")
-            .agg(F.coalesce(F.sum(F.col(value_col).cast("long")), F.lit(0)).alias("s"))
-            .collect()
-        }
-    finally:
-        df.unpersist()
-    w = (
-        W.partitionBy("_rb")
-        .orderBy(*[F.col(c) for c in order_cols])
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    local = staged.withColumn("_lc", F.sum(F.col(value_col).cast("long")).over(w))
-    offsets, acc = {}, 0
-    for b in sorted(totals):
-        offsets[b] = acc
-        acc += totals[b]
-    if offsets:
-        off_map = F.create_map(*[F.lit(x) for b, o in offsets.items() for x in (b, o)])
-        out = local.withColumn(out_col, (F.col("_lc") + off_map[F.col("_rb")]).cast("long"))
-    else:  # empty input
-        out = local.withColumn(out_col, F.col("_lc").cast("long"))
-    return out.drop("_rb", "_lc")
+    staged, bucket = df, F.lit(0)
+    if n_range > 1:
+        qs = [i / n_range for i in range(1, n_range)]
+        splits = df.select(F.percentile_approx(lead, qs, 1000).alias("_s")).scalar()
+        # one column holds the splits, so the subquery is planned once;
+        # the bucket counts the splits strictly below the key (ties
+        # share a bucket; a NULL key or no splits gives bucket 0)
+        staged = df.withColumn("_sp", splits)
+        for i in range(n_range - 1):
+            bucket = bucket + F.when(lead > F.col("_sp")[i], 1).otherwise(0)
+    order = [F.col(c) for c in order_cols]
+    return prefix_sum(staged, F.col(value_col), order, bucket, n_range, out_col).drop("_sp")
 
 
 def pack_chunks(

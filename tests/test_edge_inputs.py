@@ -6,6 +6,7 @@ contains these rows; an operator that throws on them kills the stage."""
 import random
 
 import pytest
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from keras_ocr_spark.operators import dedup as D
@@ -153,6 +154,18 @@ class TestEdgeTexts:
         assert enc[3][0] == 1 and enc[3][1][0] >= 0  # single char encodes
         shuf = E.epoch_shuffle(nn, seed=3)
         assert sorted(r.shuffle_pos for r in shuf.collect()) == [1, 2, 3, 4]
+        # null order keys take the first positions (Spark's ascending
+        # NULLS FIRST), the rest follow the single-window rank
+        keyed = edge_docs.withColumn("doc_id", F.when(F.col("doc_id") % 2 == 0, F.col("doc_id")))
+        k = E.epoch_shuffle_key_expr(F.col("doc_id"), 3)
+        naive = keyed.withColumn("shuffle_pos", F.row_number().over(W.orderBy(k, "doc_id")))
+        got = {(r.doc_id, r.text): r.shuffle_pos for r in E.epoch_shuffle(keyed, seed=3).collect()}
+        want = {(r.doc_id, r.text): r.shuffle_pos for r in naive.collect()}
+        for ranks in (got, want):
+            assert sorted(p for (doc_id, _), p in ranks.items() if doc_id is None) == [1, 2]
+        assert {key: p for key, p in got.items() if key[0] is not None} == {
+            key: p for key, p in want.items() if key[0] is not None
+        }
 
     def test_pdf_null_payload(self, spark):
         from keras_ocr_spark.operators.multimodal import pdf_extract_text

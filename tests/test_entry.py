@@ -53,10 +53,8 @@ BUILD_JOB_EXCEPTIONS = {
     "dedup_resolve": 10,
     "dedup_best_keeper": 10,
     "leakage_safe_split": 10,
-    # approxQuantile range splits, then per-bucket totals collected for
-    # the prefix offsets
-    "pack_sequences": 7,
-    # the shingle vocabulary is collected to rank shingles by rarity
+    # the shingle vocabulary is collected to code shingles by rarity
+    # through a driver dict (ADVICE.md)
     "dedup_containment": 5,
     "dedup_prefix_filter": 5,
     # first run writes the two snapshot versions (1-2 jobs after)
@@ -198,8 +196,6 @@ def test_documents_shape_precondition_for_extract_oracle(sf):
 #: with its tests) is progress; a new module may not join it.
 NO_CALLER = {
     "keras_ocr_spark.operators.skewjoin": "library operator, no caller since the events prune",
-    "keras_ocr_spark.operators.incremental": "library operator, no caller since the TPC-H prune",
-    "keras_ocr_spark.operators.expectations": "library operator, no caller since the TPC-H prune",
     "keras_ocr_spark.sources.layout": "compaction and z-order, no caller since the TPC-H prune",
     "keras_ocr_spark.sources.loaders": "reference-format loaders, tested directly",
 }
@@ -303,6 +299,44 @@ def test_no_new_function_without_a_caller():
             ):
                 uncalled.add(f"{path.stem}.{node.name}")
     assert sorted(uncalled) == sorted(NO_CALLER_FUNCTIONS)
+
+
+#: ``Window`` specs in ``keras_ocr_spark/`` ordered with no partition,
+#: as ``file:line`` -> why the frame is small. Such a window sorts all
+#: its rows in one task. The plan bound in ``tests/test_plan_shape.py``
+#: sees only the registered queries; this scan covers the whole package.
+UNPARTITIONED_WINDOW_SPECS = {
+    "operators/skewjoin.py:111": "ranks the limit(top_k) rows of the top-k report",
+}
+
+
+def test_no_unpartitioned_window_spec():
+    # An ast scan for ``<Window>.orderBy(...)`` calls, under whatever
+    # name the module imports ``Window`` as (``W``, ``Window``, ...); a
+    # spec with a partition starts from ``partitionBy`` instead.
+    import ast
+
+    found = []
+    pkg = REPO / "keras_ocr_spark"
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        names = {
+            a.asname or a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and node.module == "pyspark.sql"
+            for a in node.names
+            if a.name == "Window"
+        }
+        found += [
+            f"{path.relative_to(pkg)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "orderBy"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id in names
+        ]
+    assert sorted(found) == sorted(UNPARTITIONED_WINDOW_SPECS)
 
 
 #: ``scripts/*.py`` that no tier-1 test runs: ``check_oracles.py`` is the

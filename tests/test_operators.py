@@ -119,6 +119,18 @@ class TestPrefixFilterJaccard:
         # only ~n - ceil(0.7n) + 1 of its n shingles (~30% + 1).
         n_sh, n_prefix = sh.count(), prefix.count()
         assert n_prefix <= 0.35 * n_sh + docs.count()
+        # The global rarity codes the coded frame carries equal the
+        # single-window rank over (_df, shingle); most _df values tie.
+        assert freq.filter(F.col("_df") == 2).count() > 1
+        code = {
+            r.shingle: r.c
+            for r in freq.select("shingle", F.row_number().over(W.orderBy("_df", "shingle")).alias("c")).collect()
+        }
+        want = {}
+        for r in sh.collect():
+            want.setdefault(r.id, set()).add(code[r.shingle])
+        coded = {r.id: r.codes for r in D._rarity_coded_docs(docs, "doc_id", "text", 3).collect()}
+        assert coded == {i: sorted(c) for i, c in want.items()}
 
     def test_threshold_validation_and_plan(self, spark):
         docs = self._random_corpus(spark, 3)

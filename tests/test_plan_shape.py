@@ -14,8 +14,8 @@ Asserts properties of `.explain()` output that matter at 100 TB:
   one;
 - every registered query's executed plan stays within its ``PLAN_BOUNDS``
   row: no CartesianProduct, a BroadcastNestedLoopJoin only onto a 1-row
-  broadcast side, and per-query bounds on exchanges, Python nodes,
-  SinglePartition and TakeOrderedAndProject;
+  broadcast side, no Window without a partition, and per-query bounds on
+  exchanges, Python nodes, SinglePartition and TakeOrderedAndProject;
 - AQE splits a skewed join under the session ``build_session`` builds.
 """
 
@@ -236,14 +236,15 @@ class TestFilterPushdown:
         assert "PushedFilters: [IsNotNull(role), EqualTo(role,user)]" in plan
 
 
-#: Every query's plan holds no CartesianProduct and no
-#: BroadcastNestedLoopJoin; ``PLAN_BOUNDS`` adds to or overrides these.
-DEFAULT_BOUNDS = {"cartesian": ("==", 0), "bnlj": ("==", 0)}
+#: Every query's plan holds no CartesianProduct, no
+#: BroadcastNestedLoopJoin and no Window without a partition (one task
+#: would sort all its rows); ``PLAN_BOUNDS`` adds to or overrides these.
+DEFAULT_BOUNDS = {"cartesian": ("==", 0), "bnlj": ("==", 0), "unpartitioned_windows": ("==", 0)}
 
-#: query -> {feature: (op, value)}, op "==" or "<=", over the substring
-#: counts of ``plan_features``. Each bnlj bound is a 1-row broadcast side
-#: (a totals or stats frame attached to the rows it scales) and is set at
-#: its measured count.
+#: query -> {feature: (op, value)}, op "==" or "<=", over the counts of
+#: ``plan_features``. Each bnlj bound is a 1-row broadcast side (a totals
+#: or stats frame attached to the rows it scales) and is set at its
+#: measured count.
 PLAN_BOUNDS = {
     # map-only flagship: one stage-1 Arrow UDF, no shuffle
     "extract_documents": {"exchanges": ("==", 0), "python_nodes": ("==", 1)},
@@ -253,8 +254,10 @@ PLAN_BOUNDS = {
     "dedup_incremental": {},
     # end-to-end curation: equi-joins and aggregates only
     "curate_corpus": {"single_partition": ("==", 0)},
-    # distributed prefix sum, no SinglePartition window
-    "pack_sequences": {"single_partition": ("==", 0)},
+    # distributed prefix sum; its range splits are one lazy
+    # percentile_approx subquery, whose global sketch merge is the one
+    # Exchange SinglePartition, printed once per branch that reads it
+    "pack_sequences": {"single_partition": ("==", 2)},
     # per-row array algebra, zero Python, one final-aggregate exchange
     "gopher_repetition": {"exchanges": ("<=", 1), "python_nodes": ("==", 0)},
     # eval vocabulary broadcast join plus one groupBy
@@ -294,9 +297,23 @@ PLAN_BOUNDS = {
 }
 
 
-def plan_features(plan: str) -> dict[str, int]:
-    """Substring counts over ``executedPlan().toString()``; "Exchange"
-    also counts broadcast and reused exchanges."""
+def plan_nodes(node):
+    """Every node of a physical plan, subquery plans included; an
+    ``AdaptiveSparkPlan`` is walked through its initial plan."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.initialPlan()
+    yield node
+    for seq in (node.children(), node.subqueries()):
+        for i in range(seq.size()):
+            yield from plan_nodes(seq.apply(i))
+
+
+def plan_features(df) -> dict[str, int]:
+    """Substring counts over ``executedPlan().toString()`` ("Exchange"
+    also counts broadcast and reused exchanges), and the ``Window``
+    nodes of that plan whose ``partitionSpec`` is empty."""
+    executed = df._jdf.queryExecution().executedPlan()
+    plan = executed.toString()
     return {
         "exchanges": plan.count("Exchange"),
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
@@ -304,6 +321,11 @@ def plan_features(plan: str) -> dict[str, int]:
         "python_nodes": plan.count("EvalPython"),
         "single_partition": plan.count("SinglePartition"),
         "take_ordered": plan.count("TakeOrderedAndProject"),
+        "unpartitioned_windows": sum(
+            1
+            for n in plan_nodes(executed)
+            if n.nodeName() == "Window" and n.partitionSpec().isEmpty()
+        ),
     }
 
 
@@ -314,8 +336,7 @@ class TestQueryPlanBounds:
         assert set(PLAN_BOUNDS) <= set(QUERIES)
         bad = []
         for name, (fn, _sql) in QUERIES.items():
-            plan = fn(spark, "/root/testdata/sf0.001")._jdf.queryExecution().executedPlan().toString()
-            got = plan_features(plan)
+            got = plan_features(fn(spark, "/root/testdata/sf0.001"))
             for feature, (op, want) in {**DEFAULT_BOUNDS, **PLAN_BOUNDS.get(name, {})}.items():
                 if not (got[feature] == want if op == "==" else got[feature] <= want):
                     bad.append((name, f"{feature}={got[feature]}, want {op} {want}"))

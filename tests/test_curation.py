@@ -158,11 +158,22 @@ class TestPacking:
         a = {r["id"]: r["cs"] for r in got.collect()}
         b = {r["id"]: r["cs"] for r in naive.collect()}
         assert a == b
-        # a nondeterministic value column: the totals and the local sums
-        # come from one exchange, so every row's cs is the running sum
-        # of the values the output itself carries
+
+    def test_nondeterministic_input_consistent(self, spark):
+        """A nondeterministic value column is accepted: the totals and
+        the local sums come from one exchange, so every row's cs is the
+        running sum of the values the output itself carries."""
         noisy = spark.range(500).withColumn("n_tokens", (F.rand() * 60 - 20).cast("long"))
         out = sorted(P.with_global_cumsum(noisy, "n_tokens", ["id"], "cs", n_range_buckets=7).collect())
+        assert [r["cs"] for r in out] == list(itertools.accumulate(r["n_tokens"] for r in out))
+        # nested nondeterminism (below a filter) too
+        nested = (
+            spark.range(500)
+            .withColumn("n_tokens", (F.rand() * 60).cast("long"))
+            .filter("n_tokens > 10")
+        )
+        out = sorted(P.with_global_cumsum(nested, "n_tokens", ["id"], "cs", n_range_buckets=7).collect())
+        assert all(r["n_tokens"] > 10 for r in out)
         assert [r["cs"] for r in out] == list(itertools.accumulate(r["n_tokens"] for r in out))
 
     def test_chunk_layout(self, spark):

@@ -144,7 +144,7 @@ def q_decode_chain(spark, sf_dir):
     """,
 )
 def q_extract_documents(spark, sf_dir):
-    """FLAGSHIP: the map-only detect-then-extract pipeline (one pandas
+    """FLAGSHIP: the map-only detect-then-extract pipeline (one Arrow
     UDF proposes and decodes spans, a per-row projection drops blanks and
     joins them in order — pipeline.py:28-75 analog) over transcripts
     synthesized from the documents table. The oracle knows the
@@ -211,7 +211,7 @@ def q_conversation_rollup(spark, sf_dir):
 )
 def q_pdf_extract_pipeline(spark, sf_dir):
     """END-TO-END byte-stream flagship: binary PDF-ish payloads ->
-    mapInPandas text parse -> the same propose/decode/reassemble
+    mapInArrow text parse -> the same propose/decode/reassemble
     pipeline as HTML transcripts (operators.multimodal.extract_from_pdfs).
     The oracle knows the synthesis (clean text == ws-collapsed source),
     so the whole binary -> spans -> clean-text path is value-checked."""
@@ -430,7 +430,7 @@ _SIMHASH_NIBS_SQL = f"""
     """,
 )
 def q_dedup_simhash(spark, sf_dir):
-    """64-bit SimHash fingerprints (pandas-UDF fast path; the oracle
+    """64-bit SimHash fingerprints (Arrow-UDF fast path; the oracle
     recomputes the identical nibble arithmetic in SQL, so the driver's
     value hash verifies the UDF kernel directly)."""
     docs = _docs(spark, sf_dir)
@@ -915,7 +915,7 @@ def q_pdf_extract(spark, sf_dir):
     PDF-like binary payloads (one BT..ET object per 4-word chunk,
     alternating ``(s) Tj`` and ``[(s) -120] TJ`` show forms,
     PDF-escaped strings), then parse the bytes back to text inside
-    mapInPandas (operators.multimodal.pdf_extract_text) — binary column
+    mapInArrow (operators.multimodal.pdf_extract_text) — binary column
     in, Arrow batches through, text out. The oracle recomputes the
     synthesis byte-for-byte (same chunking, escaping and layout), so
     extraction must round-trip the original text exactly AND the byte
@@ -2590,7 +2590,7 @@ def q_orc_roundtrip(spark, sf_dir):
     round-trip is lossless AND that the n_chars predicate applied on
     the ORC side selects the identical row set (ORC min/max pushdown
     is exercised, not just format plumbing; the filter reaches the
-    scan — see tests/test_loaders.py plan assert)."""
+    scan — see tests/test_tableio.py plan assert)."""
     from .sources.tableio import read_orc, write_orc
 
     path = _staging_path(sf_dir, "docs_orc", "documents")

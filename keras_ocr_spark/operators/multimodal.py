@@ -2,7 +2,7 @@
 
 The reference reads its inputs as decoded ndarrays (keras_ocr's
 ``tools.read``). In a 100 TB lakehouse the payload is an opaque ``binary`` column, and parsing runs
-inside ``mapInPandas`` so bytes never round-trip through the driver.
+inside ``mapInArrow`` so bytes never round-trip through the driver.
 No PDF library is in this runtime, so ``synth_pdf_payloads`` writes
 deterministic PDF-like content streams and ``parse_pdf_text`` reads
 their text-show subset; the binary column and Arrow plumbing are real.
@@ -13,7 +13,7 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -94,7 +94,7 @@ def parse_pdf_text(raw: bytes) -> str | None:
 
 
 def pdf_extract_text(df: DataFrame) -> DataFrame:
-    """Binary PDF-ish payloads -> text via mapInPandas (the byte-stream
+    """Binary PDF-ish payloads -> text via mapInArrow (the byte-stream
     tokenization path: bytes stay in Arrow buffers, the pure-Python
     parser runs batch-at-a-time on executors — the ``tools.read``
     polymorphic-source analog for document payloads,
@@ -102,22 +102,25 @@ def pdf_extract_text(df: DataFrame) -> DataFrame:
     into the same iterator; the grammar here is the text-show subset
     with multi-block streams and both Tj/TJ forms."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         zipguard.install()
-        for pdf in batches:
+        for batch in batches:
             texts, sizes = [], []
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
+            for payload in batch.column("payload").to_pylist():
+                raw = payload or b""
                 texts.append(parse_pdf_text(raw))
                 sizes.append(len(raw))
-            yield pd.DataFrame({"id": pdf["id"], "pdf_text": texts, "n_bytes": sizes})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("id"), pa.array(texts, pa.string()), pa.array(sizes, pa.int64())],
+                names=["id", "pdf_text", "n_bytes"],
+            )
 
-    return df.select("id", "payload").mapInPandas(op, schema=PDF_TEXT_SCHEMA)
+    return df.select("id", "payload").mapInArrow(op, schema=PDF_TEXT_SCHEMA)
 
 
 def extract_from_pdfs(df: DataFrame, cfg=None) -> DataFrame:
     """Full byte-stream flagship composition: binary PDF-ish payloads ->
-    text (mapInPandas parse) -> the SAME two-stage propose/decode/
+    text (mapInArrow parse) -> the SAME two-stage propose/decode/
     reassemble pipeline the HTML transcripts use. One extra Python
     boundary (the parser) ahead of the standard map-only plan; documents
     become single-turn conversations keyed by payload id."""

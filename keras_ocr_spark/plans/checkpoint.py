@@ -188,6 +188,8 @@ def run_with_checkpoints(
 
     Returns a summary dict {buckets_run, buckets_skipped, rows}.
     """
+    if n_buckets < 1:  # every bucket K >= 0 would be stale and deleted
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     fingerprint = _config_fingerprint(cfg, input_path, n_buckets)
     done = set(completed_buckets(out_dir, fingerprint, n_buckets))
     _clean_stale_bucket_dirs(out_dir, done, n_buckets)

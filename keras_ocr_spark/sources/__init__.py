@@ -1,2 +1,2 @@
-"""Input tables: the transcript generator and goldens, versioned snapshots,
-file-format round trips and reference-format loaders."""
+"""Input tables: the transcript generator and goldens, versioned snapshots
+and file-format round trips."""

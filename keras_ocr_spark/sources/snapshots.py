@@ -26,9 +26,9 @@ checkpoint module's "manifest attests data" rule — and a torn manifest
 is skipped by ``plans.observe.load_manifests``.
 
 Time travel is then just "read the path the chosen manifest names";
-``history`` is a directory listing. ``expire_snapshots`` retires old
-versions (manifests first); no compaction is implemented (out of scope
-— the emulation is the READ contract).
+``history`` is a directory listing. Versions are never expired and no
+compaction is implemented (out of scope — the emulation is the READ
+contract).
 """
 
 from __future__ import annotations
@@ -126,24 +126,3 @@ def snapshot_changes(
         .otherwise(F.lit("update"))
     )
     return diff.select(*key_cols, verb.alias("change"))
-
-
-def expire_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
-    """Retention: drop all but the newest ``keep_last`` versions —
-    manifests FIRST (the version disappears atomically for readers),
-    data dirs after (reclaiming the bytes). Returns the expired
-    version numbers. A reader holding an expired version's DataFrame
-    may still fail mid-scan — the same contract as Iceberg's
-    expire_snapshots: retention length IS the long-query horizon."""
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    hist = history(table_dir)
-    drop = hist[:-keep_last] if len(hist) > keep_last else []
-    root = Path(table_dir)
-    for m in drop:
-        (root / "_snapshots" / f"v{m['version']}.json").unlink(missing_ok=True)
-    for m in drop:
-        shutil.rmtree(root / m["path"], ignore_errors=True)
-    return [m["version"] for m in drop]

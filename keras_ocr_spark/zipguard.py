@@ -18,7 +18,8 @@ a no-op on Python >= 3.12.
 
 Every function the package decorates with ``F.arrow_udf`` (every
 package UDF now; ``F.pandas_udf`` is covered too, should one return) or
-hands to ``mapInPandas`` calls ``install()`` as its first statement
+hands to ``mapInArrow`` (or any other ``mapIn*``/``applyIn*`` boundary)
+calls ``install()`` as its first statement
 (pinned by ``tests/test_zipguard.py``). The UDFs are closures that cloudpickle
 ships by value, so that reference is what makes a worker import this
 module at all; after the worker's first task the later ones take every

@@ -24,7 +24,9 @@ metrics, and ``_summary.json`` is published atomically after the data,
 so a killed job never leaves a truncated summary. Its fields: ``n_in``
 (input rows), ``n_kept`` (rows written), ``kept_tokens`` (their
 ``n_bpe_tokens`` total), ``content_hash`` (an order-independent hash of
-every written column) and the ``threshold``/``min_quality`` echo.
+every written column), the ``threshold``/``min_quality`` echo and
+``engine_conf``, the session's values of the settings
+``plans.session.build_session`` gives the engine.
 
 Unlike extraction (embarrassingly parallel per conversation, hence
 per-bucket checkpoint manifests in plans/checkpoint.py), dedup is a
@@ -56,19 +58,23 @@ def main() -> int:
     args = ap.parse_args()
 
     # Import AFTER spark-submit has added --py-files to sys.path.
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from keras_ocr_spark.plans.observe import commit
     from keras_ocr_spark.plans.pipeline import curate
+    from keras_ocr_spark.plans.session import build_session, engine_conf
 
-    spark = SparkSession.builder.appName("keras_ocr_spark_curate").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session(app_name="keras_ocr_spark_curate")
 
     docs = spark.read.parquet(args.input)
     texts = docs.select(F.col("doc_id").cast("long").alias("id"), "text")
     curated = curate(docs, args.threshold, args.min_quality).join(texts, "id")
-    summary = {"n_in": docs.count(), "threshold": args.threshold, "min_quality": args.min_quality}
+    summary = {
+        "n_in": docs.count(),
+        "threshold": args.threshold,
+        "min_quality": args.min_quality,
+        "engine_conf": {k: spark.conf.get(k) for k in engine_conf()},
+    }
 
     def manifests(audit: dict) -> dict:
         summary.update((k, int(v)) for k, v in audit.items())

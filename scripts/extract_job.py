@@ -13,7 +13,10 @@ Deployment contract (north rule): the package ships as a zip via
         --buckets 8 --salt 8
 
 Resumable: re-running with the same input/config skips buckets whose
-checkpoint manifests are complete (see plans/checkpoint.py).
+checkpoint manifests are complete (see plans/checkpoint.py). The printed
+JSON summary holds the buckets run and skipped, the rows written and
+``engine_conf``, the session's values of the settings
+``plans.session.build_session`` gives the engine.
 """
 
 from __future__ import annotations
@@ -32,13 +35,11 @@ def main() -> int:
     args = ap.parse_args()
 
     # Import AFTER spark-submit has added --py-files to sys.path.
-    from pyspark.sql import SparkSession
-
     from keras_ocr_spark.config import ExtractionConfig
     from keras_ocr_spark.plans.checkpoint import run_with_checkpoints
+    from keras_ocr_spark.plans.session import build_session, engine_conf
 
-    spark = SparkSession.builder.appName("keras_ocr_spark_extract").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session(app_name="keras_ocr_spark_extract")
     cfg = ExtractionConfig(size_threshold=args.size_threshold)
     summary = run_with_checkpoints(
         spark,
@@ -48,6 +49,7 @@ def main() -> int:
         cfg=cfg,
         n_salt=args.salt,
     )
+    summary["engine_conf"] = {k: spark.conf.get(k) for k in engine_conf()}
     print(json.dumps(summary))
     spark.stop()
     return 0

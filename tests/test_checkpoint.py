@@ -56,6 +56,18 @@ def test_kill_and_resume_exact(spark, input_path, tmp_path):
     summary3 = run_with_checkpoints(spark, input_path, out, n_buckets=6)
     assert summary3["buckets_run"] == [] and len(summary3["buckets_skipped"]) == 6
 
+    # A bucket count under 1 is rejected before the output is touched:
+    # the committed buckets and their manifests read back unchanged.
+    def committed():
+        rows = read_committed(spark, out).select("conv_id", "turn_idx", "clean_text").collect()
+        return sorted(map(tuple, rows)), sorted(read_manifests(out), key=lambda m: m["bucket"])
+
+    before = committed()
+    for n_buckets in (0, -1):
+        with pytest.raises(ValueError, match="n_buckets"):
+            run_with_checkpoints(spark, input_path, out, n_buckets=n_buckets)
+    assert committed() == before
+
 
 def test_single_scan_plan(spark, input_path):
     """The run's plan must scan the input exactly ONCE however many

@@ -378,42 +378,6 @@ class TestTableDiff:
         assert got == {2: "changed"}
 
 
-class TestSaltedJoin:
-    def test_equals_plain_join(self, spark):
-        from keras_ocr_spark.operators.skewjoin import salted_join
-
-        fact = spark.createDataFrame(
-            [(1, i) for i in range(50)] + [(2, 100)], "k long, v long"
-        )
-        dim = spark.createDataFrame([(1, "hot"), (2, "cold"), (3, "unused")], "k long, d string")
-        got = sorted((r["k"], r["v"], r["d"]) for r in salted_join(fact, dim, "k", n_salt=4).collect())
-        want = sorted((r["k"], r["v"], r["d"]) for r in fact.join(dim, "k").collect())
-        assert got == want and len(got) == 51
-
-    def test_salt_spreads_identical_hot_rows(self, spark):
-        from keras_ocr_spark.operators.skewjoin import salted_join
-        from pyspark.sql import functions as F
-
-        # 200 fully IDENTICAL rows of the hot key — the case a
-        # value-hash salt cannot spread (all hash to one salt).
-        fact = spark.createDataFrame([(1, 7)] * 200, "k long, v long")
-        dim = spark.createDataFrame([(1, "d")], "k long, d string")
-        f_salted = fact.withColumn(
-            "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(8)).cast("int")
-        )
-        n_salts = f_salted.select("_salt").distinct().count()
-        assert n_salts == 8  # position-based salt occupies every bucket
-        assert salted_join(fact, dim, "k", n_salt=8).count() == 200
-
-    def test_dim_preserving_join_rejected(self, spark):
-        from keras_ocr_spark.operators.skewjoin import salted_join
-
-        fact = spark.createDataFrame([(1, 1)], "k long, v long")
-        dim = spark.createDataFrame([(1, "d"), (2, "unmatched")], "k long, d string")
-        with pytest.raises(ValueError):
-            salted_join(fact, dim, "k", n_salt=4, how="right")
-
-
 class TestMergeUpsertNullKeys:
     def test_null_source_key_still_wins(self, spark):
         from keras_ocr_spark.operators.merge import merge_upsert

@@ -192,13 +192,9 @@ def test_documents_shape_precondition_for_extract_oracle(sf):
 
 #: ``keras_ocr_spark`` modules that no module of the package, no script,
 #: ``__spark_entry__.py`` and no perfbench module imports; only tests
-#: reach them. Shrinking this dict (give a module a caller, or delete it
-#: with its tests) is progress; a new module may not join it.
-NO_CALLER = {
-    "keras_ocr_spark.operators.skewjoin": "library operator, no caller since the events prune",
-    "keras_ocr_spark.sources.layout": "compaction and z-order, no caller since the TPC-H prune",
-    "keras_ocr_spark.sources.loaders": "reference-format loaders, tested directly",
-}
+#: reach them. The dict is empty: a module with no caller gets one on a
+#: kept path, or goes with its tests.
+NO_CALLER: dict[str, str] = {}
 
 
 def _non_test_sources() -> list[Path]:
@@ -256,7 +252,6 @@ NO_CALLER_FUNCTIONS = {
     "extraction.read_transcript_stream": "streaming extraction entry point; no kept job streams, tested directly",
     "extraction.start_extraction": "streaming extraction entry point; no kept job streams, tested directly",
     "hashing.simhash64_py": "pure-Python SimHash, the golden the Arrow simhash kernel is tested against",
-    "snapshots.expire_snapshots": "snapshot retention; no kept job expires versions, tested directly",
 }
 
 
@@ -301,19 +296,13 @@ def test_no_new_function_without_a_caller():
     assert sorted(uncalled) == sorted(NO_CALLER_FUNCTIONS)
 
 
-#: ``Window`` specs in ``keras_ocr_spark/`` ordered with no partition,
-#: as ``file:line`` -> why the frame is small. Such a window sorts all
-#: its rows in one task. The plan bound in ``tests/test_plan_shape.py``
-#: sees only the registered queries; this scan covers the whole package.
-UNPARTITIONED_WINDOW_SPECS = {
-    "operators/skewjoin.py:111": "ranks the limit(top_k) rows of the top-k report",
-}
-
-
 def test_no_unpartitioned_window_spec():
-    # An ast scan for ``<Window>.orderBy(...)`` calls, under whatever
-    # name the module imports ``Window`` as (``W``, ``Window``, ...); a
-    # spec with a partition starts from ``partitionBy`` instead.
+    # A ``Window`` ordered with no partition sorts all its rows in one
+    # task. The plan bound in ``tests/test_plan_shape.py`` sees only the
+    # registered queries; this scan covers the whole package. It looks
+    # for ``<Window>.orderBy(...)`` calls, under whatever name the module
+    # imports ``Window`` as (``W``, ``Window``, ...); a spec with a
+    # partition starts from ``partitionBy`` instead.
     import ast
 
     found = []
@@ -336,7 +325,7 @@ def test_no_unpartitioned_window_spec():
             and isinstance(node.func.value, ast.Name)
             and node.func.value.id in names
         ]
-    assert sorted(found) == sorted(UNPARTITIONED_WINDOW_SPECS)
+    assert found == []
 
 
 #: ``scripts/*.py`` that no tier-1 test runs: ``check_oracles.py`` is the

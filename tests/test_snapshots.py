@@ -114,30 +114,3 @@ class TestSnapshotChanges:
         write_snapshot(docs.limit(5), table)
         write_snapshot(docs.limit(5), table)
         assert snapshot_changes(spark, table, 1, 2, ["doc_id"]).count() == 0
-
-
-class TestExpireSnapshots:
-    def test_expiry_keeps_tail_and_reclaims(self, spark, docs, tmp_path):
-        from keras_ocr_spark.sources.snapshots import expire_snapshots
-
-        table = str(tmp_path / "e")
-        for k in (2, 3, 4, 5):
-            write_snapshot(docs.limit(k), table)
-        assert expire_snapshots(table, keep_last=2) == [1, 2]
-        h = history(table)
-        assert [m["version"] for m in h] == [3, 4]
-        assert read_snapshot(spark, table).count() == 5
-        assert not (Path(table) / "data" / "v1").exists()
-        with pytest.raises(ValueError):
-            read_snapshot(spark, table, version=1)
-        # next commit continues numbering from the SURVIVING manifests
-        assert write_snapshot(docs.limit(1), table) == 5
-
-    def test_expiry_validation_and_noop(self, spark, docs, tmp_path):
-        from keras_ocr_spark.sources.snapshots import expire_snapshots
-
-        table = str(tmp_path / "e2")
-        write_snapshot(docs.limit(1), table)
-        assert expire_snapshots(table, keep_last=5) == []
-        with pytest.raises(ValueError):
-            expire_snapshots(table, keep_last=0)

@@ -12,6 +12,7 @@ from pathlib import Path
 
 import pytest
 
+from keras_ocr_spark.plans.session import engine_conf
 from keras_ocr_spark.sources.transcripts import generate_pandas
 
 REPO = Path(__file__).resolve().parent.parent
@@ -40,8 +41,6 @@ def test_spark_submit_py_files(spark, tmp_path):
         [
             spark_submit,
             "--master", "local[4]",
-            "--conf", "spark.ui.enabled=false",
-            "--conf", "spark.sql.shuffle.partitions=8",
             "--py-files", str(zip_path),
             str(REPO / "scripts/extract_job.py"),
             "--input", inp,
@@ -58,6 +57,8 @@ def test_spark_submit_py_files(spark, tmp_path):
     summary = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
     assert sorted(summary["buckets_run"]) == [0, 1]
     assert summary["rows"] == len(pdf)
+    # the job ran with build_session's engine settings
+    assert summary["engine_conf"] == engine_conf()
 
 
 @pytest.mark.slow
@@ -86,9 +87,6 @@ def test_spark_submit_curate_job(spark, tmp_path):
             [
                 spark_submit,
                 "--master", "local[4]",
-                "--conf", "spark.ui.enabled=false",
-                "--conf", "spark.sql.shuffle.partitions=8",
-                "--conf", "spark.sql.session.timeZone=UTC",
                 "--py-files", str(zip_path),
                 str(REPO / "scripts/curate_job.py"),
                 "--input", inp,
@@ -118,4 +116,5 @@ def test_spark_submit_curate_job(spark, tmp_path):
     assert {k: summary[k] for k in ("n_in", "n_kept", "kept_tokens")} == {
         "n_in": 500, "n_kept": 113, "kept_tokens": 6860,
     }
+    assert summary["engine_conf"] == engine_conf()
     assert run() == s1  # idempotent re-run
